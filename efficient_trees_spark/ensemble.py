@@ -16,20 +16,23 @@ engine's existing dataflow pieces:
   per-class vote-count structs — pure Catalyst expressions, zero shuffles,
   zero UDFs, same tie-break as the single tree (count desc, class asc).
 
-At cluster scale the incremental cost of a tree is its level-wise split
-searches on a cached sample — the scan and preparation are amortized across
-the forest, and ``max_bins`` bounds each search's shuffle volume.  Binned
-forests share ONE packed bin-code relation (``operators/histogram.py``),
-built by the same two-scan flow as the single-tree fit (edge sketch pass +
-fused pack→encode — 2 source scans total for ANY n_trees, no raw float
-cache); each tree's bootstrap samples the 2-column coded cache, and
-per-tree feature bagging histograms only its
-subset's matrix columns — AMEX-width forests pay the same per-level cost as
-the single packed tree, times trees.
+At cluster scale the scan and preparation are amortized across the forest,
+and ``max_bins`` bounds each search's shuffle volume.  Binned forests share
+ONE packed bin-code relation (``operators/histogram.py``), built by the same
+two-scan flow as the single-tree fit (edge sketch pass + fused pack→encode —
+2 source scans total for ANY n_trees, no raw float cache), and grow their
+trees LEVEL-SYNCHRONOUSLY, the PLANET / MLlib ``RandomForest`` shape: each
+tree's bootstrap samples the coded cache, the samples are tagged with their
+tree id and unioned, and every tree level is ONE histogram pass over that
+union (``tree._build_tree_levelwise``) — each row routed by its own tree's
+splits and histogramming only its tree's feature subset.  A forest level
+therefore costs one Spark stage whatever n_trees is; the per-row work still
+grows with the total bootstrap rows.  Exact forests grow one tree at a time.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import pickle
 import random
@@ -39,9 +42,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from efficient_trees_spark.enums import Criterion
-from efficient_trees_spark.operators.split_finder import TARGET_IDX as _TARGET_IDX
 from efficient_trees_spark.plans.case_compiler import compile_tree
 from efficient_trees_spark.tree import DecisionTreeClassifier
+
+# Each bootstrap row's tree id in the forest's level passes.
+TREE_COL = "__tree_id"
 
 
 class RandomForestClassifier:
@@ -102,38 +107,27 @@ class RandomForestClassifier:
         packed_code_dtype = "u1"
         if self.max_bins is not None:
             from efficient_trees_spark.tree import (
+                _encode_codes,
                 _fan_out_small_input,
                 _two_scan_binned_edges,
             )
 
             # Same fan-out as the single-tree binned fit (see
             # tree._fan_out_small_input): every Arrow pass below — and each
-            # tree's per-level histograms — parallelizes over this relation's
+            # level's histogram pass — parallelizes over this relation's
             # partitions.  No-op when the source already has >= cores splits.
             prepared, ens_n_parts = _fan_out_small_input(prepared)
-            from efficient_trees_spark.operators.histogram import (
-                _MAX_PACKED_EDGES,
-                _MAX_PACKED16_EDGES,
-                pack_encode_features,
-            )
-
             # Same TWO-SCAN flow as the single tree (tree.py fit), amortized
             # across the forest: pass 1 sketches edges off the columnar
             # relation (nothing persisted), pass 2 fuse-packs straight to
             # bin codes — and that ONE code relation is shared by every
             # tree's bootstrap sample.  A forest therefore scans the source
-            # exactly TWICE regardless of n_trees, with NO raw float cache
-            # at all (the pre-round-7 flow persisted a DISK_ONLY raw blob —
-            # 4/8 bytes/cell of dead weight once codes existed; per-tree
-            # two-scan would instead pay 2·T source scans — the shared
-            # two-scan dominates both, see SCALE.md).  The mapInArrow pass
-            # is a 1:1 row map preserving the source partitioning, so
-            # seeded `sample` picks the same logical rows off the coded
-            # relation as it would off the snapped one GIVEN identical
-            # edges — but the edge-stats pass itself sees different
-            # partition placement than the old raw-cache flow, so the
-            # pinned forest oracle was re-pinned in round 7 (see the note
-            # in workloads/tree_queries.py).
+            # exactly TWICE regardless of n_trees, with NO raw float cache.
+            # The mapInArrow pass is a 1:1 row map preserving the source
+            # partitioning, so seeded `sample` picks the same logical rows
+            # off the coded relation as it would off the snapped one GIVEN
+            # identical edges (the pinned forest oracle's provenance is
+            # noted in workloads/tree_queries.py).
             dtype = "f4" if shrink_features else "f8"
             n_bins, stats = proto._binned_edge_params()
             bin_edges, _ = _two_scan_binned_edges(
@@ -141,66 +135,87 @@ class RandomForestClassifier:
                 n_parts=ens_n_parts,
             )
             proto.bin_edges_ = bin_edges
-            max_card = max((len(e) for e in bin_edges.values()), default=0)
-            if max_card <= _MAX_PACKED16_EDGES:
-                # Same u1/u2 selection as the single-tree fit: 1 byte/cell
-                # whenever every feature fits 253 edges, 2 bytes past that.
-                packed_code_dtype = (
-                    "u1" if max_card <= _MAX_PACKED_EDGES else "u2"
-                )
-                prepared = pack_encode_features(
-                    prepared,
-                    feature_names,
-                    bin_edges,
-                    _TARGET_IDX,
-                    dtype=dtype,
-                    code_dtype=packed_code_dtype,
-                )
-                packed = True
-            else:
+            encoded = _encode_codes(
+                prepared, feature_names, bin_edges, dtype, n_parts=ens_n_parts
+            )
+            if encoded is None:
                 prepared = proto._snap_to_edges(prepared, feature_names)
+            else:
+                prepared, packed_code_dtype, _ = encoded
+                packed = True
         self.categorical_mappings = proto.categorical_mappings
         self._unique_targets = unique_targets
 
         rng = random.Random(self.seed)
         n_sub = max(1, round(self.feature_fraction * len(feature_names)))
+        subsets = [
+            sorted(rng.sample(feature_names, n_sub))
+            if n_sub < len(feature_names)
+            else feature_names
+            for _ in range(self.n_trees)
+        ]
+        grower = DecisionTreeClassifier(
+            max_depth=self.max_depth,
+            criterion=self.criterion,
+            # Propagated so the level-wise search takes the bounded-
+            # candidates single-window path (the bags are pre-snapped or
+            # pre-encoded).
+            max_bins=self.max_bins,
+        )
 
         prepared = prepared.persist()
         try:
-            self.trees = []
-            for t in range(self.n_trees):
-                subset = (
-                    sorted(rng.sample(feature_names, n_sub))
-                    if n_sub < len(feature_names)
-                    else feature_names
-                )
-                bag = prepared.sample(
+            if packed:
+                # Materialize the code cache in its own job, one task per
+                # partition (a write to Spark's no-op sink: one stage, where
+                # count() runs three jobs).  Left to the first level pass,
+                # the coalesced union's tasks each read every tree's sample
+                # of the same partitions in the same order, so they queue on
+                # one another to compute each cache block (4 trees, 300k
+                # rows, 4 cores: the pass took 2.0 s with the encode in it,
+                # 1.1 s after a ~0.4 s materializing job).
+                prepared.write.format("noop").mode("overwrite").save()
+            bags = [
+                prepared.sample(
                     withReplacement=True,
                     fraction=self.sample_fraction,
                     seed=self.seed + t,
                 )
-                tree = DecisionTreeClassifier(
-                    max_depth=self.max_depth,
-                    criterion=self.criterion,
-                    # Propagated so the level-wise search takes the bounded-
-                    # candidates single-window path (the bag is pre-snapped
-                    # or pre-encoded).
-                    max_bins=self.max_bins,
+                for t in range(self.n_trees)
+            ]
+            if packed:
+                # Level-synchronous growth: the bags are tagged with their
+                # tree id, unioned, and only then coalesced back to the
+                # code relation's partition count, so sampling sees the
+                # persisted partitions and every level is ONE stage of P
+                # tasks over all trees.  The bags are not persisted: a
+                # level re-samples the persisted codes, and the sampler is
+                # seeded per partition, so each level draws the same rows.
+                forest_rows = functools.reduce(
+                    DataFrame.union,
+                    [bag.withColumn(TREE_COL, F.lit(t)) for t, bag in enumerate(bags)],
+                ).coalesce(ens_n_parts)
+                self.trees = grower._build_tree_levelwise(
+                    forest_rows,
+                    subsets,
+                    unique_targets,
+                    bin_edges=bin_edges,
+                    packed=True,
+                    packed_all_features=feature_names,
+                    packed_code_dtype=packed_code_dtype,
+                    packed_n_parts=ens_n_parts,
+                    tree_col=TREE_COL,
                 )
-                self.trees.append(
-                    tree._build_tree_levelwise(
-                        bag,
-                        subset,
-                        unique_targets,
-                        bin_edges=bin_edges if packed else None,
-                        packed=packed,
-                        packed_all_features=feature_names if packed else None,
-                        packed_code_dtype=packed_code_dtype,
-                        # sample() is a 1:1 partition map over the persisted
-                        # code relation — the bag keeps the fan-out's count
-                        packed_n_parts=ens_n_parts if packed else None,
-                    )
-                )
+            else:
+                self.trees = []
+                for bag, subset in zip(bags, subsets):
+                    bag = bag.persist()
+                    try:
+                        self.trees += grower._build_tree_levelwise(
+                            bag, [subset], unique_targets
+                        )
+                    finally:
+                        bag.unpersist()
         finally:
             prepared.unpersist()
 

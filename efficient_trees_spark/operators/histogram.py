@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import os
 from functools import lru_cache
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 
@@ -1213,6 +1213,22 @@ def encode_packed(
     )
 
 
+def edge_code(edges: list[float], threshold: float) -> int:
+    """The bin code of a split threshold: its index among the feature's
+    edges.  Code routing is bit-equivalent to value routing only at an
+    edge, so a threshold that is not one raises ``ValueError`` rather
+    than routing rows to the wrong child."""
+    from bisect import bisect_left
+
+    code = bisect_left(edges, threshold)
+    if code >= len(edges) or edges[code] != threshold:
+        raise ValueError(
+            f"split threshold {threshold!r} is not a bin edge "
+            f"(nearest edge index {code} of {len(edges)})"
+        )
+    return code
+
+
 def route_codes(
     mat: "np.ndarray", splits: list[tuple], null_code: int = PACKED_NULL_CODE
 ) -> "np.ndarray":
@@ -1238,6 +1254,89 @@ def route_codes(
     return node
 
 
+class TreeRoute(NamedTuple):
+    """One tree's share of a level pass over several trees' rows (a forest
+    grown level-synchronously): its ``route_codes`` split list, the
+    accumulator slot each of its pending nodes counts under, and the
+    features it histograms as indices into the pass's feature list.
+    ``slots=None`` keys the accumulators by node id; ``features=None``
+    histograms every feature of the pass."""
+
+    splits: list[tuple]
+    slots: dict[int, int] | None = None
+    features: list[int] | None = None
+
+
+def _tree_routes(routing) -> dict[int, TreeRoute]:
+    """``routing`` is a bare split list (the one-tree pass: every row is
+    tree 0, keyed by node id, every feature histogrammed) or
+    ``{tree_id: TreeRoute}``."""
+    if isinstance(routing, dict):
+        return routing
+    return {0: TreeRoute(list(routing))}
+
+
+def _tree_columns(route: TreeRoute, pos, n_feat: int, width: int):
+    """``(matrix columns to gather or None, feature indices)`` of the
+    features one tree histograms; None when they are the matrix as is."""
+    feat = (
+        np.arange(n_feat, dtype=np.int64)
+        if route.features is None
+        else np.asarray(route.features, dtype=np.int64)
+    )
+    cols = pos[feat]
+    if cols.size == width and (cols == np.arange(width)).all():
+        return None, feat
+    return cols, feat
+
+
+def _routed_rows(batches, packed_col, tcol, tree_col, width, code_dtype, routes):
+    """Unpack each Arrow batch's code matrix and route every row with its
+    own tree's splits.  Yields ``(tree_id, mat, target, slots)`` per tree
+    present in the batch, keeping only the rows that land on a pending
+    node; ``slots`` is each kept row's accumulator slot.  ``tree_col``
+    None means every row belongs to tree 0; rows of trees absent from
+    ``routes`` are skipped."""
+    np_code, _, null_code, _ = _code_info(code_dtype)
+    luts = {}
+    for t, route in routes.items():
+        if route.slots is None:
+            luts[t] = None
+            continue
+        # index -1 (a row dropped by routing) reads the trailing -1
+        lut = np.full(max(route.slots, default=0) + 2, -1, dtype=np.int32)
+        for node, slot in route.slots.items():
+            lut[node] = slot
+        luts[t] = lut
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        mat = _unpack_binary(batch.column(packed_col), width, np_code)
+        target = batch.column(tcol).to_numpy(zero_copy_only=False)
+        groups = [(0, None)]
+        if tree_col is not None:
+            tree_ids = batch.column(tree_col).to_numpy(zero_copy_only=False)
+            present = np.unique(tree_ids)
+            if present.size == 1:
+                groups = [(int(present[0]), None)]
+            else:
+                groups = [(int(t), np.flatnonzero(tree_ids == t)) for t in present]
+        for t, rows in groups:
+            route = routes.get(t)
+            if route is None:
+                continue
+            m, y = (mat, target) if rows is None else (mat[rows], target[rows])
+            slots = route_codes(m, route.splits, null_code=null_code)
+            if luts[t] is not None:
+                slots = luts[t][slots]
+            keep = slots >= 0
+            if not keep.any():
+                continue
+            if not keep.all():
+                m, y, slots = m[keep], y[keep], slots[keep]
+            yield t, m, y, slots
+
+
 # Sentinel FEATURE value carrying per-node class totals through the
 # histogram relation when emit_node_totals is requested (a user feature of
 # this exact name would collide; the dunder makes that implausible).
@@ -1257,6 +1356,7 @@ def packed_histogram_counts(
     matrix_width: int | None = None,
     emit_node_totals: bool = False,
     code_dtype: str = "u1",
+    tree_col: str | None = None,
 ) -> DataFrame:
     """:func:`binned_histogram_counts` over the packed bin-code matrix
     (uint8 or uint16 per ``code_dtype``, matching the encode),
@@ -1274,7 +1374,13 @@ def packed_histogram_counts(
     the node's full per-class row counts (feature-independent — NULL cells
     excluded from per-feature bins still count here).  The root
     distribution then rides the level-0 histogram instead of a separate
-    job racing it to materialize the code cache."""
+    job racing it to materialize the code cache.
+
+    ``routing_splits`` may instead be ``{tree_id: TreeRoute}`` with
+    ``tree_col`` naming each row's tree (a forest's level pass): rows are
+    routed by their own tree's splits, histogram their own tree's
+    features, and count under the route's slot ids, which key the output
+    in place of node ids."""
     import pyarrow as pa
 
     names, lens, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
@@ -1289,6 +1395,7 @@ def packed_histogram_counts(
         if feature_positions is not None
         else np.arange(n_feat, dtype=np.int64)
     )
+    routes = _tree_routes(routing_splits)
 
     count_fields = [pa.field(class_count_col(i), pa.int64()) for i in range(n_classes)]
     out_schema = pa.schema(
@@ -1305,9 +1412,9 @@ def packed_histogram_counts(
 
     def histogram(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         acc, dist_acc = _accumulate_cubes(
-            batches, packed_col, tcol, routing_splits, width, n_feat, pos,
+            batches, packed_col, tcol, tree_col, routes, width, n_feat, pos,
             lens, slot_off, flat_slots, n_classes, emit_node_totals,
-            feature_positions is not None, code_dtype,
+            code_dtype,
         )
         sparse = _sparsify_cubes(
             acc, dist_acc, names, lens, slot_off, edges_flat, edge_off,
@@ -1328,7 +1435,9 @@ def packed_histogram_counts(
         yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
         _trim_malloc()
 
-    partials = packed_df.select(packed_col, tcol).mapInArrow(histogram, spark_schema)
+    partials = packed_df.select(
+        packed_col, tcol, *([tree_col] if tree_col else [])
+    ).mapInArrow(histogram, spark_schema)
     return partials.groupBy(ncol, FEATURE, FEATURE_VALUE).agg(
         *[F.sum(class_count_col(i)).alias(class_count_col(i)) for i in range(n_classes)],
         F.sum("count_examples").alias("count_examples"),
@@ -1336,15 +1445,15 @@ def packed_histogram_counts(
 
 
 def _accumulate_cubes(
-    batches, packed_col, tcol, routing_splits, width, n_feat, pos,
-    lens, slot_off, flat_slots, n_classes, emit_node_totals, subset,
-    code_dtype="u1",
+    batches, packed_col, tcol, tree_col, routes, width, n_feat, pos,
+    lens, slot_off, flat_slots, n_classes, emit_node_totals, code_dtype="u1",
 ) -> tuple[dict[int, "np.ndarray"], dict[int, "np.ndarray"]]:
-    """Route + bincount one partition's Arrow batches into per-node flat
-    count cubes (and per-node class totals when requested) — the numeric
+    """Route + bincount one partition's Arrow batches into per-slot flat
+    count cubes (and per-slot class totals when requested) — the numeric
     core shared by the sparse-row and dense-cube emitters.  Slot addressing
     is RAGGED (``_cube_geometry``): feature j's counts land at
     ``slot_off[j] + bin``, its NaN bucket at ``slot_off[j] + lens[j]``.
+    Each tree's rows (``_routed_rows``) fill only its own features' slots.
 
     r11 rewrite of the numeric pass (guide §4.2 — this loop IS the
     per-level cube job, the bench's dominant stage): the old form upcast
@@ -1362,27 +1471,25 @@ def _accumulate_cubes(
     dist_acc: dict[int, np.ndarray] = {}
     flat_size = flat_slots * n_classes
     stride = flat_size + 1  # + the invalid-cell sentinel slot
-    feat_base32 = slot_off[:-1].astype(np.int32)[None, :]
-    cap_c = np.maximum(lens - 1, 0).astype(np_code)[None, :]
-    nan_slot_c = lens.astype(np_code)[None, :]  # lens <= max edges < code max
-    no_edge_cols = np.flatnonzero(lens == 0)
-
-    for batch in batches:
-        n_rows = batch.num_rows
-        if n_rows == 0:
-            continue
-        mat = _unpack_binary(batch.column(packed_col), width, np_code)
-        target32 = batch.column(tcol).to_numpy(zero_copy_only=False).astype(
-            np.int32
+    geometry = {}
+    for t, route in routes.items():
+        cols, feat = _tree_columns(route, pos, n_feat, width)
+        tl = lens[feat]
+        geometry[t] = (
+            cols,
+            slot_off[feat].astype(np.int32)[None, :],
+            np.maximum(tl - 1, 0).astype(np_code)[None, :],
+            tl.astype(np_code)[None, :],  # lens <= max edges < code max
+            np.flatnonzero(tl == 0),
         )
-        nodes = route_codes(mat, routing_splits, null_code=null_code)
-        keep = nodes >= 0
-        if not keep.any():
-            continue
-        if not keep.all():
-            mat, target32, nodes = mat[keep], target32[keep], nodes[keep]
-        if width != n_feat or subset:
-            mat = mat[:, pos]  # histogram only the subset's columns
+
+    for t, mat, target, nodes in _routed_rows(
+        batches, packed_col, tcol, tree_col, width, code_dtype, routes
+    ):
+        cols, feat_base32, cap_c, nan_slot_c, no_edge_cols = geometry[t]
+        target32 = target.astype(np.int32)
+        if cols is not None:
+            mat = mat[:, cols]  # histogram only this tree's columns
         is_nan = mat == nan_code
         invalid = mat == null_code
         if no_edge_cols.size:
@@ -1512,6 +1619,7 @@ def packed_histogram_cubes(
     matrix_width: int | None = None,
     emit_node_totals: bool = False,
     code_dtype: str = "u1",
+    tree_col: str | None = None,
 ) -> DataFrame:
     """:func:`packed_histogram_counts` with DENSE per-node output: one row
     per (partition, node) carrying the whole flat count cube as int64
@@ -1523,7 +1631,9 @@ def packed_histogram_cubes(
     shuffle stage — the level job becomes a single mapInArrow stage plus a
     partitions × nodes × cube collect.  Only sane when that product is
     small (local mode, shallow trees); the sparse + distributed-agg form
-    remains the path when partitions × nodes grows (the caller guards)."""
+    remains the path when partitions × nodes grows (the caller guards).
+    Routing (one tree or ``{tree_id: TreeRoute}`` with ``tree_col``) is
+    as in :func:`packed_histogram_counts`."""
     import pyarrow as pa
 
     names, lens, slot_off, flat_slots, _, _ = _cube_geometry(
@@ -1537,12 +1647,13 @@ def packed_histogram_cubes(
         if feature_positions is not None
         else np.arange(n_feat, dtype=np.int64)
     )
+    routes = _tree_routes(routing_splits)
 
     def cubes(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         acc, dist_acc = _accumulate_cubes(
-            batches, packed_col, tcol, routing_splits, width, n_feat, pos,
+            batches, packed_col, tcol, tree_col, routes, width, n_feat, pos,
             lens, slot_off, flat_slots, n_classes, emit_node_totals,
-            feature_positions is not None, code_dtype,
+            code_dtype,
         )
         if not acc:
             return
@@ -1565,9 +1676,9 @@ def packed_histogram_cubes(
         )
         _trim_malloc()
 
-    return packed_df.select(packed_col, tcol).mapInArrow(
-        cubes, f"{node_col} int, __cube binary"
-    )
+    return packed_df.select(
+        packed_col, tcol, *([tree_col] if tree_col else [])
+    ).mapInArrow(cubes, f"{node_col} int, __cube binary")
 
 
 def merge_cubes_to_counts_pdf(
@@ -1686,11 +1797,13 @@ def packed_histogram_pair_cubes(
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
     code_dtype: str = "u1",
+    tree_col: str | None = None,
 ) -> DataFrame:
     """Dense per-(partition, node) PAIR cubes: one row per node carrying
     the flat ``int64[s2 * s2 * n_classes]`` joint histogram as bytes.
-    Same routing (``route_codes``) and row set as
-    :func:`packed_histogram_cubes`; only the accumulation is joint."""
+    Same routing (``route_codes``, one tree or a forest's trees) and row
+    set as :func:`packed_histogram_cubes`; only the accumulation is joint,
+    over the pairs of each row's own tree's features."""
     import pyarrow as pa
 
     names, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
@@ -1703,31 +1816,30 @@ def packed_histogram_pair_cubes(
         if feature_positions is not None
         else np.arange(n_feat, dtype=np.int64)
     )
-    subset = feature_positions is not None
+    routes = _tree_routes(routing_splits)
+    geometry = {}
+    for t, route in routes.items():
+        cols, feat = _tree_columns(route, pos, n_feat, width)
+        tl = lens[feat]
+        geometry[t] = (
+            cols,
+            slot2_off[feat][None, :],
+            np.maximum(tl - 1, 0).astype(np_code)[None, :],
+            tl[None, :],  # NaN slot
+            (tl + 1)[None, :],  # NULL slot
+        )
 
     def cubes(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         stride = s2 * s2 * n_classes
         acc: dict[int, np.ndarray] = {}
-        base2 = slot2_off[:-1].astype(np.int64)[None, :]
-        cap_c = np.maximum(lens - 1, 0).astype(np_code)[None, :]
-        nan_slot = lens.astype(np.int64)[None, :]
-        null_slot = (lens + 1).astype(np.int64)[None, :]
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            mat = _unpack_binary(batch.column(packed_col), width, np_code)
-            target = batch.column(tcol).to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            nodes = route_codes(mat, routing_splits, null_code=null_code)
-            keep = nodes >= 0
-            if not keep.any():
-                continue
-            if not keep.all():
-                mat, target, nodes = mat[keep], target[keep], nodes[keep]
-            if width != n_feat or subset:
-                mat = mat[:, pos]
+        for t, mat, target, nodes in _routed_rows(
+            batches, packed_col, tcol, tree_col, width, code_dtype, routes
+        ):
+            cols, base2, cap_c, nan_slot, null_slot = geometry[t]
+            target = target.astype(np.int64)
+            if cols is not None:
+                mat = mat[:, cols]
             is_nan = mat == nan_code
             is_null = mat == null_code
             idx = np.minimum(mat, cap_c).astype(np.int64)
@@ -1739,7 +1851,7 @@ def packed_histogram_pair_cubes(
             node_off = inv.astype(np.int64) * stride
             total = uniq.size * stride
             counts = np.zeros(total, dtype=np.int64)
-            for a in range(n_feat):
+            for a in range(fa.shape[1]):
                 comb = fb + (fa[:, a] * (s2 * n_classes) + node_off)[:, None]
                 counts += np.bincount(comb.ravel(), minlength=total)
             counts = counts.reshape(uniq.size, stride)
@@ -1765,9 +1877,9 @@ def packed_histogram_pair_cubes(
         )
         _trim_malloc()
 
-    return packed_df.select(packed_col, tcol).mapInArrow(
-        cubes, f"{node_col} int, __cube binary"
-    )
+    return packed_df.select(
+        packed_col, tcol, *([tree_col] if tree_col else [])
+    ).mapInArrow(cubes, f"{node_col} int, __cube binary")
 
 
 def merge_pair_cubes(rows) -> dict[int, "np.ndarray"]:
@@ -1805,26 +1917,28 @@ def pair_cubes_to_level_counts(
 ):
     """Level-d outputs from merged pair cubes: the SAME (counts pdf,
     distributions) :func:`merge_cubes_to_counts_pdf` yields — the
-    per-feature histogram of feature a is the pair cube's marginal over
-    feature 0's b-block (every row lands in exactly one of f0's lens+2
-    b-slots, so the marginal is exact), and a node's class totals are the
-    f0 x f0 diagonal block summed (each row once)."""
+    per-feature histogram is the pair cube's DIAGONAL (slot s of feature a
+    pairs with slot s of a itself exactly once per row whose a-cell sits
+    there, so the diagonal is the exact marginal of every histogrammed
+    feature and zero for a feature the node's tree does not histogram),
+    and a node's class totals are one histogrammed feature's diagonal
+    block summed (each row once, NULL slot included) — the elementwise
+    max over features' block totals, since the others are zero."""
     names, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
     _, lens1, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
         feature_names, bin_edges
     )
     keep = _pair_keep_index(lens, slot2_off)
-    b0 = slice(int(slot2_off[0]), int(slot2_off[1])) if names else slice(0, 0)
     acc: dict[int, np.ndarray] = {}
     distributions = None
     if emit_node_totals:
         distributions = {}
     for nv, flat in cubes.items():
         cube = flat.reshape(s2, s2, n_classes)
-        marg = cube[:, b0, :].sum(axis=1)  # (s2, classes)
+        marg = np.einsum("iic->ic", cube)  # (s2, classes) diagonal view
         acc[nv] = np.ascontiguousarray(marg[keep]).reshape(-1)
         if emit_node_totals:
-            totals = marg[b0.start : b0.stop].sum(axis=0)
+            totals = np.add.reduceat(marg, slot2_off[:-1], axis=0).max(axis=0)
             distributions[nv] = [
                 (i, int(c)) for i, c in enumerate(totals) if c > 0
             ]
@@ -1863,9 +1977,8 @@ def pair_cubes_to_child_counts(
     the edge slots > code(t) plus a*'s NaN slot (NaN routes right); a*'s
     NULL slot is excluded (those rows leave both children) — exactly the
     rows ``route_codes`` would route in a real level-(d+1) pass, so the
-    emitted relation is bit-identical to one."""
-    from bisect import bisect_left
-
+    emitted relation is bit-identical to one.  A threshold that is not
+    one of the feature's edges raises ``ValueError``."""
     names, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
     _, lens1, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
         feature_names, bin_edges
@@ -1880,7 +1993,7 @@ def pair_cubes_to_child_counts(
             continue
         cube = flat.reshape(s2, s2, n_classes)
         j = pos_of[best["feature"]]
-        t = bisect_left(bin_edges[best["feature"]], best["threshold"])
+        t = edge_code(bin_edges[best["feature"]], best["threshold"])
         a0 = int(slot2_off[j])
         left = cube[a0 : a0 + t + 1].sum(axis=0)  # edge slots 0..t
         # edge slots t+1..l-1 plus the NaN slot at l; NULL (l+1) excluded

@@ -30,43 +30,14 @@ stable under any partitioning.
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
 from contextlib import contextmanager
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.functions import exprs
-
-# Per-level stage attribution, dumped on a knob: set
-# SPARK_GRAFT_LEVEL_TIMINGS to a file path (JSONL appended, one line per
-# level job) or "stderr".  Exists because tree_fit_wide's wall time swung
-# 2.4x WITHIN one five-sample run on an idle host (GC excluded by
-# -Xlog:gc) and the bench median cannot say WHICH stage of the level loop
-# inflated — the cube Spark job, the driver-side cube merge, the malloc
-# trim, or the driver-local gains pass.  Timings are a few perf_counter
-# reads per LEVEL (not per row); the knob only gates the emit.
-_LEVEL_TIMINGS_ENV = "SPARK_GRAFT_LEVEL_TIMINGS"
-
-
-def _emit_level_timings(record: dict) -> None:
-    dest = os.environ.get(_LEVEL_TIMINGS_ENV)
-    if not dest:
-        return
-    line = json.dumps(record)
-    if dest == "stderr":
-        print(line, file=sys.stderr)
-        return
-    try:
-        with open(dest, "a") as fh:
-            fh.write(line + "\n")
-    except OSError as exc:  # diagnostics must never fail the fit
-        print(f"level-timings emit failed: {exc}", file=sys.stderr)
 
 # Internal column names (never collide with user feature names because the
 # unpivoted relation only carries these fixed columns).
@@ -527,7 +498,7 @@ def find_best_splits_per_node(
             bounded_candidates=False,
             precomputed_counts=counts,
         )
-        return _best_split_rows(gains, feature_names, node_col)
+        return _best_split_rows(gains, _feature_position(feature_names), node_col)
     gains = candidate_split_gains(
         df,
         feature_names,
@@ -540,7 +511,7 @@ def find_best_splits_per_node(
         bin_edges=bin_edges,
         bounded_candidates=bounded_candidates,
     )
-    return _best_split_rows(gains, feature_names, node_col)
+    return _best_split_rows(gains, _feature_position(feature_names), node_col)
 
 
 # A level's aggregated histogram relation above this row estimate keeps the
@@ -592,8 +563,8 @@ def _no_local_relation_fold(spark):
     ``test_local_gains_fold_free_parity_and_conf_restore``.
 
     Scoped set/restore of the session conf: fits are sequential (the
-    packed level loop runs no concurrent jobs and ``ensemble.py`` trains
-    trees one at a time), and any pre-existing exclusion list is
+    packed level loop runs no concurrent jobs and scores a forest's trees
+    one after another), and any pre-existing exclusion list is
     preserved.
     """
     key = "spark.sql.optimizer.excludedRules"
@@ -614,32 +585,46 @@ def _no_local_relation_fold(spark):
             spark.conf.set(key, prev)
 
 
+class TreeLevel(NamedTuple):
+    """One tree's share of a packed level pass (:func:`find_best_splits_packed`)."""
+
+    feature_names: list[str]  # the features it scores, in tie-break order
+    routing_splits: list[tuple]  # ``histogram.route_codes`` splits
+    pending: list[int]  # its pending node ids
+
+
 def find_best_splits_packed(
     packed_df: DataFrame,
-    feature_names: list[str],
+    trees: dict[int, TreeLevel],
     n_classes: int,
     criterion: Criterion,
     bin_edges: dict[str, list[float]],
-    routing_splits: list[tuple],
     target_idx_col: str = TARGET_IDX,
     node_col: str = "__node_id",
     all_feature_names: list[str] | None = None,
-    n_pending_nodes: int | None = None,
+    tree_col: str | None = None,
     want_distributions: bool = False,
     code_dtype: str = "u1",
     n_input_parts: int | None = None,
     lookahead: bool = False,
-) -> (
-    list[dict[str, Any]]
-    | tuple[list[dict[str, Any]], dict[int, list] | None]
-    | tuple[list[dict[str, Any]], dict[int, list] | None, Any]
-):
+) -> tuple[dict[int, tuple[list[dict[str, Any]], dict[int, list] | None]], Any]:
     """:func:`find_best_splits_per_node` over the packed bin-code matrix
     (uint8, or uint16 when a feature needs more than 253 edges —
     ``code_dtype`` must match the encode;
     ``operators/histogram.py`` packed path): tree routing runs vectorized
     inside the histogram pass instead of as a JVM routing column, so each
     level costs one 2-column Arrow transfer of the cached code relation.
+
+    ONE pass scores the pending nodes of every tree in ``trees``
+    (``{tree_id: TreeLevel}``) — the PLANET / MLlib ``RandomForest``
+    shape: a forest's level is one Spark stage, not one per tree.  With
+    ``tree_col`` each row carries its tree id and is routed by that tree's
+    splits; without it every row is tree 0's (a single tree's fit).  The
+    kernels key their accumulators by a dense SLOT id per pending (tree,
+    node) pair, so the dense, pair and sparse/distributed branches below
+    run unchanged over any number of trees; the driver splits the merged
+    rows back by tree and scores each tree with its own feature list (its
+    tie-break order).  Budgets sum over the trees in the pass.
 
     The aggregated histogram relation is bounded by nodes × features ×
     (bins+1) rows — independent of corpus size — so when that bound is
@@ -655,33 +640,38 @@ def find_best_splits_packed(
     distributed form, which remains the path for relations past
     ``_LOCAL_GAINS_MAX_ROWS`` (deep trees in packed-exact mode).
 
-    ``all_feature_names`` is the packed matrix's full column order when
-    ``feature_names`` scores only a subset (forest feature bagging);
-    ``n_pending_nodes`` (the caller's frontier size) sizes the estimate.
+    ``all_feature_names`` is the packed matrix's full column order when a
+    tree scores only a subset (forest feature bagging).  The pass
+    histograms the union of the trees' features; each row fills only its
+    own tree's.
 
-    ``want_distributions`` switches the return to ``(splits,
-    distributions)``: on the local path the per-node class totals ride the
-    histogram relation as ``DIST_FEATURE`` sentinel rows (no separate
-    distribution job, no cache-materialization race with one), coming back
-    as ``{node_id: [(class_idx, count), ...]}``; the distributed path
-    returns ``None`` for them and the caller falls back to its own job.
+    Returns ``(found, carried)``: ``found[tree] = (splits,
+    distributions)``.  With ``want_distributions`` the per-node class
+    totals ride the local path's histogram (``DIST_FEATURE`` rows / cube
+    tails — no separate distribution job, no cache-materialization race
+    with one) as ``{node_id: [(class_idx, count), ...]}``; otherwise, and
+    on the distributed path, they are None and the caller runs its own
+    job.
 
-    ``lookahead=True`` (r12) switches the return to ``(splits,
-    distributions, next_level_counts_pdf)`` and, when the PAIR cube fits
-    the same byte budget, computes this level from one joint
-    (feature, feature) histogram pass whose conditional slices are the
-    NEXT level's counts — the caller then scores level d+1 entirely
+    ``lookahead=True`` (r12), when the PAIR cube fits the same byte
+    budget, computes this level from one joint (feature, feature)
+    histogram pass whose conditional slices are the NEXT level's counts:
+    ``carried[tree]`` is then that tree's level-(d+1) counts pdf (None
+    when no child has a histogram row) and the caller scores level d+1
     driver-side, with no Spark job (``best_splits_from_counts_pdf``).
     Two tree levels per pass over the code cache: at 100 TB that halves
     the cache scans of a depth-2 binned fit; locally it removes one
     ~0.3 s job-floor level job.  Both levels' decisions are bit-identical
     to the one-level-per-pass form (exact int64 marginals/conditionals of
     the same routed rows — ``histogram.packed_histogram_pair_cubes``;
-    test-pinned).  ``next_level_counts_pdf`` is None whenever the pair
-    budget excludes the pass (wide fits) or the level went distributed."""
+    test-pinned).  ``carried`` is None whenever the pair budget excludes
+    the pass (wide fits) or the level went sparse or distributed."""
+    import numpy as np
+
     from efficient_trees_spark.functions.exprs import class_count_col
     from efficient_trees_spark.operators.histogram import (
         DIST_FEATURE,
+        TreeRoute,
         _trim_malloc,
         merge_cubes_to_counts_pdf,
         merge_pair_cubes,
@@ -694,24 +684,64 @@ def find_best_splits_packed(
         stats_collect_budget,
     )
 
-    if all_feature_names is not None and all_feature_names != list(feature_names):
-        positions = [all_feature_names.index(f) for f in feature_names]
-        width = len(all_feature_names)
+    order = sorted(trees)
+    lists = [list(trees[t].feature_names) for t in order]
+    shared = all(fl == lists[0] for fl in lists)
+    matrix = list(all_feature_names) if all_feature_names is not None else lists[0]
+    if shared:
+        names = lists[0]
+    else:
+        used = set().union(*lists)
+        names = [f for f in matrix if f in used]
+    col_of = {f: j for j, f in enumerate(names)}
+    # Dense slot ids over the pass's (tree, node) pairs, tree by tree, so
+    # each tree owns a contiguous slot range.
+    routes: dict[int, TreeRoute] = {}
+    slot_tree: list[int] = []
+    slot_node: list[int] = []
+    for t, fl in zip(order, lists):
+        level = trees[t]
+        routes[t] = TreeRoute(
+            level.routing_splits,
+            slots={node: len(slot_node) + i for i, node in enumerate(level.pending)},
+            features=None if shared else [col_of[f] for f in fl],
+        )
+        slot_tree += [t] * len(level.pending)
+        slot_node += list(level.pending)
+    if matrix != names:
+        positions, width = [matrix.index(f) for f in names], len(matrix)
     else:
         positions, width = None, None
-    slots = sum(len(bin_edges.get(f, ())) + 1 for f in feature_names)
-    est_rows = max(1, n_pending_nodes or 1) * slots
-    local_path = est_rows <= _LOCAL_GAINS_MAX_ROWS
-    if local_path:
+    kernel_args = dict(
+        feature_positions=positions,
+        matrix_width=width,
+        code_dtype=code_dtype,
+        tree_col=tree_col,
+    )
+    spark = packed_df.sparkSession
+
+    def node_keyed(slot_keyed: dict) -> dict[int, dict]:
+        out: dict[int, dict] = {t: {} for t in order}
+        for slot, value in slot_keyed.items():
+            out[slot_tree[slot]][slot_node[slot]] = value
+        return out
+
+    est_rows = sum(
+        max(1, len(trees[t].pending))
+        * sum(len(bin_edges.get(f, ())) + 1 for f in fl)
+        for t, fl in zip(order, lists)
+    )
+    if est_rows <= _LOCAL_GAINS_MAX_ROWS:
         # Dense-cube variant when the partitions × nodes × cube collect is
         # small: the level job collapses to one mapInArrow stage + an exact
         # driver merge — no shuffle at all.  Volume grows with the input's
         # partition count, so past the budget (big clusters, deep trees)
         # the sparse rows + distributed SUM form below takes over.
-        # `slots` is already the RAGGED flat slot total (per-feature edges
-        # + NaN slot), which is exactly the dense cube's int64 cell count
-        # per node — one wide feature no longer inflates the estimate (or
+        # `slots` is the RAGGED flat slot total (per-feature edges + NaN
+        # slot), which is exactly the dense cube's int64 cell count per
+        # node — one wide feature no longer inflates the estimate (or
         # the cube) by max-edges x width.
+        slots = sum(len(bin_edges.get(f, ())) + 1 for f in names)
         cube_bytes = (
             slots * n_classes * 8
             + (n_classes * 8 if want_distributions else 0)
@@ -729,179 +759,126 @@ def find_best_splits_packed(
         # int64 cubes serialize at most at raw size, so half the cap is
         # clearly safe) — a cluster with a small maxResultSize must fall
         # back rather than fail the collect.
-        cube_budget = min(
-            _DENSE_CUBE_MAX_BYTES, stats_collect_budget(packed_df.sparkSession)
-        )
+        cube_budget = min(_DENSE_CUBE_MAX_BYTES, stats_collect_budget(spark))
         # x1.25 on the partition count: when the caller's count came from
         # the fan-out's file-size ESTIMATE it is a lower bound for budget
         # purposes (ADVICE r11); both branches are bit-identical, so the
-        # pad only moves the (safe) fallback boundary.
-        dense_ok = (
-            int(n_parts * 1.25) * max(1, n_pending_nodes or 1) * cube_bytes
+        # pad only moves the (safe) fallback boundary.  A partition emits
+        # at most one cube per pending node of every tree in the pass.
+        cubes_per_part = int(n_parts * 1.25) * max(1, len(slot_node))
+        dense_ok = cubes_per_part * cube_bytes <= cube_budget
+        pair_ok = (
+            lookahead
+            and dense_ok
+            and cubes_per_part * pair_cube_bytes(names, bin_edges, n_classes)
             <= cube_budget
         )
-        pair_ok = False
-        if lookahead and dense_ok:
-            p_bytes = pair_cube_bytes(feature_names, bin_edges, n_classes)
-            pair_ok = (
-                int(n_parts * 1.25) * max(1, n_pending_nodes or 1) * p_bytes
-                <= cube_budget
-            )
-        distributions: dict[int, list] | None = None
-        carry_pdf = None
-        stages: dict[str, float] = {}
-        t_level0 = time.perf_counter()
         if pair_ok:
-            pair_df = packed_histogram_pair_cubes(
-                packed_df,
-                feature_names,
-                n_classes,
-                bin_edges,
-                target_idx_col,
-                routing_splits,
-                node_col,
-                feature_positions=positions,
-                matrix_width=width,
-                code_dtype=code_dtype,
+            pair_cubes = node_keyed(
+                merge_pair_cubes(
+                    _collect_cube_rows(
+                        packed_histogram_pair_cubes(
+                            packed_df, names, n_classes, bin_edges,
+                            target_idx_col, routes, node_col, **kernel_args,
+                        )
+                    )
+                )
             )
-            if hasattr(pair_df, "toArrow"):
-                cube_rows = _arrow_cube_rows(pair_df.toArrow())
-            else:  # pragma: no cover - pre-Arrow-collect Spark
-                cube_rows = pair_df.collect()
-            stages["pair_cube_job_sec"] = time.perf_counter() - t_level0
-            t0 = time.perf_counter()
-            merged = merge_pair_cubes(cube_rows)
-            pdf, distributions = pair_cubes_to_level_counts(
-                merged, feature_names, n_classes, bin_edges, node_col,
-                emit_node_totals=want_distributions,
-            )
-            stages["driver_merge_sec"] = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            del cube_rows
             _trim_malloc()
-            stages["malloc_trim_sec"] = time.perf_counter() - t0
+            levels = {
+                t: pair_cubes_to_level_counts(
+                    pair_cubes[t], names, n_classes, bin_edges, node_col,
+                    emit_node_totals=want_distributions,
+                )
+                for t in order
+            }
         elif dense_ok:
-            cubes = packed_histogram_cubes(
-                packed_df,
-                feature_names,
-                n_classes,
-                bin_edges,
-                target_idx_col,
-                routing_splits,
-                node_col,
-                feature_positions=positions,
-                matrix_width=width,
-                emit_node_totals=want_distributions,
-                code_dtype=code_dtype,
-            )
-            # Arrow transport for the cube partials: a depth-d level collects
-            # partitions x nodes ~100 KB binary cubes (hundreds of MB at
-            # depth 3+ on many-partition inputs), and toArrow moves binary
-            # columns in columnar IPC batches instead of py4j row pickling.
-            # The merge then reads each cube as a ZERO-COPY buffer view of
-            # the Arrow column (np.frombuffer on the value slice) — the
-            # driver never holds more than the IPC table plus one int64
-            # accumulator per node; to_pylist would double it in bytes
-            # copies.  Transport/accounting only, same numbers.
-            if hasattr(cubes, "toArrow"):
-                cube_rows = _arrow_cube_rows(cubes.toArrow())
-            else:  # pragma: no cover - pre-Arrow-collect Spark
-                cube_rows = cubes.collect()
-            stages["cube_job_sec"] = time.perf_counter() - t_level0
-            t0 = time.perf_counter()
-            pdf, distributions = merge_cubes_to_counts_pdf(
-                cube_rows,
-                feature_names,
-                n_classes,
-                bin_edges,
-                node_col,
-                emit_node_totals=want_distributions,
-            )
+            # Arrow transport for the cube partials: a depth-d level
+            # collects partitions x nodes ~100 KB binary cubes (hundreds of
+            # MB at depth 3+ on many-partition inputs).
+            cube_rows: dict[int, list] = {t: [] for t in order}
+            for slot, cube in _collect_cube_rows(
+                packed_histogram_cubes(
+                    packed_df, names, n_classes, bin_edges, target_idx_col,
+                    routes, node_col, emit_node_totals=want_distributions,
+                    **kernel_args,
+                )
+            ):
+                cube_rows[slot_tree[slot]].append((slot_node[slot], cube))
+            levels = {
+                t: merge_cubes_to_counts_pdf(
+                    cube_rows[t], names, n_classes, bin_edges, node_col,
+                    emit_node_totals=want_distributions,
+                )
+                for t in order
+            }
             # The per-level IPC table is hundreds of MB on many-partition
             # inputs; return it to the OS before the next level piles on
             # (the DRIVER ratchets across levels otherwise, same allocator
             # behavior the workers showed — histogram._trim_malloc notes).
-            stages["driver_merge_sec"] = time.perf_counter() - t0
-            t0 = time.perf_counter()
             del cube_rows
             _trim_malloc()
-            stages["malloc_trim_sec"] = time.perf_counter() - t0
         else:
-            counts = packed_histogram_counts(
-                packed_df,
-                feature_names,
-                n_classes,
-                bin_edges,
-                target_idx_col,
-                routing_splits,
-                node_col,
-                feature_positions=positions,
-                matrix_width=width,
-                emit_node_totals=want_distributions,
-                code_dtype=code_dtype,
-            )
-            pdf = counts.toPandas()
-            stages["sparse_counts_job_sec"] = time.perf_counter() - t_level0
+            pdf = packed_histogram_counts(
+                packed_df, names, n_classes, bin_edges, target_idx_col,
+                routes, node_col, emit_node_totals=want_distributions,
+                **kernel_args,
+            ).toPandas()
+            dists: dict[int, dict | None] = dict.fromkeys(order)
             if want_distributions:
                 mask = pdf[FEATURE] == DIST_FEATURE
-                distributions = {
-                    int(r[node_col]): [
-                        (i, int(r[class_count_col(i)]))
-                        for i in range(n_classes)
-                        if r[class_count_col(i)] > 0
-                    ]
-                    for _, r in pdf[mask].iterrows()
-                }
+                dists = node_keyed(
+                    {
+                        int(r[node_col]): [
+                            (i, int(r[class_count_col(i)]))
+                            for i in range(n_classes)
+                            if r[class_count_col(i)] > 0
+                        ]
+                        for _, r in pdf[mask].iterrows()
+                    }
+                )
                 pdf = pdf[~mask]
-        t0 = time.perf_counter()
-        best = best_splits_from_counts_pdf(
-            pdf, packed_df.sparkSession, n_classes, feature_names, node_col,
-            criterion,
-        )
-        stages["local_gains_sec"] = time.perf_counter() - t0
+            levels = {t: (None, dists[t]) for t in order}
+            slot = pdf[node_col].to_numpy()
+            owner = np.asarray(slot_tree, dtype=np.int64)[slot]
+            node_of = np.asarray(slot_node, dtype=np.int32)
+            for t in order:
+                mine = owner == t
+                if mine.any():
+                    levels[t] = (
+                        pdf[mine].assign(**{node_col: node_of[slot[mine]]}),
+                        dists[t],
+                    )
+        found = {
+            t: (
+                best_splits_from_counts_pdf(
+                    levels[t][0], spark, n_classes, fl, node_col, criterion
+                ),
+                levels[t][1],
+            )
+            for t, fl in zip(order, lists)
+        }
+        carried = None
         if pair_ok:
             # Next level's counts from the same cubes: only nodes the
             # caller will actually split produce children (gain > 0 —
             # mirrors the tree loop's leaf rule).
-            t0 = time.perf_counter()
-            carry_pdf = pair_cubes_to_child_counts(
-                merged,
-                [b for b in best if b["information_gain"] > 0],
-                feature_names, n_classes, bin_edges, node_col,
-            )
-            del merged
-            stages["carry_derive_sec"] = time.perf_counter() - t0
-        _emit_level_timings(
-            {
-                "path": (
-                    "pair_dense" if pair_ok
-                    else "dense" if dense_ok else "sparse_local"
-                ),
-                "n_pending_nodes": n_pending_nodes,
-                "n_parts": n_parts,
-                "level_total_sec": round(time.perf_counter() - t_level0, 3),
-                "stages": {k: round(v, 3) for k, v in stages.items()},
+            carried = {
+                t: pair_cubes_to_child_counts(
+                    pair_cubes[t],
+                    [b for b in found[t][0] if b["information_gain"] > 0],
+                    names, n_classes, bin_edges, node_col,
+                )
+                for t in order
             }
-        )
-        if lookahead:
-            return best, distributions, carry_pdf
-        return (best, distributions) if want_distributions else best
-    t_level0 = time.perf_counter()
+        return found, carried
     counts = packed_histogram_counts(
-        packed_df,
-        feature_names,
-        n_classes,
-        bin_edges,
-        target_idx_col,
-        routing_splits,
-        node_col,
-        feature_positions=positions,
-        matrix_width=width,
-        code_dtype=code_dtype,
+        packed_df, names, n_classes, bin_edges, target_idx_col, routes,
+        node_col, **kernel_args,
     )
     gains = candidate_split_gains(
         packed_df,
-        feature_names,
+        names,
         n_classes,
         criterion,
         target_idx_col,
@@ -910,18 +887,32 @@ def find_best_splits_packed(
         bounded_candidates=True,
         precomputed_counts=counts,
     )
-    best = _best_split_rows(gains, feature_names, node_col)
-    _emit_level_timings(
-        {
-            "path": "distributed",
-            "n_pending_nodes": n_pending_nodes,
-            "level_total_sec": round(time.perf_counter() - t_level0, 3),
-            "stages": {},
-        }
-    )
-    if lookahead:
-        return best, None, None
-    return (best, None) if want_distributions else best
+    # Each tree's tie-break position comes from its own feature list,
+    # looked up by the tree's contiguous slot range.
+    position = _feature_position(lists[0])
+    if not shared:
+        ends = np.cumsum([len(trees[t].pending) for t in order])
+        position = F.when(F.col(node_col) < int(ends[0]), position)
+        for end, fl in zip(ends[1:], lists[1:]):
+            position = position.when(
+                F.col(node_col) < int(end), _feature_position(fl)
+            )
+    found = {t: ([], None) for t in order}
+    for b in _best_split_rows(gains, position, node_col):
+        slot = b["node_id"]
+        found[slot_tree[slot]][0].append(dict(b, node_id=slot_node[slot]))
+    return found, None
+
+
+def _collect_cube_rows(cubes: DataFrame) -> list[tuple[int, "object"]]:
+    """(slot, cube buffer) rows of a dense or pair cube pass.  toArrow
+    moves binary columns in columnar IPC batches instead of py4j row
+    pickling, and each cube is read as a ZERO-COPY view of the Arrow
+    column: the driver never holds more than the IPC table plus one int64
+    accumulator per node.  Transport/accounting only, same numbers."""
+    if hasattr(cubes, "toArrow"):
+        return _arrow_cube_rows(cubes.toArrow())
+    return cubes.collect()  # pragma: no cover - pre-Arrow-collect Spark
 
 
 def best_splits_from_counts_pdf(
@@ -1232,14 +1223,18 @@ def _best_splits_gini_local(
     ]
 
 
-def _best_split_rows(
-    gains: DataFrame, feature_names: list[str], node_col: str
-) -> list[dict[str, Any]]:
-    """max_by argmax + collect shared by the routing-column and packed
-    level-wise split searches (same total-order tie-break)."""
-    position = F.create_map(
+def _feature_position(feature_names: list[str]):
+    """Each candidate's feature position in ``feature_names`` (the
+    tie-break key), as a tiny literal map lookup."""
+    return F.create_map(
         *[x for i, name in enumerate(feature_names) for x in (F.lit(name), F.lit(i))]
     )[F.col(FEATURE)]
+
+
+def _best_split_rows(gains: DataFrame, position, node_col: str) -> list[dict[str, Any]]:
+    """max_by argmax + collect shared by the routing-column and packed
+    level-wise split searches (same total-order tie-break; ``position`` is
+    the feature-position column, :func:`_feature_position`)."""
     order = F.struct(
         F.col("information_gain"),
         (-position).alias("neg_position"),
@@ -1283,11 +1278,7 @@ def find_best_split(
     """
     gains = candidate_split_gains(df, feature_names, n_classes, criterion, target_idx_col)
 
-    # Feature-list position for the tie-break, as a tiny literal map.
-    position = F.create_map(
-        *[x for i, name in enumerate(feature_names) for x in (F.lit(name), F.lit(i))]
-    )[F.col(FEATURE)]
-
+    position = _feature_position(feature_names)
     best = (
         gains.orderBy(
             F.desc("information_gain"), position.asc(), F.asc(FEATURE_VALUE)

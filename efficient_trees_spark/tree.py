@@ -161,6 +161,47 @@ def _coalesce_for_pack(
     return prepared, n_parts
 
 
+def _encode_codes(
+    prepared: DataFrame,
+    feature_names: list[str],
+    bin_edges: dict[str, list[float]],
+    dtype: str,
+    n_rows_est: int | None = None,
+    n_parts: int | None = None,
+) -> tuple[DataFrame, str, int | None] | None:
+    """Pass 2 of the two-scan flow, shared by the single-tree fit and the
+    forest: the fused pack + encode of ``prepared`` into the packed
+    bin-code relation — uint8 (1 byte/cell) when every feature fits 253
+    edges, uint16 (2 bytes/cell, <= 65 533 edges) past that.  Routing and
+    histograms then run on codes, order-isomorphic to raw values, so trees
+    are bit-identical.  Returns ``(codes, code_dtype, n_parts)``, or None
+    when a feature exceeds uint16 code space.
+
+    With ``n_rows_est`` the input is first right-sized for the cache
+    (:func:`_coalesce_for_pack`); the forest passes none, since its bags
+    sample the code relation and a different partitioning would draw
+    different rows."""
+    from efficient_trees_spark.operators import histogram
+
+    max_card = max((len(e) for e in bin_edges.values()), default=0)
+    if max_card > histogram._MAX_PACKED16_EDGES:
+        return None
+    code_dtype = "u1" if max_card <= histogram._MAX_PACKED_EDGES else "u2"
+    if n_rows_est is not None:
+        prepared, n_parts = _coalesce_for_pack(
+            prepared,
+            n_rows_est,
+            len(feature_names),
+            bytes_per_cell=1 if code_dtype == "u1" else 2,
+            n_parts=n_parts,
+        )
+    codes = histogram.pack_encode_features(
+        prepared, feature_names, bin_edges, _TARGET_IDX, dtype=dtype,
+        code_dtype=code_dtype,
+    )
+    return codes, code_dtype, n_parts
+
+
 def _two_scan_binned_edges(
     prepared: DataFrame,
     feature_names: list[str],
@@ -505,10 +546,8 @@ class DecisionTreeClassifier:
         packed_code_dtype = "u1"
         if hist_method == "arrow":
             from efficient_trees_spark.operators.histogram import (
-                _MAX_PACKED_EDGES,
                 _MAX_PACKED16_EDGES,
                 distinct_edges_packed,
-                pack_encode_features,
             )
 
             dtype = "f4" if shrink_features else "f8"
@@ -531,33 +570,12 @@ class DecisionTreeClassifier:
                     n_parts=known_parts,
                 )
                 self.bin_edges_ = bin_edges
-                max_card = max(
-                    (len(e) for e in bin_edges.values()), default=0
+                encoded = _encode_codes(
+                    prepared, feature_names, bin_edges, dtype,
+                    n_rows_est=n_rows_est, n_parts=known_parts,
                 )
-                if max_card <= _MAX_PACKED16_EDGES:
-                    # The persisted training relation becomes packed bin
-                    # codes — uint8 (1 byte/cell) when every feature fits
-                    # 253 edges, uint16 (2 bytes/cell, <= 65 533 edges)
-                    # past that; routing and histograms run on codes —
-                    # order-isomorphic to raw values, bit-identical trees.
-                    packed_code_dtype = (
-                        "u1" if max_card <= _MAX_PACKED_EDGES else "u2"
-                    )
-                    prepared, known_parts = _coalesce_for_pack(
-                        prepared,
-                        n_rows_est,
-                        len(feature_names),
-                        bytes_per_cell=1 if packed_code_dtype == "u1" else 2,
-                        n_parts=known_parts,
-                    )
-                    prepared = pack_encode_features(
-                        prepared,
-                        feature_names,
-                        bin_edges,
-                        _TARGET_IDX,
-                        dtype=dtype,
-                        code_dtype=packed_code_dtype,
-                    )
+                if encoded is not None:
+                    prepared, packed_code_dtype, known_parts = encoded
                     packed_mode = True
                 # beyond uint16 code space: `prepared` stays columnar and
                 # the per-level searchsorted histogram path takes over below.
@@ -596,31 +614,13 @@ class DecisionTreeClassifier:
                     bin_edges = None
                     prepared = prepared_base
                 else:
+                    # uint16 codes cover up to 65 533 distinct values —
+                    # virtually every real exact fit, without ever taking
+                    # the melt's rows x width Expand.
                     self.bin_edges_ = bin_edges
-                    # uint8 codes whenever every feature fits 253 distinct
-                    # values; uint16 (2 bytes/cell) up to 65 533 — virtually
-                    # every real exact fit, without ever taking the melt's
-                    # rows x width Expand.
-                    max_card = max(
-                        (len(e) for e in bin_edges.values()), default=0
-                    )
-                    packed_code_dtype = (
-                        "u1" if max_card <= _MAX_PACKED_EDGES else "u2"
-                    )
-                    prepared, known_parts = _coalesce_for_pack(
-                        prepared,
-                        n_rows_est,
-                        len(feature_names),
-                        bytes_per_cell=1 if packed_code_dtype == "u1" else 2,
-                        n_parts=known_parts,
-                    )
-                    prepared = pack_encode_features(
-                        prepared,
-                        feature_names,
-                        bin_edges,
-                        _TARGET_IDX,
-                        dtype=dtype,
-                        code_dtype=packed_code_dtype,
+                    prepared, packed_code_dtype, known_parts = _encode_codes(
+                        prepared, feature_names, bin_edges, dtype,
+                        n_rows_est=n_rows_est, n_parts=known_parts,
                     )
                     packed_mode = True
         elif self.max_bins is not None:
@@ -631,21 +631,25 @@ class DecisionTreeClassifier:
 
         # Both packed branches above are two-scan flows (sketch/distinct
         # pass + fused pack-encode): no raw float relation is ever cached
-        # by a single-tree fit, so there is nothing to release — the only
-        # persisted training artifact is the 1 byte/cell code relation the
-        # level-wise builder pins (and the forest's shared raw cache, which
-        # ensemble.py manages itself).
+        # by a single-tree fit — the only persisted training artifact is
+        # the 1 byte/cell code relation pinned here for the level loop
+        # (and the forest's shared code relation, which ensemble.py
+        # manages itself).
         if strategy == "level":
-            self.tree = self._build_tree_levelwise(
-                prepared,
-                feature_names,
-                unique_targets,
-                hist_method=hist_method,
-                bin_edges=bin_edges if hist_method == "arrow" else None,
-                packed=packed_mode,
-                packed_code_dtype=packed_code_dtype,
-                packed_n_parts=known_parts if packed_mode else None,
-            )
+            prepared = prepared.persist()
+            try:
+                [self.tree] = self._build_tree_levelwise(
+                    prepared,
+                    [feature_names],
+                    unique_targets,
+                    hist_method=hist_method,
+                    bin_edges=bin_edges if hist_method == "arrow" else None,
+                    packed=packed_mode,
+                    packed_code_dtype=packed_code_dtype,
+                    packed_n_parts=known_parts if packed_mode else None,
+                )
+            finally:
+                prepared.unpersist()
         elif strategy == "node":
             self.tree = self._build_tree(
                 prepared, feature_names, unique_targets, depth=0
@@ -853,16 +857,18 @@ class DecisionTreeClassifier:
         ``histogram.route_codes`` consumes: ``(node_id, feature_pos,
         code_threshold, left_id, right_id)`` per internal node, -1 for
         finalized (leaf) children.  Thresholds (always bin edges) translate
-        to their edge index; code comparisons are bit-equivalent to the raw
-        routing expression by the encode_packed order isomorphism."""
-        from bisect import bisect_left
+        to their edge index (``histogram.edge_code``, which raises on a
+        threshold that is not an edge); code comparisons are bit-equivalent
+        to the raw routing expression by the encode_packed order
+        isomorphism."""
+        from efficient_trees_spark.operators.histogram import edge_code
 
         if out is None:
             out = []
         if node["type"] != "node":
             return out
         feature = node["feature"]
-        code = bisect_left(bin_edges[feature], node["threshold"])
+        code = edge_code(bin_edges[feature], node["threshold"])
         left, right = node["left"], node["right"]
         lid, rid = 2 * node_id + 1, 2 * node_id + 2
         out.append(
@@ -885,7 +891,7 @@ class DecisionTreeClassifier:
     def _build_tree_levelwise(
         self,
         data: DataFrame,
-        feature_names: list[str],
+        tree_features: list[list[str]],
         unique_targets: list[Any],
         hist_method: str = "expand",
         bin_edges: dict[str, list[float]] | None = None,
@@ -893,11 +899,22 @@ class DecisionTreeClassifier:
         packed_all_features: list[str] | None = None,
         packed_code_dtype: str = "u1",
         packed_n_parts: int | None = None,
-    ) -> dict[str, Any]:
+        tree_col: str | None = None,
+    ) -> list[dict[str, Any]]:
         """PLANET-style breadth-first growth (the published strategy behind
         MLlib's trees, here with exact distinct-value splits): each level runs
         ONE split-search job covering every pending node, keyed by a routing
         column compiled from the partial tree.
+
+        Grows ``len(tree_features)`` trees level-synchronously, tree t
+        scoring ``tree_features[t]``: on the packed path one histogram pass
+        per level covers the pending nodes of EVERY tree (rows carry their
+        tree id in ``tree_col``), so a forest pays one Spark stage per
+        level, not one per tree; a single tree is the one-element case.
+        The expand path grows one tree.  ``data`` is read once per level —
+        the caller persists it (or, for a forest's sampled bags, makes it
+        re-derivable: seeded sampling of a persisted relation draws the
+        same rows every level).
 
         Class distributions cost no extra jobs beyond the root's: a node's
         distribution over its children is a free by-product of its split scan
@@ -912,100 +929,122 @@ class DecisionTreeClassifier:
         same way the not-null prefix sums count them.
         """
         node_col = "__node_id"
-        data = data.persist()
-        try:
-            root: dict[str, Any] = {"type": "pending", "node_id": 0}
-            frontier: dict[int, dict[str, Any]] = {0: root}
-            # node_id -> [(class_idx, count), ...] class-ascending, zero-count
-            # classes absent (value_counts semantics, reference tree.py:363-372).
-            distributions: dict[int, list[tuple[int, int]]] = {}
-            depth = 0
-            # Counts relation for the NEXT level, derived driver-side from
-            # the previous level's PAIR-cube pass (r12): when set, this
-            # level's splits are scored with NO Spark job at all.
-            carry_pdf = None
-            while frontier:
-                at_max_depth = self.max_depth is not None and depth >= self.max_depth
-                need_root_dist = depth == 0
-
-                best_by_node: dict[int, dict[str, Any]] = {}
-                if need_root_dist or not at_max_depth:
-                    if packed:
-                        # Routing runs vectorized inside the histogram pass
-                        # (histogram.route_codes); the root distribution is a
-                        # plain target count (depth 0 routes every row to
-                        # node 0).
-                        dist_src = data
-
-                        all_names = packed_all_features or feature_names
-                        # Look one level ahead (pair-cube pass) only when
-                        # the NEXT level will need splits too; the budget
-                        # gate inside find_best_splits_packed decides
-                        # whether the pair pass actually fires.
-                        lookahead = (not at_max_depth) and (
-                            self.max_depth is None
-                            or depth + 1 < self.max_depth
+        n_trees = len(tree_features)
+        if n_trees > 1 and not (packed and tree_col):
+            raise ValueError(
+                "growing several trees in one pass needs the packed code "
+                "relation and a tree-id column"
+            )
+        all_names = packed_all_features or tree_features[0]
+        roots: list[dict[str, Any]] = [
+            {"type": "pending", "node_id": 0} for _ in range(n_trees)
+        ]
+        frontiers: list[dict[int, dict[str, Any]]] = [{0: r} for r in roots]
+        # per tree: node_id -> [(class_idx, count), ...] class-ascending,
+        # zero-count classes absent (value_counts semantics, reference
+        # tree.py:363-372).
+        distributions: list[dict[int, list[tuple[int, int]]]] = [
+            {} for _ in range(n_trees)
+        ]
+        # Per-tree counts relations for the NEXT level, derived driver-side
+        # from the previous level's PAIR-cube pass (r12): when set, this
+        # level's splits are scored with NO Spark job at all.
+        carried: dict[int, Any] | None = None
+        depth = 0
+        while any(frontiers):
+            active = [t for t in range(n_trees) if frontiers[t]]
+            at_max_depth = self.max_depth is not None and depth >= self.max_depth
+            need_root_dist = depth == 0
+            best_by_node: list[dict[int, dict[str, Any]]] = [
+                {} for _ in range(n_trees)
+            ]
+            if packed and not at_max_depth:
+                if carried is not None:
+                    for t in active:
+                        best_by_node[t] = {
+                            b["node_id"]: b
+                            for b in split_finder.best_splits_from_counts_pdf(
+                                carried[t],
+                                data.sparkSession,
+                                len(unique_targets),
+                                tree_features[t],
+                                node_col,
+                                self.criterion,
+                            )
+                        }
+                    carried = None
+                else:
+                    # Routing runs vectorized inside the histogram pass
+                    # (histogram.route_codes).  Look one level ahead
+                    # (pair-cube pass) only when the NEXT level will need
+                    # splits too; the budget gate inside
+                    # find_best_splits_packed decides whether it fires.
+                    level_data = (
+                        data
+                        if len(active) == n_trees
+                        else data.filter(F.col(tree_col).isin(active))
+                    )
+                    found, carried = split_finder.find_best_splits_packed(
+                        level_data,
+                        {
+                            t: split_finder.TreeLevel(
+                                tree_features[t],
+                                self._compile_routing_splits(
+                                    roots[t], all_names, bin_edges
+                                ),
+                                list(frontiers[t]),
+                            )
+                            for t in active
+                        },
+                        len(unique_targets),
+                        self.criterion,
+                        bin_edges,
+                        node_col=node_col,
+                        all_feature_names=all_names,
+                        tree_col=tree_col,
+                        want_distributions=need_root_dist,
+                        code_dtype=packed_code_dtype,
+                        n_input_parts=packed_n_parts,
+                        lookahead=(
+                            self.max_depth is None or depth + 1 < self.max_depth
+                        ),
+                    )
+                    for t, (best, dists) in found.items():
+                        best_by_node[t] = {b["node_id"]: b for b in best}
+                        if need_root_dist and dists and 0 in dists:
+                            # the root distribution rode the level-0
+                            # histogram: no second job racing the first to
+                            # materialize the code cache
+                            distributions[t][0] = dists[0]
+                    if need_root_dist and any(
+                        0 not in distributions[t] for t in active
+                    ):
+                        for t, dist in enumerate(
+                            self._root_distributions(data, tree_col, n_trees)
+                        ):
+                            distributions[t][0] = dist
+            elif need_root_dist or not at_max_depth:
+                # Expand path (or a depth-0 packed fit): the (cheap)
+                # root-distribution job and the (expensive) split job are
+                # independent — submit both and let the scheduler overlap
+                # them.
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    dist_future = (
+                        pool.submit(
+                            self._root_distributions, data, tree_col, n_trees
                         )
-
-                        if carry_pdf is not None:
-                            level_pdf, carry_pdf = carry_pdf, None
-                            lookahead = False
-
-                            def find_splits():
-                                import time as _time
-
-                                t0 = _time.perf_counter()
-                                best = split_finder.best_splits_from_counts_pdf(
-                                    level_pdf,
-                                    data.sparkSession,
-                                    len(unique_targets),
-                                    feature_names,
-                                    node_col,
-                                    self.criterion,
-                                )
-                                split_finder._emit_level_timings(
-                                    {
-                                        "path": "carried",
-                                        "n_pending_nodes": len(frontier),
-                                        "level_total_sec": round(
-                                            _time.perf_counter() - t0, 3
-                                        ),
-                                        "stages": {},
-                                    }
-                                )
-                                return best
-
-                        else:
-
-                            def find_splits():
-                                return split_finder.find_best_splits_packed(
-                                    data,
-                                    feature_names,
-                                    len(unique_targets),
-                                    self.criterion,
-                                    bin_edges,
-                                    self._compile_routing_splits(
-                                        root, all_names, bin_edges
-                                    ),
-                                    node_col=node_col,
-                                    all_feature_names=all_names,
-                                    n_pending_nodes=len(frontier),
-                                    want_distributions=need_root_dist,
-                                    code_dtype=packed_code_dtype,
-                                    n_input_parts=packed_n_parts,
-                                    lookahead=lookahead,
-                                )
-
-                    else:
+                        if need_root_dist
+                        else None
+                    )
+                    if not at_max_depth:
                         with_node = data.withColumn(
-                            node_col, self._routing_expr(root)
+                            node_col, self._routing_expr(roots[0])
                         ).filter(F.col(node_col).isNotNull())
-                        dist_src = with_node
-
-                        def find_splits():
-                            return split_finder.find_best_splits_per_node(
+                        best_by_node[0] = {
+                            b["node_id"]: b
+                            for b in split_finder.find_best_splits_per_node(
                                 with_node,
-                                feature_names,
+                                tree_features[0],
                                 len(unique_targets),
                                 self.criterion,
                                 node_col,
@@ -1013,101 +1052,87 @@ class DecisionTreeClassifier:
                                 bin_edges=bin_edges,
                                 bounded_candidates=self.max_bins is not None,
                             )
-
-                    def collect_root_distribution():
-                        rows = (
-                            dist_src.groupBy(_TARGET_IDX)
-                            .count()
-                            .orderBy(_TARGET_IDX)
-                            .collect()
-                        )
-                        return [(row[_TARGET_IDX], row["count"]) for row in rows]
-
-                    if packed and not at_max_depth:
-                        # Packed path: the root distribution rides the
-                        # level-0 histogram as DIST_FEATURE sentinel rows —
-                        # one job, and no second job racing the first to
-                        # materialize the code cache (both used to encode
-                        # the same uncached partitions concurrently).
-                        splits_out = find_splits()
-                        if lookahead:
-                            # 3-tuple contract: splits, fused distributions
-                            # (root level only), and — when the pair pass
-                            # fired — the NEXT level's counts relation.
-                            splits_out, fused_dists, carry_pdf = splits_out
-                        elif need_root_dist:
-                            splits_out, fused_dists = splits_out
-                        else:
-                            fused_dists = None
-                        if need_root_dist:
-                            distributions[0] = (
-                                fused_dists[0]
-                                if fused_dists is not None and 0 in fused_dists
-                                else collect_root_distribution()
-                            )
-                        best_by_node = {b["node_id"]: b for b in splits_out}
-                    else:
-                        # Expand path keeps the overlap: the (cheap)
-                        # root-distribution job and the (expensive) split
-                        # job are independent — submit both and let the
-                        # scheduler overlap them.
-                        with ThreadPoolExecutor(max_workers=2) as pool:
-                            dist_future = (
-                                pool.submit(collect_root_distribution)
-                                if need_root_dist
-                                else None
-                            )
-                            if not at_max_depth:
-                                best_by_node = {
-                                    b["node_id"]: b for b in find_splits()
-                                }
-                            if dist_future is not None:
-                                distributions[0] = dist_future.result()
-
-                next_frontier: dict[int, dict[str, Any]] = {}
-                for node_id, placeholder in frontier.items():
-                    distribution = distributions.pop(node_id)
-                    majority = unique_targets[self._majority_idx(distribution)]
-                    best = best_by_node.get(node_id)
-                    if at_max_depth or best is None or not best["information_gain"] > 0:
-                        placeholder.clear()
-                        placeholder.update({"type": "leaf", "value": majority})
-                        continue
-                    # A pure child (single surviving class) can never split
-                    # again (every candidate gain is 0 → leaf with that class,
-                    # reference tree.py:350,384-385), so it is finalized here
-                    # and its rows never enter the next level's split job.
-                    def make_child(child_id: int, counts: list[int]) -> dict[str, Any]:
-                        pairs = [(i, c) for i, c in enumerate(counts) if c > 0]
-                        if len(pairs) == 1:
-                            return {"type": "leaf", "value": unique_targets[pairs[0][0]]}
-                        distributions[child_id] = pairs
-                        return {"type": "pending", "node_id": child_id}
-
-                    left = make_child(2 * node_id + 1, best["left_counts"])
-                    right = make_child(2 * node_id + 2, best["right_counts"])
-                    placeholder.clear()
-                    placeholder.update(
-                        {
-                            "type": "node",
-                            "feature": best["feature"],
-                            "threshold": best["threshold"],
-                            "information_gain": best["information_gain"],
-                            "criterion_value": best["parent_criterion"],
-                            "target_distribution": [c for _, c in distribution],
-                            "left": left,
-                            "right": right,
                         }
-                    )
-                    for child in (left, right):
-                        if child["type"] == "pending":
-                            next_frontier[child["node_id"]] = child
+                    if dist_future is not None:
+                        for t, dist in enumerate(dist_future.result()):
+                            distributions[t][0] = dist
 
-                frontier = next_frontier
-                depth += 1
-            return root
-        finally:
-            data.unpersist()
+            for t in active:
+                frontiers[t] = self._grow_frontier(
+                    frontiers[t],
+                    distributions[t],
+                    best_by_node[t],
+                    unique_targets,
+                    at_max_depth,
+                )
+            depth += 1
+        return roots
+
+    def _grow_frontier(
+        self,
+        frontier: dict[int, dict[str, Any]],
+        distributions: dict[int, list[tuple[int, int]]],
+        best_by_node: dict[int, dict[str, Any]],
+        unique_targets: list[Any],
+        at_max_depth: bool,
+    ) -> dict[int, dict[str, Any]]:
+        """Apply one level's best splits to a tree's frontier in place:
+        each pending node becomes a leaf or a split node; returns the next
+        level's frontier."""
+        next_frontier: dict[int, dict[str, Any]] = {}
+        for node_id, placeholder in frontier.items():
+            distribution = distributions.pop(node_id)
+            majority = unique_targets[self._majority_idx(distribution)]
+            best = best_by_node.get(node_id)
+            if at_max_depth or best is None or not best["information_gain"] > 0:
+                placeholder.clear()
+                placeholder.update({"type": "leaf", "value": majority})
+                continue
+            # A pure child (single surviving class) can never split
+            # again (every candidate gain is 0 → leaf with that class,
+            # reference tree.py:350,384-385), so it is finalized here
+            # and its rows never enter the next level's split job.
+            def make_child(child_id: int, counts: list[int]) -> dict[str, Any]:
+                pairs = [(i, c) for i, c in enumerate(counts) if c > 0]
+                if len(pairs) == 1:
+                    return {"type": "leaf", "value": unique_targets[pairs[0][0]]}
+                distributions[child_id] = pairs
+                return {"type": "pending", "node_id": child_id}
+
+            left = make_child(2 * node_id + 1, best["left_counts"])
+            right = make_child(2 * node_id + 2, best["right_counts"])
+            placeholder.clear()
+            placeholder.update(
+                {
+                    "type": "node",
+                    "feature": best["feature"],
+                    "threshold": best["threshold"],
+                    "information_gain": best["information_gain"],
+                    "criterion_value": best["parent_criterion"],
+                    "target_distribution": [c for _, c in distribution],
+                    "left": left,
+                    "right": right,
+                }
+            )
+            for child in (left, right):
+                if child["type"] == "pending":
+                    next_frontier[child["node_id"]] = child
+        return next_frontier
+
+    @staticmethod
+    def _root_distributions(
+        data: DataFrame, tree_col: str | None, n_trees: int
+    ) -> list[list[tuple[int, int]]]:
+        """Each tree's root class distribution, ``[(class_idx, count),
+        ...]`` class-ascending, in one job."""
+        keys = ([tree_col] if tree_col else []) + [_TARGET_IDX]
+        rows = data.groupBy(*keys).count().orderBy(*keys).collect()
+        out: list[list[tuple[int, int]]] = [[] for _ in range(n_trees)]
+        for row in rows:
+            out[row[tree_col] if tree_col else 0].append(
+                (row[_TARGET_IDX], row["count"])
+            )
+        return out
 
     # ----------------------------------------------- node-wise (reference)
 

@@ -94,23 +94,84 @@ def test_forest_json_roundtrip_with_categoricals(spark):
     assert clone.predict_many(df) == rf.predict_many(df)
 
 
+def _iris_with_missing(spark):
+    """Iris training rows with NULL and NaN cells sprinkled over the
+    features."""
+    train_pd, _ = train_test_frames(string_labels=False)
+    features = [c for c in train_pd.columns if c not in ("target", "categorical_feature")]
+    rows = []
+    for i, (values, target) in enumerate(
+        zip(train_pd[features].itertuples(index=False, name=None), train_pd["target"])
+    ):
+        cells = [
+            None if (i + j) % 11 == 0
+            else float("nan") if (i + 2 * j) % 13 == 0
+            else float(v)
+            for j, v in enumerate(values)
+        ]
+        rows.append((*cells, int(target)))
+    schema = ", ".join(f"`{f}` double" for f in features) + ", target long"
+    return spark.createDataFrame(rows, schema)
+
+
 def test_binned_forest_packed_matches_snapped_expand(spark, monkeypatch):
-    """A binned forest (the 100 TB path) now trains on the shared packed
-    uint8 code relation; forcing the >253-edge fallback (snap + expand)
-    must yield the IDENTICAL forest — same bootstrap rows (the pack pass is
-    a 1:1 row map, so seeded sampling picks the same logical rows), same
-    candidate edges, same trees."""
+    """A binned forest (the 100 TB path) trains on the shared packed code
+    relation, all trees level-synchronously; forcing the past-uint16
+    fallback (snap + expand, one tree at a time) must yield the IDENTICAL
+    forest — same bootstrap rows (the pack pass is a 1:1 row map, so
+    seeded sampling picks the same logical rows), same candidate edges,
+    same trees, with NULL cells dropped from both children and NaN cells
+    routed right."""
     from efficient_trees_spark.operators import histogram
 
-    train, _, _ = _iris(spark)
+    train = _iris_with_missing(spark)
     kwargs = dict(
-        n_trees=5, max_depth=3, feature_fraction=0.75, max_bins=8, seed=11
+        n_trees=5, max_depth=4, feature_fraction=0.75, max_bins=8, seed=11
     )
     rf_packed = RandomForestClassifier(**kwargs)
     rf_packed.fit(train, "target")
+    assert sum(t["type"] == "node" for t in rf_packed.trees) >= 3
 
     monkeypatch.setattr(histogram, "_MAX_PACKED_EDGES", -1)
+    monkeypatch.setattr(histogram, "_MAX_PACKED16_EDGES", -1)
     rf_fallback = RandomForestClassifier(**kwargs)
     rf_fallback.fit(train, "target")
 
     assert rf_packed.trees == rf_fallback.trees
+
+
+def test_forest_tree_equals_single_tree_forest_at_its_seed(spark):
+    """Growing trees together changes no tree: with every feature in every
+    tree, tree t of a 4-tree forest seeded s is the only tree of a 1-tree
+    forest seeded s + t (same bootstrap draw, same splits)."""
+    train, _, _ = _iris(spark)
+    kwargs = dict(max_depth=3, max_bins=8)
+    forest = RandomForestClassifier(n_trees=4, seed=5, **kwargs)
+    forest.fit(train, "target")
+    for t, tree in enumerate(forest.trees):
+        single = RandomForestClassifier(n_trees=1, seed=5 + t, **kwargs)
+        single.fit(train, "target")
+        assert single.trees == [tree], t
+
+
+def test_forest_level_branches_agree(spark, monkeypatch):
+    """A feature-bagged forest's level passes give the same trees on the
+    dense (and pair) cube branches, the sparse-rows branch and the
+    distributed-gains branch — each tree scored with its own feature
+    list, whichever branch merged the histograms."""
+    from efficient_trees_spark.operators import split_finder
+
+    train = _iris_with_missing(spark)
+    kwargs = dict(n_trees=3, max_depth=3, feature_fraction=0.75, max_bins=8, seed=2)
+
+    def fit():
+        rf = RandomForestClassifier(**kwargs)
+        rf.fit(train, "target")
+        return rf.trees
+
+    dense = fit()
+    monkeypatch.setattr(split_finder, "_DENSE_CUBE_MAX_BYTES", 0)
+    sparse = fit()
+    monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", 0)
+    distributed = fit()
+    assert dense == sparse == distributed

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import math
+import uuid
 import warnings
 
 import numpy as np
@@ -131,35 +132,51 @@ def test_wide_fit_arrow_expand_parity(spark):
     assert trees["arrow"] == trees["expand"]
 
 
-def test_level_timings_knob_emits_stage_attribution(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_LEVEL_TIMINGS dumps one JSONL line per level job with
-    per-stage walls (cube Spark job / driver merge / malloc trim / local
-    gains) — the instrument that attributed tree_fit_wide's intra-run
-    dispersion to the cube jobs (SCALE.md).  Unset, nothing is written
-    and the fit is identical."""
-    out = str(tmp_path / "lvl.jsonl")
-    data = build_wide_table(spark, SF_DIR, n_features=8)
-    monkeypatch.setenv("SPARK_GRAFT_LEVEL_TIMINGS", out)
-    m = DecisionTreeClassifier(
-        max_depth=2, criterion=Criterion.ENTROPY, max_bins=8, hist_method="arrow"
+def _level_passes(spark, monkeypatch, fit) -> tuple[int, int]:
+    """(calls, Spark jobs) of the packed level search during ``fit()``,
+    its jobs counted by a job group the wrapped search sets."""
+    sc = spark.sparkContext
+    group = f"level-pass-{uuid.uuid4().hex}"
+    calls = []
+    search = split_finder.find_best_splits_packed
+
+    def tagged(*args, **kwargs):
+        calls.append(1)
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, "packed level pass")
+        try:
+            return search(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(split_finder, "find_best_splits_packed", tagged)
+    try:
+        fit()
+    finally:
+        monkeypatch.setattr(split_finder, "find_best_splits_packed", search)
+    return len(calls), len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_depth2_binned_fits_run_one_level_job(spark, monkeypatch):
+    """A depth-2 binned fit scores both levels from ONE pair-cube job
+    (level 1 is carried and scored driver-side), and a 4-tree depth-2
+    binned forest grows its trees level-synchronously: one level job for
+    all four trees, not four.  (Gini gains are driver-side numpy and the
+    local input has no exchange, so the level pass's only job is its
+    histogram pass.)"""
+    from efficient_trees_spark.ensemble import RandomForestClassifier
+    from tests.iris_fixture import train_test_frames
+
+    train_pd, _ = train_test_frames(string_labels=False)
+    data = spark.createDataFrame(train_pd.drop(columns=["categorical_feature"]))
+    tree = DecisionTreeClassifier(max_depth=2, criterion=Criterion.GINI, max_bins=8)
+    assert _level_passes(spark, monkeypatch, lambda: tree.fit(data, "target")) == (1, 1)
+    assert tree.tree["type"] == "node"
+    forest = RandomForestClassifier(
+        n_trees=4, max_depth=2, criterion=Criterion.GINI, max_bins=8, seed=3
     )
-    m.fit(data, "target")
-    monkeypatch.delenv("SPARK_GRAFT_LEVEL_TIMINGS")
-    lines = [json.loads(ln) for ln in open(out)]
-    # depth-2 fit, r12 pair lookahead: ONE pair-cube Spark pass covers
-    # level 0 and the carried level 1 (scored driver-side, no job)
-    assert [rec["path"] for rec in lines] == ["pair_dense", "carried"]
-    for rec in lines:
-        assert rec["level_total_sec"] >= 0
-    assert set(lines[0]["stages"]) == {
-        "pair_cube_job_sec", "driver_merge_sec", "malloc_trim_sec",
-        "local_gains_sec", "carry_derive_sec",
-    }
-    m2 = DecisionTreeClassifier(
-        max_depth=2, criterion=Criterion.ENTROPY, max_bins=8, hist_method="arrow"
-    )
-    m2.fit(data, "target")
-    assert m2.tree == m.tree
+    assert _level_passes(spark, monkeypatch, lambda: forest.fit(data, "target")) == (1, 1)
+    assert all(t["type"] == "node" for t in forest.trees)
 
 
 def test_hist_method_validation(spark):
@@ -392,6 +409,37 @@ def test_route_codes_semantics():
     splits = [(0, 0, 2, 1, -1), (1, 1, 10, 3, 4)]
     out = route_codes(mat, splits)
     assert out.tolist() == [3, 3, -1, -1, -1, 4, -1]
+
+
+def test_routing_splits_reject_non_edge_threshold():
+    """Code routing equals value routing only at a bin edge: a threshold
+    between edges, or past the top edge, must raise instead of routing
+    rows by the neighbouring edge."""
+    leaf = {"type": "leaf", "value": 0}
+    edges = {"a": [1.0, 2.0]}
+    node = {"type": "node", "feature": "a", "threshold": 2.0, "left": leaf, "right": leaf}
+    assert DecisionTreeClassifier._compile_routing_splits(node, ["a"], edges) == [
+        (0, 0, 1, -1, -1)
+    ]
+    for threshold in (1.5, 3.0):
+        bad = dict(node, threshold=threshold)
+        with pytest.raises(ValueError, match="not a bin edge"):
+            DecisionTreeClassifier._compile_routing_splits(bad, ["a"], edges)
+
+
+def test_pair_child_counts_reject_non_edge_threshold():
+    """``pair_cubes_to_child_counts`` slices the cube at the threshold's
+    edge code; a threshold that is not an edge must raise."""
+    from efficient_trees_spark.operators.histogram import (
+        pair_cube_bytes,
+        pair_cubes_to_child_counts,
+    )
+
+    edges = {"a": [1.0, 2.0]}
+    cubes = {0: np.zeros(pair_cube_bytes(["a"], edges, 2) // 8, dtype=np.int64)}
+    chosen = [{"node_id": 0, "feature": "a", "threshold": 1.5}]
+    with pytest.raises(ValueError, match="not a bin edge"):
+        pair_cubes_to_child_counts(cubes, chosen, ["a"], 2, edges, "__node_id")
 
 
 def test_arrow_stat_rows_matches_collect(spark):
