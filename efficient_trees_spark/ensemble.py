@@ -87,6 +87,8 @@ class RandomForestClassifier:
         self.categorical_columns = categorical_columns
         self.seed = seed
         self.trees: list[dict[str, Any]] | None = None
+        # the shared quantile edges of a binned fit (None when exact)
+        self.bin_edges_: dict[str, list[float]] | None = None
         self.categorical_mappings: dict[str, dict[Any, int]] | None = None
         self._unique_targets: list[Any] | None = None
 
@@ -102,7 +104,6 @@ class RandomForestClassifier:
         prepared, feature_names, unique_targets = proto._prepare(
             data, target_name, shrink_features
         )
-        packed = False
         bin_edges: dict[str, list[float]] | None = None
         packed_code_dtype = "u1"
         if self.max_bins is not None:
@@ -134,15 +135,10 @@ class RandomForestClassifier:
                 prepared, feature_names, n_bins, stats, dtype,
                 n_parts=ens_n_parts,
             )
-            proto.bin_edges_ = bin_edges
-            encoded = _encode_codes(
+            prepared, packed_code_dtype, _ = _encode_codes(
                 prepared, feature_names, bin_edges, dtype, n_parts=ens_n_parts
             )
-            if encoded is None:
-                prepared = proto._snap_to_edges(prepared, feature_names)
-            else:
-                prepared, packed_code_dtype, _ = encoded
-                packed = True
+        self.bin_edges_ = bin_edges
         self.categorical_mappings = proto.categorical_mappings
         self._unique_targets = unique_targets
 
@@ -155,17 +151,12 @@ class RandomForestClassifier:
             for _ in range(self.n_trees)
         ]
         grower = DecisionTreeClassifier(
-            max_depth=self.max_depth,
-            criterion=self.criterion,
-            # Propagated so the level-wise search takes the bounded-
-            # candidates single-window path (the bags are pre-snapped or
-            # pre-encoded).
-            max_bins=self.max_bins,
+            max_depth=self.max_depth, criterion=self.criterion
         )
 
         prepared = prepared.persist()
         try:
-            if packed:
+            if bin_edges is not None:
                 # Materialize the code cache in its own job, one task per
                 # partition (a write to Spark's no-op sink: one stage, where
                 # count() runs three jobs).  Left to the first level pass,
@@ -183,7 +174,7 @@ class RandomForestClassifier:
                 )
                 for t in range(self.n_trees)
             ]
-            if packed:
+            if bin_edges is not None:
                 # Level-synchronous growth: the bags are tagged with their
                 # tree id, unioned, and only then coalesced back to the
                 # code relation's partition count, so sampling sees the
@@ -200,7 +191,6 @@ class RandomForestClassifier:
                     subsets,
                     unique_targets,
                     bin_edges=bin_edges,
-                    packed=True,
                     packed_all_features=feature_names,
                     packed_code_dtype=packed_code_dtype,
                     packed_n_parts=ens_n_parts,

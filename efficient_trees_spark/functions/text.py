@@ -46,7 +46,7 @@ def tokens(col: Column | str) -> Column:
     split-on-space) after an r11 A/B REJECTED the "obvious" single-pass
     ``split(lower(c), _TOKEN_SPLIT)`` rewrite: outputs are bit-identical
     (parity-checked over the whole sf0.1 corpus plus null/empty/
-    separator-only edge rows, tools/ab_tokenizer_r11.py), but walls were
+    separator-only edge rows; recorded in OPTIMIZATION_r11.md), but walls were
     a wash on every tokenize-heavy bench query (0.9-1.1x, within noise)
     — the regex engine pass is not where these operators' time goes."""
     return F.filter(F.split(normalized(col), " "), lambda t: t != "")

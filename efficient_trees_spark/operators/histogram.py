@@ -1,37 +1,35 @@
-"""Arrow-batched partial histograms for the wide-fit split search.
+"""Arrow-batched histograms for the packed level loop, the tree's fast fit
+path.
 
-The default split search melts features to long form and hash-aggregates
-(`split_finder.candidate_split_gains`) — pure Catalyst, ideal at modest
-width.  At the reference's real benchmark width (~190 float features,
+The exact melt (`split_finder.candidate_split_gains`) unpivots features to
+long form and hash-aggregates — pure Catalyst, ideal at modest width.  At the
+reference's real benchmark width (~190 float features,
 ``/root/reference/examples/memory_profiling.py:78-79``) the unpivot's Expand
 multiplies every row 190x through the codegen'd aggregate: measured ~6.5 s
 per tree level at just 60k rows (sf0.01), i.e. ~65 s per level at sf0.1.
 
-This module is the LightGBM-style alternative for BINNED mode: one
-``mapInArrow`` pass computes per-partition (node, feature, bin, class) count
-histograms with vectorized numpy (``searchsorted`` on the quantile edges +
-one flat ``bincount`` per node), emitting at most
-``nodes x features x (bins+1)`` partial rows per partition; a tiny hash
-aggregate merges the partials.  Snapping values to bin edges is folded into
-the same pass, so the separate bin-projection job disappears as well.
+This module is the LightGBM-style alternative, used by every binned fit and
+by exact fits whose distinct values fit uint16 code space.  Two streaming
+scans build it: an edge pass (per-partition order statistics merged into
+quantile edges, or every distinct value in exact mode) and a fused
+pack + encode pass that crosses the JVM boundary ONCE per row as a single
+array column and emits packed bin codes (1 or 2 bytes/cell), the one
+persisted training relation.  Every level is then one ``mapInArrow`` pass
+over that 2-column relation: tree routing (``route_codes``) plus one flat
+``bincount`` into per-node (feature, bin, class) count cubes, merged on the
+driver (dense cubes, pair cubes that score two levels per pass) or by a
+tiny hash aggregate (sparse rows).
 
-The production wide-fit flow goes one step further (packed-matrix section
-below): the feature matrix crosses the JVM boundary ONCE as a single array
-column, is persisted as packed uint8 bin codes (1 byte/cell), and every
-level's histogram + tree routing runs on that 2-column relation —
-``binned_histogram_counts`` on raw columns remains the >253-edge fallback
-and the parity oracle.
-
-Exactness: counts are integers and the emitted ``feature_value`` is the same
-edge double the Catalyst path would snap to, so every downstream gain is
-bit-identical to the melt path — asserted by ``tests/test_wide_fit.py``
+Exactness: counts are integers and the emitted ``feature_value`` is the
+edge itself, so every downstream gain is bit-identical to the exact melt
+over the same (snapped) values — asserted by ``tests/test_wide_fit.py``
 parity tests.  NULLs are dropped per-feature (reference F1 semantics; Arrow
 validity bitmaps distinguish NULL from NaN), NaN keeps its own bucket
 sorting greatest, exactly like the melt path.
 
-At 100 TB: the map side streams each partition's columnar batches once and
+At 100 TB: the map side streams each partition's code batches once and
 keeps only an O(nodes x features x bins) int64 accumulator (~100 KB/node at
-190x33x2); the shuffle carries partial histograms, not rows — the same
+190x33x2); what leaves a task is partial histograms, not rows — the same
 volume bound the melt path achieves via map-side combine but without paying
 row expansion CPU.  The driver never sees anything bigger than the merged
 histogram relation.
@@ -106,259 +104,39 @@ def _trim_malloc() -> None:
         pass
 
 
-def binned_histogram_counts(
-    df: DataFrame,
-    feature_names: list[str],
-    n_classes: int,
-    bin_edges: dict[str, list[float]],
-    target_idx_col: str,
-    node_col: str | None = None,
-) -> DataFrame:
-    """(keys..., feature, feature_value, class_*_count, count_examples) —
-    the same relation ``candidate_split_gains`` builds with
-    melt + groupBy, produced as merged Arrow partial histograms.
-
-    ``df`` carries RAW (unsnapped) double features; ``bin_edges`` maps each
-    feature to its ascending candidate edges (``DecisionTreeClassifier
-    ._bin_features`` contract: top edge is the true finite max).  Values are
-    snapped to the smallest edge >= value inside the histogram pass.
-    """
-    import pyarrow as pa
-
-    cols = ([node_col] if node_col else []) + [target_idx_col] + feature_names
-    src = df.select(*cols)
-
-    # Dense per-feature edge matrix (padded with +inf so searchsorted never
-    # lands past a shorter feature's real edges); slot L_f..slots-2 unused,
-    # slot slots-1 = NaN bucket.
-    n_feat = len(feature_names)
-    lens = np.array([len(bin_edges.get(f, ())) for f in feature_names], dtype=np.int64)
-    max_edges = int(lens.max()) if n_feat else 0
-    slots = max_edges + 1  # +1 NaN bucket
-    edges_mat = np.full((n_feat, max_edges), np.inf, dtype=np.float64)
-    for j, f in enumerate(feature_names):
-        e = bin_edges.get(f, ())
-        edges_mat[j, : len(e)] = np.asarray(e, dtype=np.float64)
-
-    count_fields = [pa.field(class_count_col(i), pa.int64()) for i in range(n_classes)]
-    out_fields = (
-        ([pa.field(node_col, pa.int32())] if node_col else [])
-        + [pa.field(FEATURE, pa.string()), pa.field(FEATURE_VALUE, pa.float64())]
-        + count_fields
-        + [pa.field("count_examples", pa.int64())]
-    )
-    out_schema = pa.schema(out_fields)
-    spark_schema = (
-        (f"{node_col} int, " if node_col else "")
-        + f"{FEATURE} string, {FEATURE_VALUE} double, "
-        + ", ".join(f"{class_count_col(i)} long" for i in range(n_classes))
-        + ", count_examples long"
-    )
-    names = list(feature_names)
-    tcol = target_idx_col
-    ncol = node_col
-
-    def histogram(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        # node value -> flat int64 accumulator of shape (n_feat * slots * n_classes)
-        acc: dict[int, np.ndarray] = {}
-        flat_size = n_feat * slots * n_classes
-        feat_base = (np.arange(n_feat, dtype=np.int64) * slots)[None, :]  # (1, F)
-
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            target = batch.column(tcol).to_numpy(zero_copy_only=False).astype(np.int64)
-            nodes = (
-                batch.column(ncol).to_numpy(zero_copy_only=False).astype(np.int64)
-                if ncol
-                else np.zeros(n_rows, dtype=np.int64)
-            )
-            # Per-feature bin index matrix; slots-1 marks "drop" (NULL) rows
-            # temporarily as well, separated from NaN below via a weight mask.
-            idx = np.empty((n_rows, n_feat), dtype=np.int64)
-            valid = np.empty((n_rows, n_feat), dtype=bool)
-            for j in range(n_feat):
-                col = batch.column(names[j])
-                vals = col.to_numpy(zero_copy_only=False)
-                null_mask = (
-                    col.is_null().to_numpy(zero_copy_only=False)
-                    if col.null_count
-                    else None
-                )
-                nan_mask = np.isnan(vals)
-                if null_mask is not None:
-                    true_nan = nan_mask & ~null_mask
-                    valid[:, j] = ~null_mask
-                else:
-                    true_nan = nan_mask
-                    valid[:, j] = True
-                lj = lens[j]
-                if lj == 0:  # all-NULL feature: no candidate rows at all
-                    valid[:, j] = False
-                    idx[:, j] = 0
-                    continue
-                bj = np.searchsorted(edges_mat[j, :lj], vals, side="left")
-                # Defensive: a finite value above the top edge (impossible by
-                # the true-max contract, but never emit out of range).
-                np.minimum(bj, lj - 1, out=bj)
-                bj[true_nan] = slots - 1
-                idx[:, j] = bj
-
-            flat = (feat_base + idx) * n_classes + target[:, None]  # (N, F)
-            for nv in np.unique(nodes):
-                node_rows = nodes == nv
-                a = acc.get(int(nv))
-                if a is None:
-                    a = acc[int(nv)] = np.zeros(flat_size, dtype=np.int64)
-                sel = flat[node_rows][valid[node_rows]]
-                if sel.size:
-                    a += np.bincount(sel, minlength=flat_size)
-
-        # Emit non-empty histogram cells once per partition.
-        node_out: list[np.ndarray] = []
-        feat_out: list[np.ndarray] = []
-        value_out: list[np.ndarray] = []
-        class_out: list[list[np.ndarray]] = [[] for _ in range(n_classes)]
-        total_out: list[np.ndarray] = []
-        name_arr = np.asarray(names, dtype=object)
-        for nv, a in acc.items():
-            cube = a.reshape(n_feat, slots, n_classes)
-            totals = cube.sum(axis=2)  # (F, slots)
-            fj, sj = np.nonzero(totals)
-            if fj.size == 0:
-                continue
-            vals = edges_mat[fj, np.minimum(sj, lens[fj] - 1)]
-            vals = np.where(sj == slots - 1, np.nan, vals)
-            node_out.append(np.full(fj.size, nv, dtype=np.int32))
-            feat_out.append(name_arr[fj])
-            value_out.append(vals)
-            for i in range(n_classes):
-                class_out[i].append(cube[fj, sj, i])
-            total_out.append(totals[fj, sj])
-        if not node_out:
-            return
-        arrays = []
-        if ncol:
-            arrays.append(pa.array(np.concatenate(node_out), type=pa.int32()))
-        arrays.append(pa.array(np.concatenate(feat_out), type=pa.string()))
-        arrays.append(pa.array(np.concatenate(value_out), type=pa.float64()))
-        for i in range(n_classes):
-            arrays.append(pa.array(np.concatenate(class_out[i]), type=pa.int64()))
-        arrays.append(pa.array(np.concatenate(total_out), type=pa.int64()))
-        yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    partials = src.mapInArrow(histogram, spark_schema)
-    keys = ([node_col] if node_col else []) + [FEATURE]
-    return partials.groupBy(*keys, FEATURE_VALUE).agg(
-        *[F.sum(class_count_col(i)).alias(class_count_col(i)) for i in range(n_classes)],
-        F.sum("count_examples").alias("count_examples"),
-    )
-
-
-def partition_quantile_edges(
-    df: DataFrame,
-    feature_names: list[str],
-    n_bins: int,
-    stats_per_partition: int,
-) -> dict[str, list[float]]:
-    """Equi-depth bin edges for every feature in ONE cheap pass + ONE tiny
-    shuffle — the numpy counterpart of ``percentile_approx``.
-
-    Stage 1 (``mapInArrow``): each partition sorts each feature column in
-    numpy (NULL/NaN dropped — NaN keeps its own candidate slot downstream)
-    and emits ``stats_per_partition`` equally spaced order statistics, each
-    weighted by the run of rows it covers, plus the partition's true max and
-    row count.  Cost: P x F vectorized sorts; output P x F tiny rows.
-
-    Stage 2 (``applyInPandas`` keyed by feature): the weighted merge of the
-    per-partition statistics — sort, cumulative weight, pick the value at
-    rank k/n_bins x N for k=1..n_bins-1, union the TRUE max (a top edge
-    below the max would leave high values unmappable).  Rank error is
-    bounded by 1/stats_per_partition (each partition's contribution to any
-    rank estimate is off by less than one inter-statistic run).
-
-    Scale: the shuffle carries P x F x stats doubles spread over F reduce
-    groups; nothing data-sized ever reaches one task or the driver (the
-    driver collects F edge rows).  Measured 6x faster than the
-    ``percentile_approx`` ObjectHashAggregate at the reference's
-    190-feature width (19 s -> ~3 s at 600k rows), because the sketch
-    update loop is replaced by vectorized sorts.
-    """
-    import pandas as pd
-    import pyarrow as pa
-
-    src = df.select(*feature_names)
-    names = list(feature_names)
-    g = int(stats_per_partition)
-
-    out_schema = pa.schema(
-        [
-            pa.field(FEATURE, pa.string()),
-            pa.field("vals", pa.list_(pa.float64())),
-            pa.field("gaps", pa.list_(pa.float64())),
-            pa.field("vmax", pa.float64()),
-            pa.field("n", pa.int64()),
-        ]
-    )
-
-    def order_stats(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        chunks: list[list[np.ndarray]] = [[] for _ in names]
-        for batch in batches:
-            for j in range(len(names)):
-                vals = batch.column(names[j]).to_numpy(zero_copy_only=False)
-                vals = vals[~np.isnan(vals)]  # nulls arrive as NaN: drop both
-                if vals.size:
-                    chunks[j].append(vals)
-        feats, vals_out, gaps_out, vmax_out, n_out = [], [], [], [], []
-        for j, name in enumerate(names):
-            if not chunks[j]:
-                continue
-            v = np.sort(np.concatenate(chunks[j]))
-            n = v.size
-            pos = np.unique(np.round(np.linspace(0, n - 1, min(g, n))).astype(np.int64))
-            stats = v[pos]
-            gaps = np.diff(np.concatenate(([np.int64(-1)], pos))).astype(np.float64)
-            feats.append(name)
-            vals_out.append(stats)
-            gaps_out.append(gaps)
-            vmax_out.append(float(v[-1]))
-            n_out.append(n)
-        if not feats:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(feats, type=pa.string()),
-                _f64_list_array(vals_out),
-                _f64_list_array(gaps_out),
-                pa.array(vmax_out, type=pa.float64()),
-                pa.array(n_out, type=pa.int64()),
-            ],
-            schema=out_schema,
-        )
-
-    partials = src.mapInArrow(
-        order_stats,
-        f"{FEATURE} string, vals array<double>, gaps array<double>, vmax double, n long",
-    )
-
-    return _merge_edge_stats(partials, names, n_bins)
-
-
-@lru_cache(maxsize=65536)
+@lru_cache(maxsize=4096)
 def _linspace_gaps(n: int, g: int) -> "np.ndarray":
     """Reconstruct the per-(partition, feature) gap run-lengths from the
-    non-null count alone: the stage-1 kernels place their order statistics
+    non-null count alone: the stage-1 kernel places its order statistics
     at ``pos = unique(round(linspace(0, n-1, min(g, n))))`` — a pure
     function of ``(n, g)`` — so the gaps ``diff([-1] ++ pos)`` never need
     to cross the wire at all (r12, guide §2.3: the gaps array was HALF the
     stats-relation bytes).  This expression is kept token-identical to
-    ``_matrix_order_stats`` / the stage-1 sorts, so reconstructed gaps are
-    bit-identical to transferred ones.  Cached: within one fit almost every
+    ``_matrix_order_stats``, so reconstructed gaps are bit-identical to the
+    ones stage 1 would have computed.  Cached: within one fit almost every
     (partition, feature) pair shares the same ``n`` (counts differ only by
-    the ~1% null cells)."""
+    the ~1% null cells), so a few thousand entries cover a fit; the cached
+    arrays are shared by every caller and therefore read-only."""
     pos = np.unique(np.round(np.linspace(0, n - 1, min(g, n))).astype(np.int64))
-    return np.diff(np.concatenate(([np.int64(-1)], pos))).astype(np.float64)
+    gaps = np.diff(np.concatenate(([np.int64(-1)], pos))).astype(np.float64)
+    gaps.setflags(write=False)
+    return gaps
+
+
+def _reconstructed_gaps(vals, n: int, g: int) -> "np.ndarray":
+    """:func:`_linspace_gaps` for one stats row, checked against the row's
+    order statistics: a gaps array of any other length would silently
+    mis-weight the merge (e.g. a numpy on the merge side that places
+    ``linspace`` positions differently from the stage-1 executors), so it
+    raises instead."""
+    gaps = _linspace_gaps(int(n), int(g))
+    if gaps.size != len(vals):
+        raise ValueError(
+            f"reconstructed {gaps.size} gap run-lengths for {len(vals)} order "
+            f"statistics (n={int(n)}, stats_per_partition={int(g)}): the "
+            "stats were not produced with this stats_per_partition"
+        )
+    return gaps
 
 
 def _merge_feature_edge_stats(
@@ -370,11 +148,11 @@ def _merge_feature_edge_stats(
     bit-identical edges.  Concatenation order of the partition stats is
     immaterial: equal values permute only among themselves under the stable
     argsort, and the SELECTED entries are values, not indices."""
-    # Explicit f64 upcast: stats may arrive as float32 values / int32 gaps
-    # (the narrow transfer format of an f4 fit — exact upcasts both ways),
-    # and the cumulative weights must accumulate in f64 regardless.
+    # Explicit f64 upcast: stat values arrive as float32 for an f4 fit
+    # (the narrow transfer format — an exact upcast), and the cumulative
+    # weights must accumulate in f64 regardless.
     all_vals = np.concatenate([np.asarray(x, dtype=np.float64) for x in vals_list])
-    all_gaps = np.concatenate([np.asarray(x, dtype=np.float64) for x in gaps_list])
+    all_gaps = np.concatenate(gaps_list)
     order = np.argsort(all_vals, kind="stable")
     sv = all_vals[order]
     cw = np.cumsum(all_gaps[order])
@@ -385,90 +163,30 @@ def _merge_feature_edge_stats(
     return sorted(edges)
 
 
-def _merge_edge_stats(
-    partials: DataFrame, feature_names: list[str], n_bins: int,
-    with_counts: bool = False, stats_per_partition: int | None = None,
-):
-    """Stage 2 of the order-statistic edge computation (shared by the
-    column-wise and packed stage-1 variants): weighted merge of the
-    per-partition statistics keyed by feature, union of the TRUE max.
-
-    ``with_counts=True`` additionally returns ``{feature: total_n}`` (the
-    summed per-partition non-null counts) riding the SAME merge job — the
-    caller-side row estimate for sizing the persisted code cache's
-    partitions costs no extra pass.  When ``partials`` carries no ``gaps``
-    column (the r12 gap-free transfer), ``stats_per_partition`` must be
-    given and the gaps are reconstructed per row via
-    :func:`_linspace_gaps` — bit-identical by construction."""
-    import pandas as pd
-
-    def merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if "gaps" in pdf.columns:
-            gaps_list = list(pdf["gaps"])
-        else:
-            gaps_list = [
-                _linspace_gaps(int(n), int(stats_per_partition))
-                for n in pdf["n"]
-            ]
-        edges = _merge_feature_edge_stats(
-            list(pdf["vals"]), gaps_list, list(pdf["vmax"]),
-            list(pdf["n"]), n_bins,
-        )
-        return pd.DataFrame(
-            {
-                FEATURE: [pdf[FEATURE].iloc[0]],
-                "edges": [edges],
-                "total_n": [int(pdf["n"].sum())],
-            }
-        )
-
-    rows = (
-        partials.groupBy(FEATURE)
-        .applyInPandas(
-            merge, f"{FEATURE} string, edges array<double>, total_n long"
-        )
-        .collect()
-    )
-    found = {row[FEATURE]: list(row["edges"]) for row in rows}
-    edges_map = {name: found.get(name, []) for name in feature_names}
-    if with_counts:
-        counts = {row[FEATURE]: int(row["total_n"]) for row in rows}
-        return edges_map, {name: counts.get(name, 0) for name in feature_names}
-    return edges_map
-
-
 def merge_edge_stats_rows(
-    rows, feature_names: list[str], n_bins: int, with_counts: bool = False,
-    stats_per_partition: int | None = None,
+    rows, feature_names: list[str], n_bins: int, stats_per_partition: int,
+    with_counts: bool = False,
 ):
-    """Driver-local stage-2 merge over COLLECTED stats rows — the
-    fused-pack path's counterpart of :func:`_merge_edge_stats`.  Rows are
-    either 5-tuples ``(feature, vals, gaps, vmax, n)`` or, from the r12
-    gap-free transfer, 4-tuples ``(feature, vals, vmax, n)`` with
-    ``stats_per_partition`` given so gaps are reconstructed driver-side
-    via :func:`_linspace_gaps` (bit-identical).  The per-partition stats
-    volume is partitions × features × stats values (KBs at any corpus
-    size: it does not grow with rows), so collecting it is cluster-safe,
-    and skipping the feature-keyed shuffle + applyInPandas saves a whole
-    Spark job.  Same numeric core — edges are bit-identical.
-    ``with_counts=True`` additionally returns ``{feature: total_n}``
-    summed from the already-held per-partition counts (the
-    :func:`_merge_edge_stats` contract)."""
+    """Driver-local stage-2 merge over COLLECTED stats rows
+    ``(feature, vals, vmax, n)`` (:func:`partition_order_stats`), the
+    gaps reconstructed driver-side from ``n`` and ``stats_per_partition``
+    (:func:`_reconstructed_gaps`).  The per-partition stats volume is
+    partitions × features × stats values (KBs at any corpus size: it does
+    not grow with rows), so collecting it is cluster-safe, and skipping the
+    feature-keyed shuffle + applyInPandas of
+    :func:`merge_order_stats_distributed` saves a whole Spark job.  Same
+    numeric core — edges are bit-identical.  ``with_counts=True``
+    additionally returns ``{feature: total_n}``, the summed per-partition
+    non-null counts — the caller-side row estimate for sizing the
+    persisted code cache's partitions, at no extra pass."""
+    g = int(stats_per_partition)
     by_feature: dict[str, list[list]] = {}
-    for r in rows:
-        by_feature.setdefault(r[0], [[], [], [], []])
-        acc = by_feature[r[0]]
-        if len(r) == 4:
-            n = int(r[3])
-            acc[0].append(np.asarray(r[1], dtype=np.float64))
-            acc[1].append(_linspace_gaps(n, int(stats_per_partition)))
-            acc[2].append(float(r[2]))
-            acc[3].append(n)
-        else:
-            acc[0].append(np.asarray(r[1], dtype=np.float64))
-            acc[1].append(np.asarray(r[2], dtype=np.float64))
-            acc[2].append(float(r[3]))
-            acc[3].append(int(r[4]))
+    for feature, vals, vmax, n in rows:
+        acc = by_feature.setdefault(feature, [[], [], [], []])
+        acc[0].append(np.asarray(vals, dtype=np.float64))
+        acc[1].append(_reconstructed_gaps(vals, n, g))
+        acc[2].append(float(vmax))
+        acc[3].append(int(n))
     del rows
     edges_map = {
         name: (
@@ -524,7 +242,7 @@ def stats_collect_budget(spark) -> int:
 
 def merge_order_stats_distributed(
     stats_df: DataFrame, feature_names: list[str], n_bins: int,
-    with_counts: bool = False, stats_per_partition: int | None = None,
+    stats_per_partition: int, with_counts: bool = False,
 ):
     """Cluster-scale stage-2 merge over :func:`partition_order_stats`
     output: a feature-keyed shuffle + ``applyInPandas`` merge so the
@@ -532,20 +250,50 @@ def merge_order_stats_distributed(
     features stats rows.  Same numeric core as
     :func:`merge_edge_stats_rows` (``_merge_feature_edge_stats``) —
     edges are bit-identical; tree.py switches here when the raw stats
-    volume would approach ``spark.driver.maxResultSize``.
-    ``with_counts`` as in :func:`_merge_edge_stats`.
-    ``stats_per_partition`` (the stage-1 ``g``) drives the per-row gap
-    reconstruction — the gaps never cross the shuffle (r12)."""
-    partials = stats_df.select(
-        F.col(STATS_FEATURE).alias(FEATURE),
-        F.col("__sv").alias("vals"),
-        F.col("__svx").alias("vmax"),
-        F.col("__sn").alias("n"),
+    volume would approach ``spark.driver.maxResultSize``.  The gaps are
+    reconstructed per row from ``n`` and ``stats_per_partition`` (the
+    stage-1 ``g``; :func:`_reconstructed_gaps`) — they never cross the
+    shuffle (r12).  ``with_counts`` as in :func:`merge_edge_stats_rows`,
+    riding the same merge job."""
+    import pandas as pd
+
+    g = int(stats_per_partition)
+
+    def merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        vals_list = list(pdf["vals"])
+        gaps_list = [
+            _reconstructed_gaps(v, n, g) for v, n in zip(vals_list, pdf["n"])
+        ]
+        edges = _merge_feature_edge_stats(
+            vals_list, gaps_list, list(pdf["vmax"]), list(pdf["n"]), n_bins,
+        )
+        return pd.DataFrame(
+            {
+                FEATURE: [pdf[FEATURE].iloc[0]],
+                "edges": [edges],
+                "total_n": [int(pdf["n"].sum())],
+            }
+        )
+
+    rows = (
+        stats_df.select(
+            F.col(STATS_FEATURE).alias(FEATURE),
+            F.col("__sv").alias("vals"),
+            F.col("__svx").alias("vmax"),
+            F.col("__sn").alias("n"),
+        )
+        .groupBy(FEATURE)
+        .applyInPandas(
+            merge, f"{FEATURE} string, edges array<double>, total_n long"
+        )
+        .collect()
     )
-    return _merge_edge_stats(
-        partials, feature_names, n_bins, with_counts,
-        stats_per_partition=stats_per_partition,
-    )
+    found = {row[FEATURE]: list(row["edges"]) for row in rows}
+    edges_map = {name: found.get(name, []) for name in feature_names}
+    if with_counts:
+        counts = {row[FEATURE]: int(row["total_n"]) for row in rows}
+        return edges_map, {name: counts.get(name, 0) for name in feature_names}
+    return edges_map
 
 
 def arrow_stat_rows(tbl) -> list[tuple]:
@@ -579,17 +327,16 @@ def arrow_stat_rows(tbl) -> list[tuple]:
 # to ~1 s: the writer moves 2 fields per row and the Python side recovers
 # the (rows x features) matrix zero-copy with ``np.frombuffer``.
 #
-# Representation: row-major float32 (or float64 when the fit is unshrunk)
-# for the raw matrix; row-major uint8 (or uint16 past 253 edges) bin codes
-# after encoding.  NULL is a reserved quiet-NaN BIT PATTERN (real NaNs are
-# canonicalized first, so the two stay distinguishable — both are NaN to
-# comparisons, which is exactly how the unpacked path treats them for edge
-# placement); in code space NULL and NaN are the reserved top codes of the
-# chosen width.  Tree routing runs vectorized in numpy inside the histogram
-# pass (``route_codes``) instead of as a JVM routing column, preserving the
-# routing semantics bit-for-bit: left = code <= t (NULL and NaN codes both
-# fail), right = code > t excluding NULL (NaN routes right, matching
-# Spark's NaN-sorts-greatest).
+# Representation: row-major uint8 (or uint16 past 253 edges) bin codes.
+# The edge and encode passes read the features as one array column; in the
+# order-stats pass NULL is a reserved quiet-NaN BIT PATTERN (real NaNs are
+# canonicalized first — both are NaN to comparisons, so both drop out of
+# edge placement).  In code space NULL and NaN are the reserved top codes
+# of the chosen width.  Tree routing runs vectorized in numpy inside the
+# histogram pass (``route_codes``) instead of as a JVM routing column,
+# preserving the routing semantics bit-for-bit: left = code <= t (NULL and
+# NaN codes both fail), right = code > t excluding NULL (NaN routes right,
+# matching Spark's NaN-sorts-greatest).
 #
 # Code width is a per-fit choice (tree.py): uint8 (1 byte/cell, <= 253
 # edges) whenever every feature fits, else uint16 (2 bytes/cell, <= 65 533
@@ -657,65 +404,12 @@ def _unpack_binary(col, width: int, dtype) -> "np.ndarray":
     return flat[start * width : (start + len(col)) * width].reshape(-1, width)
 
 
-def pack_raw_features(
-    df: DataFrame,
-    feature_names: list[str],
-    target_idx_col: str,
-    dtype: str = "f4",
-    packed_col: str = PACKED_COL,
-) -> DataFrame:
-    """(packed binary, target int) — the raw feature matrix as one blob per
-    row.  The ONE wide Arrow conversion of the whole fit; everything
-    downstream (edge placement, encoding, per-level histograms) reads the
-    cheap 2-column packed relation.
-
-    The features cross the JVM boundary as a single ``F.array`` column, not
-    ~190 separate columns: Spark's Arrow writer moves one list field per row
-    instead of one write per (row, column) — measured ~3x faster at width
-    190 — and the Arrow list's flat values buffer IS the row-major matrix,
-    recovered zero-copy on the Python side.  NULL elements survive as list
-    inner nulls and become the reserved NULL bit pattern."""
-    import pyarrow as pa
-
-    names = list(feature_names)
-    tcol = target_idx_col
-    np_dtype, bits_dtype, canon_nan_bits, null_bits = _dtype_info(dtype)
-    n_feat = len(names)
-    elem_type = "float" if dtype == "f4" else "double"
-    src = df.select(
-        array_cast_expr(names, elem_type).alias("__arr"),
-        target_idx_col,
-    )
-
-    def pack(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            flat = b.column("__arr").flatten()  # logical values, offset-safe
-            vals = flat.to_numpy(zero_copy_only=False).astype(np_dtype, copy=True)
-            bits = vals.view(bits_dtype)
-            bits[np.isnan(vals)] = canon_nan_bits
-            if flat.null_count:
-                bits[flat.is_null().to_numpy(zero_copy_only=False)] = null_bits
-            mat = np.ascontiguousarray(vals.reshape(n, n_feat))
-            target = (
-                b.column(tcol).to_numpy(zero_copy_only=False).astype(np.int32)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [_pack_binary(mat), pa.array(target, type=pa.int32())],
-                names=[packed_col, tcol],
-            )
-        _trim_malloc()
-
-    return src.mapInArrow(pack, f"{packed_col} binary, {tcol} int")
-
-
 def _matrix_order_stats(full: "np.ndarray", names: list[str], g: int):
     """Per-feature order statistics over ONE partition's (rows × features)
-    float matrix — the stage-1 numeric core shared by
-    :func:`quantile_edges_packed` and :func:`partition_order_stats`
-    (identical code → identical stats → identical edges).
+    float matrix — the stage-1 numeric core of :func:`partition_order_stats`.
+    Returns ``(features, stats, maxima, counts)``; the gap run-lengths are
+    not emitted (the merges rebuild them from the counts,
+    :func:`_linspace_gaps`).
 
     r12 kernel rewrite (guide §1.2 step 2, per-task work): one transpose
     up front so each feature's values are CONTIGUOUS (the row-major
@@ -729,7 +423,7 @@ def _matrix_order_stats(full: "np.ndarray", names: list[str], g: int):
     the merged edges) are bit-identical; pinned by the edge-parity
     tests."""
     fullt = np.ascontiguousarray(full.T)
-    feats, vals_out, gaps_out, vmax_out, n_out = [], [], [], [], []
+    feats, vals_out, vmax_out, n_out = [], [], [], []
     for j, name in enumerate(names):
         v = fullt[j]
         v = v[~np.isnan(v)]  # drops real NaN and the NULL sentinel alike
@@ -738,14 +432,11 @@ def _matrix_order_stats(full: "np.ndarray", names: list[str], g: int):
         n = v.size
         pos = np.unique(np.round(np.linspace(0, n - 1, min(g, n))).astype(np.int64))
         v.sort()
-        stats = v[pos]
-        gaps = np.diff(np.concatenate(([np.int64(-1)], pos))).astype(np.float64)
         feats.append(name)
-        vals_out.append(stats)
-        gaps_out.append(gaps)
+        vals_out.append(v[pos])
         vmax_out.append(float(v[-1]))
         n_out.append(n)
-    return feats, vals_out, gaps_out, vmax_out, n_out
+    return feats, vals_out, vmax_out, n_out
 
 
 def _np_list_array(chunks: list["np.ndarray"], np_dtype, pa_type):
@@ -765,10 +456,6 @@ def _np_list_array(chunks: list["np.ndarray"], np_dtype, pa_type):
     return pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()), pa.array(flat, type=pa_type)
     )
-
-
-def _f64_list_array(chunks: list["np.ndarray"]):
-    return _np_list_array(chunks, np.float64, __import__("pyarrow").float64())
 
 
 # Stats side-channel column of the order-stats relations.
@@ -838,9 +525,7 @@ def partition_order_stats(
             return
         full = np.concatenate(mats) if len(mats) > 1 else mats[0]
         mats.clear()  # `full` owns (or is) the data now; drop the batch refs
-        feats, vals_out, gaps_out, vmax_out, n_out = _matrix_order_stats(
-            full, names, g
-        )
+        feats, vals_out, vmax_out, n_out = _matrix_order_stats(full, names, g)
         del full
         if not feats:
             _trim_malloc()
@@ -873,20 +558,17 @@ def pack_encode_features(
     packed_col: str = PACKED_COL,
     code_dtype: str = "u1",
 ) -> DataFrame:
-    """Fused :func:`pack_raw_features` + :func:`encode_packed`: source
-    batches → packed bin-code blobs DIRECTLY, never materializing the
-    raw float blob.  Pass 2 of the binned two-scan flow (see
-    :func:`partition_order_stats`); the level-0 histogram job materializes
-    this relation into the persisted code cache, so a depth-d binned fit
-    touches the source exactly twice and persists only ``code_dtype``'s
-    1 (u1) or 2 (u2) bytes/cell.
+    """Source batches → packed bin-code blobs (1 byte/cell at u1, 2 at u2),
+    never materializing a raw float blob.  Pass 2 of the two-scan flow
+    (see :func:`partition_order_stats`); the fit persists this relation as
+    its code cache, so a depth-d fit touches the source exactly twice.
 
-    Bit-parity with the two-step composition: values are converted to the
-    same ``dtype`` first and ``searchsorted`` upcasts them against the same
-    float64 edges, NULLs (Arrow validity) map to the width's NULL code and
-    NaNs to its NaN code exactly as ``encode_packed`` derives them
-    from the raw blob's reserved bit patterns — asserted by
-    ``tests/test_wide_fit.py``."""
+    Each value maps to the index of the smallest edge >= it (values are
+    converted to ``dtype`` first; ``searchsorted`` upcasts them against the
+    float64 edges).  Codes are therefore ORDER-ISOMORPHIC to values:
+    ``v <= edge_j <=> code(v) <= j``, so routing on codes is bit-equivalent
+    to routing on raw values.  NULLs (Arrow validity) take the width's NULL
+    code and NaNs its NaN code (see the section notes)."""
     import pyarrow as pa
 
     np_code, nan_code, null_code, max_edges_cap = _code_info(code_dtype)
@@ -945,77 +627,20 @@ def pack_encode_features(
     return src.mapInArrow(pack_encode, f"{packed_col} binary, {tcol} int")
 
 
-def quantile_edges_packed(
-    packed_df: DataFrame,
-    feature_names: list[str],
-    n_bins: int,
-    stats_per_partition: int,
-    dtype: str = "f4",
-    packed_col: str = PACKED_COL,
-) -> dict[str, list[float]]:
-    """:func:`partition_quantile_edges` stage 1 reading the packed matrix
-    (cheap 2-column transfer) + the shared stage-2 merge.  Emits the same
-    per-partition order statistics, so edges are identical to the
-    column-wise variant over the same values."""
-    import pyarrow as pa
-
-    names = list(feature_names)
-    np_dtype, _, _, _ = _dtype_info(dtype)
-    n_feat = len(names)
-    g = int(stats_per_partition)
-
-    def order_stats(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        mats = [
-            _unpack_binary(b.column(packed_col), n_feat, np_dtype)
-            for b in batches
-            if b.num_rows
-        ]
-        if not mats:
-            _trim_malloc()
-            return
-        full = np.concatenate(mats) if len(mats) > 1 else mats[0]
-        mats.clear()  # `full` owns (or is) the data now; drop the batch refs
-        feats, vals_out, gaps_out, vmax_out, n_out = _matrix_order_stats(
-            full, names, g
-        )
-        del full
-        if not feats:
-            _trim_malloc()
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(feats, type=pa.string()),
-                _f64_list_array(vals_out),
-                _f64_list_array(gaps_out),
-                pa.array(vmax_out, type=pa.float64()),
-                pa.array(n_out, type=pa.int64()),
-            ],
-            names=[FEATURE, "vals", "gaps", "vmax", "n"],
-        )
-        _trim_malloc()
-
-    partials = packed_df.select(packed_col).mapInArrow(
-        order_stats,
-        f"{FEATURE} string, vals array<double>, gaps array<double>, vmax double, n long",
-    )
-    return _merge_edge_stats(partials, names, n_bins)
-
-
 def distinct_edges_packed(
-    packed_df: DataFrame,
+    df: DataFrame,
     feature_names: list[str],
     max_distinct: int = _MAX_PACKED_EDGES,
     dtype: str = "f4",
-    packed_col: str = PACKED_COL,
-    packed: bool = True,
     with_counts: bool = False,
 ):
     """EXACT-mode candidate edges: every distinct non-NaN/non-NULL value per
-    feature, provided every feature fits uint8 code space (``max_distinct``,
-    253).  With these edges the packed path IS the reference's exact split
-    search — ``encode_packed``'s snap-to-smallest-edge->=v is the identity on
-    values that are themselves edges, so the emitted histogram relation is
-    bit-identical to the exact melt's grouped relation.
+    feature, provided every feature fits ``max_distinct`` (the tree passes
+    the uint16 cap, 65 533).  With these edges the packed path IS the
+    reference's exact split search — the encode's snap-to-smallest-edge->=v
+    (:func:`pack_encode_features`) is the identity on values that are
+    themselves edges, so the emitted histogram relation is bit-identical to
+    the exact melt's grouped relation.
 
     One ``mapInArrow`` pass emits per-partition distinct values (each
     partition's contribution capped at ``max_distinct + 1`` — enough to
@@ -1024,12 +649,10 @@ def distinct_edges_packed(
     raise ``ValueError`` with guidance (set ``max_bins`` or use the melt
     path) rather than silently degrading.
 
-    ``packed=False`` reads the COLUMNAR feature relation directly (its own
-    array-column crossing, Arrow nulls arriving as NaN) instead of a packed
-    raw blob — the first pass of exact mode's two-scan flow, so no raw
-    cache exists there either.  The value multiset per feature is the same
-    ``dtype``-converted set either way, and a distinct set is
-    partitioning-independent, so edges are identical.
+    The pass reads the columnar feature relation as one array column
+    (Arrow nulls arriving as NaN) — the first pass of exact mode's
+    two-scan flow, so no raw float cache exists.  A distinct set is
+    partitioning-independent.
 
     ``with_counts=True`` returns ``(edges, total_rows)``: each partition's
     stats rows also carry its ROW count (not per-feature non-null), summed
@@ -1041,15 +664,9 @@ def distinct_edges_packed(
     np_dtype, _, _, _ = _dtype_info(dtype)
     n_feat = len(names)
     cap = int(max_distinct)
-    if not packed:
-        elem_type = "float" if dtype == "f4" else "double"
-        packed_df = packed_df.select(
-            array_cast_expr(names, elem_type).alias("__arr")
-        )
+    elem_type = "float" if dtype == "f4" else "double"
 
     def to_mat(b: "pa.RecordBatch") -> "np.ndarray":
-        if packed:
-            return _unpack_binary(b.column(packed_col), n_feat, np_dtype)
         flat = b.column("__arr").flatten()
         return (
             flat.to_numpy(zero_copy_only=False)
@@ -1092,7 +709,7 @@ def distinct_edges_packed(
         )
         _trim_malloc()
 
-    partials = packed_df.select(packed_col if packed else "__arr").mapInArrow(
+    partials = df.select(array_cast_expr(names, elem_type).alias("__arr")).mapInArrow(
         partition_distinct,
         f"{FEATURE} string, vals array<double>, overflow boolean, n long",
     )
@@ -1149,68 +766,6 @@ def distinct_edges_packed(
         total_rows = max((int(r["__tn"]) for r in merged), default=0)
         return edges, total_rows
     return edges
-
-
-def encode_packed(
-    packed_df: DataFrame,
-    feature_names: list[str],
-    bin_edges: dict[str, list[float]],
-    target_idx_col: str,
-    dtype: str = "f4",
-    packed_col: str = PACKED_COL,
-    code_dtype: str = "u1",
-) -> DataFrame:
-    """Packed raw floats -> packed bin codes (1 byte/cell at u1, 2 at u2;
-    no per-level ``searchsorted``).  Codes are ORDER-ISOMORPHIC to values:
-    ``v <= edge_j <=> code(v) <= j`` (the first edge >= v sits at or before
-    j iff v <= edge_j), so routing on codes is bit-equivalent to routing on
-    raw values; NaN/NULL take the width's reserved top codes (see module
-    notes)."""
-    import pyarrow as pa
-
-    np_code, nan_code, null_code, max_edges_cap = _code_info(code_dtype)
-    if any(len(e) > max_edges_cap for e in bin_edges.values()):
-        raise ValueError(
-            f"encode_packed supports at most {max_edges_cap} edges per "
-            f"feature with code_dtype={code_dtype!r}"
-        )
-    names = list(feature_names)
-    tcol = target_idx_col
-    np_dtype, bits_dtype, _, null_bits = _dtype_info(dtype)
-    n_feat = len(names)
-    edges_list = [np.asarray(bin_edges.get(f, ()), dtype=np.float64) for f in names]
-
-    def encode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            mat = _unpack_binary(b.column(packed_col), n_feat, np_dtype)
-            codes = np.empty((n, n_feat), dtype=np_code)
-            for j in range(n_feat):
-                vals = mat[:, j]
-                nullm = vals.view(bits_dtype) == null_bits
-                nanm = np.isnan(vals) & ~nullm
-                ej = edges_list[j]
-                if ej.size:
-                    cj = np.searchsorted(ej, vals, side="left")
-                    np.minimum(cj, ej.size - 1, out=cj)
-                    col_codes = cj.astype(np_code)
-                    col_codes[nanm] = nan_code
-                else:  # all-NULL/NaN feature: no candidates at all
-                    col_codes = np.full(n, null_code, dtype=np_code)
-                col_codes[nullm] = null_code
-                codes[:, j] = col_codes
-            target = b.column(tcol)
-            yield pa.RecordBatch.from_arrays(
-                [_pack_binary(codes), target.combine_chunks() if hasattr(target, "combine_chunks") else target],
-                names=[packed_col, tcol],
-            )
-        _trim_malloc()
-
-    return packed_df.select(packed_col, tcol).mapInArrow(
-        encode, f"{packed_col} binary, {tcol} int"
-    )
 
 
 def edge_code(edges: list[float], threshold: float) -> int:
@@ -1358,11 +913,12 @@ def packed_histogram_counts(
     code_dtype: str = "u1",
     tree_col: str | None = None,
 ) -> DataFrame:
-    """:func:`binned_histogram_counts` over the packed bin-code matrix
-    (uint8 or uint16 per ``code_dtype``, matching the encode),
-    with tree routing fused into the same numpy pass (``route_codes``) —
-    the per-level cost is one 2-column transfer of the cached code relation
-    plus bincounts; the emitted relation is identical.
+    """(node, feature, feature_value, class_*_count, count_examples) — the
+    counts relation the exact melt builds with unpivot + groupBy — as
+    merged partial histograms over the packed bin-code matrix (uint8 or
+    uint16 per ``code_dtype``, matching the encode), with tree routing
+    fused into the same numpy pass (``route_codes``): the per-level cost is
+    one 2-column transfer of the cached code relation plus bincounts.
 
     ``feature_names`` may be a SUBSET of the packed matrix (random-forest
     per-tree feature sampling): ``feature_positions`` gives each name's

@@ -1,16 +1,22 @@
-"""Unified best-split search — ONE Spark job per tree node.
+"""Best-split search for one tree LEVEL: every pending node of the level is
+scored in ONE pass (PLANET-style), on either of the tree's two fit paths.
 
 The reference builds an independent lazy plan per feature and materializes all
 of them with ``pl.collect_all`` (``/root/reference/efficient_trees/tree.py:237-339``).
 Spark has no cross-action plan sharing, so a literal translation would re-scan
 the node's data once per feature.  Instead the whole search is ONE declarative
-plan (SURVEY.md §7.2, the PLANET-style layout):
+plan keyed by (node, feature) (SURVEY.md §7.2):
 
-    unpivot features to long form  (feature, feature_value, target_idx)
-      → groupBy(feature, feature_value): per-class conditional counts   [1 shuffle]
-      → Window.partitionBy(feature).orderBy(feature_value): prefix sums [1 shuffle]
+    unpivot features to long form  (node, feature, feature_value, target_idx)
+      → groupBy(node, feature, feature_value): per-class counts         [1 shuffle]
+      → prefix sums over sorted values per (node, feature)              [windows]
       → proportions → criterion → information gain                      [projections]
-      → global argmax with total-order tie-break                        [tiny]
+      → per-node argmax with total-order tie-break                      [tiny]
+
+That is the exact melt (:func:`find_best_splits_per_node`).  The packed
+level loop (:func:`find_best_splits_packed`) replaces the first two steps
+with an Arrow histogram pass over the persisted bin-code relation
+(``operators/histogram.py``) and shares everything after the counts.
 
 Scale properties:
 * The unpivot multiplies rows by n_features but is map-local (no shuffle) and
@@ -78,8 +84,6 @@ def candidate_split_gains(
     node_col: str | None = None,
     num_buckets: int | None = None,
     include_child_counts: bool = False,
-    hist_method: str = "expand",
-    bin_edges: dict[str, list[float]] | None = None,
     bounded_candidates: bool = False,
     precomputed_counts: DataFrame | None = None,
 ) -> DataFrame:
@@ -121,24 +125,12 @@ def candidate_split_gains(
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     if precomputed_counts is not None:
-        # Counts relation supplied by the caller (packed wide-fit path:
-        # routing + histograms fused in one Arrow pass); the gains pipeline
-        # below is shared unchanged.
+        # Counts relation supplied by the caller (the packed level loop:
+        # routing + histograms fused in one Arrow pass, or the melt's
+        # checkpointed counts); the gains pipeline below is shared
+        # unchanged.
         counts = precomputed_counts
-    elif hist_method == "arrow":
-        # Wide-fit path (binned mode only): Arrow-batched partial histograms
-        # replace the unpivot Expand + hash aggregate — same counts relation,
-        # bit-identical downstream (operators/histogram.py; measured ~10x at
-        # the reference's 190-feature shape).  ``df`` carries RAW features;
-        # snapping to the quantile edges happens inside the histogram pass.
-        from efficient_trees_spark.operators.histogram import binned_histogram_counts
-
-        if bin_edges is None:
-            raise ValueError("hist_method='arrow' requires bin_edges (binned mode)")
-        counts = binned_histogram_counts(
-            df, feature_names, n_classes, bin_edges, target_idx_col, node_col
-        )
-    elif hist_method == "expand":
+    else:
         long_df = melt_features(
             df, feature_names, target_idx_col, extra_id_cols=[node_col] if node_col else None
         )
@@ -146,10 +138,8 @@ def candidate_split_gains(
             *exprs.conditional_class_counts(target_idx_col, n_classes),
             F.count(F.lit(1)).alias("count_examples"),
         )
-    else:
-        raise ValueError(f"unknown hist_method: {hist_method!r}")
 
-    if bounded_candidates or hist_method == "arrow":
+    if bounded_candidates:
         # Binned mode: ≤ max_bins+1 candidate rows per (node, feature) BY
         # CONSTRUCTION, so the two-phase bucketed scan below is pure fixed
         # overhead (measured ~4 s/level of extra stages at 190 features).
@@ -192,7 +182,7 @@ def candidate_split_gains(
     # local checkpoint materializes the aggregated (keys, value, counts)
     # relation once per call — it is candidate-sized (distinct values),
     # far smaller than the melt it replaces, and recomputed from the
-    # source on every invocation.  The bounded/arrow branch above has a
+    # source on every invocation.  The bounded branch above has a
     # single consumer and stays fully lazy.  A caller-supplied counts
     # relation is already materialized (find_best_splits_per_node
     # checkpoints before its size probe) — re-checkpointing it would copy
@@ -420,14 +410,14 @@ def find_best_splits_per_node(
     criterion: Criterion,
     node_col: str,
     target_idx_col: str = TARGET_IDX,
-    hist_method: str = "expand",
-    bin_edges: dict[str, list[float]] | None = None,
-    bounded_candidates: bool = False,
 ) -> list[dict[str, Any]]:
-    """Best split of EVERY node of a tree level in one job (PLANET-style).
+    """Best split of EVERY node of a tree level in one job (PLANET-style),
+    on the exact melt: ``df`` is the prepared training relation with a
+    routing node-id column.
 
-    Same total-order tie-break as :func:`find_best_split` — (gain desc,
-    feature position asc, threshold asc) — expressed as ``max_by`` over an
+    Total-order tie-break — (gain desc, feature position asc, threshold
+    asc; the reference's stable concat-then-sort in feature-list order,
+    tree.py:341-348) — expressed as ``max_by`` over an
     ordering struct rather than a ``row_number`` window.  The window form is
     a scale trap: at the root level the node column is the foldable
     ``lit(0)``, Catalyst folds it out of the partition spec, and the window
@@ -457,11 +447,7 @@ def find_best_splits_per_node(
     two-phase bucketed windows, broadcast joins and max_by shuffle.
     Entropy and over-budget relations keep the distributed pipeline.
     """
-    if (
-        criterion == Criterion.GINI
-        and hist_method == "expand"
-        and not bounded_candidates
-    ):
+    if criterion == Criterion.GINI:
         keys = [node_col, FEATURE]
         long_df = melt_features(
             df, feature_names, target_idx_col, extra_id_cols=[node_col]
@@ -493,9 +479,6 @@ def find_best_splits_per_node(
             target_idx_col,
             node_col=node_col,
             include_child_counts=True,
-            hist_method=hist_method,
-            bin_edges=bin_edges,
-            bounded_candidates=False,
             precomputed_counts=counts,
         )
         return _best_split_rows(gains, _feature_position(feature_names), node_col)
@@ -507,9 +490,6 @@ def find_best_splits_per_node(
         target_idx_col,
         node_col=node_col,
         include_child_counts=True,
-        hist_method=hist_method,
-        bin_edges=bin_edges,
-        bounded_candidates=bounded_candidates,
     )
     return _best_split_rows(gains, _feature_position(feature_names), node_col)
 
@@ -635,8 +615,8 @@ def find_best_splits_packed(
     through the SAME Catalyst pipeline, skipping the per-level window
     shuffle stages (~1 s/level of fixed latency at sf0.1).  All float math
     stays in Catalyst with identical expression shapes and the prefix sums
-    are exact int64 either way, so trees are bit-identical to the expand
-    and column-arrow paths (``tests/test_wide_fit.py``) and to the fully
+    are exact int64 either way, so trees are bit-identical to the exact
+    melt (``tests/test_wide_fit.py``) and to the fully
     distributed form, which remains the path for relations past
     ``_LOCAL_GAINS_MAX_ROWS`` (deep trees in packed-exact mode).
 
@@ -1261,37 +1241,3 @@ def _best_split_rows(gains: DataFrame, position, node_col: str) -> list[dict[str
         }
         for row in rows
     ]
-
-
-def find_best_split(
-    df: DataFrame,
-    feature_names: list[str],
-    n_classes: int,
-    criterion: Criterion,
-    target_idx_col: str = TARGET_IDX,
-) -> dict[str, Any] | None:
-    """Globally best split, or None when no candidate has finite gain.
-
-    Total-order tie-break: gain desc, feature position asc (matches the
-    reference's stable concat-then-sort in feature-list order,
-    tree.py:341-348), threshold asc.
-    """
-    gains = candidate_split_gains(df, feature_names, n_classes, criterion, target_idx_col)
-
-    position = _feature_position(feature_names)
-    best = (
-        gains.orderBy(
-            F.desc("information_gain"), position.asc(), F.asc(FEATURE_VALUE)
-        )
-        .limit(1)
-        .collect()
-    )
-    if not best:
-        return None
-    row = best[0]
-    return {
-        "feature": row[FEATURE],
-        "threshold": row[FEATURE_VALUE],
-        "information_gain": row["information_gain"],
-        "parent_criterion": row["parent_criterion"],
-    }

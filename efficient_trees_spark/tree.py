@@ -4,18 +4,24 @@ Same capabilities as the reference classifier
 (``/root/reference/efficient_trees/tree.py:16-385``) re-architected for Spark:
 
 * **Exact split search** over every distinct feature value (not MLlib's
-  quantile bins — SURVEY.md §7.3), as ONE declarative job per tree node
-  (``operators/split_finder.py``) instead of one plan per feature.
+  quantile bins — SURVEY.md §7.3), or opt-in quantile-binned candidates
+  (``max_bins``).
+* **Level-wise growth, two fit paths.**  Every pending node of a tree level
+  is scored in ONE pass (PLANET-style).  The packed level loop serves every
+  binned fit and every exact fit whose distinct values fit uint16 code
+  space: the features are encoded once into a persisted bin-code relation
+  (1 or 2 bytes/cell) and each level is one Arrow histogram pass over it
+  with the tree routing run in numpy (``operators/histogram.py``).  The
+  exact melt serves exact fits past code space and exact forests: each
+  level unpivots the persisted training relation, routed by a compiled
+  node-id column, into one declarative gains plan
+  (``operators/split_finder.py``).  Both paths share the gain expressions
+  and tie-breaks, so they grow identical trees.
 * **Batch prediction compiled to a single CASE projection**
   (``plans/case_compiler.py``) instead of a 2^depth filter-union.
-* **No Python in the hot path** — fit and transform are pure Catalyst
-  expression plans; driver-side Python only orchestrates recursion over the
-  (tiny) node dicts, matching the reference's discipline (SURVEY.md §2.11).
-* **Lineage discipline for deep recursion**: each node's frame is persisted
-  before its split search and unpersisted when its subtree completes, and
-  lineage is truncated with ``localCheckpoint`` every ``checkpoint_interval``
-  levels — without this, depth-d children replay the scan plus d filters
-  (SURVEY.md §4.3.1).
+* **Lineage stays one select deep**: the training relation (or code
+  relation) is persisted once per fit and each level's plan is built on it
+  directly, so no level replays the levels above it.
 
 Model artifact: the same nested dict as the reference — internal nodes
 ``{"type": "node", "feature", "threshold", "information_gain",
@@ -60,21 +66,21 @@ _LITERAL_MAP_MAX = 256
 
 
 def _fan_out_small_input(prepared: DataFrame) -> DataFrame:
-    """Binned mode's passes (edge stats, pack, encode, one Arrow histogram
-    per tree level) parallelize over THIS relation's partition count.  A
-    local benchmark table is a handful of 128 MB parquet splits — 4
-    partitions would idle 28 of 32 cores in EVERY pass — so fan out to the
-    session's parallelism once, before anything is persisted, paying one
-    bounded shuffle.  On a real cluster the source has far more splits than
-    cores and this is a no-op.  Applied to the shared ``prepared`` relation
-    BEFORE the histogram paths diverge, so the order-statistic edge
-    placement (partitioning-sensitive within the documented rank error) sees
-    identical partitions in both paths — arrow/expand bit-parity holds by
-    construction.  Exact (unbinned) fits keep the source partitioning: their
-    map side is pure codegen and the repartition was A/B-measured slower
-    (see the note in ``_prepare``).  Partition count via the ~1 ms file-size
-    estimate when the lineage is a plain scan pipeline (r11 — the ``df.rdd``
-    probe costs ~0.4 s of physical planning per call), the probe otherwise.
+    """The packed path's passes (edge stats or distinct values, the fused
+    pack + encode, one Arrow histogram per tree level) parallelize over
+    THIS relation's partition count.  A local benchmark table is a handful
+    of 128 MB parquet splits — 4 partitions would idle 28 of 32 cores in
+    EVERY pass — so fan out to the session's parallelism once, before
+    anything is persisted, paying one bounded shuffle.  On a real cluster
+    the source has far more splits than cores and this is a no-op.  The
+    order-statistic edge placement is partitioning-sensitive (within the
+    documented rank error), so the single tree and the forest both fan out
+    here, before their edge pass.  Melt fits keep the source partitioning:
+    their map side is pure codegen and the repartition was A/B-measured
+    slower (see the note in ``_prepare``).  Partition count via the ~1 ms
+    file-size estimate when the lineage is a plain scan pipeline (r11 — the
+    ``df.rdd`` probe costs ~0.4 s of physical planning per call), the probe
+    otherwise.
 
     Returns ``(df, n_parts)`` — the relation plus its KNOWN partition count
     (``repartition(n)`` pins exactly n; AQE does not coalesce an explicit
@@ -168,14 +174,15 @@ def _encode_codes(
     dtype: str,
     n_rows_est: int | None = None,
     n_parts: int | None = None,
-) -> tuple[DataFrame, str, int | None] | None:
+) -> tuple[DataFrame, str, int | None]:
     """Pass 2 of the two-scan flow, shared by the single-tree fit and the
     forest: the fused pack + encode of ``prepared`` into the packed
     bin-code relation — uint8 (1 byte/cell) when every feature fits 253
     edges, uint16 (2 bytes/cell, <= 65 533 edges) past that.  Routing and
     histograms then run on codes, order-isomorphic to raw values, so trees
-    are bit-identical.  Returns ``(codes, code_dtype, n_parts)``, or None
-    when a feature exceeds uint16 code space.
+    are bit-identical.  Returns ``(codes, code_dtype, n_parts)``.  Edges
+    always fit uint16: binned edges number at most ``max_bins`` (capped at
+    65 533 by the constructor) and the exact distinct pass raises past it.
 
     With ``n_rows_est`` the input is first right-sized for the cache
     (:func:`_coalesce_for_pack`); the forest passes none, since its bags
@@ -184,8 +191,6 @@ def _encode_codes(
     from efficient_trees_spark.operators import histogram
 
     max_card = max((len(e) for e in bin_edges.values()), default=0)
-    if max_card > histogram._MAX_PACKED16_EDGES:
-        return None
     code_dtype = "u1" if max_card <= histogram._MAX_PACKED_EDGES else "u2"
     if n_rows_est is not None:
         prepared, n_parts = _coalesce_for_pack(
@@ -278,10 +283,9 @@ class DecisionTreeClassifier:
     :param categorical_columns: columns to target-encode to ordinal codes
         before training (reference tree.py:93-108).
     :param criterion: impurity criterion (entropy default, like the reference).
-    :param checkpoint_interval: truncate plan lineage with localCheckpoint
-        every this many tree levels (Spark-specific; no reference analogue).
     :param max_bins: None (default) = the reference's EXACT split search over
-        every distinct feature value (tree.py:244).  An integer caps the
+        every distinct feature value (tree.py:244).  An integer (2..65 533,
+        so codes fit uint16) caps the
         candidate set at ``max_bins`` equi-depth quantile edges per feature —
         the PLANET/MLlib scale strategy.  Exact mode's shuffle volume is
         Σ_f |distinct(f)| rows; on a 100 TB table a continuous feature has
@@ -293,9 +297,21 @@ class DecisionTreeClassifier:
         the row count of ``value <= edge`` for every edge; only the candidate
         set is thinned.  Thresholds remain real feature-space values, so
         inference is unchanged.
-    :param bin_rel_error: relative rank error of the quantile sketch
-        (``approxQuantile``) used to place bin edges; only the edge PLACEMENT
-        is approximate, never the gains at the chosen edges.
+    :param bin_rel_error: relative rank error of the per-partition order
+        statistics used to place bin edges; only the edge PLACEMENT is
+        approximate, never the gains at the chosen edges.
+    :param hist_method: which fit path computes the split statistics.
+        ``"arrow"`` is the packed level loop: Arrow-batched histograms over
+        the persisted bin-code relation, ~10x faster than the melt at the
+        reference's 190-feature width because it skips the rows x
+        n_features Expand.  Binned fits always take it; an exact fit takes
+        it with every distinct value as a candidate edge and raises with
+        guidance when a feature has more than 65 533 distinct values.
+        ``"expand"`` is the exact melt (long-form unpivot + Catalyst hash
+        aggregate); it takes no ``max_bins``.  ``"auto"`` = arrow for binned
+        fits and for WIDE (>= 64 feature) exact fits, falling back to the
+        melt with a warning when a feature overflows code space; expand
+        otherwise.  Both paths grow bit-identical trees.
     """
 
     def __init__(
@@ -303,32 +319,30 @@ class DecisionTreeClassifier:
         max_depth: int | None = None,
         categorical_columns: list[str] | None = None,
         criterion: Criterion = Criterion.ENTROPY,
-        checkpoint_interval: int = 4,
         streaming: bool = False,
         max_bins: int | None = None,
         bin_rel_error: float = 1e-3,
         hist_method: str = "auto",
     ):
+        from efficient_trees_spark.operators.histogram import _MAX_PACKED16_EDGES
+
+        if hist_method not in ("auto", "expand", "arrow"):
+            raise ValueError(f"unknown hist_method: {hist_method!r}")
+        if max_bins is not None and max_bins > _MAX_PACKED16_EDGES:
+            raise ValueError(
+                f"max_bins must be <= {_MAX_PACKED16_EDGES} (uint16 code "
+                f"space), got {max_bins}"
+            )
+        if max_bins is not None and hist_method == "expand":
+            raise ValueError(
+                "hist_method='expand' is the exact melt and takes no "
+                "max_bins; binned fits use hist_method='arrow' or 'auto'"
+            )
         self.max_depth = max_depth
         self.categorical_columns = categorical_columns
         self.criterion = Criterion(criterion)
-        self.checkpoint_interval = checkpoint_interval
         self.max_bins = max_bins
         self.bin_rel_error = bin_rel_error
-        # How split statistics are computed: "expand" melts features
-        # long-form through a Catalyst hash aggregate (pure built-ins);
-        # "arrow" computes Arrow-batched partial histograms
-        # (operators/histogram.py) — bit-identical trees, ~10x faster at the
-        # reference's 190-feature benchmark width because it skips the
-        # rows x n_features Expand.  In EXACT mode (max_bins=None), "arrow"
-        # uses every distinct value as a packed candidate edge when all
-        # features fit uint8 code space (<= 253 distinct), else raises with
-        # guidance.  "auto" = arrow for binned level-wise fits; for WIDE
-        # (>= 64 feature) exact level-wise fits it tries the packed exact
-        # path and falls back to the melt with a warning on overflow;
-        # expand otherwise.
-        if hist_method not in ("auto", "expand", "arrow"):
-            raise ValueError(f"unknown hist_method: {hist_method!r}")
         self.hist_method = hist_method
         self.bin_edges_: dict[str, list[float]] | None = None
         # Drop-in compatibility with the reference signature (tree.py:20-26):
@@ -448,22 +462,12 @@ class DecisionTreeClassifier:
         self,
         data: DataFrame,
         target_name: str,
-        strategy: str = "level",
         shrink_features: bool = True,
     ) -> None:
-        """Train the tree.  Reference lifecycle: tree.py:79-115.
+        """Train the tree level-wise (PLANET-style): one split pass per tree
+        LEVEL scores every pending node of the level.  Reference lifecycle:
+        tree.py:79-115.
 
-        :param strategy:
-            ``"level"`` (default) — PLANET-style level-wise growth: ONE split
-            job + one distribution job per tree LEVEL, scoring every node of
-            the level in a single plan keyed by a routing node-id column.
-            Depth-4 fit = ~10 Spark jobs regardless of node count, the input
-            relation is persisted once, and lineage stays one select deep.
-            The scale answer for wide/deep trees on big clusters.
-            ``"node"`` — the reference-shaped recursion (tree.py:180-385):
-            one split + one distribution job per NODE with per-node persists.
-            Kept as a cross-check oracle; produces the identical tree (both
-            strategies share the same total-order tie-breaks).
         :param shrink_features:
             ``True`` (default) replicates the reference's ``shrink_dtype``
             pass (tree.py:90): float features are rounded to float32 before
@@ -486,28 +490,17 @@ class DecisionTreeClassifier:
         hist_method = self.hist_method
         exact_auto_fallback = False
         if hist_method == "auto":
-            if strategy == "level" and self.max_bins is not None:
+            if self.max_bins is not None:
                 hist_method = "arrow"
-            elif (
-                strategy == "level"
-                and self.max_bins is None
-                and len(feature_names) >= 64
-            ):
+            elif len(feature_names) >= 64:
                 # Wide exact fit: attempt the packed exact path (candidates
-                # = every distinct value, uint8 codes); fall back to the
-                # melt with a warning if any feature exceeds code space.
+                # = every distinct value); fall back to the melt with a
+                # warning if any feature exceeds code space.
                 hist_method = "arrow"
                 exact_auto_fallback = True
             else:
                 hist_method = "expand"
-        if hist_method == "arrow" and strategy != "level":
-            raise ValueError("hist_method='arrow' requires strategy='level'")
-        if (
-            hist_method == "expand"
-            and self.max_bins is None
-            and strategy == "level"
-            and len(feature_names) >= 64
-        ):
+        if hist_method == "expand" and len(feature_names) >= 64:
             # The melt's Expand multiplies rows by width (75 s at just
             # 60k x 190 — histogram.py module notes); never let a wide exact
             # fit take it silently.
@@ -520,84 +513,55 @@ class DecisionTreeClassifier:
             )
 
         known_parts: int | None = None
-        if self.max_bins is not None or hist_method == "arrow":
-            prepared, known_parts = _fan_out_small_input(prepared)
-        # Kept for the auto-exact fallback: the melt path must see the
-        # double-typed relation, not the arrow path's f32-narrowed one.
-        prepared_base = prepared
-
-        if hist_method == "arrow" and shrink_features:
-            # Shrunk features are f32-representable by construction, so the
-            # persisted relation can store float32: halves the Arrow batch
-            # volume every level's histogram pass transfers.  Lossless —
-            # searchsorted compares f32 upcast to the float64 edges, and the
-            # emitted candidate values are the edges themselves.
-            prepared = prepared.selectExpr(
-                *[
-                    f"CAST(`{f.replace('`', '``')}` AS FLOAT) AS "
-                    f"`{f.replace('`', '``')}`"
-                    for f in feature_names
-                ],
-                _TARGET_IDX,
-            )
-
         bin_edges: dict[str, list[float]] | None = None
-        packed_mode = False
-        packed_code_dtype = "u1"
+        code_dtype = "u1"
         if hist_method == "arrow":
             from efficient_trees_spark.operators.histogram import (
                 _MAX_PACKED16_EDGES,
                 distinct_edges_packed,
             )
 
+            prepared, known_parts = _fan_out_small_input(prepared)
+            # Kept for the auto-exact fallback: the melt path must see the
+            # double-typed relation, not the f32-narrowed one below.
+            prepared_base = prepared
+            if shrink_features:
+                # Shrunk features are f32-representable by construction, so
+                # the edge and encode passes can read float32: halves the
+                # Arrow batch volume each transfers.  Lossless —
+                # searchsorted compares f32 upcast to the float64 edges,
+                # and the emitted candidate values are the edges themselves.
+                prepared = prepared.selectExpr(
+                    *[
+                        f"CAST(`{f.replace('`', '``')}` AS FLOAT) AS "
+                        f"`{f.replace('`', '``')}`"
+                        for f in feature_names
+                    ],
+                    _TARGET_IDX,
+                )
             dtype = "f4" if shrink_features else "f8"
+            # Two streaming scans of the source and no raw cache at all —
+            # the XGBoost approx-tree architecture.  Pass 1 collects
+            # per-partition order statistics (binned) or distinct values
+            # (exact) only; pass 2 fuses pack + encode straight to bin
+            # codes, the one persisted training artifact (1 or 2
+            # bytes/cell).  In exact mode the edges ARE the distinct
+            # values, so snapping is the identity and the histogram
+            # relation — hence the tree — is bit-identical to the exact
+            # melt (the reference's tree.py:244 semantics).
             if self.max_bins is not None:
-                # Binned mode: TWO streaming scans of the source and no raw
-                # cache at all — the XGBoost approx-tree architecture.
-                # Pass 1 collects per-partition order statistics only
-                # (rows-independent output, nothing persisted); pass 2
-                # fuses pack+encode straight to uint8 codes, materialized
-                # into the level-0 code cache (1 byte/cell — the only
-                # persisted training artifact).  Edges and trees are
-                # bit-identical to the cache-the-raw-floats flow
-                # (histogram.partition_order_stats parity notes); versus it
-                # the rescan of column-pruned compressed parquet replaces
-                # writing AND reading back a 4/8-byte-per-cell cache — the
-                # measured data-proportional chunk of peak executor memory.
                 n_bins, stats = self._binned_edge_params()
                 bin_edges, n_rows_est = _two_scan_binned_edges(
                     prepared, feature_names, n_bins, stats, dtype,
                     n_parts=known_parts,
                 )
-                self.bin_edges_ = bin_edges
-                encoded = _encode_codes(
-                    prepared, feature_names, bin_edges, dtype,
-                    n_rows_est=n_rows_est, n_parts=known_parts,
-                )
-                if encoded is not None:
-                    prepared, packed_code_dtype, known_parts = encoded
-                    packed_mode = True
-                # beyond uint16 code space: `prepared` stays columnar and
-                # the per-level searchsorted histogram path takes over below.
             else:
-                # EXACT mode on the packed path: candidates = every distinct
-                # value (the reference's tree.py:244 semantics).  Snapping to
-                # edges that ARE the distinct values is the identity, so the
-                # histogram relation — and hence the tree — is bit-identical
-                # to the exact melt; raises with guidance when any feature
-                # exceeds uint8 code space (or, under auto selection, falls
-                # back to the melt with a warning — the cardinality probe is
-                # two cheap passes vs. the melt's rows x width Expand).
-                # Same two-scan shape as the binned branch: the distinct
-                # pass reads the columnar relation directly and the encode
-                # is fused — no raw float cache in exact mode either.
                 try:
                     bin_edges, n_rows_est = distinct_edges_packed(
                         prepared,
                         feature_names,
                         max_distinct=_MAX_PACKED16_EDGES,
                         dtype=dtype,
-                        packed=False,
                         with_counts=True,
                     )
                 except ValueError:
@@ -610,52 +574,29 @@ class DecisionTreeClassifier:
                         "bounded scale path",
                         stacklevel=2,
                     )
-                    hist_method = "expand"
-                    bin_edges = None
                     prepared = prepared_base
-                else:
-                    # uint16 codes cover up to 65 533 distinct values —
-                    # virtually every real exact fit, without ever taking
-                    # the melt's rows x width Expand.
-                    self.bin_edges_ = bin_edges
-                    prepared, packed_code_dtype, known_parts = _encode_codes(
-                        prepared, feature_names, bin_edges, dtype,
-                        n_rows_est=n_rows_est, n_parts=known_parts,
-                    )
-                    packed_mode = True
-        elif self.max_bins is not None:
-            bin_edges = self._compute_bin_edges(prepared, feature_names)
-            # Arrow histograms snap inside the count pass; the expand
-            # path materializes the snapped relation up front.
-            prepared = self._snap_to_edges(prepared, feature_names)
-
-        # Both packed branches above are two-scan flows (sketch/distinct
-        # pass + fused pack-encode): no raw float relation is ever cached
-        # by a single-tree fit — the only persisted training artifact is
-        # the 1 byte/cell code relation pinned here for the level loop
-        # (and the forest's shared code relation, which ensemble.py
-        # manages itself).
-        if strategy == "level":
-            prepared = prepared.persist()
-            try:
-                [self.tree] = self._build_tree_levelwise(
-                    prepared,
-                    [feature_names],
-                    unique_targets,
-                    hist_method=hist_method,
-                    bin_edges=bin_edges if hist_method == "arrow" else None,
-                    packed=packed_mode,
-                    packed_code_dtype=packed_code_dtype,
-                    packed_n_parts=known_parts if packed_mode else None,
+            if bin_edges is not None:
+                self.bin_edges_ = bin_edges
+                prepared, code_dtype, known_parts = _encode_codes(
+                    prepared, feature_names, bin_edges, dtype,
+                    n_rows_est=n_rows_est, n_parts=known_parts,
                 )
-            finally:
-                prepared.unpersist()
-        elif strategy == "node":
-            self.tree = self._build_tree(
-                prepared, feature_names, unique_targets, depth=0
+
+        # The only relation a single-tree fit persists: the code relation
+        # (packed loop) or the prepared training relation (melt), read once
+        # per level.
+        prepared = prepared.persist()
+        try:
+            [self.tree] = self._build_tree_levelwise(
+                prepared,
+                [feature_names],
+                unique_targets,
+                bin_edges=bin_edges,
+                packed_code_dtype=code_dtype,
+                packed_n_parts=known_parts,
             )
-        else:
-            raise ValueError(f"unknown strategy: {strategy!r}")
+        finally:
+            prepared.unpersist()
 
     def _prepare(
         self, data: DataFrame, target_name: str, shrink_features: bool
@@ -730,89 +671,25 @@ class DecisionTreeClassifier:
     # -------------------------------------------------- quantile binning
 
     def _binned_edge_params(self) -> tuple[int, int]:
-        """(n_bins, stats_per_partition) for quantile edge placement —
-        shared by the two-pass flow (:meth:`_compute_bin_edges`) and the
-        fused pack+stats flow so both place identical edges."""
+        """(n_bins, stats_per_partition) for quantile edge placement
+        (:func:`_two_scan_binned_edges`, shared by the tree and the forest).
+
+        Edges sit at ranks k/max_bins of the merged per-partition order
+        statistics plus the TRUE max (a top edge below the max would leave
+        high values unmappable); NaN and NULL are excluded (NaN keeps its
+        own candidate slot sorting greatest).  Rank error of the edge
+        PLACEMENT is <= ``bin_rel_error``; the gain math is never
+        approximate — binning maps every value to the smallest edge >= it,
+        which preserves the ``value <= edge`` row count for every edge.
+        (Two JVM-side alternatives were A/B'd at the reference's
+        190-feature width and lost: ``df.stat.approxQuantile`` 29 s, one
+        ``percentile_approx`` ObjectHashAggregate 19 s, the order-statistic
+        pass ~3 s at 600k rows.)"""
         n_bins = int(self.max_bins)
         if n_bins < 2:
             raise ValueError(f"max_bins must be >= 2, got {self.max_bins}")
         stats = max(2 * n_bins, min(2048, int(round(1.0 / self.bin_rel_error))))
         return n_bins, stats
-
-    def _compute_bin_edges(
-        self,
-        prepared: DataFrame,
-        feature_names: list[str],
-    ) -> dict[str, list[float]]:
-        """Place ≤ ``max_bins`` equi-depth candidate edges per feature.
-
-        MLlib's trees use the same strategy (quantile-binned candidates); here
-        it is an OPT-IN scale path layered on the exact engine rather than the
-        only mode (SURVEY.md §7.3 — exactness is what MLlib can't do).
-
-        One ``mapInArrow`` pass emits per-partition order statistics per
-        feature; one tiny feature-keyed merge places edges at ranks
-        k/max_bins and unions the TRUE max (a top edge below the max would
-        leave high values unmappable) — ``operators/histogram.py:
-        partition_quantile_edges``.  NaN and NULL are excluded (NaN keeps
-        its own candidate slot sorting greatest).  Rank error of the edge
-        PLACEMENT is ≤ ``bin_rel_error``; the gain math is never
-        approximate.  (Two JVM-side alternatives were A/B'd at the
-        reference's 190-feature width and lost: ``df.stat.approxQuantile``
-        29 s, a single ``percentile_approx`` ObjectHashAggregate 19 s, this
-        pass ~3 s at 600k rows — the GK sketch update loop is the cost, not
-        the scan.)
-
-        Gains at the surviving candidates are bit-identical to exact-mode
-        gains at those same thresholds — binning maps every value to the
-        smallest edge ≥ it, which preserves the ``value <= edge`` row count
-        for every edge; only the candidate set is thinned.
-
-        Edges are computed AFTER the f32 shrink cast, so they are themselves
-        representable shrunk values and golden-parity semantics compose.
-        """
-        from efficient_trees_spark.operators.histogram import (
-            partition_quantile_edges,
-        )
-
-        n_bins, stats = self._binned_edge_params()
-        edges_by_feature = partition_quantile_edges(
-            prepared, feature_names, n_bins, stats
-        )
-        self.bin_edges_ = edges_by_feature
-        return edges_by_feature
-
-    def _snap_to_edges(self, prepared: DataFrame, feature_names: list[str]) -> DataFrame:
-        """Replace every value by the smallest bin edge ≥ it (expand-mode
-        binning; the Arrow histogram path folds this into its count pass).
-
-        ``array_min`` over a filtered literal array — O(B) collection
-        expressions per cell, no UDF.  (A chained ``CASE WHEN v <= e_k``
-        per feature was A/B'd at the 190-feature width and is 4x SLOWER:
-        6 080 branches blow the codegen method budget and the interpreted
-        CASE walk beats neither form.)  NULLs stay NULL (dropped per-feature
-        by the melt, reference F1) and NaN stays NaN (a distinct value
-        sorting greatest, same as exact mode)."""
-        assert self.bin_edges_ is not None
-        exprs_out = []
-        for name in feature_names:
-            edges = self.bin_edges_[name]
-            if not edges:  # all-NULL/NaN feature: nothing to bin
-                exprs_out.append(F.col(name))
-                continue
-            arr = F.array(*[F.lit(e).cast("double") for e in edges])
-            snapped = F.array_min(F.filter(arr, lambda x: x >= F.col(name)))
-            exprs_out.append(
-                F.when(F.isnan(name), F.col(name)).otherwise(snapped).alias(name)
-            )
-        return prepared.select(*exprs_out, _TARGET_IDX)
-
-    def _distribution(self, df: DataFrame) -> list[tuple[int, int]]:
-        """(class_idx, count) pairs, class-ascending.  One tiny job — serves
-        both the majority vote (reference tree.py:166-178) and the node's
-        target_distribution (tree.py:363-372)."""
-        rows = df.groupBy(_TARGET_IDX).count().orderBy(_TARGET_IDX).collect()
-        return [(row[_TARGET_IDX], row["count"]) for row in rows]
 
     @staticmethod
     def _majority_idx(distribution: list[tuple[int, int]]) -> int:
@@ -859,8 +736,8 @@ class DecisionTreeClassifier:
         finalized (leaf) children.  Thresholds (always bin edges) translate
         to their edge index (``histogram.edge_code``, which raises on a
         threshold that is not an edge); code comparisons are bit-equivalent
-        to the raw routing expression by the encode_packed order
-        isomorphism."""
+        to the raw routing expression by the encode's order isomorphism
+        (``histogram.pack_encode_features``)."""
         from efficient_trees_spark.operators.histogram import edge_code
 
         if out is None:
@@ -893,9 +770,7 @@ class DecisionTreeClassifier:
         data: DataFrame,
         tree_features: list[list[str]],
         unique_targets: list[Any],
-        hist_method: str = "expand",
         bin_edges: dict[str, list[float]] | None = None,
-        packed: bool = False,
         packed_all_features: list[str] | None = None,
         packed_code_dtype: str = "u1",
         packed_n_parts: int | None = None,
@@ -906,12 +781,18 @@ class DecisionTreeClassifier:
         ONE split-search job covering every pending node, keyed by a routing
         column compiled from the partial tree.
 
+        ``bin_edges`` selects the path: given, ``data`` is the packed
+        bin-code relation and each level is one histogram pass over it
+        (``split_finder.find_best_splits_packed``); None, ``data`` is the
+        prepared training relation and each level is one exact melt
+        (``split_finder.find_best_splits_per_node``).
+
         Grows ``len(tree_features)`` trees level-synchronously, tree t
         scoring ``tree_features[t]``: on the packed path one histogram pass
         per level covers the pending nodes of EVERY tree (rows carry their
         tree id in ``tree_col``), so a forest pays one Spark stage per
         level, not one per tree; a single tree is the one-element case.
-        The expand path grows one tree.  ``data`` is read once per level —
+        The melt path grows one tree.  ``data`` is read once per level —
         the caller persists it (or, for a forest's sampled bags, makes it
         re-derivable: seeded sampling of a persisted relation draws the
         same rows every level).
@@ -930,6 +811,7 @@ class DecisionTreeClassifier:
         """
         node_col = "__node_id"
         n_trees = len(tree_features)
+        packed = bin_edges is not None
         if n_trees > 1 and not (packed and tree_col):
             raise ValueError(
                 "growing several trees in one pass needs the packed code "
@@ -1024,7 +906,7 @@ class DecisionTreeClassifier:
                         ):
                             distributions[t][0] = dist
             elif need_root_dist or not at_max_depth:
-                # Expand path (or a depth-0 packed fit): the (cheap)
+                # Melt path (or a depth-0 packed fit): the (cheap)
                 # root-distribution job and the (expensive) split job are
                 # independent — submit both and let the scheduler overlap
                 # them.
@@ -1048,9 +930,6 @@ class DecisionTreeClassifier:
                                 len(unique_targets),
                                 self.criterion,
                                 node_col,
-                                hist_method=hist_method,
-                                bin_edges=bin_edges,
-                                bounded_candidates=self.max_bins is not None,
                             )
                         }
                     if dist_future is not None:
@@ -1133,55 +1012,6 @@ class DecisionTreeClassifier:
                 (row[_TARGET_IDX], row["count"])
             )
         return out
-
-    # ----------------------------------------------- node-wise (reference)
-
-    def _build_tree(
-        self,
-        data: DataFrame,
-        feature_names: list[str],
-        unique_targets: list[Any],
-        depth: int,
-    ) -> dict[str, Any]:
-        """Recursive node construction mirroring reference tree.py:180-385,
-        with Spark cache/lineage discipline layered on."""
-        if self.checkpoint_interval and depth > 0 and depth % self.checkpoint_interval == 0:
-            data = data.localCheckpoint(eager=False)
-        data = data.persist()
-        try:
-            distribution = self._distribution(data)  # also materializes the cache
-            majority = unique_targets[self._majority_idx(distribution)]
-
-            if self.max_depth is not None and depth >= self.max_depth:
-                return {"type": "leaf", "value": majority}
-
-            best = split_finder.find_best_split(
-                data, feature_names, len(unique_targets), self.criterion
-            )
-            if best is None or not best["information_gain"] > 0:
-                return {"type": "leaf", "value": majority}
-
-            feature, threshold = best["feature"], best["threshold"]
-            # NULL split-feature rows satisfy neither predicate → dropped from
-            # both children, matching the reference's mask semantics
-            # (tree.py:351-358; SURVEY.md §2.11.3).
-            left = data.filter(F.col(feature) <= threshold)
-            right = data.filter(F.col(feature) > threshold)
-
-            return {
-                "type": "node",
-                "feature": feature,
-                "threshold": threshold,
-                "information_gain": best["information_gain"],
-                "criterion_value": best["parent_criterion"],
-                # counts of present classes ordered by class value, like
-                # value_counts().sort(target) (tree.py:363-372)
-                "target_distribution": [count for _, count in distribution],
-                "left": self._build_tree(left, feature_names, unique_targets, depth + 1),
-                "right": self._build_tree(right, feature_names, unique_targets, depth + 1),
-            }
-        finally:
-            data.unpersist()
 
     # ------------------------------------------------------------- predict
 

@@ -281,10 +281,10 @@ def forest_fit_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that partitioning.  Recompute with tools/oracle_check.py if the testdata
 # or the host core count changes.  tree_binned re-pinned in round 6 when the
 # binned flow moved to two-scan stats (histogram.partition_order_stats):
-# the new edges agree with the expand path's _compute_bin_edges on this
-# data, which the previous fused-pack stats did NOT (arrow/expand gave
-# 6032/6028 'R' rows at r5 HEAD) — the re-pin records the now-converged
-# value, verified identical under tuned and vanilla sessions.  forest
+# the new edges agreed on this data with the column-wise quantile pass the
+# engine then also carried (since removed), which the previous fused-pack
+# stats did NOT (6032 vs 6028 'R' rows at r5 HEAD) — the re-pin records the
+# converged value, verified identical under tuned and vanilla sessions.  forest
 # re-pinned in round 7 for the same migration: the forest now shares the
 # single-tree two-scan flow (no raw float cache), whose stats pass sees
 # the column-pruned exchange placement rather than the frozen raw-cache

@@ -8,13 +8,13 @@ entropy (README.md:57-60: ~8 GB lazy / ~12 GB eager / ~15 GB sklearn).
 
 Two modes:
 
-* default — narrow lineitem fit, level vs node strategy (the lazy/eager
-  axis), plus sklearn/LightGBM when importable.  Quick smoke.
+* default — narrow lineitem fit (level-wise, exact), plus sklearn/LightGBM
+  when importable.  Quick smoke.
 * ``SPARK_GRAFT_WIDE=1`` — the reference's benchmark shape: a row-scaled
   190-float-feature table (``SPARK_GRAFT_WIDE_ROWMULT`` x the sf dir's
   lineitem; default 9 x sf0.1 ~= 5.4M rows ~ AMEX's 5.5M), fit at depth 4
-  entropy with NULLs filled, measured for BOTH the packed-Arrow histogram
-  path and the expand/melt path.  The table is materialized to parquet in
+  entropy with NULLs filled on the packed-Arrow histogram path (binned),
+  next to a scan-only baseline.  The table is materialized to parquet in
   a prepare child first, so candidates measure scan -> fill_null -> fit —
   the reference's exact setup.
 
@@ -97,15 +97,7 @@ def train_level(queue):
     from efficient_trees_spark.tree import DecisionTreeClassifier
 
     tree = DecisionTreeClassifier(max_depth=4)
-    tree.fit(_spark_frame(), "target", strategy="level")
-    queue.put(True)
-
-
-def train_node(queue):
-    from efficient_trees_spark.tree import DecisionTreeClassifier
-
-    tree = DecisionTreeClassifier(max_depth=4)
-    tree.fit(_spark_frame(), "target", strategy="node")
+    tree.fit(_spark_frame(), "target")
     queue.put(True)
 
 
@@ -145,14 +137,12 @@ def _wide_frame():
     return spark.read.parquet(path).na.fill(0.0)
 
 
-def _train_wide(hist_method: str, queue):
+def train_wide_packed(queue):
     from efficient_trees_spark.enums import Criterion
     from efficient_trees_spark.tree import DecisionTreeClassifier
 
     data = _wide_frame()
-    tree = DecisionTreeClassifier(
-        max_depth=4, criterion=Criterion.ENTROPY, max_bins=32, hist_method=hist_method
-    )
+    tree = DecisionTreeClassifier(max_depth=4, criterion=Criterion.ENTROPY, max_bins=32)
     tree.fit(data, "target")
     queue.put(True)
 
@@ -163,14 +153,6 @@ def scan_wide_baseline(queue):
     candidates' incremental memory is attributable."""
     _wide_frame().write.mode("overwrite").format("noop").save()
     queue.put(True)
-
-
-def train_wide_packed(queue):
-    _train_wide("arrow", queue)
-
-
-def train_wide_melt(queue):
-    _train_wide("expand", queue)
 
 
 def prepare_wide(queue):
@@ -229,21 +211,19 @@ if __name__ == "__main__":
         print(json.dumps(prep))
         if not prep["ok"]:
             sys.exit(1)
-        wanted = os.environ.get("SPARK_GRAFT_WIDE_CANDIDATES", "packed,melt").split(",")
+        wanted = os.environ.get("SPARK_GRAFT_WIDE_CANDIDATES", "packed").split(",")
         mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        labels = {"scan": "scan-baseline", "packed": "packed-arrow", "melt": "expand-melt"}
+        labels = {"scan": "scan-baseline", "packed": "packed-arrow"}
         candidates = [
             (f"efficient-trees-spark wide {labels[tag]} (driver-mem {mem})", fn)
             for tag, fn in (
                 ("scan", scan_wide_baseline),
                 ("packed", train_wide_packed),
-                ("melt", train_wide_melt),
             )
             if tag in wanted
         ]
     else:
-        candidates = [("efficient-trees-spark level-wise", train_level),
-                      ("efficient-trees-spark node-wise", train_node)]
+        candidates = [("efficient-trees-spark level-wise", train_level)]
         try:
             import sklearn  # noqa: F401
             candidates.append(("sklearn", train_sklearn))

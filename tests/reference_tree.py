@@ -151,3 +151,22 @@ def predict_reference(tree: dict, pdf: pd.DataFrame, mappings: dict) -> list:
         if not dropped:
             out.append(node["value"])
     return out
+
+
+def trees_equal(a: dict, b: dict, tol: float = 1e-9) -> bool:
+    """Structural tree equality: exact features, class distributions and
+    leaf values; thresholds and float criteria to a tolerance (the oracle's
+    arithmetic is numpy's, not the engine's)."""
+    if a["type"] != b["type"]:
+        return False
+    if a["type"] == "leaf":
+        return a["value"] == b["value"]
+    return (
+        a["feature"] == b["feature"]
+        and math.isclose(a["threshold"], b["threshold"], abs_tol=tol)
+        and math.isclose(a["information_gain"], b["information_gain"], abs_tol=1e-6)
+        and math.isclose(a["criterion_value"], b["criterion_value"], abs_tol=1e-6)
+        and a["target_distribution"] == b["target_distribution"]
+        and trees_equal(a["left"], b["left"], tol)
+        and trees_equal(a["right"], b["right"], tol)
+    )

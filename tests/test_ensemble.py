@@ -6,6 +6,7 @@ import pandas as pd
 
 from efficient_trees_spark import RandomForestClassifier
 from tests.iris_fixture import train_test_frames
+from tests.snapping import snap_to_edges
 
 
 def _iris(spark):
@@ -114,30 +115,29 @@ def _iris_with_missing(spark):
     return spark.createDataFrame(rows, schema)
 
 
-def test_binned_forest_packed_matches_snapped_expand(spark, monkeypatch):
+def test_binned_forest_packed_matches_snapped_expand(spark):
     """A binned forest (the 100 TB path) trains on the shared packed code
-    relation, all trees level-synchronously; forcing the past-uint16
-    fallback (snap + expand, one tree at a time) must yield the IDENTICAL
-    forest — same bootstrap rows (the pack pass is a 1:1 row map, so
-    seeded sampling picks the same logical rows), same candidate edges,
-    same trees, with NULL cells dropped from both children and NaN cells
-    routed right."""
-    from efficient_trees_spark.operators import histogram
-
-    train = _iris_with_missing(spark)
-    kwargs = dict(
-        n_trees=5, max_depth=4, feature_fraction=0.75, max_bins=8, seed=11
+    relation, all trees level-synchronously; an EXACT forest (the melt,
+    one tree at a time) with the same seed, fit on the input snapped in
+    test code to the binned forest's edges, must be the IDENTICAL forest —
+    same bootstrap rows, same candidate thresholds, same trees, with NULL
+    cells dropped from both children and NaN cells routed right.  The
+    input already has ``defaultParallelism`` partitions, so the binned
+    fit's fan-out is a no-op and both forests sample the same partitions
+    (the encode is a 1:1 row map, so seeded sampling picks the same
+    logical rows)."""
+    train = _iris_with_missing(spark).repartition(
+        spark.sparkContext.defaultParallelism
     )
-    rf_packed = RandomForestClassifier(**kwargs)
+    kwargs = dict(n_trees=5, max_depth=4, feature_fraction=0.75, seed=11)
+    rf_packed = RandomForestClassifier(max_bins=8, **kwargs)
     rf_packed.fit(train, "target")
     assert sum(t["type"] == "node" for t in rf_packed.trees) >= 3
 
-    monkeypatch.setattr(histogram, "_MAX_PACKED_EDGES", -1)
-    monkeypatch.setattr(histogram, "_MAX_PACKED16_EDGES", -1)
-    rf_fallback = RandomForestClassifier(**kwargs)
-    rf_fallback.fit(train, "target")
+    rf_exact = RandomForestClassifier(**kwargs)
+    rf_exact.fit(snap_to_edges(train, rf_packed.bin_edges_), "target")
 
-    assert rf_packed.trees == rf_fallback.trees
+    assert rf_packed.trees == rf_exact.trees
 
 
 def test_forest_tree_equals_single_tree_forest_at_its_seed(spark):

@@ -1,6 +1,7 @@
 """Property-based parity (hypothesis): on arbitrary small numeric datasets,
-the compiled-CASE batch plan, the driver-side tree walk, and the
-level-wise/node-wise training strategies must all agree.
+the compiled-CASE batch plan and the driver-side tree walk must agree, and
+the fitted tree must equal the independent numpy oracle
+(``tests/reference_tree.py``).
 
 Data strategy: up to 24 rows, 2 features drawn from a SMALL value grid
 (collisions and exact-threshold sits are the interesting cases — a uniform
@@ -15,6 +16,7 @@ from hypothesis import strategies as st
 
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.tree import DecisionTreeClassifier
+from tests.reference_tree import fit_reference, trees_equal
 
 VALUES = [0.0, 1.0, 1.5, 2.0, 3.0]
 LABELS = [0, 1, 2]
@@ -35,13 +37,17 @@ rows_strategy = st.lists(
 )
 @given(rows=rows_strategy)
 def test_compiled_case_equals_driver_walk_and_strategies_agree(spark, rows):
+    import pandas as pd
+
     df = spark.createDataFrame(rows, ["f1", "f2", "target"])
     model = DecisionTreeClassifier(max_depth=3, criterion=Criterion.GINI)
-    model.fit(df, "target", strategy="level")
+    model.fit(df, "target")
 
-    node_model = DecisionTreeClassifier(max_depth=3, criterion=Criterion.GINI)
-    node_model.fit(df, "target", strategy="node")
-    assert model.tree == node_model.tree  # PLANET == reference recursion
+    ref_tree, _ = fit_reference(
+        pd.DataFrame(rows, columns=["f1", "f2", "target"]), "target", "gini",
+        max_depth=3,
+    )
+    assert trees_equal(model.tree, ref_tree), f"{model.tree}\n!=\n{ref_tree}"
 
     # compiled CASE plan vs pure-driver walk, row for row (same input order:
     # the transform plan is select-only, so collected order == input order)

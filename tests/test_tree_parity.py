@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from efficient_trees_spark import Criterion, DecisionTreeClassifier
-from tests.reference_tree import fit_reference, predict_reference
+from tests.reference_tree import fit_reference, predict_reference, trees_equal
 
 
 def _synthetic_frame(seed: int, n: int = 200, with_nulls: bool = False) -> pd.DataFrame:
@@ -35,22 +35,6 @@ def _synthetic_frame(seed: int, n: int = 200, with_nulls: bool = False) -> pd.Da
     return pdf
 
 
-def _trees_equal(a: dict, b: dict, tol: float = 1e-9) -> bool:
-    if a["type"] != b["type"]:
-        return False
-    if a["type"] == "leaf":
-        return a["value"] == b["value"]
-    return (
-        a["feature"] == b["feature"]
-        and math.isclose(a["threshold"], b["threshold"], abs_tol=tol)
-        and math.isclose(a["information_gain"], b["information_gain"], abs_tol=1e-6)
-        and math.isclose(a["criterion_value"], b["criterion_value"], abs_tol=1e-6)
-        and a["target_distribution"] == b["target_distribution"]
-        and _trees_equal(a["left"], b["left"], tol)
-        and _trees_equal(a["right"], b["right"], tol)
-    )
-
-
 @pytest.mark.parametrize("criterion", [Criterion.ENTROPY, Criterion.GINI])
 @pytest.mark.parametrize("use_categorical", [False, True])
 @pytest.mark.parametrize("string_labels", [False, True])
@@ -70,7 +54,7 @@ def test_fit_matches_oracle(spark, criterion, use_categorical, string_labels):
     assert model.categorical_mappings == (ref_mappings if cats else None) or (
         not cats and model.categorical_mappings is None
     )
-    assert _trees_equal(model.tree, ref_tree), f"{model.tree}\n!=\n{ref_tree}"
+    assert trees_equal(model.tree, ref_tree), f"{model.tree}\n!=\n{ref_tree}"
 
     # predictions: compiled CASE == oracle row walk == driver predict
     sdf = spark.createDataFrame(pdf)
@@ -88,7 +72,7 @@ def test_null_routing_drops_rows_from_both_children(spark):
 
     model = DecisionTreeClassifier(max_depth=3, criterion=Criterion.ENTROPY)
     model.fit(spark.createDataFrame(pdf), "target")
-    assert _trees_equal(model.tree, ref_tree)
+    assert trees_equal(model.tree, ref_tree)
 
     sdf = spark.createDataFrame(pdf)
     preds = model.predict_many(sdf)
@@ -105,17 +89,16 @@ def test_null_routing_drops_rows_from_both_children(spark):
         model.transform(sdf, null_policy="strict").count()
 
 
-def test_levelwise_equals_nodewise(spark):
-    """The PLANET-style level-wise trainer and the reference-shaped node-wise
-    recursion must produce the identical tree, including under nulls."""
-    for seed, with_nulls in [(42, False), (7, True)]:
-        pdf = _synthetic_frame(seed=seed, with_nulls=with_nulls)
-        sdf = spark.createDataFrame(pdf)
-        level = DecisionTreeClassifier(max_depth=4)
-        level.fit(sdf, "target", strategy="level")
-        node = DecisionTreeClassifier(max_depth=4)
-        node.fit(sdf, "target", strategy="node")
-        assert _trees_equal(level.tree, node.tree)
+def test_depth4_fit_with_nulls_matches_oracle(spark):
+    """A depth-4 fit over NULL-bearing data equals the oracle on both fit
+    paths: the exact melt and the packed level loop (exact candidates)."""
+    pdf = _synthetic_frame(seed=7, with_nulls=True)
+    ref_tree, _ = fit_reference(pdf, "target", "entropy", max_depth=4)
+    sdf = spark.createDataFrame(pdf)
+    for hist_method in ("expand", "arrow"):
+        model = DecisionTreeClassifier(max_depth=4, hist_method=hist_method)
+        model.fit(sdf, "target")
+        assert trees_equal(model.tree, ref_tree), hist_method
 
 
 def test_binned_matches_exact_when_bins_cover_values(spark):
@@ -128,7 +111,7 @@ def test_binned_matches_exact_when_bins_cover_values(spark):
     exact.fit(sdf, "target")
     binned = DecisionTreeClassifier(max_depth=4, max_bins=256)
     binned.fit(sdf, "target")
-    assert _trees_equal(exact.tree, binned.tree)
+    assert trees_equal(exact.tree, binned.tree)
 
 
 def test_binned_thresholds_are_edges_with_exact_gains(spark):

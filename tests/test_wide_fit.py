@@ -2,15 +2,17 @@
 
 The reference's published benchmark is a ~190-float-feature depth-4 entropy
 fit (``/root/reference/examples/memory_profiling.py:30-45,78-79``).  These
-tests pin the three pieces the wide path adds:
+tests pin the pieces the packed level loop adds:
 
-* ``operators/histogram.py:binned_histogram_counts`` — Arrow partial
+* ``histogram.pack_encode_features`` + ``packed_histogram_counts`` — packed
   histograms must reproduce the melt + groupBy counts relation EXACTLY,
   including NULL-drop (reference F1) and NaN-keeps-its-own-slot semantics;
-* ``operators/histogram.py:partition_quantile_edges`` — the order-statistic
-  merge must produce exact equi-depth edges when the statistics cover every
-  row (g >= partition size), and must always include the true max;
-* end-to-end: hist_method='arrow' and 'expand' must fit BIT-IDENTICAL trees.
+* ``tree._two_scan_binned_edges`` — the order-statistic merge must produce
+  exact equi-depth edges when the statistics cover every row
+  (g >= partition size), and must always include the true max;
+* end-to-end: a binned packed fit must grow the BIT-IDENTICAL tree to the
+  exact melt over the same data snapped to its edges, and packed exact fits
+  the identical tree to the exact melt.
 """
 
 from __future__ import annotations
@@ -27,11 +29,16 @@ from pyspark.sql import functions as F
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.operators import split_finder
 from efficient_trees_spark.operators.histogram import (
-    binned_histogram_counts,
-    partition_quantile_edges,
+    pack_encode_features,
+    packed_histogram_counts,
 )
-from efficient_trees_spark.tree import DecisionTreeClassifier
+from efficient_trees_spark.tree import (
+    DecisionTreeClassifier,
+    _encode_codes,
+    _two_scan_binned_edges,
+)
 from efficient_trees_spark.workloads.wide_fit import build_wide_table
+from tests.snapping import snap_to_edges
 
 SF_DIR = "/root/testdata/sf0.001"
 NAN = float("nan")
@@ -62,11 +69,20 @@ def _collect_counts(df):
     return out
 
 
+def _packed_counts(df, names, edges):
+    """Root-level (no routing) counts relation of the packed level loop:
+    the fused encode of ``df`` to bin codes, then one histogram pass."""
+    codes = pack_encode_features(df, names, edges, "__target_idx", dtype="f8")
+    return _collect_counts(
+        packed_histogram_counts(
+            codes, names, 2, edges, "__target_idx", [], "__node_id"
+        )
+    )
+
+
 def test_arrow_counts_match_melt_counts(spark, messy_df):
     edges = {"a": [1.0, 2.5, 4.0], "b": [5.0, 7.5, 9.0]}
-    arrow = _collect_counts(
-        binned_histogram_counts(messy_df, ["a", "b"], 2, edges, "__target_idx")
-    )
+    arrow = _packed_counts(messy_df, ["a", "b"], edges)
 
     # Reference relation: snap (values are already edges here), melt, count.
     long_df = split_finder.melt_features(messy_df, ["a", "b"], "__target_idx")
@@ -88,19 +104,19 @@ def test_arrow_counts_snap_between_edges(spark):
         [(0.2, 0), (0.4, 1), (0.6, 0), (0.9, 1), (1.0, 1)],
         "a double, __target_idx int",
     )
-    counts = _collect_counts(
-        binned_histogram_counts(df, ["a"], 2, {"a": [0.5, 1.0]}, "__target_idx")
-    )
+    counts = _packed_counts(df, ["a"], {"a": [0.5, 1.0]})
     # 0.2, 0.4 -> 0.5 ; 0.6, 0.9, 1.0 -> 1.0
     assert counts == {("a", 0.5): (1, 1, 2), ("a", 1.0): (1, 2, 3)}
 
 
-def test_partition_quantile_edges_exact_when_stats_cover(spark):
+def test_two_scan_edges_exact_when_stats_cover(spark):
     rng = np.random.default_rng(7)
     vals = rng.normal(size=400).round(3)
     df = spark.createDataFrame([(float(v),) for v in vals], "x double").repartition(4)
     n_bins = 8
-    edges = partition_quantile_edges(df, ["x"], n_bins, stats_per_partition=400)["x"]
+    edges_map, n_rows = _two_scan_binned_edges(df, ["x"], n_bins, 400, "f8")
+    edges = edges_map["x"]
+    assert n_rows == 400
     s = np.sort(vals)
     expected = sorted(
         {float(s[min(int(np.ceil(k / n_bins * s.size)) - 1, s.size - 1)]) for k in range(1, n_bins)}
@@ -110,26 +126,35 @@ def test_partition_quantile_edges_exact_when_stats_cover(spark):
     assert edges[-1] == float(s[-1])  # true max is always the top edge
 
 
-def test_partition_quantile_edges_drops_null_nan(spark):
+def test_two_scan_edges_drops_null_nan(spark):
     df = spark.createDataFrame(
         [(1.0,), (2.0,), (3.0,), (None,), (NAN,)], "x double"
     )
-    edges = partition_quantile_edges(df, ["x"], 2, 64)["x"]
+    edges = _two_scan_binned_edges(df, ["x"], 2, 64, "f8")[0]["x"]
     assert edges[-1] == 3.0
     assert all(not math.isnan(e) for e in edges)
 
 
+def _assert_binned_equals_exact_on_snapped(data, **kwargs):
+    """A binned packed fit must grow the BIT-identical tree to the exact
+    melt fit on the same data snapped (in test code) to its edges."""
+    binned = DecisionTreeClassifier(**kwargs)
+    binned.fit(data, "target")
+    del kwargs["max_bins"]
+    exact = DecisionTreeClassifier(hist_method="expand", **kwargs)
+    exact.fit(snap_to_edges(data, binned.bin_edges_), "target")
+    assert json.dumps(binned.tree, sort_keys=True) == json.dumps(
+        exact.tree, sort_keys=True
+    )
+    return binned.tree
+
+
 def test_wide_fit_arrow_expand_parity(spark):
     data = build_wide_table(spark, SF_DIR, n_features=24)
-    trees = {}
-    for hm in ("arrow", "expand"):
-        m = DecisionTreeClassifier(
-            max_depth=3, criterion=Criterion.ENTROPY, max_bins=16, hist_method=hm
-        )
-        m.fit(data, "target")
-        trees[hm] = json.dumps(m.tree, sort_keys=True)
-        assert m.tree["type"] == "node"  # the fit actually split
-    assert trees["arrow"] == trees["expand"]
+    tree = _assert_binned_equals_exact_on_snapped(
+        data, max_depth=3, criterion=Criterion.ENTROPY, max_bins=16
+    )
+    assert tree["type"] == "node"  # the fit actually split
 
 
 def _level_passes(spark, monkeypatch, fit) -> tuple[int, int]:
@@ -179,14 +204,16 @@ def test_depth2_binned_fits_run_one_level_job(spark, monkeypatch):
     assert all(t["type"] == "node" for t in forest.trees)
 
 
-def test_hist_method_validation(spark):
-    data = build_wide_table(spark, SF_DIR, n_features=4)
-    with pytest.raises(ValueError, match="strategy='level'"):
-        DecisionTreeClassifier(max_depth=2, max_bins=8, hist_method="arrow").fit(
-            data, "target", strategy="node"
-        )
+def test_hist_method_validation():
     with pytest.raises(ValueError, match="unknown hist_method"):
         DecisionTreeClassifier(hist_method="numpy")
+    # binned codes must fit uint16: edges number at most max_bins
+    with pytest.raises(ValueError, match="max_bins must be <= 65533"):
+        DecisionTreeClassifier(max_bins=65534)
+    DecisionTreeClassifier(max_bins=65533)
+    # the melt is exact-only; binned fits run on the packed level loop
+    with pytest.raises(ValueError, match="takes no max_bins"):
+        DecisionTreeClassifier(max_bins=8, hist_method="expand")
 
 
 # ----------------------------------------------------- exact-mode packed path
@@ -311,40 +338,21 @@ def test_auto_wide_exact_uses_uint16_between_253_and_65533(spark):
     assert m.tree is not None
 
 
-def test_packed_edges_match_columnwise(spark, messy_df):
-    """quantile_edges_packed (packed stage 1) places the same edges as the
-    column-wise stage 1 over identical values."""
-    from efficient_trees_spark.operators.histogram import (
-        pack_raw_features,
-        partition_quantile_edges,
-        quantile_edges_packed,
-    )
-
-    packed = pack_raw_features(messy_df, ["a", "b"], "__target_idx", dtype="f8")
-    assert quantile_edges_packed(
-        packed, ["a", "b"], 4, 64, dtype="f8"
-    ) == partition_quantile_edges(messy_df, ["a", "b"], 4, 64)
-
-
 def test_packed_fit_parity_with_nan_and_null(spark):
     """Tree-level parity on a frame mixing NULL and NaN in split features:
-    the packed path (numpy routing + uint8 codes) must produce the same
-    tree as expand (JVM routing + melt) — NULL drops from both children,
-    NaN routes right."""
+    the binned packed path (numpy routing + uint8 codes) must produce the
+    same tree as the exact melt (JVM routing column) over the data snapped
+    to its edges — NULL drops from both children, NaN routes right."""
     rows = []
     for i in range(200):
         a = None if i % 13 == 0 else (NAN if i % 17 == 0 else float(i % 29))
         b = NAN if i % 11 == 0 else float((i * 7) % 31)
         rows.append((a, b, i % 2))
     data = spark.createDataFrame(rows, "a double, b double, target int")
-    trees = {}
-    for hm in ("arrow", "expand"):
-        m = DecisionTreeClassifier(
-            max_depth=3, criterion=Criterion.ENTROPY, max_bins=8, hist_method=hm
-        )
-        m.fit(data, "target")
-        trees[hm] = json.dumps(m.tree, sort_keys=True)
-    assert trees["arrow"] == trees["expand"]
+    tree = _assert_binned_equals_exact_on_snapped(
+        data, max_depth=3, criterion=Criterion.ENTROPY, max_bins=8
+    )
+    assert tree["type"] == "node"
 
 
 def test_packed_relation_caches_at_one_byte_per_cell(spark):
@@ -352,12 +360,6 @@ def test_packed_relation_caches_at_one_byte_per_cell(spark):
     training relation stores uint8 bin codes — its cached size must stay
     ~1 byte/cell (vs 8 for a double column matrix).  This is the bound that
     keeps the 5.5M x 190 reference shape inside a modest heap."""
-    from efficient_trees_spark.operators.histogram import (
-        encode_packed,
-        pack_raw_features,
-        quantile_edges_packed,
-    )
-
     width = 190
     data = build_wide_table(spark, SF_DIR, n_features=width).na.fill(0.0)
     feats = [c for c in data.columns if c != "target"]
@@ -365,14 +367,15 @@ def test_packed_relation_caches_at_one_byte_per_cell(spark):
         *[F.col(f).cast("double").alias(f) for f in feats],
         F.col("target").cast("int").alias("__target_idx"),
     )
-    packed = pack_raw_features(prepared, feats, "__target_idx", dtype="f4")
-    edges = quantile_edges_packed(packed, feats, 16, 64, dtype="f4")
+    edges, _ = _two_scan_binned_edges(prepared, feats, 16, 64, "f4")
     # Other operators legitimately leave lazy localCheckpoint blocks in the
     # shared session's RDD cache until GC (split-gains counts, BM25 postings
     # — r11), so attribute ONLY the relation this test persists instead of
     # taking max over the whole cache.
     before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    codes = encode_packed(packed, feats, edges, "__target_idx", dtype="f4").persist()
+    codes, code_dtype, _ = _encode_codes(prepared, feats, edges, "f4")
+    assert code_dtype == "u1"
+    codes = codes.persist()
     try:
         rows = codes.count()
         infos = [
@@ -489,6 +492,57 @@ def test_linspace_gaps_reconstruction_matches_stage1():
             assert got.dtype == np.float64
             assert np.array_equal(got, gaps)
             assert got.sum() == n and got.size == pos.size
+
+
+def test_linspace_gaps_cache_is_bounded_and_read_only():
+    """Cached gap arrays are shared by every merge that asks for the same
+    (n, g): they must be read-only, and the cache small enough that a
+    long-lived worker cannot pile up gigabytes of them."""
+    from efficient_trees_spark.operators.histogram import _linspace_gaps
+
+    assert _linspace_gaps.cache_info().maxsize <= 4096
+    gaps = _linspace_gaps(100, 8)
+    with pytest.raises(ValueError, match="read-only"):
+        gaps[0] = 5.0
+    assert _linspace_gaps(100, 8)[0] == 1.0
+
+
+def test_stats_merges_require_stats_per_partition():
+    """The gaps never travel with the stats, so the merges cannot run
+    without the stage-1 stats budget that rebuilds them."""
+    from efficient_trees_spark.operators.histogram import (
+        merge_edge_stats_rows,
+        merge_order_stats_distributed,
+    )
+
+    rows = [("a", np.array([1.0, 2.0]), 2.0, 2)]
+    with pytest.raises(TypeError, match="stats_per_partition"):
+        merge_edge_stats_rows(rows, ["a"], 2)
+    with pytest.raises(TypeError, match="stats_per_partition"):
+        merge_order_stats_distributed(None, ["a"], 2)
+
+
+def test_stats_merges_reject_mismatched_gaps(spark):
+    """A stats row whose order statistics do not match the gaps rebuilt
+    from (n, stats_per_partition) must fail loudly in both merges instead
+    of mis-weighting the edges: 3 stats of a 10-row partition cannot come
+    from g=8, which places 8."""
+    from pyspark.errors import PythonException
+
+    from efficient_trees_spark.operators.histogram import (
+        merge_edge_stats_rows,
+        merge_order_stats_distributed,
+    )
+
+    rows = [("a", np.array([1.0, 5.0, 9.0]), 9.0, 10)]
+    with pytest.raises(ValueError, match="8 gap run-lengths for 3"):
+        merge_edge_stats_rows(rows, ["a"], 2, stats_per_partition=8)
+    stats_df = spark.createDataFrame(
+        [("a", [1.0, 5.0, 9.0], 9.0, 10)],
+        "__sf string, __sv array<double>, __svx double, __sn long",
+    )
+    with pytest.raises(PythonException, match="ValueError: reconstructed 8"):
+        merge_order_stats_distributed(stats_df, ["a"], 2, stats_per_partition=8)
 
 
 def test_distributed_stats_merge_matches_driver_merge(spark):
@@ -631,9 +685,9 @@ def test_stats_merges_with_counts(spark):
     assert edges_x == plain
     assert counts_x == counts_d
 
-    exact_plain = distinct_edges_packed(df, ["a", "b"], dtype="f4", packed=False)
+    exact_plain = distinct_edges_packed(df, ["a", "b"], dtype="f4")
     exact_edges, total_rows = distinct_edges_packed(
-        df, ["a", "b"], dtype="f4", packed=False, with_counts=True
+        df, ["a", "b"], dtype="f4", with_counts=True
     )
     assert exact_edges == exact_plain
     # per-partition ROW counts (not non-null) summed once per partition
@@ -1007,9 +1061,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
         .otherwise(2).alias(TARGET_IDX),
     )
     names = ["q", "d_nullable", "t_nanable"]
-    edges, _ = distinct_edges_packed(
-        li, names, dtype="f8", packed=False, with_counts=True
-    )
+    edges, _ = distinct_edges_packed(li, names, dtype="f8", with_counts=True)
     packed = pack_encode_features(li, names, edges, TARGET_IDX, dtype="f8")
     packed = packed.persist()
     n_classes = 3

@@ -1,9 +1,13 @@
-"""Dump each bench query's formatted physical plan to plans/r11/<q>_<tag>.txt.
+"""Dump each bench query's formatted physical plan to plans/<round>/<q>_<tag>.txt.
 
 Optimization-round evidence artifact: one file per query so before/after
 diffs are reviewable per query (PLANS.md remains the single-file digest).
 
-Usage: python tools/r11_plans.py <before|after> [sf_dir] [name_filter]
+Usage: python tools/bench_plans.py <round> <before|after> [sf_dir] [name_filter]
+
+``round`` names the optimization round (e.g. ``r12``): it is the output
+directory under ``plans/`` and the OPTIMIZATION_<round>.md the headers
+point at.
 """
 
 from __future__ import annotations
@@ -19,15 +23,16 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
+    round_tag = sys.argv.pop(1)
     tag = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     name_filter = sys.argv[3] if len(sys.argv) > 3 else ""
-    out_dir = os.path.join(_REPO, "plans", "r11")
+    out_dir = os.path.join(_REPO, "plans", round_tag)
     os.makedirs(out_dir, exist_ok=True)
 
     import bench
 
-    spark = get_spark(app_name="r11-plans")
+    spark = get_spark(app_name=f"{round_tag}-plans")
     spark.sparkContext.setLogLevel("ERROR")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -52,7 +57,7 @@ def main() -> None:
                 f"-- {name} ({tag}) — explain('formatted') at {sf_dir}\n"
                 "-- NOTE: tree fits are imperative multi-job loops; this is\n"
                 "-- the final returned frame's plan (per-level plan shape is\n"
-                "-- documented in SCALE.md / OPTIMIZATION_r11.md).\n\n"
+                f"-- documented in SCALE.md / OPTIMIZATION_{round_tag}.md).\n\n"
             )
             fh.write(plan.strip() + "\n")
         print(f"wrote {path}", flush=True)
