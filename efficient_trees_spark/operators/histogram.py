@@ -18,7 +18,10 @@ persisted training relation.  Every level is then one ``mapInArrow`` pass
 over that 2-column relation: tree routing (``route_codes``) plus one flat
 ``bincount`` into per-node (feature, bin, class) count cubes, merged on the
 driver (dense cubes, pair cubes that score two levels per pass) or by a
-tiny hash aggregate (sparse rows).
+tiny hash aggregate (sparse rows).  The three emitters share one pass
+builder (``_level_pass``), the driver decoders one cube sum and one
+counts-frame tail, and every counts relation goes on to
+``split_finder``'s one scorer.
 
 Exactness: counts are integers and the emitted ``feature_value`` is the
 edge itself, so every downstream gain is bit-identical to the exact melt
@@ -37,7 +40,6 @@ histogram relation.
 
 from __future__ import annotations
 
-import os
 from functools import lru_cache
 from typing import Iterator, NamedTuple
 
@@ -47,9 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from efficient_trees_spark.functions.exprs import class_count_col
-
-FEATURE = "feature"
-FEATURE_VALUE = "feature_value"
+from efficient_trees_spark.operators.split_finder import FEATURE, FEATURE_VALUE, TARGET_IDX
 
 
 def array_cast_expr(names: list[str], elem_type: str):
@@ -65,9 +65,6 @@ def array_cast_expr(names: list[str], elem_type: str):
     return F.expr(f"array({cols})")
 
 
-_jemalloc_decay_set = False
-
-
 def _trim_malloc() -> None:
     """Return freed allocator pages to the OS at Arrow-task end.
 
@@ -79,20 +76,12 @@ def _trim_malloc() -> None:
     RSS across one pack stage while live per-task state was ~0.5 GiB —
     and jemalloc was the bulk of it (pinning glibc's mmap threshold alone
     changed nothing).  ``release_unused()`` purges the jemalloc dirty
-    pages, decay-0 makes future frees purge eagerly, and ``malloc_trim``
-    hands back the glibc arena tails; each silently skipped where
-    unavailable.  Cost is ~1 ms per task — negligible next to any Arrow
-    pass over a partition."""
-    global _jemalloc_decay_set
+    pages and ``malloc_trim`` hands back the glibc arena tails; each
+    silently skipped where unavailable.  Cost is ~1 ms per task —
+    negligible next to any Arrow pass over a partition."""
     try:
         import pyarrow as pa
 
-        if not _jemalloc_decay_set and os.environ.get("SPARK_GRAFT_JEMALLOC_DECAY0"):
-            _jemalloc_decay_set = True
-            try:
-                pa.jemalloc_set_decay_ms(0)
-            except Exception:
-                pass
         pa.default_memory_pool().release_unused()
     except Exception:
         pass
@@ -553,9 +542,7 @@ def pack_encode_features(
     df: DataFrame,
     feature_names: list[str],
     bin_edges: dict[str, list[float]],
-    target_idx_col: str,
     dtype: str = "f4",
-    packed_col: str = PACKED_COL,
     code_dtype: str = "u1",
 ) -> DataFrame:
     """Source batches → packed bin-code blobs (1 byte/cell at u1, 2 at u2),
@@ -568,7 +555,8 @@ def pack_encode_features(
     float64 edges).  Codes are therefore ORDER-ISOMORPHIC to values:
     ``v <= edge_j <=> code(v) <= j``, so routing on codes is bit-equivalent
     to routing on raw values.  NULLs (Arrow validity) take the width's NULL
-    code and NaNs its NaN code (see the section notes)."""
+    code and NaNs its NaN code (see the section notes).  The class index
+    rides along in ``TARGET_IDX``, the column every level pass reads."""
     import pyarrow as pa
 
     np_code, nan_code, null_code, max_edges_cap = _code_info(code_dtype)
@@ -578,14 +566,13 @@ def pack_encode_features(
             f"edges per feature with code_dtype={code_dtype!r}"
         )
     names = list(feature_names)
-    tcol = target_idx_col
     np_dtype, _, _, _ = _dtype_info(dtype)
     n_feat = len(names)
     elem_type = "float" if dtype == "f4" else "double"
     edges_list = [np.asarray(bin_edges.get(f, ()), dtype=np.float64) for f in names]
     src = df.select(
         array_cast_expr(names, elem_type).alias("__arr"),
-        target_idx_col,
+        TARGET_IDX,
     )
 
     def pack_encode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -616,15 +603,15 @@ def pack_encode_features(
                 col_codes[nullm[:, j]] = null_code
                 codes[:, j] = col_codes
             target = (
-                b.column(tcol).to_numpy(zero_copy_only=False).astype(np.int32)
+                b.column(TARGET_IDX).to_numpy(zero_copy_only=False).astype(np.int32)
             )
             yield pa.RecordBatch.from_arrays(
                 [_pack_binary(codes), pa.array(target, type=pa.int32())],
-                names=[packed_col, tcol],
+                names=[PACKED_COL, TARGET_IDX],
             )
         _trim_malloc()
 
-    return src.mapInArrow(pack_encode, f"{packed_col} binary, {tcol} int")
+    return src.mapInArrow(pack_encode, f"{PACKED_COL} binary, {TARGET_IDX} int")
 
 
 def distinct_edges_packed(
@@ -810,9 +797,9 @@ def route_codes(
 
 
 class TreeRoute(NamedTuple):
-    """One tree's share of a level pass over several trees' rows (a forest
-    grown level-synchronously): its ``route_codes`` split list, the
-    accumulator slot each of its pending nodes counts under, and the
+    """One tree's share of a level pass (``{tree_id: TreeRoute}``; one
+    tree is ``{0: TreeRoute(splits)}``): its ``route_codes`` split list,
+    the accumulator slot each of its pending nodes counts under, and the
     features it histograms as indices into the pass's feature list.
     ``slots=None`` keys the accumulators by node id; ``features=None``
     histograms every feature of the pass."""
@@ -822,36 +809,80 @@ class TreeRoute(NamedTuple):
     features: list[int] | None = None
 
 
-def _tree_routes(routing) -> dict[int, TreeRoute]:
-    """``routing`` is a bare split list (the one-tree pass: every row is
-    tree 0, keyed by node id, every feature histogrammed) or
-    ``{tree_id: TreeRoute}``."""
-    if isinstance(routing, dict):
-        return routing
-    return {0: TreeRoute(list(routing))}
+class _TreeAxes(NamedTuple):
+    """One tree's columns and slot layout in a level pass."""
+
+    cols: "np.ndarray | None"  # matrix columns it histograms; None: all, in order
+    base: "np.ndarray"  # (1, F_t) int32: each feature's first flat slot
+    cap: "np.ndarray"  # (1, F_t) code dtype: each feature's last edge code
+    nan_slot: "np.ndarray"  # (1, F_t) code dtype: its NaN slot = its edge count
+    no_edges: "np.ndarray"  # its features with no edges at all
 
 
-def _tree_columns(route: TreeRoute, pos, n_feat: int, width: int):
-    """``(matrix columns to gather or None, feature indices)`` of the
-    features one tree histograms; None when they are the matrix as is."""
-    feat = (
-        np.arange(n_feat, dtype=np.int64)
-        if route.features is None
-        else np.asarray(route.features, dtype=np.int64)
+def _level_pass(
+    packed_df: DataFrame,
+    lens: "np.ndarray",
+    offsets: "np.ndarray",
+    routes: dict[int, TreeRoute],
+    kernel,
+    schema: str,
+    feature_positions: list[int] | None,
+    matrix_width: int | None,
+    code_dtype: str,
+    tree_col: str | None,
+) -> DataFrame:
+    """The ``mapInArrow`` pass over the code relation shared by the three
+    level emitters.  Feature j has ``lens[j]`` edges and its slots start
+    at ``offsets[j]``; ``feature_positions`` places the features in a
+    matrix ``matrix_width`` wide (forest feature bagging; None: they are
+    the matrix).  ``kernel(rows, axes)`` turns one partition's routed
+    ``(tree_id, codes, target, slots)`` rows, codes narrowed to the tree's
+    own columns, into record batches of Spark ``schema``."""
+    n_feat = len(lens)
+    width = matrix_width if matrix_width is not None else n_feat
+    pos = (
+        np.asarray(feature_positions, dtype=np.int64)
+        if feature_positions is not None
+        else np.arange(n_feat, dtype=np.int64)
     )
-    cols = pos[feat]
-    if cols.size == width and (cols == np.arange(width)).all():
-        return None, feat
-    return cols, feat
+    np_code = _code_info(code_dtype)[0]
+    axes: dict[int, _TreeAxes] = {}
+    for t, route in routes.items():
+        feat = (
+            np.arange(n_feat, dtype=np.int64)
+            if route.features is None
+            else np.asarray(route.features, dtype=np.int64)
+        )
+        cols = pos[feat]
+        if cols.size == width and (cols == np.arange(width)).all():
+            cols = None
+        tl = lens[feat]
+        axes[t] = _TreeAxes(
+            cols,
+            offsets[feat].astype(np.int32)[None, :],
+            np.maximum(tl - 1, 0).astype(np_code)[None, :],
+            tl.astype(np_code)[None, :],  # lens <= max edges < code max
+            np.flatnonzero(tl == 0),
+        )
+
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        yield from kernel(
+            _routed_rows(batches, tree_col, width, code_dtype, routes, axes), axes
+        )
+        _trim_malloc()
+
+    return packed_df.select(
+        PACKED_COL, TARGET_IDX, *([tree_col] if tree_col else [])
+    ).mapInArrow(run, schema)
 
 
-def _routed_rows(batches, packed_col, tcol, tree_col, width, code_dtype, routes):
+def _routed_rows(batches, tree_col, width, code_dtype, routes, axes):
     """Unpack each Arrow batch's code matrix and route every row with its
     own tree's splits.  Yields ``(tree_id, mat, target, slots)`` per tree
     present in the batch, keeping only the rows that land on a pending
-    node; ``slots`` is each kept row's accumulator slot.  ``tree_col``
-    None means every row belongs to tree 0; rows of trees absent from
-    ``routes`` are skipped."""
+    node and only the columns the tree histograms (``axes``); ``slots`` is
+    each kept row's accumulator slot.  ``tree_col`` None means every row
+    belongs to tree 0; rows of trees absent from ``routes`` are skipped."""
     np_code, _, null_code, _ = _code_info(code_dtype)
     luts = {}
     for t, route in routes.items():
@@ -866,8 +897,8 @@ def _routed_rows(batches, packed_col, tcol, tree_col, width, code_dtype, routes)
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        mat = _unpack_binary(batch.column(packed_col), width, np_code)
-        target = batch.column(tcol).to_numpy(zero_copy_only=False)
+        mat = _unpack_binary(batch.column(PACKED_COL), width, np_code)
+        target = batch.column(TARGET_IDX).to_numpy(zero_copy_only=False)
         groups = [(0, None)]
         if tree_col is not None:
             tree_ids = batch.column(tree_col).to_numpy(zero_copy_only=False)
@@ -889,7 +920,26 @@ def _routed_rows(batches, packed_col, tcol, tree_col, width, code_dtype, routes)
                 continue
             if not keep.all():
                 m, y, slots = m[keep], y[keep], slots[keep]
+            if axes[t].cols is not None:
+                m = m[:, axes[t].cols]
             yield t, m, y, slots
+
+
+def _add_into(acc: dict[int, "np.ndarray"], key, counts: "np.ndarray") -> None:
+    """``acc[key] += counts``, copying on first sight (``counts`` may be a
+    view of a scratch or transport buffer)."""
+    key = int(key)
+    a = acc.get(key)
+    if a is None:
+        acc[key] = counts.copy()
+    else:
+        a += counts
+
+
+def _class_pairs(totals) -> list[tuple[int, int]]:
+    """A node's class totals as ``[(class_idx, count), ...]``, count > 0,
+    class-ascending: the tree's distribution format."""
+    return [(i, int(c)) for i, c in enumerate(totals) if c > 0]
 
 
 # Sentinel FEATURE value carrying per-node class totals through the
@@ -903,10 +953,8 @@ def packed_histogram_counts(
     feature_names: list[str],
     n_classes: int,
     bin_edges: dict[str, list[float]],
-    target_idx_col: str,
-    routing_splits: list[tuple],
+    routes: dict[int, TreeRoute],
     node_col: str,
-    packed_col: str = PACKED_COL,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
     emit_node_totals: bool = False,
@@ -920,96 +968,75 @@ def packed_histogram_counts(
     fused into the same numpy pass (``route_codes``): the per-level cost is
     one 2-column transfer of the cached code relation plus bincounts.
 
-    ``feature_names`` may be a SUBSET of the packed matrix (random-forest
-    per-tree feature sampling): ``feature_positions`` gives each name's
-    column index in the full matrix and ``matrix_width`` the full width —
-    only the subset's columns are histogrammed, while ``routing_splits``
-    keeps addressing full-matrix positions.
+    ``routes`` is ``{tree_id: TreeRoute}`` with ``tree_col`` naming each
+    row's tree (a forest's level pass; one tree needs no ``tree_col``):
+    rows are routed by their own tree's splits, histogram their own tree's
+    features, and count under the route's slot ids, which key the output
+    in place of node ids.  ``feature_names`` may be a SUBSET of the packed
+    matrix (random-forest per-tree feature sampling): ``feature_positions``
+    gives each name's column index in the full matrix and ``matrix_width``
+    the full width — only the subset's columns are histogrammed, while the
+    routing splits keep addressing full-matrix positions.
 
     ``emit_node_totals`` adds one ``DIST_FEATURE`` row per node carrying
     the node's full per-class row counts (feature-independent — NULL cells
     excluded from per-feature bins still count here).  The root
     distribution then rides the level-0 histogram instead of a separate
-    job racing it to materialize the code cache.
-
-    ``routing_splits`` may instead be ``{tree_id: TreeRoute}`` with
-    ``tree_col`` naming each row's tree (a forest's level pass): rows are
-    routed by their own tree's splits, histogram their own tree's
-    features, and count under the route's slot ids, which key the output
-    in place of node ids."""
+    job racing it to materialize the code cache."""
     import pyarrow as pa
 
     names, lens, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
         feature_names, bin_edges
     )
-    tcol = target_idx_col
-    ncol = node_col
-    n_feat = len(names)
-    width = matrix_width if matrix_width is not None else n_feat
-    pos = (
-        np.asarray(feature_positions, dtype=np.int64)
-        if feature_positions is not None
-        else np.arange(n_feat, dtype=np.int64)
-    )
-    routes = _tree_routes(routing_splits)
-
-    count_fields = [pa.field(class_count_col(i), pa.int64()) for i in range(n_classes)]
+    count_cols = [class_count_col(i) for i in range(n_classes)]
     out_schema = pa.schema(
-        [pa.field(ncol, pa.int32()), pa.field(FEATURE, pa.string()),
+        [pa.field(node_col, pa.int32()), pa.field(FEATURE, pa.string()),
          pa.field(FEATURE_VALUE, pa.float64())]
-        + count_fields
+        + [pa.field(c, pa.int64()) for c in count_cols]
         + [pa.field("count_examples", pa.int64())]
     )
     spark_schema = (
-        f"{ncol} int, {FEATURE} string, {FEATURE_VALUE} double, "
-        + ", ".join(f"{class_count_col(i)} long" for i in range(n_classes))
+        f"{node_col} int, {FEATURE} string, {FEATURE_VALUE} double, "
+        + ", ".join(f"{c} long" for c in count_cols)
         + ", count_examples long"
     )
 
-    def histogram(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def histogram(rows, axes) -> Iterator["pa.RecordBatch"]:
         acc, dist_acc = _accumulate_cubes(
-            batches, packed_col, tcol, tree_col, routes, width, n_feat, pos,
-            lens, slot_off, flat_slots, n_classes, emit_node_totals,
-            code_dtype,
+            rows, axes, flat_slots, n_classes, emit_node_totals, code_dtype
         )
         sparse = _sparsify_cubes(
             acc, dist_acc, names, lens, slot_off, edges_flat, edge_off,
             n_classes,
         )
         if sparse is None:
-            _trim_malloc()
             return
         node_out, feat_out, value_out, class_out, total_out = sparse
-        arrays = [
-            pa.array(node_out, type=pa.int32()),
-            pa.array(feat_out, type=pa.string()),
-            pa.array(value_out, type=pa.float64()),
-        ]
-        for i in range(n_classes):
-            arrays.append(pa.array(class_out[i], type=pa.int64()))
-        arrays.append(pa.array(total_out, type=pa.int64()))
-        yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-        _trim_malloc()
+        columns = [node_out, feat_out, value_out, *class_out, total_out]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, out_schema)],
+            schema=out_schema,
+        )
 
-    partials = packed_df.select(
-        packed_col, tcol, *([tree_col] if tree_col else [])
-    ).mapInArrow(histogram, spark_schema)
-    return partials.groupBy(ncol, FEATURE, FEATURE_VALUE).agg(
-        *[F.sum(class_count_col(i)).alias(class_count_col(i)) for i in range(n_classes)],
+    partials = _level_pass(
+        packed_df, lens, slot_off, routes, histogram, spark_schema,
+        feature_positions, matrix_width, code_dtype, tree_col,
+    )
+    return partials.groupBy(node_col, FEATURE, FEATURE_VALUE).agg(
+        *[F.sum(c).alias(c) for c in count_cols],
         F.sum("count_examples").alias("count_examples"),
     )
 
 
 def _accumulate_cubes(
-    batches, packed_col, tcol, tree_col, routes, width, n_feat, pos,
-    lens, slot_off, flat_slots, n_classes, emit_node_totals, code_dtype="u1",
+    rows, axes, flat_slots, n_classes, emit_node_totals, code_dtype
 ) -> tuple[dict[int, "np.ndarray"], dict[int, "np.ndarray"]]:
-    """Route + bincount one partition's Arrow batches into per-slot flat
-    count cubes (and per-slot class totals when requested) — the numeric
-    core shared by the sparse-row and dense-cube emitters.  Slot addressing
-    is RAGGED (``_cube_geometry``): feature j's counts land at
-    ``slot_off[j] + bin``, its NaN bucket at ``slot_off[j] + lens[j]``.
-    Each tree's rows (``_routed_rows``) fill only its own features' slots.
+    """Bincount one partition's routed rows (:func:`_level_pass`) into
+    per-slot flat count cubes (and per-slot class totals when requested)
+    — the numeric core shared by the sparse-row and dense-cube emitters.
+    Slot addressing is RAGGED (``_cube_geometry``): feature j's counts
+    land at ``slot_off[j] + bin``, its NaN bucket at ``slot_off[j] +
+    lens[j]``.  Each tree's rows fill only its own features' slots.
 
     r11 rewrite of the numeric pass (guide §4.2 — this loop IS the
     per-level cube job, the bench's dominant stage): the old form upcast
@@ -1022,37 +1049,21 @@ def _accumulate_cubes(
     ``bincount`` over a (node, slot) combined index — no per-node passes.
     Counts are exact integers either way; parity is pinned by the
     histogram relation tests and the golden fits."""
-    np_code, nan_code, null_code, _ = _code_info(code_dtype)
+    _, nan_code, null_code, _ = _code_info(code_dtype)
     acc: dict[int, np.ndarray] = {}
     dist_acc: dict[int, np.ndarray] = {}
     flat_size = flat_slots * n_classes
     stride = flat_size + 1  # + the invalid-cell sentinel slot
-    geometry = {}
-    for t, route in routes.items():
-        cols, feat = _tree_columns(route, pos, n_feat, width)
-        tl = lens[feat]
-        geometry[t] = (
-            cols,
-            slot_off[feat].astype(np.int32)[None, :],
-            np.maximum(tl - 1, 0).astype(np_code)[None, :],
-            tl.astype(np_code)[None, :],  # lens <= max edges < code max
-            np.flatnonzero(tl == 0),
-        )
-
-    for t, mat, target, nodes in _routed_rows(
-        batches, packed_col, tcol, tree_col, width, code_dtype, routes
-    ):
-        cols, feat_base32, cap_c, nan_slot_c, no_edge_cols = geometry[t]
+    for t, mat, target, nodes in rows:
+        ax = axes[t]
         target32 = target.astype(np.int32)
-        if cols is not None:
-            mat = mat[:, cols]  # histogram only this tree's columns
         is_nan = mat == nan_code
         invalid = mat == null_code
-        if no_edge_cols.size:
-            invalid[:, no_edge_cols] = True
-        idx = np.minimum(mat, cap_c)  # code dtype; nan/null fixed below
-        np.copyto(idx, np.broadcast_to(nan_slot_c, idx.shape), where=is_nan)
-        flat = feat_base32 + idx  # int32 (rows × features), in-place below
+        if ax.no_edges.size:
+            invalid[:, ax.no_edges] = True
+        idx = np.minimum(mat, ax.cap)  # code dtype; nan/null fixed below
+        np.copyto(idx, np.broadcast_to(ax.nan_slot, idx.shape), where=is_nan)
+        flat = ax.base + idx  # int32 (rows × features), in-place below
         flat *= n_classes
         flat += target32[:, None]
         flat[invalid] = flat_size  # sentinel slot, dropped after bincount
@@ -1065,24 +1076,15 @@ def _accumulate_cubes(
             comb += (inv.astype(np.int64) * stride)[:, None]
         counts = np.bincount(comb.ravel(), minlength=uniq.size * stride)
         counts = counts.reshape(uniq.size, stride)
+        for k in range(uniq.size):
+            _add_into(acc, uniq[k], counts[k, :flat_size])
         if emit_node_totals:
             dist = np.bincount(
                 inv.astype(np.int64) * n_classes + target32,
                 minlength=uniq.size * n_classes,
             ).reshape(uniq.size, n_classes)
-        for k in range(uniq.size):
-            nv = int(uniq[k])
-            a = acc.get(nv)
-            if a is None:
-                acc[nv] = counts[k, :flat_size].copy()
-            else:
-                a += counts[k, :flat_size]
-            if emit_node_totals:
-                d = dist_acc.get(nv)
-                if d is None:
-                    dist_acc[nv] = dist[k].copy()
-                else:
-                    d += dist[k]
+            for k in range(uniq.size):
+                _add_into(dist_acc, uniq[k], dist[k])
     return acc, dist_acc
 
 
@@ -1091,7 +1093,7 @@ def _sparsify_cubes(
 ):
     """Per-node flat cubes -> the sparse histogram row arrays (node,
     feature, value, class counts, total).  Shared by the worker-side sparse
-    emitter and the driver-side dense-cube merge so both produce the exact
+    emitter and the driver-side cube decoders so both produce the exact
     same rows.  Ragged layout: a nonzero flat slot maps back to its feature
     by searchsorted over ``slot_off`` (features with zero edges own one
     always-empty NaN slot and can never surface here)."""
@@ -1162,15 +1164,28 @@ def _cube_geometry(feature_names, bin_edges):
     return names, lens, slot_off, flat_slots, edges_flat, edge_off
 
 
+def _cube_batch(node_col: str, cubes: dict[int, bytes]) -> "pa.RecordBatch":
+    """One (node, cube bytes) row per accumulator slot: the output batch of
+    the dense and pair cube passes (Spark schema ``{node_col} int, __cube
+    binary``)."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.fromiter(cubes, dtype=np.int32, count=len(cubes))),
+            pa.array(list(cubes.values()), type=pa.binary()),
+        ],
+        names=[node_col, "__cube"],
+    )
+
+
 def packed_histogram_cubes(
     packed_df: DataFrame,
     feature_names: list[str],
     n_classes: int,
     bin_edges: dict[str, list[float]],
-    target_idx_col: str,
-    routing_splits: list[tuple],
+    routes: dict[int, TreeRoute],
     node_col: str,
-    packed_col: str = PACKED_COL,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
     emit_node_totals: bool = False,
@@ -1188,53 +1203,62 @@ def packed_histogram_cubes(
     partitions × nodes × cube collect.  Only sane when that product is
     small (local mode, shallow trees); the sparse + distributed-agg form
     remains the path when partitions × nodes grows (the caller guards).
-    Routing (one tree or ``{tree_id: TreeRoute}`` with ``tree_col``) is
-    as in :func:`packed_histogram_counts`."""
-    import pyarrow as pa
+    Routing and feature subsets are as in :func:`packed_histogram_counts`."""
+    _, lens, slot_off, flat_slots, _, _ = _cube_geometry(feature_names, bin_edges)
 
-    names, lens, slot_off, flat_slots, _, _ = _cube_geometry(
+    def cubes(rows, axes) -> Iterator["pa.RecordBatch"]:
+        acc, dist_acc = _accumulate_cubes(
+            rows, axes, flat_slots, n_classes, emit_node_totals, code_dtype
+        )
+        if acc:
+            yield _cube_batch(
+                node_col,
+                {
+                    nv: a.tobytes()
+                    + (dist_acc[nv].tobytes() if emit_node_totals else b"")
+                    for nv, a in acc.items()
+                },
+            )
+
+    return _level_pass(
+        packed_df, lens, slot_off, routes, cubes, f"{node_col} int, __cube binary",
+        feature_positions, matrix_width, code_dtype, tree_col,
+    )
+
+
+def merge_cube_rows(rows) -> dict[int, "np.ndarray"]:
+    """Driver merge of collected (node, cube bytes) rows of a dense or
+    pair cube pass -> ``{node: flat int64}``, exact int64 addition.  A
+    row's bytes may be a Row bytearray or a zero-copy Arrow buffer slice
+    (``split_finder._arrow_cube_rows``) — frombuffer reads either without
+    copying."""
+    merged: dict[int, np.ndarray] = {}
+    for r in rows:
+        _add_into(merged, r[0], np.frombuffer(r[1], dtype=np.int64))
+    return merged
+
+
+def _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col):
+    """Per-node flat (edges + NaN) cubes -> the counts pdf, exactly the
+    rows :func:`packed_histogram_counts` + the distributed SUM would
+    produce for them, or None when every cube is empty: the driver-side
+    tail of every cube decoder."""
+    import pandas as pd
+
+    names, lens, slot_off, _, edges_flat, edge_off = _cube_geometry(
         feature_names, bin_edges
     )
-    tcol = target_idx_col
-    n_feat = len(names)
-    width = matrix_width if matrix_width is not None else n_feat
-    pos = (
-        np.asarray(feature_positions, dtype=np.int64)
-        if feature_positions is not None
-        else np.arange(n_feat, dtype=np.int64)
+    sparse = _sparsify_cubes(
+        acc, {}, names, lens, slot_off, edges_flat, edge_off, n_classes
     )
-    routes = _tree_routes(routing_splits)
-
-    def cubes(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        acc, dist_acc = _accumulate_cubes(
-            batches, packed_col, tcol, tree_col, routes, width, n_feat, pos,
-            lens, slot_off, flat_slots, n_classes, emit_node_totals,
-            code_dtype,
-        )
-        if not acc:
-            return
-        nodes_out, blobs = [], []
-        for nv, a in acc.items():
-            blob = a.tobytes()
-            if emit_node_totals:
-                d = dist_acc.get(nv)
-                if d is None:
-                    d = np.zeros(n_classes, dtype=np.int64)
-                blob += d.tobytes()
-            nodes_out.append(nv)
-            blobs.append(blob)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.asarray(nodes_out, dtype=np.int32), type=pa.int32()),
-                pa.array(blobs, type=pa.binary()),
-            ],
-            names=[node_col, "__cube"],
-        )
-        _trim_malloc()
-
-    return packed_df.select(
-        packed_col, tcol, *([tree_col] if tree_col else [])
-    ).mapInArrow(cubes, f"{node_col} int, __cube binary")
+    if sparse is None:
+        return None
+    node_out, feat_out, value_out, class_out, total_out = sparse
+    data = {node_col: node_out, FEATURE: feat_out, FEATURE_VALUE: value_out}
+    for i in range(n_classes):
+        data[class_count_col(i)] = class_out[i]
+    data["count_examples"] = total_out
+    return pd.DataFrame(data)
 
 
 def merge_cubes_to_counts_pdf(
@@ -1251,52 +1275,19 @@ def merge_cubes_to_counts_pdf(
     :func:`packed_histogram_counts` + the distributed SUM would produce.
     ``distributions`` is {node: [(class_idx, count), ...]} (count > 0,
     class-ascending) or None when not requested."""
-    import pandas as pd
-
-    names, lens, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
-        feature_names, bin_edges
-    )
-    flat_size = flat_slots * n_classes
-    merged: dict[int, np.ndarray] = {}
-    for r in rows:
-        nv = int(r[0])
-        # r[1] may be a Row bytearray or a zero-copy Arrow buffer slice
-        # (split_finder._arrow_cube_rows) — frombuffer reads either without
-        # copying.
-        cube = np.frombuffer(r[1], dtype=np.int64)
-        m = merged.get(nv)
-        if m is None:
-            merged[nv] = cube.copy()
-        else:
-            m += cube
-    acc = {nv: v[:flat_size] for nv, v in merged.items()}
+    flat_size = _cube_geometry(feature_names, bin_edges)[3] * n_classes
+    merged = merge_cube_rows(rows)
     distributions = None
     if emit_node_totals:
         distributions = {
-            nv: [
-                (i, int(c))
-                for i, c in enumerate(v[flat_size : flat_size + n_classes])
-                if c > 0
-            ]
+            nv: _class_pairs(v[flat_size : flat_size + n_classes])
             for nv, v in merged.items()
         }
-    sparse = _sparsify_cubes(
-        acc, {}, names, lens, slot_off, edges_flat, edge_off, n_classes
+    acc = {nv: v[:flat_size] for nv, v in merged.items()}
+    return (
+        _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col),
+        distributions,
     )
-    if sparse is None:
-        return None, distributions
-    node_out, feat_out, value_out, class_out, total_out = sparse
-    from efficient_trees_spark.functions.exprs import class_count_col
-
-    data = {
-        node_col: node_out.astype(np.int32),
-        FEATURE: feat_out,
-        FEATURE_VALUE: value_out,
-    }
-    for i in range(n_classes):
-        data[class_count_col(i)] = class_out[i]
-    data["count_examples"] = total_out
-    return pd.DataFrame(data), distributions
 
 
 # ----------------------------------------------- pair cubes (two levels)
@@ -1346,10 +1337,8 @@ def packed_histogram_pair_cubes(
     feature_names: list[str],
     n_classes: int,
     bin_edges: dict[str, list[float]],
-    target_idx_col: str,
-    routing_splits: list[tuple],
+    routes: dict[int, TreeRoute],
     node_col: str,
-    packed_col: str = PACKED_COL,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
     code_dtype: str = "u1",
@@ -1360,48 +1349,22 @@ def packed_histogram_pair_cubes(
     Same routing (``route_codes``, one tree or a forest's trees) and row
     set as :func:`packed_histogram_cubes`; only the accumulation is joint,
     over the pairs of each row's own tree's features."""
-    import pyarrow as pa
+    _, nan_code, null_code, _ = _code_info(code_dtype)
+    _, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
+    stride = s2 * s2 * n_classes
 
-    names, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
-    np_code, nan_code, null_code, _ = _code_info(code_dtype)
-    tcol = target_idx_col
-    n_feat = len(names)
-    width = matrix_width if matrix_width is not None else n_feat
-    pos = (
-        np.asarray(feature_positions, dtype=np.int64)
-        if feature_positions is not None
-        else np.arange(n_feat, dtype=np.int64)
-    )
-    routes = _tree_routes(routing_splits)
-    geometry = {}
-    for t, route in routes.items():
-        cols, feat = _tree_columns(route, pos, n_feat, width)
-        tl = lens[feat]
-        geometry[t] = (
-            cols,
-            slot2_off[feat][None, :],
-            np.maximum(tl - 1, 0).astype(np_code)[None, :],
-            tl[None, :],  # NaN slot
-            (tl + 1)[None, :],  # NULL slot
-        )
-
-    def cubes(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        stride = s2 * s2 * n_classes
+    def cubes(rows, axes) -> Iterator["pa.RecordBatch"]:
+        null_slot = {t: ax.nan_slot.astype(np.int64) + 1 for t, ax in axes.items()}
         acc: dict[int, np.ndarray] = {}
-
-        for t, mat, target, nodes in _routed_rows(
-            batches, packed_col, tcol, tree_col, width, code_dtype, routes
-        ):
-            cols, base2, cap_c, nan_slot, null_slot = geometry[t]
+        for t, mat, target, nodes in rows:
+            ax = axes[t]
             target = target.astype(np.int64)
-            if cols is not None:
-                mat = mat[:, cols]
             is_nan = mat == nan_code
             is_null = mat == null_code
-            idx = np.minimum(mat, cap_c).astype(np.int64)
-            np.copyto(idx, np.broadcast_to(nan_slot, idx.shape), where=is_nan)
-            np.copyto(idx, np.broadcast_to(null_slot, idx.shape), where=is_null)
-            fa = base2 + idx  # (rows x F) flat pair-axis slot, int64
+            idx = np.minimum(mat, ax.cap).astype(np.int64)
+            np.copyto(idx, np.broadcast_to(ax.nan_slot, idx.shape), where=is_nan)
+            np.copyto(idx, np.broadcast_to(null_slot[t], idx.shape), where=is_null)
+            fa = ax.base + idx  # (rows x F) flat pair-axis slot, int64
             fb = fa * n_classes + target[:, None]
             uniq, inv = np.unique(nodes, return_inverse=True)
             node_off = inv.astype(np.int64) * stride
@@ -1412,44 +1375,14 @@ def packed_histogram_pair_cubes(
                 counts += np.bincount(comb.ravel(), minlength=total)
             counts = counts.reshape(uniq.size, stride)
             for k in range(uniq.size):
-                nv = int(uniq[k])
-                a_acc = acc.get(nv)
-                if a_acc is None:
-                    acc[nv] = counts[k].copy()
-                else:
-                    a_acc += counts[k]
-        if not acc:
-            _trim_malloc()
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(
-                    np.asarray(list(acc.keys()), dtype=np.int32),
-                    type=pa.int32(),
-                ),
-                pa.array([a.tobytes() for a in acc.values()], type=pa.binary()),
-            ],
-            names=[node_col, "__cube"],
-        )
-        _trim_malloc()
+                _add_into(acc, uniq[k], counts[k])
+        if acc:
+            yield _cube_batch(node_col, {nv: a.tobytes() for nv, a in acc.items()})
 
-    return packed_df.select(
-        packed_col, tcol, *([tree_col] if tree_col else [])
-    ).mapInArrow(cubes, f"{node_col} int, __cube binary")
-
-
-def merge_pair_cubes(rows) -> dict[int, "np.ndarray"]:
-    """Driver merge of collected pair-cube rows -> {node: flat int64}."""
-    merged: dict[int, np.ndarray] = {}
-    for r in rows:
-        nv = int(r[0])
-        cube = np.frombuffer(r[1], dtype=np.int64)
-        m = merged.get(nv)
-        if m is None:
-            merged[nv] = cube.copy()
-        else:
-            m += cube
-    return merged
+    return _level_pass(
+        packed_df, lens, slot2_off, routes, cubes, f"{node_col} int, __cube binary",
+        feature_positions, matrix_width, code_dtype, tree_col,
+    )
 
 
 def _pair_keep_index(lens, slot2_off) -> "np.ndarray":
@@ -1480,41 +1413,21 @@ def pair_cubes_to_level_counts(
     and a node's class totals are one histogrammed feature's diagonal
     block summed (each row once, NULL slot included) — the elementwise
     max over features' block totals, since the others are zero."""
-    names, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
-    _, lens1, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
-        feature_names, bin_edges
-    )
+    _, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
     keep = _pair_keep_index(lens, slot2_off)
     acc: dict[int, np.ndarray] = {}
-    distributions = None
-    if emit_node_totals:
-        distributions = {}
+    distributions = {} if emit_node_totals else None
     for nv, flat in cubes.items():
         cube = flat.reshape(s2, s2, n_classes)
         marg = np.einsum("iic->ic", cube)  # (s2, classes) diagonal view
         acc[nv] = np.ascontiguousarray(marg[keep]).reshape(-1)
         if emit_node_totals:
             totals = np.add.reduceat(marg, slot2_off[:-1], axis=0).max(axis=0)
-            distributions[nv] = [
-                (i, int(c)) for i, c in enumerate(totals) if c > 0
-            ]
-    sparse = _sparsify_cubes(
-        acc, {}, names, lens1, slot_off, edges_flat, edge_off, n_classes
+            distributions[nv] = _class_pairs(totals)
+    return (
+        _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col),
+        distributions,
     )
-    if sparse is None:
-        return None, distributions
-    import pandas as pd
-
-    node_out, feat_out, value_out, class_out, total_out = sparse
-    data = {
-        node_col: node_out.astype(np.int32),
-        FEATURE: feat_out,
-        FEATURE_VALUE: value_out,
-    }
-    for i in range(n_classes):
-        data[class_count_col(i)] = class_out[i]
-    data["count_examples"] = total_out
-    return pd.DataFrame(data), distributions
 
 
 def pair_cubes_to_child_counts(
@@ -1536,9 +1449,6 @@ def pair_cubes_to_child_counts(
     emitted relation is bit-identical to one.  A threshold that is not
     one of the feature's edges raises ``ValueError``."""
     names, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
-    _, lens1, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
-        feature_names, bin_edges
-    )
     keep = _pair_keep_index(lens, slot2_off)
     pos_of = {name: j for j, name in enumerate(names)}
     acc: dict[int, np.ndarray] = {}
@@ -1556,20 +1466,4 @@ def pair_cubes_to_child_counts(
         right = cube[a0 + t + 1 : a0 + int(lens[j]) + 1].sum(axis=0)
         acc[2 * nv + 1] = np.ascontiguousarray(left[keep]).reshape(-1)
         acc[2 * nv + 2] = np.ascontiguousarray(right[keep]).reshape(-1)
-    sparse = _sparsify_cubes(
-        acc, {}, names, lens1, slot_off, edges_flat, edge_off, n_classes
-    )
-    if sparse is None:
-        return None
-    import pandas as pd
-
-    node_out, feat_out, value_out, class_out, total_out = sparse
-    data = {
-        node_col: node_out.astype(np.int32),
-        FEATURE: feat_out,
-        FEATURE_VALUE: value_out,
-    }
-    for i in range(n_classes):
-        data[class_count_col(i)] = class_out[i]
-    data["count_examples"] = total_out
-    return pd.DataFrame(data)
+    return _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col)

@@ -16,7 +16,14 @@ plan keyed by (node, feature) (SURVEY.md §7.2):
 That is the exact melt (:func:`find_best_splits_per_node`).  The packed
 level loop (:func:`find_best_splits_packed`) replaces the first two steps
 with an Arrow histogram pass over the persisted bin-code relation
-(``operators/histogram.py``) and shares everything after the counts.
+(``operators/histogram.py``).  Everything after the counts is written
+once: both paths hand their counts relation to one scorer
+(:func:`_score_counts`), which collects it and scores it driver-side
+(:func:`best_splits_from_counts_pdf`) when it fits the driver-collect
+budget, and runs the windows above plus a ``max_by`` argmax otherwise
+(and for every exact-melt entropy level).
+The packed path's dense and pair cube branches merge their counts on the
+driver and go straight to the driver-side scoring.
 
 Scale properties:
 * The unpivot multiplies rows by n_features but is map-local (no shuffle) and
@@ -36,7 +43,9 @@ stable under any partitioning.
 
 from __future__ import annotations
 
+from bisect import bisect_right
 from contextlib import contextmanager
+from itertools import accumulate
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Window
@@ -75,22 +84,40 @@ def melt_features(
     return unpivoted.filter(F.col(FEATURE_VALUE).isNotNull())
 
 
+def _melt_counts(
+    df: DataFrame,
+    feature_names: list[str],
+    n_classes: int,
+    node_col: str | None,
+) -> DataFrame:
+    """The exact melt's counts relation: one (node, feature,
+    feature_value) row per distinct value with its per-class and total
+    row counts (reference tree.py:243-254, all features in one
+    aggregate)."""
+    keys = ([node_col] if node_col else []) + [FEATURE]
+    long_df = melt_features(
+        df, feature_names, extra_id_cols=[node_col] if node_col else None
+    )
+    return long_df.groupBy(*keys, FEATURE_VALUE).agg(
+        *exprs.conditional_class_counts(TARGET_IDX, n_classes),
+        F.count(F.lit(1)).alias("count_examples"),
+    )
+
+
 def candidate_split_gains(
     df: DataFrame,
     feature_names: list[str],
     n_classes: int,
     criterion: Criterion,
-    target_idx_col: str = TARGET_IDX,
     node_col: str | None = None,
-    num_buckets: int | None = None,
     include_child_counts: bool = False,
     bounded_candidates: bool = False,
     precomputed_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Information gain of EVERY candidate split of every feature.
 
-    Input: ``df`` with double-typed feature columns and an integer class-index
-    column.  Output columns: ``feature``, ``feature_value`` (candidate
+    Input: ``df`` with double-typed feature columns and the integer
+    class-index column ``TARGET_IDX``.  Output columns: ``feature``, ``feature_value`` (candidate
     threshold), ``information_gain``, ``parent_criterion`` (plus ``node_col``
     when given — level-wise training scores every tree node of a level in
     this ONE plan, grouping and windowing by (node, feature)).
@@ -112,32 +139,24 @@ def candidate_split_gains(
     ``Window.partitionBy(feature)`` — that window is one task per
     (node, feature), i.e. a serial sort of every distinct value of a
     continuous feature (583k at sf0.1 lineitem; billions at cluster scale).
-    Phase 1 computes prefix sums inside ``num_buckets`` uniform value ranges
-    per feature (parallelism = nodes x features x buckets); phase 2 adds each
-    bucket's starting offset, computed by a window over the per-bucket totals
-    relation (<= buckets rows per (node, feature) — trivially small).  Count
+    Phase 1 computes prefix sums inside ``spark.sql.shuffle.partitions``
+    uniform value ranges per feature (parallelism = nodes x features x
+    buckets); phase 2 adds each bucket's starting offset, computed by a
+    window over the per-bucket totals relation (<= buckets rows per (node,
+    feature) — trivially small).  Count
     sums are 64-bit-integer additions, so bucketed results are bit-identical
     to the serial scan.
     """
     keys = ([node_col] if node_col else []) + [FEATURE]
-    spark = df.sparkSession
-    if num_buckets is None:
-        num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
     if precomputed_counts is not None:
-        # Counts relation supplied by the caller (the packed level loop:
-        # routing + histograms fused in one Arrow pass, or the melt's
-        # checkpointed counts); the gains pipeline below is shared
-        # unchanged.
+        # Counts relation supplied by the caller (the scorer: the packed
+        # level loop's histogram pass or the melt's counts, checkpointed);
+        # the gains pipeline below is shared unchanged.
         counts = precomputed_counts
     else:
-        long_df = melt_features(
-            df, feature_names, target_idx_col, extra_id_cols=[node_col] if node_col else None
-        )
-        counts = long_df.groupBy(*keys, FEATURE_VALUE).agg(
-            *exprs.conditional_class_counts(target_idx_col, n_classes),
-            F.count(F.lit(1)).alias("count_examples"),
-        )
+        counts = _melt_counts(df, feature_names, n_classes, node_col)
 
     if bounded_candidates:
         # Binned mode: ≤ max_bins+1 candidate rows per (node, feature) BY
@@ -184,9 +203,8 @@ def candidate_split_gains(
     # far smaller than the melt it replaces, and recomputed from the
     # source on every invocation.  The bounded branch above has a
     # single consumer and stays fully lazy.  A caller-supplied counts
-    # relation is already materialized (find_best_splits_per_node
-    # checkpoints before its size probe) — re-checkpointing it would copy
-    # the blocks for nothing.
+    # relation is already checkpointed (the scorer checkpoints before its
+    # size probe) — re-checkpointing it would copy the blocks for nothing.
     if precomputed_counts is None:
         counts = counts.localCheckpoint(eager=False)
 
@@ -409,111 +427,40 @@ def find_best_splits_per_node(
     n_classes: int,
     criterion: Criterion,
     node_col: str,
-    target_idx_col: str = TARGET_IDX,
 ) -> list[dict[str, Any]]:
-    """Best split of EVERY node of a tree level in one job (PLANET-style),
+    """Best split of EVERY node of a tree level in one pass (PLANET-style),
     on the exact melt: ``df`` is the prepared training relation with a
-    routing node-id column.
-
-    Total-order tie-break — (gain desc, feature position asc, threshold
-    asc; the reference's stable concat-then-sort in feature-list order,
-    tree.py:341-348) — expressed as ``max_by`` over an
-    ordering struct rather than a ``row_number`` window.  The window form is
-    a scale trap: at the root level the node column is the foldable
-    ``lit(0)``, Catalyst folds it out of the partition spec, and the window
-    serializes EVERY candidate gain row through one partition.  ``max_by``
-    aggregates with map-side partial combine (one surviving row per node per
-    input partition) and shuffles only those. Struct comparison is
-    lexicographic; position and threshold are negated so the whole order is
-    a single max, and (gain, position, threshold) is unique per candidate so
-    no arbitrary tie remains.
-
-    Exact-mode GINI levels take a driver-local shortcut when the aggregated
-    candidate relation fits the local-gains budget: the relation is
-    checkpointed (the unbounded pipeline materializes it anyway) and
-    collected in ONE action — ``limit(cap + 1)`` + Arrow collect — where
-    the old form (r11) paid a ``count()`` job and then a ``toPandas()``
-    job per level (~0.2 s of per-level job latency, and at low core
-    counts a whole extra serialized stage).  ``cap + 1`` rows coming back
-    proves the relation is over budget and the distributed pipeline takes
-    over, reading the same (partially) materialized checkpoint blocks —
-    nothing is recomputed.  The cap itself is bounded in BYTES as well as
-    rows (ADVICE r11): rows x (n_classes + 3) x 8 B must fit the shared
-    driver-collect budget, so a high-class-count fit falls back to the
-    distributed form instead of blowing ``spark.driver.maxResultSize``.
-    Under budget the prefix sums + gini gains + argmax run driver-side
-    (``_local_gains_gini_numpy`` + ``_best_split_rows_local`` — both
-    pinned bit-identical to the distributed forms), replacing the
-    two-phase bucketed windows, broadcast joins and max_by shuffle.
-    Entropy and over-budget relations keep the distributed pipeline.
-    """
-    if criterion == Criterion.GINI:
-        keys = [node_col, FEATURE]
-        long_df = melt_features(
-            df, feature_names, target_idx_col, extra_id_cols=[node_col]
-        )
-        counts = (
-            long_df.groupBy(*keys, FEATURE_VALUE)
-            .agg(
-                *exprs.conditional_class_counts(target_idx_col, n_classes),
-                F.count(F.lit(1)).alias("count_examples"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        cap = _local_gains_row_cap(df.sparkSession, n_classes)
-        head = counts.limit(cap + 1)
-        if hasattr(head, "toArrow"):
-            pdf = head.toArrow().to_pandas()
-        else:  # pragma: no cover - pre-Arrow-collect Spark
-            pdf = head.toPandas()
-        if len(pdf) <= cap:
-            return _best_splits_gini_local(
-                pdf, n_classes, feature_names, node_col
-            )
-        del pdf
-        gains = candidate_split_gains(
-            df,
-            feature_names,
-            n_classes,
-            criterion,
-            target_idx_col,
-            node_col=node_col,
-            include_child_counts=True,
-            precomputed_counts=counts,
-        )
-        return _best_split_rows(gains, _feature_position(feature_names), node_col)
-    gains = candidate_split_gains(
-        df,
-        feature_names,
-        n_classes,
-        criterion,
-        target_idx_col,
-        node_col=node_col,
-        include_child_counts=True,
+    routing node-id column; its counts go to the shared scorer
+    (:func:`_score_counts`)."""
+    counts = _melt_counts(df, feature_names, n_classes, node_col)
+    found, _ = _score_counts(
+        counts, [list(feature_names)], n_classes, criterion, node_col
     )
-    return _best_split_rows(gains, _feature_position(feature_names), node_col)
+    return found[0]
 
 
-# A level's aggregated histogram relation above this row estimate keeps the
+# A level's aggregated counts relation above this many rows keeps the
 # fully distributed gains pipeline (window prefix sums); below it, the
-# relation is collected and prefix-summed driver-side — see
-# find_best_splits_packed.  2M rows ≈ ~100 MB of counts, comfortable for a
-# driver at any corpus size (the relation is nodes × features × bins —
-# row-count-INDEPENDENT).
+# relation is collected and scored driver-side — see _score_counts.  2M
+# rows ≈ ~100 MB of counts, comfortable for a driver at any corpus size
+# (a binned relation is nodes × features × bins — row-count-INDEPENDENT).
 _LOCAL_GAINS_MAX_ROWS = 2_000_000
 
 
-def _local_gains_row_cap(spark, n_classes: int) -> int:
+def _local_gains_row_cap(spark, n_classes: int, criterion: Criterion) -> int:
     """Row cap for collecting a candidate counts relation to the driver:
     ``_LOCAL_GAINS_MAX_ROWS`` additionally bounded in BYTES (ADVICE r11 —
     a 100-class fit at 2M rows would serialize ~1.6 GB where the
-    distributed pipeline succeeds): rows x (n_classes + 3 key/count cols)
-    x 8 B must fit the same driver budget the packed dense-cube path
-    honors."""
+    distributed pipeline succeeds): every collect of the driver-side
+    scoring must fit the same driver budget the packed dense-cube path
+    honors.  Gini collects only the counts, rows x (n_classes + 3
+    key/count cols) x 8 B; entropy also collects its gains relation, whose
+    rows carry both child count arrays, (2 n_classes + 5) x 8 B."""
     from efficient_trees_spark.operators.histogram import stats_collect_budget
 
     budget = min(_DENSE_CUBE_MAX_BYTES, stats_collect_budget(spark))
-    return min(_LOCAL_GAINS_MAX_ROWS, budget // ((n_classes + 3) * 8))
+    width = n_classes + 3 if criterion == Criterion.GINI else 2 * n_classes + 5
+    return min(_LOCAL_GAINS_MAX_ROWS, budget // (width * 8))
 
 # Budget for collecting DENSE per-(partition, node) histogram cubes to the
 # driver (the no-shuffle level-job form).  Volume = partitions × pending
@@ -542,10 +489,11 @@ def _no_local_relation_fold(spark):
     bit-identical either way: pinned by
     ``test_local_gains_fold_free_parity_and_conf_restore``.
 
-    Scoped set/restore of the session conf: fits are sequential (the
-    packed level loop runs no concurrent jobs and scores a forest's trees
-    one after another), and any pre-existing exclusion list is
-    preserved.
+    Scoped set/restore of the session conf, preserving any prior
+    exclusion list.  The conf is session-wide, so the exact melt's level-0
+    root-distribution job (``tree._root_distributions``, on a second
+    thread) may be planned without the rule too; it reads the persisted
+    training relation, no ``LocalRelation``, so the rule never applies.
     """
     key = "spark.sql.optimizer.excludedRules"
     prev = spark.conf.get(key, None)
@@ -579,7 +527,6 @@ def find_best_splits_packed(
     n_classes: int,
     criterion: Criterion,
     bin_edges: dict[str, list[float]],
-    target_idx_col: str = TARGET_IDX,
     node_col: str = "__node_id",
     all_feature_names: list[str] | None = None,
     tree_col: str | None = None,
@@ -601,24 +548,21 @@ def find_best_splits_packed(
     ``tree_col`` each row carries its tree id and is routed by that tree's
     splits; without it every row is tree 0's (a single tree's fit).  The
     kernels key their accumulators by a dense SLOT id per pending (tree,
-    node) pair, so the dense, pair and sparse/distributed branches below
-    run unchanged over any number of trees; the driver splits the merged
-    rows back by tree and scores each tree with its own feature list (its
+    node) pair, tree by tree, so each tree owns a contiguous slot range
+    and the dense, pair and sparse branches below run unchanged over any
+    number of trees; each tree is scored with its own feature list (its
     tie-break order).  Budgets sum over the trees in the pass.
 
     The aggregated histogram relation is bounded by nodes × features ×
-    (bins+1) rows — independent of corpus size — so when that bound is
-    small (every binned fit; the architecture XGBoost/LightGBM use:
-    distributed histogram aggregation, central split finding) it is
-    COLLECTED and the integer prefix sums run driver-side; the float gain
-    expressions and the argmax then evaluate over a tiny local relation
-    through the SAME Catalyst pipeline, skipping the per-level window
-    shuffle stages (~1 s/level of fixed latency at sf0.1).  All float math
-    stays in Catalyst with identical expression shapes and the prefix sums
-    are exact int64 either way, so trees are bit-identical to the exact
-    melt (``tests/test_wide_fit.py``) and to the fully
-    distributed form, which remains the path for relations past
-    ``_LOCAL_GAINS_MAX_ROWS`` (deep trees in packed-exact mode).
+    (bins+1) rows — independent of corpus size — so while that bound fits
+    the driver-collect cap (every binned fit; the XGBoost/LightGBM
+    architecture: distributed histogram aggregation, central split
+    finding) the counts are merged and scored on the driver: dense
+    per-partition cubes when they fit ``_DENSE_CUBE_MAX_BYTES`` (no
+    shuffle), else sparse rows summed by a hash aggregate, which go to the
+    shared scorer (:func:`_score_counts`) — and past the cap straight to
+    its distributed form (deep packed-exact trees).  Every branch is
+    bit-identical to the exact melt (``tests/test_wide_fit.py``).
 
     ``all_feature_names`` is the packed matrix's full column order when a
     tree scores only a subset (forest feature bagging).  The pass
@@ -627,7 +571,7 @@ def find_best_splits_packed(
 
     Returns ``(found, carried)``: ``found[tree] = (splits,
     distributions)``.  With ``want_distributions`` the per-node class
-    totals ride the local path's histogram (``DIST_FEATURE`` rows / cube
+    totals ride the driver-scored histogram (``DIST_FEATURE`` rows / cube
     tails — no separate distribution job, no cache-materialization race
     with one) as ``{node_id: [(class_idx, count), ...]}``; otherwise, and
     on the distributed path, they are None and the caller runs its own
@@ -646,15 +590,11 @@ def find_best_splits_packed(
     the same routed rows — ``histogram.packed_histogram_pair_cubes``;
     test-pinned).  ``carried`` is None whenever the pair budget excludes
     the pass (wide fits) or the level went sparse or distributed."""
-    import numpy as np
-
-    from efficient_trees_spark.functions.exprs import class_count_col
     from efficient_trees_spark.operators.histogram import (
-        DIST_FEATURE,
         TreeRoute,
         _trim_malloc,
+        merge_cube_rows,
         merge_cubes_to_counts_pdf,
-        merge_pair_cubes,
         packed_histogram_counts,
         packed_histogram_cubes,
         packed_histogram_pair_cubes,
@@ -711,12 +651,14 @@ def find_best_splits_packed(
         * sum(len(bin_edges.get(f, ())) + 1 for f in fl)
         for t, fl in zip(order, lists)
     )
-    if est_rows <= _LOCAL_GAINS_MAX_ROWS:
+    local_ok = est_rows <= _local_gains_row_cap(spark, n_classes, criterion)
+    dense_ok = pair_ok = False
+    if local_ok:
         # Dense-cube variant when the partitions × nodes × cube collect is
         # small: the level job collapses to one mapInArrow stage + an exact
         # driver merge — no shuffle at all.  Volume grows with the input's
         # partition count, so past the budget (big clusters, deep trees)
-        # the sparse rows + distributed SUM form below takes over.
+        # the sparse rows + hash aggregate take over.
         # `slots` is the RAGGED flat slot total (per-feature edges + NaN
         # slot), which is exactly the dense cube's int64 cell count per
         # node — one wide feature no longer inflates the estimate (or
@@ -753,146 +695,185 @@ def find_best_splits_packed(
             and cubes_per_part * pair_cube_bytes(names, bin_edges, n_classes)
             <= cube_budget
         )
-        if pair_ok:
-            pair_cubes = node_keyed(
-                merge_pair_cubes(
-                    _collect_cube_rows(
-                        packed_histogram_pair_cubes(
-                            packed_df, names, n_classes, bin_edges,
-                            target_idx_col, routes, node_col, **kernel_args,
-                        )
-                    )
+    if pair_ok:
+        pair_cubes = node_keyed(
+            merge_cube_rows(
+                _arrow_cube_rows(
+                    packed_histogram_pair_cubes(
+                        packed_df, names, n_classes, bin_edges, routes,
+                        node_col, **kernel_args,
+                    ).toArrow()
                 )
             )
-            _trim_malloc()
-            levels = {
-                t: pair_cubes_to_level_counts(
-                    pair_cubes[t], names, n_classes, bin_edges, node_col,
-                    emit_node_totals=want_distributions,
-                )
-                for t in order
-            }
-        elif dense_ok:
-            # Arrow transport for the cube partials: a depth-d level
-            # collects partitions x nodes ~100 KB binary cubes (hundreds of
-            # MB at depth 3+ on many-partition inputs).
-            cube_rows: dict[int, list] = {t: [] for t in order}
-            for slot, cube in _collect_cube_rows(
-                packed_histogram_cubes(
-                    packed_df, names, n_classes, bin_edges, target_idx_col,
-                    routes, node_col, emit_node_totals=want_distributions,
-                    **kernel_args,
-                )
-            ):
-                cube_rows[slot_tree[slot]].append((slot_node[slot], cube))
-            levels = {
-                t: merge_cubes_to_counts_pdf(
-                    cube_rows[t], names, n_classes, bin_edges, node_col,
-                    emit_node_totals=want_distributions,
-                )
-                for t in order
-            }
-            # The per-level IPC table is hundreds of MB on many-partition
-            # inputs; return it to the OS before the next level piles on
-            # (the DRIVER ratchets across levels otherwise, same allocator
-            # behavior the workers showed — histogram._trim_malloc notes).
-            del cube_rows
-            _trim_malloc()
-        else:
-            pdf = packed_histogram_counts(
-                packed_df, names, n_classes, bin_edges, target_idx_col,
-                routes, node_col, emit_node_totals=want_distributions,
-                **kernel_args,
-            ).toPandas()
-            dists: dict[int, dict | None] = dict.fromkeys(order)
-            if want_distributions:
+        )
+        _trim_malloc()
+        levels = {
+            t: pair_cubes_to_level_counts(
+                pair_cubes[t], names, n_classes, bin_edges, node_col,
+                emit_node_totals=want_distributions,
+            )
+            for t in order
+        }
+    elif dense_ok:
+        # Arrow transport for the cube partials: a depth-d level collects
+        # partitions x nodes ~100 KB binary cubes (hundreds of MB at depth
+        # 3+ on many-partition inputs).
+        cube_rows: dict[int, list] = {t: [] for t in order}
+        for slot, cube in _arrow_cube_rows(
+            packed_histogram_cubes(
+                packed_df, names, n_classes, bin_edges, routes, node_col,
+                emit_node_totals=want_distributions, **kernel_args,
+            ).toArrow()
+        ):
+            cube_rows[slot_tree[slot]].append((slot_node[slot], cube))
+        levels = {
+            t: merge_cubes_to_counts_pdf(
+                cube_rows[t], names, n_classes, bin_edges, node_col,
+                emit_node_totals=want_distributions,
+            )
+            for t in order
+        }
+        # The per-level IPC table is hundreds of MB on many-partition
+        # inputs; return it to the OS before the next level piles on
+        # (the DRIVER ratchets across levels otherwise, same allocator
+        # behavior the workers showed — histogram._trim_malloc notes).
+        del cube_rows
+        _trim_malloc()
+    else:
+        node_totals = want_distributions and local_ok
+        per_tree, totals = _score_counts(
+            packed_histogram_counts(
+                packed_df, names, n_classes, bin_edges, routes, node_col,
+                emit_node_totals=node_totals, **kernel_args,
+            ),
+            lists,
+            n_classes,
+            criterion,
+            node_col,
+            slot_ends=list(accumulate(len(trees[t].pending) for t in order)),
+            est_rows=est_rows,
+            bounded_candidates=True,
+            node_totals=node_totals,
+        )
+        dists = node_keyed(totals) if totals is not None else dict.fromkeys(order)
+        found = {
+            t: ([dict(b, node_id=slot_node[b["node_id"]]) for b in best], dists[t])
+            for t, best in zip(order, per_tree)
+        }
+        return found, None
+    found = {
+        t: (
+            best_splits_from_counts_pdf(
+                levels[t][0], spark, n_classes, fl, node_col, criterion
+            ),
+            levels[t][1],
+        )
+        for t, fl in zip(order, lists)
+    }
+    carried = None
+    if pair_ok:
+        # Next level's counts from the same cubes: only nodes the caller
+        # will actually split produce children (gain > 0 — mirrors the
+        # tree loop's leaf rule).
+        carried = {
+            t: pair_cubes_to_child_counts(
+                pair_cubes[t],
+                [b for b in found[t][0] if b["information_gain"] > 0],
+                names, n_classes, bin_edges, node_col,
+            )
+            for t in order
+        }
+    return found, carried
+
+
+def _score_counts(
+    counts: DataFrame,
+    tree_features: list[list[str]],
+    n_classes: int,
+    criterion: Criterion,
+    node_col: str,
+    slot_ends: list[int] | None = None,
+    est_rows: int = 0,
+    bounded_candidates: bool = False,
+    node_totals: bool = False,
+) -> tuple[list[list[dict[str, Any]]], dict[int, list] | None]:
+    """The counts-to-splits step of both fit paths: a level's counts
+    relation ``(node_col, feature, feature_value, class_*_count,
+    count_examples)`` → each tree's best split per slot.  Tree k owns the
+    ``node_col`` slots below ``slot_ends[k]`` and above the previous
+    tree's (None: one tree owns all) and breaks ties by its own
+    ``tree_features[k]``; returned splits carry the slot as ``node_id``.
+
+    While the relation may fit ``_local_gains_row_cap`` (rows AND bytes
+    of every collect the criterion's scoring makes, so a high-class-count
+    fit cannot blow ``spark.driver.maxResultSize`` — ADVICE r11), it is
+    checkpointed lazily, collected in ONE ``limit(cap + 1)`` Arrow action
+    and scored driver-side (:func:`best_splits_from_counts_pdf`).
+    ``cap + 1`` rows back prove it over budget: ``candidate_split_gains``
+    + ``max_by`` then run over the same checkpoint blocks.  An ``est_rows``
+    upper bound past the cap skips the probe, and the relation stays a
+    lazy, single-consumer plan; so do exact-melt (unbounded) entropy
+    counts.  Both forms are pinned bit-identical.  With ``node_totals``
+    the relation carries ``DIST_FEATURE`` rows; a collected relation
+    returns them as ``{slot: [(class_idx, count), ...]}``, the
+    distributed form drops them and returns None."""
+    import numpy as np
+
+    from efficient_trees_spark.operators.histogram import DIST_FEATURE, _class_pairs
+
+    spark = counts.sparkSession
+    cap = _local_gains_row_cap(spark, n_classes, criterion)
+    # Exact-melt entropy scored driver-side measured no faster than the
+    # distributed pipeline (sf0.1 lineitem, 583k distinct prices, 4 cores:
+    # depth-3 fit 11.78 vs 11.92 s median, faster in 5 of 10 pairs).
+    if est_rows <= cap and (bounded_candidates or criterion == Criterion.GINI):
+        counts = counts.localCheckpoint(eager=False)
+        pdf = counts.limit(cap + 1).toArrow().to_pandas()
+        if len(pdf) <= cap:
+            totals = None
+            if node_totals:
                 mask = pdf[FEATURE] == DIST_FEATURE
-                dists = node_keyed(
-                    {
-                        int(r[node_col]): [
-                            (i, int(r[class_count_col(i)]))
-                            for i in range(n_classes)
-                            if r[class_count_col(i)] > 0
-                        ]
-                        for _, r in pdf[mask].iterrows()
-                    }
+                dist = pdf[mask]
+                rows = dist[[exprs.class_count_col(i) for i in range(n_classes)]]
+                totals = dict(
+                    zip(dist[node_col].tolist(), map(_class_pairs, rows.to_numpy()))
                 )
                 pdf = pdf[~mask]
-            levels = {t: (None, dists[t]) for t in order}
-            slot = pdf[node_col].to_numpy()
-            owner = np.asarray(slot_tree, dtype=np.int64)[slot]
-            node_of = np.asarray(slot_node, dtype=np.int32)
-            for t in order:
-                mine = owner == t
-                if mine.any():
-                    levels[t] = (
-                        pdf[mine].assign(**{node_col: node_of[slot[mine]]}),
-                        dists[t],
-                    )
-        found = {
-            t: (
+            parts = [pdf]
+            if slot_ends is not None:
+                owner = np.searchsorted(slot_ends, pdf[node_col].to_numpy(), "right")
+                parts = [pdf[owner == k] for k in range(len(tree_features))]
+            return [
                 best_splits_from_counts_pdf(
-                    levels[t][0], spark, n_classes, fl, node_col, criterion
-                ),
-                levels[t][1],
-            )
-            for t, fl in zip(order, lists)
-        }
-        carried = None
-        if pair_ok:
-            # Next level's counts from the same cubes: only nodes the
-            # caller will actually split produce children (gain > 0 —
-            # mirrors the tree loop's leaf rule).
-            carried = {
-                t: pair_cubes_to_child_counts(
-                    pair_cubes[t],
-                    [b for b in found[t][0] if b["information_gain"] > 0],
-                    names, n_classes, bin_edges, node_col,
+                    part, spark, n_classes, fl, node_col, criterion
                 )
-                for t in order
-            }
-        return found, carried
-    counts = packed_histogram_counts(
-        packed_df, names, n_classes, bin_edges, target_idx_col, routes,
-        node_col, **kernel_args,
-    )
+                for part, fl in zip(parts, tree_features)
+            ], totals
+        del pdf
+    if node_totals:
+        counts = counts.filter(F.col(FEATURE) != DIST_FEATURE)
     gains = candidate_split_gains(
-        packed_df,
-        names,
+        counts,
+        [],
         n_classes,
         criterion,
-        target_idx_col,
         node_col=node_col,
         include_child_counts=True,
-        bounded_candidates=True,
+        bounded_candidates=bounded_candidates,
         precomputed_counts=counts,
     )
     # Each tree's tie-break position comes from its own feature list,
     # looked up by the tree's contiguous slot range.
-    position = _feature_position(lists[0])
-    if not shared:
-        ends = np.cumsum([len(trees[t].pending) for t in order])
-        position = F.when(F.col(node_col) < int(ends[0]), position)
-        for end, fl in zip(ends[1:], lists[1:]):
-            position = position.when(
-                F.col(node_col) < int(end), _feature_position(fl)
-            )
-    found = {t: ([], None) for t in order}
+    position = _feature_position(tree_features[0])
+    if any(fl != tree_features[0] for fl in tree_features):
+        position = F.when(F.col(node_col) < int(slot_ends[0]), position)
+        for end, fl in zip(slot_ends[1:], tree_features[1:]):
+            position = position.when(F.col(node_col) < int(end), _feature_position(fl))
+    found: list[list[dict[str, Any]]] = [[] for _ in tree_features]
     for b in _best_split_rows(gains, position, node_col):
-        slot = b["node_id"]
-        found[slot_tree[slot]][0].append(dict(b, node_id=slot_node[slot]))
+        k = 0 if slot_ends is None else bisect_right(slot_ends, b["node_id"])
+        found[k].append(b)
     return found, None
-
-
-def _collect_cube_rows(cubes: DataFrame) -> list[tuple[int, "object"]]:
-    """(slot, cube buffer) rows of a dense or pair cube pass.  toArrow
-    moves binary columns in columnar IPC batches instead of py4j row
-    pickling, and each cube is read as a ZERO-COPY view of the Arrow
-    column: the driver never holds more than the IPC table plus one int64
-    accumulator per node.  Transport/accounting only, same numbers."""
-    if hasattr(cubes, "toArrow"):
-        return _arrow_cube_rows(cubes.toArrow())
-    return cubes.collect()  # pragma: no cover - pre-Arrow-collect Spark
 
 
 def best_splits_from_counts_pdf(
@@ -903,10 +884,11 @@ def best_splits_from_counts_pdf(
     node_col: str,
     criterion: Criterion,
 ) -> list[dict[str, Any]]:
-    """Best split per node from a DRIVER-LOCAL counts relation (the
-    collected/merged histogram rows) — the shared local-gains tail of the
-    dense-cube level job, also consumed directly by the tree loop for a
-    level whose counts were derived from the previous pass's PAIR cube.
+    """Best split per node from a DRIVER-LOCAL counts relation — the one
+    driver-side scoring of both fit paths: the scorer's collected relation
+    (:func:`_score_counts`), the merged dense or pair cubes, and a level
+    whose counts the tree loop carried over from the previous pass's PAIR
+    cube.
 
     Gini is pure rational float64 arithmetic, bit-reproducible driver-side
     (see ``_gini_gains_arrays``) — it skips the per-level Catalyst
@@ -929,10 +911,12 @@ def best_splits_from_counts_pdf(
 
 
 def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
-    """(node, cube-buffer) pairs from a collected Arrow table of dense
-    cubes — each cube a zero-copy slice of the IPC binary column's data
-    buffer (``np.frombuffer``-ready), so the driver-side merge adds int64
-    vectors straight out of the transport buffers."""
+    """(slot, cube-buffer) pairs from the ``toArrow()`` collect of a dense
+    or pair cube pass.  Arrow moves the binary column in columnar IPC
+    batches instead of py4j row pickling, and each cube is a zero-copy
+    slice of the column's data buffer (``np.frombuffer``-ready): the
+    driver never holds more than the IPC table plus one int64 accumulator
+    per node.  Transport/accounting only, same numbers."""
     out: list[tuple[int, object]] = []
     for batch in tbl.to_batches():
         nodes = batch.column(0).to_pylist()
@@ -1033,19 +1017,15 @@ def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
     return pdf, arrays
 
 
-def _local_prefix_sums(
-    pdf, spark, n_classes: int, node_col: str
-) -> DataFrame | None:
-    """Per-(node, feature) prefix sums of the collected histogram relation,
-    driver-side — exact int64 arithmetic, identical to the window-sum form
-    (ordering contract in :func:`_prefix_sum_arrays`).  Returns the cum
-    relation as a LOCAL DataFrame (created through pyarrow so the NaN
-    candidate survives as NaN, not null), or None when no rows survive."""
+def _local_prefix_sums(pdf, spark, n_classes: int, node_col: str) -> DataFrame:
+    """Per-(node, feature) prefix sums of a non-empty collected histogram
+    relation, driver-side — exact int64 arithmetic, identical to the
+    window-sum form (ordering contract in :func:`_prefix_sum_arrays`).
+    Returns the cum relation as a LOCAL DataFrame (created through pyarrow
+    so the NaN candidate survives as NaN, not null)."""
     import numpy as np
     import pyarrow as pa
 
-    if pdf.empty:
-        return None
     pdf, sums = _prefix_sum_arrays(pdf, n_classes, node_col)
     arrays: dict[str, pa.Array] = {
         node_col: pa.array(pdf[node_col].to_numpy(np.int32), type=pa.int32()),
@@ -1056,17 +1036,7 @@ def _local_prefix_sums(
     }
     for name, vals in sums.items():
         arrays[name] = pa.array(vals, type=pa.int64())
-    tbl = pa.table(arrays)
-    # createDataFrame(pyarrow.Table) is Spark 4.x; mirror the toArrow guard
-    # the collect paths use so pre-Arrow-table Spark takes a row-list build
-    # with an explicit schema (Python float NaN stays NaN in a double col).
-    if hasattr(DataFrame, "toArrow"):
-        return spark.createDataFrame(tbl)
-    schema = ", ".join(  # pragma: no cover - pre-Arrow-table Spark
-        f"`{f.name}` {'int' if f.type == pa.int32() else 'bigint' if f.type == pa.int64() else 'string' if f.type == pa.string() else 'double'}"
-        for f in tbl.schema
-    )
-    return spark.createDataFrame(tbl.to_pylist(), schema)  # pragma: no cover
+    return spark.createDataFrame(pa.table(arrays))
 
 
 def _gini_gains_arrays(pdf, n_classes: int, node_col: str):
@@ -1134,37 +1104,12 @@ def _gini_gains_arrays(pdf, n_classes: int, node_col: str):
     return nodes, features, values, gain, parent_g, left_counts, right_counts
 
 
-def _local_gains_gini_numpy(pdf, n_classes: int, node_col: str):
-    """The full gains relation as a pandas frame with the exact
-    columns/values the Catalyst roundtrip's ``toPandas()`` yields —
-    kept as the parity surface (`test_local_gains_numpy_gini_matches_
-    catalyst` compares it bit-for-bit against the Catalyst form); the
-    production fit path uses :func:`_best_splits_gini_local`, which
-    never materializes per-row Python lists."""
-    import pandas as pd
-
-    nodes, features, values, gain, parent_g, lc, rc = _gini_gains_arrays(
-        pdf, n_classes, node_col
-    )
-    out = pd.DataFrame(
-        {
-            node_col: nodes.astype("int32"),
-            FEATURE: features,
-            FEATURE_VALUE: values,
-            "information_gain": gain,
-            "parent_criterion": parent_g,
-        }
-    )
-    out["left_counts"] = list(lc)
-    out["right_counts"] = list(rc)
-    return out
-
-
 def _best_splits_gini_local(
     pdf, n_classes: int, feature_names: list[str], node_col: str
 ) -> list[dict[str, Any]]:
     """Fused driver-side GINI gains + argmax: the winners-only form of
-    ``_best_split_rows_local(_local_gains_gini_numpy(...))`` — identical
+    ``_best_split_rows_local`` over the gains frame of
+    :func:`_gini_gains_arrays` — identical
     total order (gain desc, feature position asc, threshold asc with the
     NaN candidate mapped to -inf), but one ``np.lexsort`` over flat
     arrays instead of a pandas multi-key sort plus 2x per-row list
@@ -1212,9 +1157,22 @@ def _feature_position(feature_names: list[str]):
 
 
 def _best_split_rows(gains: DataFrame, position, node_col: str) -> list[dict[str, Any]]:
-    """max_by argmax + collect shared by the routing-column and packed
-    level-wise split searches (same total-order tie-break; ``position`` is
-    the feature-position column, :func:`_feature_position`)."""
+    """Distributed argmax + collect of a gains relation: the scorer's
+    over-budget form (``position`` is the feature-position column,
+    :func:`_feature_position`).
+
+    Total-order tie-break — (gain desc, feature position asc, threshold
+    asc; the reference's stable concat-then-sort in feature-list order,
+    tree.py:341-348) — expressed as ``max_by`` over an ordering struct
+    rather than a ``row_number`` window.  The window form is a scale
+    trap: at the root level the node column is the foldable ``lit(0)``,
+    Catalyst folds it out of the partition spec, and the window
+    serializes EVERY candidate gain row through one partition.
+    ``max_by`` aggregates with map-side partial combine (one surviving
+    row per node per input partition) and shuffles only those.  Struct
+    comparison is lexicographic; position and threshold are negated so
+    the whole order is a single max, and (gain, position, threshold) is
+    unique per candidate so no arbitrary tie remains."""
     order = F.struct(
         F.col("information_gain"),
         (-position).alias("neg_position"),

@@ -101,6 +101,9 @@ def _fan_out_small_input(prepared: DataFrame) -> DataFrame:
     return prepared, n
 
 
+_PACKED_PARTITION_BYTES = 64 << 20
+
+
 def _packed_partition_target(
     n_parts: int, n_rows: int, width: int, parallelism: int
 ) -> int:
@@ -108,17 +111,14 @@ def _packed_partition_target(
     partitions that every core gets ≥ 4 waves (the pack+encode scan runs at
     this granularity too, and a 2-wave schedule was measured ~15% slower on
     the ×30 rung from straggler tail alone), few enough that each holds
-    ~``SPARK_GRAFT_PACKED_PARTITION_BYTES`` (default 64 MB) of codes.
-    Returns ``n_parts`` unchanged when no reduction is warranted."""
+    ~``_PACKED_PARTITION_BYTES`` (64 MB) of codes.  Returns ``n_parts``
+    unchanged when no reduction is warranted."""
     import math
-    import os
 
-    target_bytes = int(
-        os.environ.get("SPARK_GRAFT_PACKED_PARTITION_BYTES", str(64 << 20))
-    )
     # +8: per-row binary header + the int target column riding the blob.
     want = max(
-        4 * parallelism, math.ceil(max(1, n_rows) * (width + 8) / target_bytes)
+        4 * parallelism,
+        math.ceil(max(1, n_rows) * (width + 8) / _PACKED_PARTITION_BYTES),
     )
     return want if n_parts > want else n_parts
 
@@ -201,8 +201,7 @@ def _encode_codes(
             n_parts=n_parts,
         )
     codes = histogram.pack_encode_features(
-        prepared, feature_names, bin_edges, _TARGET_IDX, dtype=dtype,
-        code_dtype=code_dtype,
+        prepared, feature_names, bin_edges, dtype=dtype, code_dtype=code_dtype
     )
     return codes, code_dtype, n_parts
 
@@ -260,13 +259,9 @@ def _two_scan_binned_edges(
             stats_per_partition=stats,
         )
     else:
-        if hasattr(stats_df, "toArrow"):
-            # partitions x features rows of double-lists: Arrow IPC
-            # transport + zero-copy numpy views instead of py4j row
-            # pickling (tuple-indexed either way).
-            stat_rows = arrow_stat_rows(stats_df.toArrow())
-        else:  # pragma: no cover - pre-Arrow-collect Spark
-            stat_rows = stats_df.collect()
+        # partitions x features rows of double-lists: Arrow IPC transport
+        # + zero-copy numpy views instead of py4j row pickling.
+        stat_rows = arrow_stat_rows(stats_df.toArrow())
         bin_edges, feat_counts = merge_edge_stats_rows(
             stat_rows, feature_names, n_bins, with_counts=True,
             stats_per_partition=stats,

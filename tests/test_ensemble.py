@@ -7,6 +7,7 @@ import pandas as pd
 from efficient_trees_spark import RandomForestClassifier
 from tests.iris_fixture import train_test_frames
 from tests.snapping import snap_to_edges
+from tests.spies import record_calls
 
 
 def _iris(spark):
@@ -156,22 +157,43 @@ def test_forest_tree_equals_single_tree_forest_at_its_seed(spark):
 
 def test_forest_level_branches_agree(spark, monkeypatch):
     """A feature-bagged forest's level passes give the same trees on the
-    dense (and pair) cube branches, the sparse-rows branch and the
-    distributed-gains branch — each tree scored with its own feature
-    list, whichever branch merged the histograms."""
-    from efficient_trees_spark.operators import split_finder
+    dense (and pair) cube branches, the sparse-rows branch scored
+    driver-side and the distributed-gains branch — each tree scored with
+    its own feature list, whichever branch merged the histograms.  Spies
+    on the pass emitters and the distributed gains record the branches
+    each fit reached."""
+    from efficient_trees_spark.operators import histogram, split_finder
 
     train = _iris_with_missing(spark)
     kwargs = dict(n_trees=3, max_depth=3, feature_fraction=0.75, max_bins=8, seed=2)
+    calls: list = []
+    record_calls(monkeypatch, histogram, "packed_histogram_pair_cubes", calls, "pair")
+    record_calls(monkeypatch, histogram, "packed_histogram_cubes", calls, "dense")
+    record_calls(monkeypatch, histogram, "packed_histogram_counts", calls, "sparse")
+    record_calls(monkeypatch, split_finder, "candidate_split_gains", calls, "distributed")
+    reached: list[set] = []
 
     def fit():
+        calls.clear()
         rf = RandomForestClassifier(**kwargs)
         rf.fit(train, "target")
+        reached.append(set(calls))
         return rf.trees
 
     dense = fit()
+    # No dense cubes.  The driver-collect row cap shares their byte budget,
+    # so keep it at its row bound for the sparse rows to be scored
+    # driver-side; zeroing that bound then forces the distributed form.
     monkeypatch.setattr(split_finder, "_DENSE_CUBE_MAX_BYTES", 0)
+    monkeypatch.setattr(
+        split_finder,
+        "_local_gains_row_cap",
+        lambda _spark, _n_classes, _criterion: split_finder._LOCAL_GAINS_MAX_ROWS,
+    )
     sparse = fit()
     monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", 0)
     distributed = fit()
+    assert reached[0] and reached[0] <= {"pair", "dense"}
+    assert reached[1] == {"sparse"}
+    assert reached[2] == {"sparse", "distributed"}
     assert dense == sparse == distributed

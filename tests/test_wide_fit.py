@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.operators import split_finder
 from efficient_trees_spark.operators.histogram import (
+    TreeRoute,
     pack_encode_features,
     packed_histogram_counts,
 )
@@ -39,6 +40,7 @@ from efficient_trees_spark.tree import (
 )
 from efficient_trees_spark.workloads.wide_fit import build_wide_table
 from tests.snapping import snap_to_edges
+from tests.spies import record_calls
 
 SF_DIR = "/root/testdata/sf0.001"
 NAN = float("nan")
@@ -72,11 +74,9 @@ def _collect_counts(df):
 def _packed_counts(df, names, edges):
     """Root-level (no routing) counts relation of the packed level loop:
     the fused encode of ``df`` to bin codes, then one histogram pass."""
-    codes = pack_encode_features(df, names, edges, "__target_idx", dtype="f8")
+    codes = pack_encode_features(df, names, edges, dtype="f8")
     return _collect_counts(
-        packed_histogram_counts(
-            codes, names, 2, edges, "__target_idx", [], "__node_id"
-        )
+        packed_histogram_counts(codes, names, 2, edges, {0: TreeRoute([])}, "__node_id")
     )
 
 
@@ -769,9 +769,32 @@ def test_local_gains_fold_free_parity_and_conf_restore(spark):
         ), col
 
 
+def _gini_gains_frame(pdf, n_classes):
+    """The driver-side GINI gains of ``pdf`` as the frame the Catalyst
+    form's ``toPandas()`` yields, assembled from the production numpy core
+    ``split_finder._gini_gains_arrays``."""
+    import pandas as pd
+
+    nodes, features, values, gain, parent_g, lc, rc = (
+        split_finder._gini_gains_arrays(pdf, n_classes, "__node_id")
+    )
+    out = pd.DataFrame(
+        {
+            "__node_id": nodes.astype("int32"),
+            split_finder.FEATURE: features,
+            split_finder.FEATURE_VALUE: values,
+            "information_gain": gain,
+            "parent_criterion": parent_g,
+        }
+    )
+    out["left_counts"] = list(lc)
+    out["right_counts"] = list(rc)
+    return out
+
+
 def test_local_gains_numpy_gini_matches_catalyst(spark):
-    """The packed local path computes GINI gains driver-side
-    (``split_finder._local_gains_gini_numpy``) instead of the per-level
+    """The driver-side scoring computes GINI gains in numpy
+    (``split_finder._gini_gains_arrays``) instead of the per-level
     Catalyst roundtrip — legitimate only because the gini pipeline is pure
     rational float64 arithmetic (IEEE correctly-rounded ops), mirrored
     term-for-term.  Pin BIT-identity against the Catalyst form over NaN
@@ -847,7 +870,7 @@ def test_local_gains_numpy_gini_matches_catalyst(spark):
                 include_child_counts=True,
             ).toPandas()
         )
-    local = sort(split_finder._local_gains_gini_numpy(pdf, ncls, "__node_id"))
+    local = sort(_gini_gains_frame(pdf, ncls))
 
     assert len(catalyst) == len(local) > 0
     assert not (catalyst["feature"] == "f_single").any()  # max-value filter
@@ -901,14 +924,10 @@ def test_binned_fit_never_probes_rdd_on_parquet_source(spark, monkeypatch):
     assert model.tree == expected.tree
 
 
-def test_exact_gini_local_gains_tree_matches_distributed(spark, monkeypatch):
-    """find_best_splits_per_node's exact-mode gini shortcut (checkpoint the
-    candidate counts, collect, numpy gains + local argmax) must fit trees
-    BIT-identical to the distributed two-phase-window + max_by pipeline it
-    replaces.  Force the distributed form by zeroing the budget and compare
-    whole trees on a relation with NULLs, NaNs and a high-cardinality
-    continuous feature."""
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
+def _nulls_nans_lineitem(spark):
+    """sf0.001 lineitem numerics with NULL cells, NaN cells and a
+    high-cardinality continuous feature."""
+    return spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         F.when(F.col("l_quantity") > 45, F.lit(None)).otherwise(
             F.col("l_quantity")
         ).alias("q_nullable"),
@@ -919,21 +938,92 @@ def test_exact_gini_local_gains_tree_matches_distributed(spark, monkeypatch):
         F.col("l_returnflag").alias("target"),
     )
 
-    def fit_tree():
-        m = DecisionTreeClassifier(max_depth=3, criterion=Criterion.GINI)
-        m.fit(li, "target")
-        return m.tree
 
-    local_tree = fit_tree()
-    monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", 0)
-    distributed_tree = fit_tree()
-    assert local_tree == distributed_tree
+def test_exact_gini_local_gains_tree_matches_distributed(spark, monkeypatch):
+    """The exact melt's levels go through the shared scorer: under the
+    driver-collect budget the checkpointed gini counts are collected and
+    scored driver-side (numpy gains, then a local argmax); over it, the
+    distributed two-phase-window + max_by pipeline.  Both forms must fit
+    BIT-identical trees.  Force the distributed form by zeroing the budget
+    and compare whole trees on a relation with NULLs, NaNs and a
+    high-cardinality continuous feature; a spy on
+    ``candidate_split_gains`` pins the form each fit took.  Exact-melt
+    entropy levels keep the distributed form under the budget too."""
+    li = _nulls_nans_lineitem(spark)
+    calls: list = []
+    record_calls(monkeypatch, split_finder, "candidate_split_gains", calls, "distributed")
+
+    def fit_tree(criterion):
+        calls.clear()
+        m = DecisionTreeClassifier(max_depth=3, criterion=criterion)
+        m.fit(li, "target")
+        return m.tree, len(calls)
+
+    budget = split_finder._LOCAL_GAINS_MAX_ROWS
+    for criterion in (Criterion.GINI, Criterion.ENTROPY):
+        monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", budget)
+        local_tree, local_calls = fit_tree(criterion)
+        monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", 0)
+        distributed_tree, distributed_calls = fit_tree(criterion)
+        assert distributed_calls > 0, criterion
+        if criterion == Criterion.GINI:
+            assert local_calls == 0
+        else:
+            assert local_calls == distributed_calls
+        assert local_tree["type"] == "node", criterion
+        assert local_tree == distributed_tree, criterion
+
+
+@pytest.mark.parametrize(
+    "criterion, row_width, budget",
+    # 1 KiB: a 21-row gini cap, under the root level's ~56 rows.  4 KiB:
+    # an 85-row counts cap but a 46-row gains cap at 3 classes.
+    [(Criterion.GINI, 3 + 3, 1 << 10), (Criterion.ENTROPY, 2 * 3 + 5, 4 << 10)],
+)
+def test_packed_sparse_collect_is_byte_bounded(
+    spark, monkeypatch, criterion, row_width, budget
+):
+    """The packed fit scores a level driver-side only while every collect
+    of that scoring fits the driver-collect BYTE budget
+    (``_local_gains_row_cap``), not just a row count.  Gini collects the
+    counts; entropy also collects the gains relation, whose rows carry
+    both child count arrays.  With ``spark.driver.maxResultSize``'s budget
+    too small for the root level at that width (which also rules the
+    dense cubes out), the level must take the distributed gains pipeline,
+    no driver-scored level may exceed the budget, and the tree must not
+    change."""
+    from efficient_trees_spark.operators import histogram as H
+
+    li = _nulls_nans_lineitem(spark)
+    kw = dict(max_depth=3, criterion=criterion, max_bins=16)
+    base = DecisionTreeClassifier(**kw)
+    base.fit(li, "target")
+
+    calls: list = []
+    record_calls(monkeypatch, split_finder, "candidate_split_gains", calls, "distributed")
+    record_calls(monkeypatch, H, "packed_histogram_cubes", calls, "dense")
+    record_calls(monkeypatch, H, "packed_histogram_pair_cubes", calls, "pair")
+    scored: list = []
+    score = split_finder.best_splits_from_counts_pdf
+
+    def spy(pdf, *args, **kwargs):
+        scored.append(len(pdf))
+        return score(pdf, *args, **kwargs)
+
+    monkeypatch.setattr(split_finder, "best_splits_from_counts_pdf", spy)
+    monkeypatch.setattr(H, "stats_collect_budget", lambda _s: budget)
+    bounded = DecisionTreeClassifier(**kw)
+    bounded.fit(li, "target")
+    assert "distributed" in calls
+    assert "dense" not in calls and "pair" not in calls
+    assert all(rows * row_width * 8 <= budget for rows in scored), scored
+    assert bounded.tree == base.tree
 
 
 def test_best_splits_gini_local_matches_two_step_form():
     """The fused winners-only gini path (`_best_splits_gini_local`) must
-    reproduce `_best_split_rows_local(_local_gains_gini_numpy(...))`
-    exactly — same total order (gain desc, position asc, threshold asc,
+    reproduce `_best_split_rows_local` over the full gains frame of
+    `_gini_gains_arrays` exactly — same total order (gain desc, position asc, threshold asc,
     NaN threshold -> -inf key), same winner rows — on a multi-node
     relation engineered with exact gain TIES across features and NaN
     candidates.  Pure driver code, no Spark session needed."""
@@ -984,9 +1074,7 @@ def test_best_splits_gini_local_matches_two_step_form():
     names = [f"f_{j}" for j in range(feats)]
     fused = split_finder._best_splits_gini_local(pdf, ncls, names, "__node_id")
     two_step = split_finder._best_split_rows_local(
-        split_finder._local_gains_gini_numpy(pdf, ncls, "__node_id"),
-        names,
-        "__node_id",
+        _gini_gains_frame(pdf, ncls), names, "__node_id"
     )
     key = lambda r: r["node_id"]
     assert sorted(fused, key=key) == sorted(two_step, key=key)
@@ -1043,7 +1131,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     have produced)."""
     from efficient_trees_spark.operators import histogram, split_finder as sf
     from efficient_trees_spark.operators.histogram import (
-        merge_cubes_to_counts_pdf, merge_pair_cubes,
+        merge_cubes_to_counts_pdf, merge_cube_rows,
         packed_histogram_cubes, packed_histogram_pair_cubes,
         pair_cubes_to_child_counts, pair_cubes_to_level_counts,
         pack_encode_features, distinct_edges_packed,
@@ -1062,24 +1150,24 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     )
     names = ["q", "d_nullable", "t_nanable"]
     edges, _ = distinct_edges_packed(li, names, dtype="f8", with_counts=True)
-    packed = pack_encode_features(li, names, edges, TARGET_IDX, dtype="f8")
+    packed = pack_encode_features(li, names, edges, dtype="f8")
     packed = packed.persist()
     n_classes = 3
 
     # level 0 from the pair cube
     pair_rows = sf._arrow_cube_rows(
         packed_histogram_pair_cubes(
-            packed, names, n_classes, edges, TARGET_IDX, [], "__node_id"
+            packed, names, n_classes, edges, {0: TreeRoute([])}, "__node_id"
         ).toArrow()
     )
-    merged = merge_pair_cubes(pair_rows)
+    merged = merge_cube_rows(pair_rows)
     pdf0_pair, dists = pair_cubes_to_level_counts(
         merged, names, n_classes, edges, "__node_id", emit_node_totals=True
     )
     # level 0 from the one-level cube pass
     rows0 = sf._arrow_cube_rows(
         packed_histogram_cubes(
-            packed, names, n_classes, edges, TARGET_IDX, [], "__node_id",
+            packed, names, n_classes, edges, {0: TreeRoute([])}, "__node_id",
             emit_node_totals=True,
         ).toArrow()
     )
@@ -1112,7 +1200,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     ]
     rows1 = sf._arrow_cube_rows(
         packed_histogram_cubes(
-            packed, names, n_classes, edges, TARGET_IDX, splits, "__node_id"
+            packed, names, n_classes, edges, {0: TreeRoute(splits)}, "__node_id"
         ).toArrow()
     )
     pdf1, _ = merge_cubes_to_counts_pdf(
