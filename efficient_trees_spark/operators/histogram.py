@@ -1293,16 +1293,16 @@ def merge_cubes_to_counts_pdf(
 # ----------------------------------------------- pair cubes (two levels)
 #
 # A depth-d level-wise fit runs one histogram pass per level — at 100 TB
-# that is d full passes over the code cache, and locally d × the ~0.3 s
-# mapInArrow job floor (r12 measured).  When the fit is NARROW enough, one
-# pass can serve TWO levels: accumulate the joint (feature_a bin,
-# feature_b bin) PAIR histogram per pending node.  Level d's per-feature
-# histograms are exact marginals of the pair cube, and once level d's
-# splits are chosen, each CHILD's level-(d+1) per-feature histograms are
-# exact conditional slices (sum over the split feature's left/right slot
-# range) — all int64 additions over the same routed rows a real
-# level-(d+1) pass would count, so both levels' split decisions are
-# bit-identical to the one-level-per-pass form (test-pinned).
+# that is d full passes over the code cache, and locally d × the ~0.22 s
+# empty-mapInArrow job floor (4 vCPUs, `treebench --trace 1`).  When the
+# fit is NARROW enough, one pass can serve TWO levels: accumulate the
+# joint (feature_a bin, feature_b bin) PAIR histogram per pending node.
+# Level d's per-feature histograms are exact marginals of the pair cube,
+# and once level d's splits are chosen, each CHILD's level-(d+1)
+# per-feature histograms are exact conditional slices (sum over the split
+# feature's left/right slot range) — all int64 additions over the same
+# routed rows a real level-(d+1) pass would count, so both levels' split
+# decisions are bit-identical to the one-level-per-pass form (test-pinned).
 #
 # Geometry: the pair axes give every feature lens[j] + 2 slots — its
 # edges, the NaN bucket (a real candidate, routes right), and a NULL slot

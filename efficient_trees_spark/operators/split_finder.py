@@ -585,7 +585,8 @@ def find_best_splits_packed(
     driver-side, with no Spark job (``best_splits_from_counts_pdf``).
     Two tree levels per pass over the code cache: at 100 TB that halves
     the cache scans of a depth-2 binned fit; locally it removes one
-    ~0.3 s job-floor level job.  Both levels' decisions are bit-identical
+    level job at the ~0.22 s empty-mapInArrow job floor (4 vCPUs,
+    ``treebench --trace 1``).  Both levels' decisions are bit-identical
     to the one-level-per-pass form (exact int64 marginals/conditionals of
     the same routed rows — ``histogram.packed_histogram_pair_cubes``;
     test-pinned).  ``carried`` is None whenever the pair budget excludes
@@ -1096,11 +1097,9 @@ def _gini_gains_arrays(pdf, n_classes: int, node_col: str):
     child = cum_n / sum_n * left_g + right_n / sum_n * right_g
     gain = parent_g - child
 
-    import numpy as _np
-
-    nodes = pdf[node_col].to_numpy(_np.int64)[keep]
+    nodes = pdf[node_col].to_numpy(np.int64)[keep]
     features = pdf[FEATURE].to_numpy()[keep]
-    values = pdf[FEATURE_VALUE].to_numpy(_np.float64)[keep]
+    values = pdf[FEATURE_VALUE].to_numpy(np.float64)[keep]
     return nodes, features, values, gain, parent_g, left_counts, right_counts
 
 

@@ -19,6 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory that holds the ``efficient_trees_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "efficient-trees-spark",
@@ -98,6 +101,17 @@ def get_spark(
             "spark.executorEnv.MALLOC_MMAP_THRESHOLD_",
             os.environ.get("SPARK_GRAFT_MALLOC_MMAP_THRESHOLD", "131072"),
         )
+        # Python workers fork from worker_daemon, which stops every task
+        # re-reading the pyspark.zip / py4j / spark-core archive directories
+        # on CPython < 3.12 (measured: an empty mapInArrow job 0.525 ->
+        # 0.216 s on 4 vCPUs; SCALE.md).  The daemon starts before any
+        # task ships code, so executors must import the package at
+        # start-up: from this checkout via executorEnv.PYTHONPATH (a
+        # worker's cwd is not the checkout when the driver runs
+        # elsewhere), or installed.  Override spark.python.daemon.module=
+        # pyspark.daemon through extra_conf where they cannot import it.
+        .config("spark.python.daemon.module", "efficient_trees_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Extra driver-JVM flags (local mode: driver == executors), e.g.
         # -XX:G1PeriodicGCInterval for the measured high-heap GC-laziness

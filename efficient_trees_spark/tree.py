@@ -65,7 +65,7 @@ _TARGET_IDX = split_finder.TARGET_IDX
 _LITERAL_MAP_MAX = 256
 
 
-def _fan_out_small_input(prepared: DataFrame) -> DataFrame:
+def _fan_out_small_input(prepared: DataFrame) -> tuple[DataFrame, int]:
     """The packed path's passes (edge stats or distinct values, the fused
     pack + encode, one Arrow histogram per tree level) parallelize over
     THIS relation's partition count.  A local benchmark table is a handful
