@@ -1,33 +1,27 @@
-"""RandomForestClassifier — bagged ensemble of the exact-split trees.
+"""RandomForestClassifier — bagged ensemble of this engine's trees.
 
 Extension beyond the reference (which ships a single tree —
 ``/root/reference/efficient_trees/tree.py:16``), composed entirely from this
 engine's existing dataflow pieces:
 
-* **One shared prepared relation.** The fit preamble (categorical encoding,
-  label discovery, double/f32 normalization, optional quantile binning) runs
-  ONCE and is persisted; every tree trains against the same cached relation —
-  not T repetitions of the scan.
+* **The single tree's fit preamble, run once**
+  (``DecisionTreeClassifier._training_relation``, with its auto fit-path
+  choice).  Its one relation is persisted and every tree trains on it, so
+  a forest scans the source as often as one tree does, whatever n_trees.
 * **Bootstrap via ``sample(withReplacement=True)``** per tree (seeded, so the
   forest is deterministic given ``seed``), plus per-tree feature subsampling
   (driver-side RNG over column names — zero data movement).
+* **Level-synchronous growth**, the PLANET / MLlib ``RandomForest`` shape:
+  the bags are tagged with their tree id and unioned, and every tree level
+  is ONE pass over that union on either fit path
+  (``tree._build_tree_levelwise``), each row routed by its own tree's
+  splits and scoring only its tree's feature subset.  A forest level costs
+  one level job whatever n_trees is; the per-row work still grows with the
+  total bootstrap rows.
 * **Inference is one projection.** Each tree compiles to a nested CASE column
   (``plans/case_compiler.py``); the majority vote is an ``array_max`` over
   per-class vote-count structs — pure Catalyst expressions, zero shuffles,
   zero UDFs, same tie-break as the single tree (count desc, class asc).
-
-At cluster scale the scan and preparation are amortized across the forest,
-and ``max_bins`` bounds each search's shuffle volume.  Binned forests share
-ONE packed bin-code relation (``operators/histogram.py``), built by the same
-two-scan flow as the single-tree fit (edge sketch pass + fused pack→encode —
-2 source scans total for ANY n_trees, no raw float cache), and grow their
-trees LEVEL-SYNCHRONOUSLY, the PLANET / MLlib ``RandomForest`` shape: each
-tree's bootstrap samples the coded cache, the samples are tagged with their
-tree id and unioned, and every tree level is ONE histogram pass over that
-union (``tree._build_tree_levelwise``) — each row routed by its own tree's
-splits and histogramming only its tree's feature subset.  A forest level
-therefore costs one Spark stage whatever n_trees is; the per-row work still
-grows with the total bootstrap rows.  Exact forests grow one tree at a time.
 """
 
 from __future__ import annotations
@@ -78,6 +72,8 @@ class RandomForestClassifier:
             raise ValueError(f"n_trees must be >= 1, got {n_trees}")
         if not 0.0 < feature_fraction <= 1.0:
             raise ValueError(f"feature_fraction must be in (0, 1], got {feature_fraction}")
+        if not sample_fraction > 0.0:
+            raise ValueError(f"sample_fraction must be > 0, got {sample_fraction}")
         self.n_trees = n_trees
         self.max_depth = max_depth
         self.criterion = Criterion(criterion)
@@ -87,7 +83,7 @@ class RandomForestClassifier:
         self.categorical_columns = categorical_columns
         self.seed = seed
         self.trees: list[dict[str, Any]] | None = None
-        # the shared quantile edges of a binned fit (None when exact)
+        # the shared edges of a packed fit (None on the melt)
         self.bin_edges_: dict[str, list[float]] | None = None
         self.categorical_mappings: dict[str, dict[Any, int]] | None = None
         self._unique_targets: list[Any] | None = None
@@ -101,43 +97,9 @@ class RandomForestClassifier:
             criterion=self.criterion,
             max_bins=self.max_bins,
         )
-        prepared, feature_names, unique_targets = proto._prepare(
-            data, target_name, shrink_features
+        relation, feature_names, unique_targets, bin_edges, code_dtype, n_parts = (
+            proto._training_relation(data, target_name, shrink_features, right_size=False)
         )
-        bin_edges: dict[str, list[float]] | None = None
-        packed_code_dtype = "u1"
-        if self.max_bins is not None:
-            from efficient_trees_spark.tree import (
-                _encode_codes,
-                _fan_out_small_input,
-                _two_scan_binned_edges,
-            )
-
-            # Same fan-out as the single-tree binned fit (see
-            # tree._fan_out_small_input): every Arrow pass below — and each
-            # level's histogram pass — parallelizes over this relation's
-            # partitions.  No-op when the source already has >= cores splits.
-            prepared, ens_n_parts = _fan_out_small_input(prepared)
-            # Same TWO-SCAN flow as the single tree (tree.py fit), amortized
-            # across the forest: pass 1 sketches edges off the columnar
-            # relation (nothing persisted), pass 2 fuse-packs straight to
-            # bin codes — and that ONE code relation is shared by every
-            # tree's bootstrap sample.  A forest therefore scans the source
-            # exactly TWICE regardless of n_trees, with NO raw float cache.
-            # The mapInArrow pass is a 1:1 row map preserving the source
-            # partitioning, so seeded `sample` picks the same logical rows
-            # off the coded relation as it would off the snapped one GIVEN
-            # identical edges (the pinned forest oracle's provenance is
-            # noted in workloads/tree_queries.py).
-            dtype = "f4" if shrink_features else "f8"
-            n_bins, stats = proto._binned_edge_params()
-            bin_edges, _ = _two_scan_binned_edges(
-                prepared, feature_names, n_bins, stats, dtype,
-                n_parts=ens_n_parts,
-            )
-            prepared, packed_code_dtype, _ = _encode_codes(
-                prepared, feature_names, bin_edges, dtype, n_parts=ens_n_parts
-            )
         self.bin_edges_ = bin_edges
         self.categorical_mappings = proto.categorical_mappings
         self._unique_targets = unique_targets
@@ -150,64 +112,40 @@ class RandomForestClassifier:
             else feature_names
             for _ in range(self.n_trees)
         ]
-        grower = DecisionTreeClassifier(
-            max_depth=self.max_depth, criterion=self.criterion
-        )
 
-        prepared = prepared.persist()
+        relation = relation.persist()
         try:
-            if bin_edges is not None:
-                # Materialize the code cache in its own job, one task per
-                # partition (a write to Spark's no-op sink: one stage, where
-                # count() runs three jobs).  Left to the first level pass,
-                # the coalesced union's tasks each read every tree's sample
-                # of the same partitions in the same order, so they queue on
-                # one another to compute each cache block (4 trees, 300k
-                # rows, 4 cores: the pass took 2.0 s with the encode in it,
-                # 1.1 s after a ~0.4 s materializing job).
-                prepared.write.format("noop").mode("overwrite").save()
-            bags = [
-                prepared.sample(
-                    withReplacement=True,
-                    fraction=self.sample_fraction,
-                    seed=self.seed + t,
-                )
-                for t in range(self.n_trees)
-            ]
-            if bin_edges is not None:
-                # Level-synchronous growth: the bags are tagged with their
-                # tree id, unioned, and only then coalesced back to the
-                # code relation's partition count, so sampling sees the
-                # persisted partitions and every level is ONE stage of P
-                # tasks over all trees.  The bags are not persisted: a
-                # level re-samples the persisted codes, and the sampler is
-                # seeded per partition, so each level draws the same rows.
-                forest_rows = functools.reduce(
-                    DataFrame.union,
-                    [bag.withColumn(TREE_COL, F.lit(t)) for t, bag in enumerate(bags)],
-                ).coalesce(ens_n_parts)
-                self.trees = grower._build_tree_levelwise(
-                    forest_rows,
-                    subsets,
-                    unique_targets,
-                    bin_edges=bin_edges,
-                    packed_all_features=feature_names,
-                    packed_code_dtype=packed_code_dtype,
-                    packed_n_parts=ens_n_parts,
-                    tree_col=TREE_COL,
-                )
-            else:
-                self.trees = []
-                for bag, subset in zip(bags, subsets):
-                    bag = bag.persist()
-                    try:
-                        self.trees += grower._build_tree_levelwise(
-                            bag, [subset], unique_targets
-                        )
-                    finally:
-                        bag.unpersist()
+            # Materialize the cache in its own one-stage job (a no-op sink
+            # write).  Left to the first level pass, the union's tasks each
+            # read every tree's sample of the same partitions and queue on
+            # one another to compute each cache block (4 trees, 300k rows, 4
+            # cores: a packed pass took 2.0 s with the encode in it, 1.1 s
+            # after a ~0.4 s materializing job).  The bags are not
+            # persisted: the sampler is seeded per partition, so every
+            # level re-draws the same rows from the cache.
+            relation.write.format("noop").mode("overwrite").save()
+            forest_rows = functools.reduce(
+                DataFrame.union,
+                [
+                    relation.sample(True, self.sample_fraction, self.seed + t)
+                    .withColumn(TREE_COL, F.lit(t))
+                    for t in range(self.n_trees)
+                ],
+            )
+            if n_parts is not None:  # one level stage of n_parts tasks
+                forest_rows = forest_rows.coalesce(n_parts)
+            self.trees = proto._build_tree_levelwise(
+                forest_rows,
+                subsets,
+                unique_targets,
+                bin_edges=bin_edges,
+                all_features=feature_names,
+                packed_code_dtype=code_dtype,
+                packed_n_parts=n_parts,
+                tree_col=TREE_COL,
+            )
         finally:
-            prepared.unpersist()
+            relation.unpersist()
 
     # ------------------------------------------------------------- predict
 

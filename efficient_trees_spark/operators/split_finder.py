@@ -423,20 +423,24 @@ def _gains_from_prefix_sums(
 
 def find_best_splits_per_node(
     df: DataFrame,
-    feature_names: list[str],
+    tree_features: list[list[str]],
     n_classes: int,
     criterion: Criterion,
     node_col: str,
-) -> list[dict[str, Any]]:
-    """Best split of EVERY node of a tree level in one pass (PLANET-style),
-    on the exact melt: ``df`` is the prepared training relation with a
-    routing node-id column; its counts go to the shared scorer
+    slot_ends: list[int],
+) -> list[list[dict[str, Any]]]:
+    """Best split of EVERY pending node of every tree of a level in one
+    pass (PLANET-style), on the exact melt: ``df`` is the prepared
+    training relation with a routing slot column, each row NULL in the
+    features outside its own tree's.  Tree k owns the slots below
+    ``slot_ends[k]``; the counts go to the shared scorer
     (:func:`_score_counts`)."""
-    counts = _melt_counts(df, feature_names, n_classes, node_col)
+    names = list(dict.fromkeys(f for fl in tree_features for f in fl))
+    counts = _melt_counts(df, names, n_classes, node_col)
     found, _ = _score_counts(
-        counts, [list(feature_names)], n_classes, criterion, node_col
+        counts, tree_features, n_classes, criterion, node_col, slot_ends
     )
-    return found[0]
+    return found
 
 
 # A level's aggregated counts relation above this many rows keeps the
@@ -751,7 +755,7 @@ def find_best_splits_packed(
             n_classes,
             criterion,
             node_col,
-            slot_ends=list(accumulate(len(trees[t].pending) for t in order)),
+            list(accumulate(len(trees[t].pending) for t in order)),
             est_rows=est_rows,
             bounded_candidates=True,
             node_totals=node_totals,
@@ -793,7 +797,7 @@ def _score_counts(
     n_classes: int,
     criterion: Criterion,
     node_col: str,
-    slot_ends: list[int] | None = None,
+    slot_ends: list[int],
     est_rows: int = 0,
     bounded_candidates: bool = False,
     node_totals: bool = False,
@@ -802,8 +806,8 @@ def _score_counts(
     relation ``(node_col, feature, feature_value, class_*_count,
     count_examples)`` → each tree's best split per slot.  Tree k owns the
     ``node_col`` slots below ``slot_ends[k]`` and above the previous
-    tree's (None: one tree owns all) and breaks ties by its own
-    ``tree_features[k]``; returned splits carry the slot as ``node_id``.
+    tree's and breaks ties by its own ``tree_features[k]``; returned
+    splits carry the slot as ``node_id``.
 
     While the relation may fit ``_local_gains_row_cap`` (rows AND bytes
     of every collect the criterion's scoring makes, so a high-class-count
@@ -840,10 +844,8 @@ def _score_counts(
                     zip(dist[node_col].tolist(), map(_class_pairs, rows.to_numpy()))
                 )
                 pdf = pdf[~mask]
-            parts = [pdf]
-            if slot_ends is not None:
-                owner = np.searchsorted(slot_ends, pdf[node_col].to_numpy(), "right")
-                parts = [pdf[owner == k] for k in range(len(tree_features))]
+            owner = np.searchsorted(slot_ends, pdf[node_col].to_numpy(), "right")
+            parts = [pdf[owner == k] for k in range(len(tree_features))]
             return [
                 best_splits_from_counts_pdf(
                     part, spark, n_classes, fl, node_col, criterion
@@ -872,8 +874,7 @@ def _score_counts(
             position = position.when(F.col(node_col) < int(end), _feature_position(fl))
     found: list[list[dict[str, Any]]] = [[] for _ in tree_features]
     for b in _best_split_rows(gains, position, node_col):
-        k = 0 if slot_ends is None else bisect_right(slot_ends, b["node_id"])
-        found[k].append(b)
+        found[bisect_right(slot_ends, b["node_id"])].append(b)
     return found, None
 
 

@@ -7,14 +7,14 @@ Same capabilities as the reference classifier
   quantile bins — SURVEY.md §7.3), or opt-in quantile-binned candidates
   (``max_bins``).
 * **Level-wise growth, two fit paths.**  Every pending node of a tree level
-  is scored in ONE pass (PLANET-style).  The packed level loop serves every
-  binned fit and every exact fit whose distinct values fit uint16 code
-  space: the features are encoded once into a persisted bin-code relation
-  (1 or 2 bytes/cell) and each level is one Arrow histogram pass over it
-  with the tree routing run in numpy (``operators/histogram.py``).  The
-  exact melt serves exact fits past code space and exact forests: each
-  level unpivots the persisted training relation, routed by a compiled
-  node-id column, into one declarative gains plan
+  (of every tree of a forest) is scored in ONE pass (PLANET-style).  The
+  packed level loop serves every binned fit and every wide exact fit whose
+  distinct values fit uint16 code space: the features are encoded once
+  into a persisted bin-code relation (1 or 2 bytes/cell) and each level is
+  one Arrow histogram pass over it with the tree routing run in numpy
+  (``operators/histogram.py``).  The exact melt serves the other exact
+  fits: each level unpivots the persisted training relation, routed by a
+  compiled slot column, into one declarative gains plan
   (``operators/split_finder.py``).  Both paths share the gain expressions
   and tie-breaks, so they grow identical trees.
 * **Batch prediction compiled to a single CASE projection**
@@ -51,6 +51,7 @@ from collections.abc import Iterable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -64,6 +65,10 @@ _TARGET_IDX = split_finder.TARGET_IDX
 # mapping table instead of a literal CASE map (SURVEY.md §2.8).
 _LITERAL_MAP_MAX = 256
 
+# Exact fits this wide take the packed path under hist_method="auto": the
+# melt's Expand multiplies rows by width.
+_AUTO_PACKED_MIN_FEATURES = 64
+
 
 def _fan_out_small_input(prepared: DataFrame) -> tuple[DataFrame, int]:
     """The packed path's passes (edge stats or distinct values, the fused
@@ -74,11 +79,11 @@ def _fan_out_small_input(prepared: DataFrame) -> tuple[DataFrame, int]:
     anything is persisted, paying one bounded shuffle.  On a real cluster
     the source has far more splits than cores and this is a no-op.  The
     order-statistic edge placement is partitioning-sensitive (within the
-    documented rank error), so the single tree and the forest both fan out
-    here, before their edge pass.  Melt fits keep the source partitioning:
-    their map side is pure codegen and the repartition was A/B-measured
-    slower (see the note in ``_prepare``).  Partition count via the ~1 ms
-    file-size estimate when the lineage is a plain scan pipeline (r11 — the
+    documented rank error), so it runs before the edge pass.  Melt fits
+    keep the source partitioning: their map side is pure codegen and the
+    repartition was A/B-measured slower (see the note in
+    ``_training_relation``).  Partition count via the ~1 ms file-size
+    estimate when the lineage is a plain scan pipeline (r11 — the
     ``df.rdd`` probe costs ~0.4 s of physical planning per call), the probe
     otherwise.
 
@@ -478,133 +483,48 @@ class DecisionTreeClassifier:
             unconditionally to avoid an extra min/max scan.  Integer features
             are exact either way.
         """
-        prepared, feature_names, unique_targets = self._prepare(
-            data, target_name, shrink_features
+        relation, feature_names, unique_targets, bin_edges, code_dtype, n_parts = (
+            self._training_relation(data, target_name, shrink_features)
         )
-
-        hist_method = self.hist_method
-        exact_auto_fallback = False
-        if hist_method == "auto":
-            if self.max_bins is not None:
-                hist_method = "arrow"
-            elif len(feature_names) >= 64:
-                # Wide exact fit: attempt the packed exact path (candidates
-                # = every distinct value); fall back to the melt with a
-                # warning if any feature exceeds code space.
-                hist_method = "arrow"
-                exact_auto_fallback = True
-            else:
-                hist_method = "expand"
-        if hist_method == "expand" and len(feature_names) >= 64:
-            # The melt's Expand multiplies rows by width (75 s at just
-            # 60k x 190 — histogram.py module notes); never let a wide exact
-            # fit take it silently.
-            warnings.warn(
-                f"exact-mode melt split search over {len(feature_names)} "
-                "features Expands every row per feature; prefer "
-                "hist_method='arrow' (packed exact, needs <= 65533 distinct "
-                "values per feature) or max_bins for quantile candidates",
-                stacklevel=2,
-            )
-
-        known_parts: int | None = None
-        bin_edges: dict[str, list[float]] | None = None
-        code_dtype = "u1"
-        if hist_method == "arrow":
-            from efficient_trees_spark.operators.histogram import (
-                _MAX_PACKED16_EDGES,
-                distinct_edges_packed,
-            )
-
-            prepared, known_parts = _fan_out_small_input(prepared)
-            # Kept for the auto-exact fallback: the melt path must see the
-            # double-typed relation, not the f32-narrowed one below.
-            prepared_base = prepared
-            if shrink_features:
-                # Shrunk features are f32-representable by construction, so
-                # the edge and encode passes can read float32: halves the
-                # Arrow batch volume each transfers.  Lossless —
-                # searchsorted compares f32 upcast to the float64 edges,
-                # and the emitted candidate values are the edges themselves.
-                prepared = prepared.selectExpr(
-                    *[
-                        f"CAST(`{f.replace('`', '``')}` AS FLOAT) AS "
-                        f"`{f.replace('`', '``')}`"
-                        for f in feature_names
-                    ],
-                    _TARGET_IDX,
-                )
-            dtype = "f4" if shrink_features else "f8"
-            # Two streaming scans of the source and no raw cache at all —
-            # the XGBoost approx-tree architecture.  Pass 1 collects
-            # per-partition order statistics (binned) or distinct values
-            # (exact) only; pass 2 fuses pack + encode straight to bin
-            # codes, the one persisted training artifact (1 or 2
-            # bytes/cell).  In exact mode the edges ARE the distinct
-            # values, so snapping is the identity and the histogram
-            # relation — hence the tree — is bit-identical to the exact
-            # melt (the reference's tree.py:244 semantics).
-            if self.max_bins is not None:
-                n_bins, stats = self._binned_edge_params()
-                bin_edges, n_rows_est = _two_scan_binned_edges(
-                    prepared, feature_names, n_bins, stats, dtype,
-                    n_parts=known_parts,
-                )
-            else:
-                try:
-                    bin_edges, n_rows_est = distinct_edges_packed(
-                        prepared,
-                        feature_names,
-                        max_distinct=_MAX_PACKED16_EDGES,
-                        dtype=dtype,
-                        with_counts=True,
-                    )
-                except ValueError:
-                    if not exact_auto_fallback:
-                        raise
-                    warnings.warn(
-                        "auto exact fit: a feature exceeds uint16 code space "
-                        "(> 65533 distinct values) — falling back to the "
-                        "melt split search; consider max_bins for the "
-                        "bounded scale path",
-                        stacklevel=2,
-                    )
-                    prepared = prepared_base
-            if bin_edges is not None:
-                self.bin_edges_ = bin_edges
-                prepared, code_dtype, known_parts = _encode_codes(
-                    prepared, feature_names, bin_edges, dtype,
-                    n_rows_est=n_rows_est, n_parts=known_parts,
-                )
-
         # The only relation a single-tree fit persists: the code relation
         # (packed loop) or the prepared training relation (melt), read once
         # per level.
-        prepared = prepared.persist()
+        relation = relation.persist()
         try:
             [self.tree] = self._build_tree_levelwise(
-                prepared,
+                relation,
                 [feature_names],
                 unique_targets,
                 bin_edges=bin_edges,
                 packed_code_dtype=code_dtype,
-                packed_n_parts=known_parts,
+                packed_n_parts=n_parts,
             )
         finally:
-            prepared.unpersist()
+            relation.unpersist()
 
-    def _prepare(
-        self, data: DataFrame, target_name: str, shrink_features: bool
-    ) -> tuple[DataFrame, list[str], list[Any]]:
-        """Shared fit preamble: categorical encoding, class-label discovery,
-        and the normalized training relation — features cast to double (a
-        common unpivot value type), target encoded to its class index (cheap
-        int comparisons in the conditional counts).  With shrink_features,
-        fractional features round-trip through float32 first (reference
-        shrink_dtype, tree.py:90) so every candidate threshold downstream is
-        an f32 value; integer/decimal features go straight to double (exact,
-        like polars' lossless int shrink).  Also used once per ensemble by
-        RandomForestClassifier."""
+    def _training_relation(
+        self,
+        data: DataFrame,
+        target_name: str,
+        shrink_features: bool,
+        right_size: bool = True,
+    ) -> tuple[DataFrame, list[str], list[Any], dict | None, str, int | None]:
+        """The fit preamble of the tree and the forest.  Returns
+        ``(relation, feature_names, unique_targets, bin_edges, code_dtype,
+        n_parts)``: bin_edges is None on the melt, n_parts None when unknown.
+
+        First the prepared relation: categorical encoding, class-label
+        discovery, and the normalized training relation — features cast to
+        double (a common unpivot value type), target encoded to its class
+        index (cheap int comparisons in the conditional counts).  With
+        shrink_features, fractional features round-trip through float32
+        first (reference shrink_dtype, tree.py:90) so every candidate
+        threshold downstream is an f32 value; integer/decimal features go
+        straight to double (exact, like polars' lossless int shrink).  An
+        input with no rows raises here, before any fit pass runs.  Then the
+        fit path: on the packed path, fan out, place the edges and encode
+        (right-sized for the cache unless ``right_size`` is False: see
+        :func:`_encode_codes`)."""
         feature_names = [c for c in data.columns if c != target_name]
 
         if self.categorical_columns:
@@ -617,6 +537,8 @@ class DecisionTreeClassifier:
             row[0]
             for row in data.select(target_name).distinct().orderBy(target_name).collect()
         ]
+        if not unique_targets:
+            raise ValueError("cannot fit on training data with no rows")
         self._unique_targets = unique_targets
 
         fractional = {
@@ -661,7 +583,105 @@ class DecisionTreeClassifier:
         # map side, because the expensive work all happens after the split
         # finder's own shuffles, which AQE already fans out.  Keep the
         # source partitioning.
-        return prepared, feature_names, unique_targets
+
+        hist_method = self.hist_method
+        exact_auto_fallback = False
+        wide = len(feature_names) >= _AUTO_PACKED_MIN_FEATURES
+        if hist_method == "auto":
+            if self.max_bins is not None:
+                hist_method = "arrow"
+            elif wide:
+                # Wide exact fit: attempt the packed exact path (candidates
+                # = every distinct value); fall back to the melt with a
+                # warning if any feature exceeds code space.
+                hist_method = "arrow"
+                exact_auto_fallback = True
+            else:
+                hist_method = "expand"
+        if hist_method == "expand" and wide:
+            # The melt's Expand multiplies rows by width (75 s at just
+            # 60k x 190 — histogram.py module notes); never let a wide exact
+            # fit take it silently.
+            warnings.warn(
+                f"exact-mode melt split search over {len(feature_names)} "
+                "features Expands every row per feature; prefer "
+                "hist_method='arrow' (packed exact, needs <= 65533 distinct "
+                "values per feature) or max_bins for quantile candidates",
+                stacklevel=3,
+            )
+
+        n_parts: int | None = None
+        bin_edges: dict[str, list[float]] | None = None
+        code_dtype = "u1"
+        if hist_method == "arrow":
+            from efficient_trees_spark.operators.histogram import (
+                _MAX_PACKED16_EDGES,
+                distinct_edges_packed,
+            )
+
+            prepared, n_parts = _fan_out_small_input(prepared)
+            # Kept for the auto-exact fallback: the melt path must see the
+            # double-typed relation, not the f32-narrowed one below.
+            prepared_base = prepared
+            if shrink_features:
+                # Shrunk features are f32-representable by construction, so
+                # the edge and encode passes can read float32: halves the
+                # Arrow batch volume each transfers.  Lossless —
+                # searchsorted compares f32 upcast to the float64 edges,
+                # and the emitted candidate values are the edges themselves.
+                prepared = prepared.selectExpr(
+                    *[
+                        f"CAST(`{f.replace('`', '``')}` AS FLOAT) AS "
+                        f"`{f.replace('`', '``')}`"
+                        for f in feature_names
+                    ],
+                    _TARGET_IDX,
+                )
+            dtype = "f4" if shrink_features else "f8"
+            # Two streaming scans of the source and no raw cache at all —
+            # the XGBoost approx-tree architecture.  Pass 1 collects
+            # per-partition order statistics (binned) or distinct values
+            # (exact) only; pass 2 fuses pack + encode straight to bin
+            # codes, the one persisted training artifact (1 or 2
+            # bytes/cell).  In exact mode the edges ARE the distinct
+            # values, so snapping is the identity and the histogram
+            # relation — hence the tree — is bit-identical to the exact
+            # melt (the reference's tree.py:244 semantics).
+            if self.max_bins is not None:
+                n_bins, stats = self._binned_edge_params()
+                bin_edges, n_rows_est = _two_scan_binned_edges(
+                    prepared, feature_names, n_bins, stats, dtype,
+                    n_parts=n_parts,
+                )
+            else:
+                try:
+                    bin_edges, n_rows_est = distinct_edges_packed(
+                        prepared,
+                        feature_names,
+                        max_distinct=_MAX_PACKED16_EDGES,
+                        dtype=dtype,
+                        with_counts=True,
+                    )
+                except ValueError:
+                    if not exact_auto_fallback:
+                        raise
+                    warnings.warn(
+                        "auto exact fit: a feature exceeds uint16 code space "
+                        "(> 65533 distinct values) — falling back to the "
+                        "melt split search; consider max_bins for the "
+                        "bounded scale path",
+                        stacklevel=3,
+                    )
+                    prepared = prepared_base
+            if bin_edges is not None:
+                self.bin_edges_ = bin_edges
+                prepared, code_dtype, n_parts = _encode_codes(
+                    prepared, feature_names, bin_edges, dtype,
+                    n_rows_est=n_rows_est if right_size else None,
+                    n_parts=n_parts,
+                )
+
+        return prepared, feature_names, unique_targets, bin_edges, code_dtype, n_parts
 
     # -------------------------------------------------- quantile binning
 
@@ -696,23 +716,23 @@ class DecisionTreeClassifier:
     # ------------------------------------------------ level-wise training
 
     @staticmethod
-    def _routing_expr(node: dict[str, Any]):
-        """Compile the partial tree into a node-id routing Column: rows land
-        on their pending node's id, NULL under finished leaves or NULL split
+    def _routing_expr(node: dict[str, Any], slot: dict[int, int]):
+        """Compile the partial tree into a routing Column: rows land on their
+        pending node's ``slot``, NULL under finished leaves or NULL split
         features (the reference's drop-from-both-children semantics)."""
         if node["type"] == "pending":
-            return F.lit(node["node_id"])
+            return F.lit(slot[node["node_id"]])
         if node["type"] == "leaf":
             return F.lit(None).cast("int")
         feature, threshold = node["feature"], node["threshold"]
         return (
             F.when(
                 F.col(feature) <= threshold,
-                DecisionTreeClassifier._routing_expr(node["left"]),
+                DecisionTreeClassifier._routing_expr(node["left"], slot),
             )
             .when(
                 F.col(feature) > threshold,
-                DecisionTreeClassifier._routing_expr(node["right"]),
+                DecisionTreeClassifier._routing_expr(node["right"], slot),
             )
             .otherwise(F.lit(None).cast("int"))
         )
@@ -766,7 +786,7 @@ class DecisionTreeClassifier:
         tree_features: list[list[str]],
         unique_targets: list[Any],
         bin_edges: dict[str, list[float]] | None = None,
-        packed_all_features: list[str] | None = None,
+        all_features: list[str] | None = None,
         packed_code_dtype: str = "u1",
         packed_n_parts: int | None = None,
         tree_col: str | None = None,
@@ -783,14 +803,14 @@ class DecisionTreeClassifier:
         (``split_finder.find_best_splits_per_node``).
 
         Grows ``len(tree_features)`` trees level-synchronously, tree t
-        scoring ``tree_features[t]``: on the packed path one histogram pass
-        per level covers the pending nodes of EVERY tree (rows carry their
-        tree id in ``tree_col``), so a forest pays one Spark stage per
+        scoring ``tree_features[t]`` (``all_features`` is the relation's
+        full feature list when a tree scores a subset): on either path one
+        pass per level covers the pending nodes of EVERY tree (rows carry
+        their tree id in ``tree_col``), so a forest pays one level job per
         level, not one per tree; a single tree is the one-element case.
-        The melt path grows one tree.  ``data`` is read once per level —
-        the caller persists it (or, for a forest's sampled bags, makes it
-        re-derivable: seeded sampling of a persisted relation draws the
-        same rows every level).
+        ``data`` is read once per level — the caller persists it (or, for a
+        forest's sampled bags, makes it re-derivable: seeded sampling of a
+        persisted relation draws the same rows every level).
 
         Class distributions cost no extra jobs beyond the root's: a node's
         distribution over its children is a free by-product of its split scan
@@ -807,12 +827,22 @@ class DecisionTreeClassifier:
         node_col = "__node_id"
         n_trees = len(tree_features)
         packed = bin_edges is not None
-        if n_trees > 1 and not (packed and tree_col):
-            raise ValueError(
-                "growing several trees in one pass needs the packed code "
-                "relation and a tree-id column"
+        all_names = all_features or tree_features[0]
+        if not packed and any(fl != all_names for fl in tree_features):
+            # A melt row scores only its own tree's features: the others
+            # are NULL on it, and the melt drops NULL cells.
+            owners = {
+                f: [t for t, fl in enumerate(tree_features) if f in fl]
+                for f in all_names
+            }
+            data = data.select(
+                tree_col,
+                _TARGET_IDX,
+                *[
+                    F.when(F.col(tree_col).isin(owners[f]), F.col(f)).alias(f)
+                    for f in all_names
+                ],
             )
-        all_names = packed_all_features or tree_features[0]
         roots: list[dict[str, Any]] = [
             {"type": "pending", "node_id": 0} for _ in range(n_trees)
         ]
@@ -906,30 +936,59 @@ class DecisionTreeClassifier:
                 # independent — submit both and let the scheduler overlap
                 # them.
                 with ThreadPoolExecutor(max_workers=2) as pool:
-                    dist_future = (
-                        pool.submit(
-                            self._root_distributions, data, tree_col, n_trees
-                        )
-                        if need_root_dist
-                        else None
-                    )
-                    if not at_max_depth:
-                        with_node = data.withColumn(
-                            node_col, self._routing_expr(roots[0])
-                        ).filter(F.col(node_col).isNotNull())
-                        best_by_node[0] = {
-                            b["node_id"]: b
-                            for b in split_finder.find_best_splits_per_node(
-                                with_node,
-                                tree_features[0],
-                                len(unique_targets),
-                                self.criterion,
-                                node_col,
+                    dist_future = None
+                    if need_root_dist:
+                        with warnings.catch_warnings():
+                            # passes on the job group, not a session's tags
+                            warnings.filterwarnings("ignore", "Spark session is not")
+                            root_distributions = inheritable_thread_target(
+                                self._root_distributions
                             )
-                        }
+                        dist_future = pool.submit(
+                            root_distributions, data, tree_col, n_trees
+                        )
+                    if not at_max_depth:
+                        # Dense slots over the level's (tree, node) pairs,
+                        # tree by tree, as the packed pass assigns them;
+                        # each row takes its own tree's route.
+                        slot_node: list[int] = []
+                        slot_ends: list[int] = []
+                        routes = []
+                        for t in active:
+                            slots = {
+                                n: len(slot_node) + i
+                                for i, n in enumerate(frontiers[t])
+                            }
+                            slot_node += frontiers[t]
+                            slot_ends.append(len(slot_node))
+                            route = self._routing_expr(roots[t], slots)
+                            routes.append(
+                                route if tree_col is None
+                                else F.when(F.col(tree_col) == t, route)
+                            )
+                        found = split_finder.find_best_splits_per_node(
+                            data.withColumn(node_col, F.coalesce(*routes)).filter(
+                                F.col(node_col).isNotNull()
+                            ),
+                            [tree_features[t] for t in active],
+                            len(unique_targets),
+                            self.criterion,
+                            node_col,
+                            slot_ends,
+                        )
+                        for t, best in zip(active, found):
+                            best_by_node[t] = {
+                                slot_node[b["node_id"]]: b for b in best
+                            }
                     if dist_future is not None:
                         for t, dist in enumerate(dist_future.result()):
                             distributions[t][0] = dist
+            for t in range(n_trees):
+                if need_root_dist and not distributions[t][0]:
+                    raise ValueError(
+                        f"tree {t}'s bootstrap sample drew no rows; raise "
+                        "sample_fraction"
+                    )
 
             for t in active:
                 frontiers[t] = self._grow_frontier(

@@ -3,8 +3,9 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
-from efficient_trees_spark import RandomForestClassifier
+from efficient_trees_spark import DecisionTreeClassifier, RandomForestClassifier
 from tests.iris_fixture import train_test_frames
 from tests.snapping import snap_to_edges
 from tests.spies import record_calls
@@ -141,12 +142,14 @@ def test_binned_forest_packed_matches_snapped_expand(spark):
     assert rf_packed.trees == rf_exact.trees
 
 
-def test_forest_tree_equals_single_tree_forest_at_its_seed(spark):
-    """Growing trees together changes no tree: with every feature in every
-    tree, tree t of a 4-tree forest seeded s is the only tree of a 1-tree
-    forest seeded s + t (same bootstrap draw, same splits)."""
+@pytest.mark.parametrize("max_bins", [8, None])
+def test_forest_tree_equals_single_tree_forest_at_its_seed(spark, max_bins):
+    """Growing trees together changes no tree, on either fit path: with
+    every feature in every tree, tree t of a 4-tree forest seeded s is the
+    only tree of a 1-tree forest seeded s + t (same bootstrap draw, same
+    splits)."""
     train, _, _ = _iris(spark)
-    kwargs = dict(max_depth=3, max_bins=8)
+    kwargs = dict(max_depth=3, max_bins=max_bins)
     forest = RandomForestClassifier(n_trees=4, seed=5, **kwargs)
     forest.fit(train, "target")
     for t, tree in enumerate(forest.trees):
@@ -197,3 +200,25 @@ def test_forest_level_branches_agree(spark, monkeypatch):
     assert reached[1] == {"sparse"}
     assert reached[2] == {"sparse", "distributed"}
     assert dense == sparse == distributed
+
+
+@pytest.mark.parametrize("fraction", [0.0, -0.5])
+def test_forest_rejects_nonpositive_sample_fraction(fraction):
+    with pytest.raises(ValueError, match="sample_fraction must be > 0"):
+        RandomForestClassifier(sample_fraction=fraction)
+
+
+def test_fit_rejects_empty_training_data(spark):
+    train, _, _ = _iris(spark)
+    with pytest.raises(ValueError, match="training data with no rows"):
+        DecisionTreeClassifier().fit(train.limit(0), "target")
+
+
+@pytest.mark.parametrize("max_bins", [8, None])
+def test_forest_names_the_tree_whose_bootstrap_drew_no_rows(spark, max_bins):
+    """Six bags of ~0.1 iris rows each: some bag draws none, and the fit says
+    which tree it is on either fit path."""
+    train, _, _ = _iris(spark)
+    rf = RandomForestClassifier(n_trees=6, sample_fraction=0.001, max_bins=max_bins)
+    with pytest.raises(ValueError, match=r"tree \d+'s bootstrap sample drew no rows"):
+        rf.fit(train, "target")

@@ -157,13 +157,16 @@ def test_wide_fit_arrow_expand_parity(spark):
     assert tree["type"] == "node"  # the fit actually split
 
 
-def _level_passes(spark, monkeypatch, fit) -> tuple[int, int]:
-    """(calls, Spark jobs) of the packed level search during ``fit()``,
-    its jobs counted by a job group the wrapped search sets."""
+def _level_passes(
+    spark, monkeypatch, fit, name="find_best_splits_packed"
+) -> tuple[int, int]:
+    """(calls, Spark jobs) of the level search ``split_finder.<name>``
+    during ``fit()``, its jobs counted by a job group the wrapped search
+    sets."""
     sc = spark.sparkContext
     group = f"level-pass-{uuid.uuid4().hex}"
     calls = []
-    search = split_finder.find_best_splits_packed
+    search = getattr(split_finder, name)
 
     def tagged(*args, **kwargs):
         calls.append(1)
@@ -174,11 +177,11 @@ def _level_passes(spark, monkeypatch, fit) -> tuple[int, int]:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", prev)
 
-    monkeypatch.setattr(split_finder, "find_best_splits_packed", tagged)
+    monkeypatch.setattr(split_finder, name, tagged)
     try:
         fit()
     finally:
-        monkeypatch.setattr(split_finder, "find_best_splits_packed", search)
+        monkeypatch.setattr(split_finder, name, search)
     return len(calls), len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -202,6 +205,49 @@ def test_depth2_binned_fits_run_one_level_job(spark, monkeypatch):
     )
     assert _level_passes(spark, monkeypatch, lambda: forest.fit(data, "target")) == (1, 1)
     assert all(t["type"] == "node" for t in forest.trees)
+
+
+def test_exact_forest_runs_one_melt_per_level(spark, monkeypatch):
+    """An exact forest grows its trees level-synchronously on the melt
+    too: a 4-tree depth-3 forest runs one melt per level for all four
+    trees, not one per tree and level."""
+    from efficient_trees_spark.ensemble import RandomForestClassifier
+    from tests.iris_fixture import train_test_frames
+
+    train_pd, _ = train_test_frames(string_labels=False)
+    data = spark.createDataFrame(train_pd.drop(columns=["categorical_feature"]))
+    forest = RandomForestClassifier(
+        n_trees=4, max_depth=3, criterion=Criterion.GINI, feature_fraction=0.75, seed=3
+    )
+    calls, _ = _level_passes(
+        spark, monkeypatch, lambda: forest.fit(data, "target"),
+        name="find_best_splits_per_node",
+    )
+    assert calls == 3
+    assert forest.bin_edges_ is None
+    assert all(t["type"] == "node" for t in forest.trees)
+
+
+def test_melt_fit_runs_every_job_in_the_callers_job_group(spark):
+    """The melt's level-0 root-distribution job runs on a pool thread; it
+    must carry the caller's job group like every other job of the fit, so
+    no job of the fit is left without a group."""
+    from tests.iris_fixture import train_test_frames
+
+    train_pd, _ = train_test_frames(string_labels=False)
+    data = spark.createDataFrame(train_pd.drop(columns=["categorical_feature"]))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"melt-fit-{uuid.uuid4().hex}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "depth-1 melt fit")
+    try:
+        DecisionTreeClassifier(max_depth=1, hist_method="expand").fit(data, "target")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup(group)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
 
 
 def test_hist_method_validation():
@@ -266,6 +312,8 @@ def test_exact_uint16_parity_past_253_distinct(spark):
     m_packed = DecisionTreeClassifier(max_depth=3, hist_method="arrow")
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any fallback warning fails the test
+        # pyspark leaves collect sockets to the garbage collector
+        warnings.simplefilter("ignore", ResourceWarning)
         m_packed.fit(data, "target")
     # the wide feature really went through packed codes: its full distinct
     # set became the candidate edges (the u2 selection precondition)
@@ -295,9 +343,50 @@ def test_auto_wide_exact_uses_packed_when_cardinality_fits(spark):
     m = DecisionTreeClassifier(max_depth=2)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
+        warnings.simplefilter("ignore", ResourceWarning)
         m.fit(data, "target")
     assert m.bin_edges_ is not None
     assert all(len(e) <= 253 for e in m.bin_edges_.values())
+
+
+def test_wide_exact_forest_takes_the_packed_path(spark, monkeypatch):
+    """An exact forest picks its fit path the way the single tree does:
+    at >= 64 features it takes the packed exact path (distinct-value
+    edges, no melt-width warning), and forcing the melt grows the same
+    trees.  The input already has ``defaultParallelism`` partitions, so
+    the packed path's fan-out is a no-op and both fits draw the same
+    bags."""
+    from efficient_trees_spark import tree as tree_module
+    from efficient_trees_spark.ensemble import RandomForestClassifier
+    from efficient_trees_spark.operators import histogram
+
+    cols = [
+        ((F.col("id") * (j + 3)) % (7 + j % 5)).cast("double").alias(f"f{j}")
+        for j in range(64)
+    ]
+    data = (
+        spark.range(400)
+        .select(*cols, ((F.col("id") * 7) % 5 < 2).cast("int").alias("target"))
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    kwargs = dict(n_trees=3, max_depth=2, feature_fraction=0.5, seed=4)
+    calls: list = []
+    record_calls(monkeypatch, histogram, "distinct_edges_packed", calls, "distinct")
+    packed = RandomForestClassifier(**kwargs)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        warnings.simplefilter("ignore", ResourceWarning)
+        packed.fit(data, "target")
+    assert calls == ["distinct"]
+    assert packed.bin_edges_ is not None
+    assert all(t["type"] == "node" for t in packed.trees)
+
+    monkeypatch.setattr(tree_module, "_AUTO_PACKED_MIN_FEATURES", 1_000)
+    melt = RandomForestClassifier(**kwargs)
+    melt.fit(data, "target")
+    assert calls == ["distinct"]
+    assert melt.bin_edges_ is None
+    assert melt.trees == packed.trees
 
 
 def test_auto_wide_exact_falls_back_to_melt_on_overflow(spark):
@@ -333,6 +422,7 @@ def test_auto_wide_exact_uses_uint16_between_253_and_65533(spark):
     m = DecisionTreeClassifier(max_depth=1)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
+        warnings.simplefilter("ignore", ResourceWarning)
         m.fit(data, "target")
     assert len(m.bin_edges_["f_hi"]) == 2000
     assert m.tree is not None
