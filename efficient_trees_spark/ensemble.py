@@ -17,7 +17,9 @@ engine's existing dataflow pieces:
   (``tree._build_tree_levelwise``), each row routed by its own tree's
   splits and scoring only its tree's feature subset.  A forest level costs
   one level job whatever n_trees is; the per-row work still grows with the
-  total bootstrap rows.
+  total bootstrap rows.  The bags' root class distributions take one more
+  job, a ``groupBy(tree, class).count()`` over the union; every other
+  node's falls out of its parent's split scan.
 * **Inference is one projection.** Each tree compiles to a nested CASE column
   (``plans/case_compiler.py``); the majority vote is an ``array_max`` over
   per-class vote-count structs — pure Catalyst expressions, zero shuffles,
@@ -36,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from efficient_trees_spark.enums import Criterion
+from efficient_trees_spark.operators.split_finder import TARGET_IDX
 from efficient_trees_spark.plans.case_compiler import compile_tree
 from efficient_trees_spark.tree import DecisionTreeClassifier
 
@@ -97,7 +100,7 @@ class RandomForestClassifier:
             criterion=self.criterion,
             max_bins=self.max_bins,
         )
-        relation, feature_names, unique_targets, bin_edges, code_dtype, n_parts = (
+        relation, feature_names, unique_targets, _, bin_edges, code_dtype, n_parts = (
             proto._training_relation(data, target_name, shrink_features, right_size=False)
         )
         self.bin_edges_ = bin_edges
@@ -134,10 +137,21 @@ class RandomForestClassifier:
             )
             if n_parts is not None:  # one level stage of n_parts tasks
                 forest_rows = forest_rows.coalesce(n_parts)
+            # Each bag's root class distribution, in one job after the
+            # cache is materialized (so it does not race the level pass
+            # for the cache blocks); a few rows, sorted on the driver.
+            root_distributions: list[list[tuple[int, int]]] = [
+                [] for _ in range(self.n_trees)
+            ]
+            for row in sorted(
+                forest_rows.groupBy(TREE_COL, TARGET_IDX).count().collect()
+            ):
+                root_distributions[row[0]].append((row[1], row[2]))
             self.trees = proto._build_tree_levelwise(
                 forest_rows,
                 subsets,
                 unique_targets,
+                root_distributions,
                 bin_edges=bin_edges,
                 all_features=feature_names,
                 packed_code_dtype=code_dtype,

@@ -936,18 +936,6 @@ def _add_into(acc: dict[int, "np.ndarray"], key, counts: "np.ndarray") -> None:
         a += counts
 
 
-def _class_pairs(totals) -> list[tuple[int, int]]:
-    """A node's class totals as ``[(class_idx, count), ...]``, count > 0,
-    class-ascending: the tree's distribution format."""
-    return [(i, int(c)) for i, c in enumerate(totals) if c > 0]
-
-
-# Sentinel FEATURE value carrying per-node class totals through the
-# histogram relation when emit_node_totals is requested (a user feature of
-# this exact name would collide; the dunder makes that implausible).
-DIST_FEATURE = "__dist__"
-
-
 def packed_histogram_counts(
     packed_df: DataFrame,
     feature_names: list[str],
@@ -957,7 +945,6 @@ def packed_histogram_counts(
     node_col: str,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
-    emit_node_totals: bool = False,
     code_dtype: str = "u1",
     tree_col: str | None = None,
 ) -> DataFrame:
@@ -978,11 +965,8 @@ def packed_histogram_counts(
     the full width — only the subset's columns are histogrammed, while the
     routing splits keep addressing full-matrix positions.
 
-    ``emit_node_totals`` adds one ``DIST_FEATURE`` row per node carrying
-    the node's full per-class row counts (feature-independent — NULL cells
-    excluded from per-feature bins still count here).  The root
-    distribution then rides the level-0 histogram instead of a separate
-    job racing it to materialize the code cache."""
+    Every row's ``FEATURE`` is a name from ``feature_names``, so any user
+    feature name is safe."""
     import pyarrow as pa
 
     names, lens, slot_off, flat_slots, edges_flat, edge_off = _cube_geometry(
@@ -1002,12 +986,9 @@ def packed_histogram_counts(
     )
 
     def histogram(rows, axes) -> Iterator["pa.RecordBatch"]:
-        acc, dist_acc = _accumulate_cubes(
-            rows, axes, flat_slots, n_classes, emit_node_totals, code_dtype
-        )
+        acc = _accumulate_cubes(rows, axes, flat_slots, n_classes, code_dtype)
         sparse = _sparsify_cubes(
-            acc, dist_acc, names, lens, slot_off, edges_flat, edge_off,
-            n_classes,
+            acc, names, lens, slot_off, edges_flat, edge_off, n_classes
         )
         if sparse is None:
             return
@@ -1029,11 +1010,11 @@ def packed_histogram_counts(
 
 
 def _accumulate_cubes(
-    rows, axes, flat_slots, n_classes, emit_node_totals, code_dtype
-) -> tuple[dict[int, "np.ndarray"], dict[int, "np.ndarray"]]:
+    rows, axes, flat_slots, n_classes, code_dtype
+) -> dict[int, "np.ndarray"]:
     """Bincount one partition's routed rows (:func:`_level_pass`) into
-    per-slot flat count cubes (and per-slot class totals when requested)
-    — the numeric core shared by the sparse-row and dense-cube emitters.
+    per-slot flat count cubes — the numeric core shared by the sparse-row
+    and dense-cube emitters.
     Slot addressing is RAGGED (``_cube_geometry``): feature j's counts
     land at ``slot_off[j] + bin``, its NaN bucket at ``slot_off[j] +
     lens[j]``.  Each tree's rows fill only its own features' slots.
@@ -1051,7 +1032,6 @@ def _accumulate_cubes(
     histogram relation tests and the golden fits."""
     _, nan_code, null_code, _ = _code_info(code_dtype)
     acc: dict[int, np.ndarray] = {}
-    dist_acc: dict[int, np.ndarray] = {}
     flat_size = flat_slots * n_classes
     stride = flat_size + 1  # + the invalid-cell sentinel slot
     for t, mat, target, nodes in rows:
@@ -1078,19 +1058,10 @@ def _accumulate_cubes(
         counts = counts.reshape(uniq.size, stride)
         for k in range(uniq.size):
             _add_into(acc, uniq[k], counts[k, :flat_size])
-        if emit_node_totals:
-            dist = np.bincount(
-                inv.astype(np.int64) * n_classes + target32,
-                minlength=uniq.size * n_classes,
-            ).reshape(uniq.size, n_classes)
-            for k in range(uniq.size):
-                _add_into(dist_acc, uniq[k], dist[k])
-    return acc, dist_acc
+    return acc
 
 
-def _sparsify_cubes(
-    acc, dist_acc, names, lens, slot_off, edges_flat, edge_off, n_classes
-):
+def _sparsify_cubes(acc, names, lens, slot_off, edges_flat, edge_off, n_classes):
     """Per-node flat cubes -> the sparse histogram row arrays (node,
     feature, value, class counts, total).  Shared by the worker-side sparse
     emitter and the driver-side cube decoders so both produce the exact
@@ -1117,13 +1088,6 @@ def _sparsify_cubes(
         for i in range(n_classes):
             class_out[i].append(cube[nz, i])
         total_out.append(totals[nz])
-    for nv, d in dist_acc.items():
-        node_out.append(np.full(1, nv, dtype=np.int32))
-        feat_out.append(np.asarray([DIST_FEATURE], dtype=object))
-        value_out.append(np.zeros(1, dtype=np.float64))
-        for i in range(n_classes):
-            class_out[i].append(d[i : i + 1])
-        total_out.append(np.asarray([int(d.sum())], dtype=np.int64))
     if not node_out:
         return None
     return (
@@ -1188,13 +1152,12 @@ def packed_histogram_cubes(
     node_col: str,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
-    emit_node_totals: bool = False,
     code_dtype: str = "u1",
     tree_col: str | None = None,
 ) -> DataFrame:
     """:func:`packed_histogram_counts` with DENSE per-node output: one row
     per (partition, node) carrying the whole flat count cube as int64
-    bytes (+ the per-class node totals appended when ``emit_node_totals``).
+    bytes, exactly ``flat_slots * n_classes * 8`` of them.
 
     This is the histogram-allreduce shape XGBoost/LightGBM use: partial
     cubes stream straight to the central merge
@@ -1207,18 +1170,9 @@ def packed_histogram_cubes(
     _, lens, slot_off, flat_slots, _, _ = _cube_geometry(feature_names, bin_edges)
 
     def cubes(rows, axes) -> Iterator["pa.RecordBatch"]:
-        acc, dist_acc = _accumulate_cubes(
-            rows, axes, flat_slots, n_classes, emit_node_totals, code_dtype
-        )
+        acc = _accumulate_cubes(rows, axes, flat_slots, n_classes, code_dtype)
         if acc:
-            yield _cube_batch(
-                node_col,
-                {
-                    nv: a.tobytes()
-                    + (dist_acc[nv].tobytes() if emit_node_totals else b"")
-                    for nv, a in acc.items()
-                },
-            )
+            yield _cube_batch(node_col, {nv: a.tobytes() for nv, a in acc.items()})
 
     return _level_pass(
         packed_df, lens, slot_off, routes, cubes, f"{node_col} int, __cube binary",
@@ -1249,7 +1203,7 @@ def _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col):
         feature_names, bin_edges
     )
     sparse = _sparsify_cubes(
-        acc, {}, names, lens, slot_off, edges_flat, edge_off, n_classes
+        acc, names, lens, slot_off, edges_flat, edge_off, n_classes
     )
     if sparse is None:
         return None
@@ -1267,26 +1221,14 @@ def merge_cubes_to_counts_pdf(
     n_classes: int,
     bin_edges: dict[str, list[float]],
     node_col: str,
-    emit_node_totals: bool = False,
 ):
-    """Driver-side merge of collected dense cubes -> (counts pdf,
-    distributions).  Integer addition only, then the SAME sparsification
-    the worker-side emitter uses — the resulting rows are exactly what
-    :func:`packed_histogram_counts` + the distributed SUM would produce.
-    ``distributions`` is {node: [(class_idx, count), ...]} (count > 0,
-    class-ascending) or None when not requested."""
-    flat_size = _cube_geometry(feature_names, bin_edges)[3] * n_classes
-    merged = merge_cube_rows(rows)
-    distributions = None
-    if emit_node_totals:
-        distributions = {
-            nv: _class_pairs(v[flat_size : flat_size + n_classes])
-            for nv, v in merged.items()
-        }
-    acc = {nv: v[:flat_size] for nv, v in merged.items()}
-    return (
-        _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col),
-        distributions,
+    """Driver-side merge of collected dense cubes -> the counts pdf (None
+    when every cube is empty).  Integer addition only, then the SAME
+    sparsification the worker-side emitter uses — the resulting rows are
+    exactly what :func:`packed_histogram_counts` + the distributed SUM
+    would produce."""
+    return _cube_counts_pdf(
+        merge_cube_rows(rows), feature_names, bin_edges, n_classes, node_col
     )
 
 
@@ -1402,32 +1344,21 @@ def pair_cubes_to_level_counts(
     n_classes: int,
     bin_edges: dict[str, list[float]],
     node_col: str,
-    emit_node_totals: bool = False,
 ):
-    """Level-d outputs from merged pair cubes: the SAME (counts pdf,
-    distributions) :func:`merge_cubes_to_counts_pdf` yields — the
-    per-feature histogram is the pair cube's DIAGONAL (slot s of feature a
-    pairs with slot s of a itself exactly once per row whose a-cell sits
-    there, so the diagonal is the exact marginal of every histogrammed
-    feature and zero for a feature the node's tree does not histogram),
-    and a node's class totals are one histogrammed feature's diagonal
-    block summed (each row once, NULL slot included) — the elementwise
-    max over features' block totals, since the others are zero."""
+    """Level-d counts pdf from merged pair cubes: the SAME pdf
+    :func:`merge_cubes_to_counts_pdf` yields — the per-feature histogram
+    is the pair cube's DIAGONAL (slot s of feature a pairs with slot s of
+    a itself exactly once per row whose a-cell sits there, so the diagonal
+    is the exact marginal of every histogrammed feature and zero for a
+    feature the node's tree does not histogram)."""
     _, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
     keep = _pair_keep_index(lens, slot2_off)
     acc: dict[int, np.ndarray] = {}
-    distributions = {} if emit_node_totals else None
     for nv, flat in cubes.items():
         cube = flat.reshape(s2, s2, n_classes)
         marg = np.einsum("iic->ic", cube)  # (s2, classes) diagonal view
         acc[nv] = np.ascontiguousarray(marg[keep]).reshape(-1)
-        if emit_node_totals:
-            totals = np.add.reduceat(marg, slot2_off[:-1], axis=0).max(axis=0)
-            distributions[nv] = _class_pairs(totals)
-    return (
-        _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col),
-        distributions,
-    )
+    return _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col)
 
 
 def pair_cubes_to_child_counts(

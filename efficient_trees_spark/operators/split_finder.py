@@ -203,8 +203,9 @@ def candidate_split_gains(
     # far smaller than the melt it replaces, and recomputed from the
     # source on every invocation.  The bounded branch above has a
     # single consumer and stays fully lazy.  A caller-supplied counts
-    # relation is already checkpointed (the scorer checkpoints before its
-    # size probe) — re-checkpointing it would copy the blocks for nothing.
+    # relation is already checkpointed (the scorer checkpoints every
+    # counts relation this branch reads) — re-checkpointing it would copy
+    # the blocks for nothing.
     if precomputed_counts is None:
         counts = counts.localCheckpoint(eager=False)
 
@@ -437,10 +438,9 @@ def find_best_splits_per_node(
     (:func:`_score_counts`)."""
     names = list(dict.fromkeys(f for fl in tree_features for f in fl))
     counts = _melt_counts(df, names, n_classes, node_col)
-    found, _ = _score_counts(
+    return _score_counts(
         counts, tree_features, n_classes, criterion, node_col, slot_ends
     )
-    return found
 
 
 # A level's aggregated counts relation above this many rows keeps the
@@ -494,10 +494,7 @@ def _no_local_relation_fold(spark):
     ``test_local_gains_fold_free_parity_and_conf_restore``.
 
     Scoped set/restore of the session conf, preserving any prior
-    exclusion list.  The conf is session-wide, so the exact melt's level-0
-    root-distribution job (``tree._root_distributions``, on a second
-    thread) may be planned without the rule too; it reads the persisted
-    training relation, no ``LocalRelation``, so the rule never applies.
+    exclusion list.
     """
     key = "spark.sql.optimizer.excludedRules"
     prev = spark.conf.get(key, None)
@@ -534,11 +531,10 @@ def find_best_splits_packed(
     node_col: str = "__node_id",
     all_feature_names: list[str] | None = None,
     tree_col: str | None = None,
-    want_distributions: bool = False,
     code_dtype: str = "u1",
     n_input_parts: int | None = None,
     lookahead: bool = False,
-) -> tuple[dict[int, tuple[list[dict[str, Any]], dict[int, list] | None]], Any]:
+) -> tuple[dict[int, list[dict[str, Any]]], Any]:
     """:func:`find_best_splits_per_node` over the packed bin-code matrix
     (uint8, or uint16 when a feature needs more than 253 edges —
     ``code_dtype`` must match the encode;
@@ -573,13 +569,9 @@ def find_best_splits_packed(
     histograms the union of the trees' features; each row fills only its
     own tree's.
 
-    Returns ``(found, carried)``: ``found[tree] = (splits,
-    distributions)``.  With ``want_distributions`` the per-node class
-    totals ride the driver-scored histogram (``DIST_FEATURE`` rows / cube
-    tails — no separate distribution job, no cache-materialization race
-    with one) as ``{node_id: [(class_idx, count), ...]}``; otherwise, and
-    on the distributed path, they are None and the caller runs its own
-    job.
+    Returns ``(found, carried)``: ``found[tree]`` is the tree's split
+    list.  Class distributions are not computed here: the caller counts
+    the roots, and each child's falls out of its parent's split.
 
     ``lookahead=True`` (r12), when the PAIR cube fits the same byte
     budget, computes this level from one joint (feature, feature)
@@ -669,10 +661,7 @@ def find_best_splits_packed(
         # node — one wide feature no longer inflates the estimate (or
         # the cube) by max-edges x width.
         slots = sum(len(bin_edges.get(f, ())) + 1 for f in names)
-        cube_bytes = (
-            slots * n_classes * 8
-            + (n_classes * 8 if want_distributions else 0)
-        )
+        cube_bytes = slots * n_classes * 8
         # Budget decision only (dense vs sparse are bit-identical): prefer
         # the caller's known count — under AQE, probing .rdd on a plan that
         # contains the fan-out Exchange EXECUTES the shuffle stage (a full
@@ -714,8 +703,7 @@ def find_best_splits_packed(
         _trim_malloc()
         levels = {
             t: pair_cubes_to_level_counts(
-                pair_cubes[t], names, n_classes, bin_edges, node_col,
-                emit_node_totals=want_distributions,
+                pair_cubes[t], names, n_classes, bin_edges, node_col
             )
             for t in order
         }
@@ -727,14 +715,13 @@ def find_best_splits_packed(
         for slot, cube in _arrow_cube_rows(
             packed_histogram_cubes(
                 packed_df, names, n_classes, bin_edges, routes, node_col,
-                emit_node_totals=want_distributions, **kernel_args,
+                **kernel_args,
             ).toArrow()
         ):
             cube_rows[slot_tree[slot]].append((slot_node[slot], cube))
         levels = {
             t: merge_cubes_to_counts_pdf(
-                cube_rows[t], names, n_classes, bin_edges, node_col,
-                emit_node_totals=want_distributions,
+                cube_rows[t], names, n_classes, bin_edges, node_col
             )
             for t in order
         }
@@ -745,11 +732,10 @@ def find_best_splits_packed(
         del cube_rows
         _trim_malloc()
     else:
-        node_totals = want_distributions and local_ok
-        per_tree, totals = _score_counts(
+        per_tree = _score_counts(
             packed_histogram_counts(
                 packed_df, names, n_classes, bin_edges, routes, node_col,
-                emit_node_totals=node_totals, **kernel_args,
+                **kernel_args,
             ),
             lists,
             n_classes,
@@ -758,20 +744,15 @@ def find_best_splits_packed(
             list(accumulate(len(trees[t].pending) for t in order)),
             est_rows=est_rows,
             bounded_candidates=True,
-            node_totals=node_totals,
         )
-        dists = node_keyed(totals) if totals is not None else dict.fromkeys(order)
         found = {
-            t: ([dict(b, node_id=slot_node[b["node_id"]]) for b in best], dists[t])
+            t: [dict(b, node_id=slot_node[b["node_id"]]) for b in best]
             for t, best in zip(order, per_tree)
         }
         return found, None
     found = {
-        t: (
-            best_splits_from_counts_pdf(
-                levels[t][0], spark, n_classes, fl, node_col, criterion
-            ),
-            levels[t][1],
+        t: best_splits_from_counts_pdf(
+            levels[t], spark, n_classes, fl, node_col, criterion
         )
         for t, fl in zip(order, lists)
     }
@@ -783,7 +764,7 @@ def find_best_splits_packed(
         carried = {
             t: pair_cubes_to_child_counts(
                 pair_cubes[t],
-                [b for b in found[t][0] if b["information_gain"] > 0],
+                [b for b in found[t] if b["information_gain"] > 0],
                 names, n_classes, bin_edges, node_col,
             )
             for t in order
@@ -800,8 +781,7 @@ def _score_counts(
     slot_ends: list[int],
     est_rows: int = 0,
     bounded_candidates: bool = False,
-    node_totals: bool = False,
-) -> tuple[list[list[dict[str, Any]]], dict[int, list] | None]:
+) -> list[list[dict[str, Any]]]:
     """The counts-to-splits step of both fit paths: a level's counts
     relation ``(node_col, feature, feature_value, class_*_count,
     count_examples)`` → each tree's best split per slot.  Tree k owns the
@@ -812,38 +792,29 @@ def _score_counts(
     While the relation may fit ``_local_gains_row_cap`` (rows AND bytes
     of every collect the criterion's scoring makes, so a high-class-count
     fit cannot blow ``spark.driver.maxResultSize`` — ADVICE r11), it is
-    checkpointed lazily, collected in ONE ``limit(cap + 1)`` Arrow action
-    and scored driver-side (:func:`best_splits_from_counts_pdf`).
-    ``cap + 1`` rows back prove it over budget: ``candidate_split_gains``
-    + ``max_by`` then run over the same checkpoint blocks.  An ``est_rows``
-    upper bound past the cap skips the probe, and the relation stays a
-    lazy, single-consumer plan; so do exact-melt (unbounded) entropy
-    counts.  Both forms are pinned bit-identical.  With ``node_totals``
-    the relation carries ``DIST_FEATURE`` rows; a collected relation
-    returns them as ``{slot: [(class_idx, count), ...]}``, the
-    distributed form drops them and returns None."""
+    collected in ONE ``limit(cap + 1)`` Arrow action and scored
+    driver-side (:func:`best_splits_from_counts_pdf`).  ``cap + 1`` rows
+    back prove it over budget: ``candidate_split_gains`` + ``max_by``
+    then run over the same checkpoint blocks.  Exact-melt (unbounded)
+    entropy counts skip the probe.  The relation is checkpointed lazily
+    whenever it may be read more than once: before the probe, and always
+    for unbounded candidates, whose gains pipeline reads it three times
+    (left lazy, each read re-runs the scan, the melt's Expand and its
+    shuffle).  Only an ``est_rows`` upper bound past the cap on bounded
+    candidates leaves it a lazy, single-consumer plan.  Both forms are
+    pinned bit-identical."""
     import numpy as np
-
-    from efficient_trees_spark.operators.histogram import DIST_FEATURE, _class_pairs
 
     spark = counts.sparkSession
     cap = _local_gains_row_cap(spark, n_classes, criterion)
+    if est_rows <= cap or not bounded_candidates:
+        counts = counts.localCheckpoint(eager=False)
     # Exact-melt entropy scored driver-side measured no faster than the
     # distributed pipeline (sf0.1 lineitem, 583k distinct prices, 4 cores:
     # depth-3 fit 11.78 vs 11.92 s median, faster in 5 of 10 pairs).
     if est_rows <= cap and (bounded_candidates or criterion == Criterion.GINI):
-        counts = counts.localCheckpoint(eager=False)
         pdf = counts.limit(cap + 1).toArrow().to_pandas()
         if len(pdf) <= cap:
-            totals = None
-            if node_totals:
-                mask = pdf[FEATURE] == DIST_FEATURE
-                dist = pdf[mask]
-                rows = dist[[exprs.class_count_col(i) for i in range(n_classes)]]
-                totals = dict(
-                    zip(dist[node_col].tolist(), map(_class_pairs, rows.to_numpy()))
-                )
-                pdf = pdf[~mask]
             owner = np.searchsorted(slot_ends, pdf[node_col].to_numpy(), "right")
             parts = [pdf[owner == k] for k in range(len(tree_features))]
             return [
@@ -851,10 +822,8 @@ def _score_counts(
                     part, spark, n_classes, fl, node_col, criterion
                 )
                 for part, fl in zip(parts, tree_features)
-            ], totals
+            ]
         del pdf
-    if node_totals:
-        counts = counts.filter(F.col(FEATURE) != DIST_FEATURE)
     gains = candidate_split_gains(
         counts,
         [],
@@ -875,7 +844,7 @@ def _score_counts(
     found: list[list[dict[str, Any]]] = [[] for _ in tree_features]
     for b in _best_split_rows(gains, position, node_col):
         found[bisect_right(slot_ends, b["node_id"])].append(b)
-    return found, None
+    return found
 
 
 def best_splits_from_counts_pdf(

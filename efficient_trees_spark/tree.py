@@ -48,10 +48,8 @@ import json
 import pickle
 import warnings
 from collections.abc import Iterable
-from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -483,8 +481,9 @@ class DecisionTreeClassifier:
             unconditionally to avoid an extra min/max scan.  Integer features
             are exact either way.
         """
-        relation, feature_names, unique_targets, bin_edges, code_dtype, n_parts = (
-            self._training_relation(data, target_name, shrink_features)
+        (relation, feature_names, unique_targets, root_distribution, bin_edges,
+         code_dtype, n_parts) = self._training_relation(
+            data, target_name, shrink_features
         )
         # The only relation a single-tree fit persists: the code relation
         # (packed loop) or the prepared training relation (melt), read once
@@ -495,6 +494,7 @@ class DecisionTreeClassifier:
                 relation,
                 [feature_names],
                 unique_targets,
+                [root_distribution],
                 bin_edges=bin_edges,
                 packed_code_dtype=code_dtype,
                 packed_n_parts=n_parts,
@@ -508,13 +508,19 @@ class DecisionTreeClassifier:
         target_name: str,
         shrink_features: bool,
         right_size: bool = True,
-    ) -> tuple[DataFrame, list[str], list[Any], dict | None, str, int | None]:
+    ) -> tuple[
+        DataFrame, list[str], list[Any], list[tuple[int, int]], dict | None,
+        str, int | None,
+    ]:
         """The fit preamble of the tree and the forest.  Returns
-        ``(relation, feature_names, unique_targets, bin_edges, code_dtype,
-        n_parts)``: bin_edges is None on the melt, n_parts None when unknown.
+        ``(relation, feature_names, unique_targets, root_distribution,
+        bin_edges, code_dtype, n_parts)``: root_distribution is the input's
+        ``[(class_idx, count), ...]``, bin_edges None on the melt, n_parts
+        None when unknown.
 
         First the prepared relation: categorical encoding, class-label
-        discovery, and the normalized training relation — features cast to
+        discovery with each label's row count (one job, the root's class
+        distribution), and the normalized training relation — features cast to
         double (a common unpivot value type), target encoded to its class
         index (cheap int comparisons in the conditional counts).  With
         shrink_features, fractional features round-trip through float32
@@ -531,14 +537,15 @@ class DecisionTreeClassifier:
             self._fit_categorical_mappings(data, target_name)
             data = self.apply_categorical_mappings(data)
 
-        # Distinct class labels, sorted ascending for deterministic indexing
-        # (reference keeps engine order, tree.py:110-113).
-        unique_targets = [
-            row[0]
-            for row in data.select(target_name).distinct().orderBy(target_name).collect()
-        ]
-        if not unique_targets:
+        # Distinct class labels, sorted ascending (NULL first) for
+        # deterministic indexing (reference keeps engine order,
+        # tree.py:110-113), and each label's count: the root's class
+        # distribution (reference value_counts, tree.py:363-372).
+        rows = data.groupBy(target_name).count().orderBy(target_name).collect()
+        if not rows:
             raise ValueError("cannot fit on training data with no rows")
+        unique_targets = [row[0] for row in rows]
+        root_distribution = [(i, row["count"]) for i, row in enumerate(rows)]
         self._unique_targets = unique_targets
 
         fractional = {
@@ -556,7 +563,7 @@ class DecisionTreeClassifier:
             inner = f"CAST({q} AS FLOAT)" if shrink_features and name in fractional else q
             return f"CAST({inner} AS DOUBLE) AS {q}"
 
-        # A NULL label is a class of its own (distinct() surfaces it; the
+        # A NULL label is a class of its own (groupBy surfaces it; the
         # reference's engine-order indexing tolerates it) — but it can't be a
         # literal map key, so it gets an explicit isNull branch.
         null_idx = next((i for i, v in enumerate(unique_targets) if v is None), None)
@@ -681,7 +688,10 @@ class DecisionTreeClassifier:
                     n_parts=n_parts,
                 )
 
-        return prepared, feature_names, unique_targets, bin_edges, code_dtype, n_parts
+        return (
+            prepared, feature_names, unique_targets, root_distribution,
+            bin_edges, code_dtype, n_parts,
+        )
 
     # -------------------------------------------------- quantile binning
 
@@ -785,6 +795,7 @@ class DecisionTreeClassifier:
         data: DataFrame,
         tree_features: list[list[str]],
         unique_targets: list[Any],
+        root_distributions: list[list[tuple[int, int]]],
         bin_edges: dict[str, list[float]] | None = None,
         all_features: list[str] | None = None,
         packed_code_dtype: str = "u1",
@@ -812,18 +823,26 @@ class DecisionTreeClassifier:
         forest's sampled bags, makes it re-derivable: seeded sampling of a
         persisted relation draws the same rows every level).
 
-        Class distributions cost no extra jobs beyond the root's: a node's
-        distribution over its children is a free by-product of its split scan
-        (the prefix-sum counts at the chosen threshold are exactly the left
-        child's per-class counts; total − prefix the right's — the same
-        identity the gain math itself uses), so each child's distribution is
-        recorded when its parent splits.  A depth-d fit is therefore d split
-        jobs plus one root-distribution job that runs concurrently with the
-        first of them.  The reference recomputes value_counts per node
-        (tree.py:363-372); the results are identical because split routing
-        (`f <= thr` / `f > thr`, NULLs to neither side) partitions rows the
-        same way the not-null prefix sums count them.
+        ``root_distributions[t]`` is tree t's root class distribution,
+        ``[(class_idx, count), ...]`` class-ascending, counted by the
+        caller: the fit's label job for a single tree, one bag-count job
+        for a forest.  Every other distribution costs no job: a node's
+        distribution over its children is a free by-product of its split
+        scan (the prefix-sum counts at the chosen threshold are exactly the
+        left child's per-class counts; total − prefix the right's — the
+        same identity the gain math itself uses), so each child's
+        distribution is recorded when its parent splits.  A depth-d fit is
+        therefore d split jobs.  The reference recomputes value_counts per
+        node (tree.py:363-372); the results are identical because split
+        routing (`f <= thr` / `f > thr`, NULLs to neither side) partitions
+        rows the same way the not-null prefix sums count them.
         """
+        for t, dist in enumerate(root_distributions):
+            if not dist:
+                raise ValueError(
+                    f"tree {t}'s bootstrap sample drew no rows; raise "
+                    "sample_fraction"
+                )
         node_col = "__node_id"
         n_trees = len(tree_features)
         packed = bin_edges is not None
@@ -851,7 +870,7 @@ class DecisionTreeClassifier:
         # zero-count classes absent (value_counts semantics, reference
         # tree.py:363-372).
         distributions: list[dict[int, list[tuple[int, int]]]] = [
-            {} for _ in range(n_trees)
+            {0: dist} for dist in root_distributions
         ]
         # Per-tree counts relations for the NEXT level, derived driver-side
         # from the previous level's PAIR-cube pass (r12): when set, this
@@ -861,7 +880,6 @@ class DecisionTreeClassifier:
         while any(frontiers):
             active = [t for t in range(n_trees) if frontiers[t]]
             at_max_depth = self.max_depth is not None and depth >= self.max_depth
-            need_root_dist = depth == 0
             best_by_node: list[dict[int, dict[str, Any]]] = [
                 {} for _ in range(n_trees)
             ]
@@ -909,86 +927,44 @@ class DecisionTreeClassifier:
                         node_col=node_col,
                         all_feature_names=all_names,
                         tree_col=tree_col,
-                        want_distributions=need_root_dist,
                         code_dtype=packed_code_dtype,
                         n_input_parts=packed_n_parts,
                         lookahead=(
                             self.max_depth is None or depth + 1 < self.max_depth
                         ),
                     )
-                    for t, (best, dists) in found.items():
+                    for t, best in found.items():
                         best_by_node[t] = {b["node_id"]: b for b in best}
-                        if need_root_dist and dists and 0 in dists:
-                            # the root distribution rode the level-0
-                            # histogram: no second job racing the first to
-                            # materialize the code cache
-                            distributions[t][0] = dists[0]
-                    if need_root_dist and any(
-                        0 not in distributions[t] for t in active
-                    ):
-                        for t, dist in enumerate(
-                            self._root_distributions(data, tree_col, n_trees)
-                        ):
-                            distributions[t][0] = dist
-            elif need_root_dist or not at_max_depth:
-                # Melt path (or a depth-0 packed fit): the (cheap)
-                # root-distribution job and the (expensive) split job are
-                # independent — submit both and let the scheduler overlap
-                # them.
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    dist_future = None
-                    if need_root_dist:
-                        with warnings.catch_warnings():
-                            # passes on the job group, not a session's tags
-                            warnings.filterwarnings("ignore", "Spark session is not")
-                            root_distributions = inheritable_thread_target(
-                                self._root_distributions
-                            )
-                        dist_future = pool.submit(
-                            root_distributions, data, tree_col, n_trees
-                        )
-                    if not at_max_depth:
-                        # Dense slots over the level's (tree, node) pairs,
-                        # tree by tree, as the packed pass assigns them;
-                        # each row takes its own tree's route.
-                        slot_node: list[int] = []
-                        slot_ends: list[int] = []
-                        routes = []
-                        for t in active:
-                            slots = {
-                                n: len(slot_node) + i
-                                for i, n in enumerate(frontiers[t])
-                            }
-                            slot_node += frontiers[t]
-                            slot_ends.append(len(slot_node))
-                            route = self._routing_expr(roots[t], slots)
-                            routes.append(
-                                route if tree_col is None
-                                else F.when(F.col(tree_col) == t, route)
-                            )
-                        found = split_finder.find_best_splits_per_node(
-                            data.withColumn(node_col, F.coalesce(*routes)).filter(
-                                F.col(node_col).isNotNull()
-                            ),
-                            [tree_features[t] for t in active],
-                            len(unique_targets),
-                            self.criterion,
-                            node_col,
-                            slot_ends,
-                        )
-                        for t, best in zip(active, found):
-                            best_by_node[t] = {
-                                slot_node[b["node_id"]]: b for b in best
-                            }
-                    if dist_future is not None:
-                        for t, dist in enumerate(dist_future.result()):
-                            distributions[t][0] = dist
-            for t in range(n_trees):
-                if need_root_dist and not distributions[t][0]:
-                    raise ValueError(
-                        f"tree {t}'s bootstrap sample drew no rows; raise "
-                        "sample_fraction"
+            elif not at_max_depth:
+                # Dense slots over the level's (tree, node) pairs, tree by
+                # tree, as the packed pass assigns them; each row takes its
+                # own tree's route.
+                slot_node: list[int] = []
+                slot_ends: list[int] = []
+                routes = []
+                for t in active:
+                    slots = {
+                        n: len(slot_node) + i for i, n in enumerate(frontiers[t])
+                    }
+                    slot_node += frontiers[t]
+                    slot_ends.append(len(slot_node))
+                    route = self._routing_expr(roots[t], slots)
+                    routes.append(
+                        route if tree_col is None
+                        else F.when(F.col(tree_col) == t, route)
                     )
+                found = split_finder.find_best_splits_per_node(
+                    data.withColumn(node_col, F.coalesce(*routes)).filter(
+                        F.col(node_col).isNotNull()
+                    ),
+                    [tree_features[t] for t in active],
+                    len(unique_targets),
+                    self.criterion,
+                    node_col,
+                    slot_ends,
+                )
+                for t, best in zip(active, found):
+                    best_by_node[t] = {slot_node[b["node_id"]]: b for b in best}
 
             for t in active:
                 frontiers[t] = self._grow_frontier(
@@ -1051,21 +1027,6 @@ class DecisionTreeClassifier:
                 if child["type"] == "pending":
                     next_frontier[child["node_id"]] = child
         return next_frontier
-
-    @staticmethod
-    def _root_distributions(
-        data: DataFrame, tree_col: str | None, n_trees: int
-    ) -> list[list[tuple[int, int]]]:
-        """Each tree's root class distribution, ``[(class_idx, count),
-        ...]`` class-ascending, in one job."""
-        keys = ([tree_col] if tree_col else []) + [_TARGET_IDX]
-        rows = data.groupBy(*keys).count().orderBy(*keys).collect()
-        out: list[list[tuple[int, int]]] = [[] for _ in range(n_trees)]
-        for row in rows:
-            out[row[tree_col] if tree_col else 0].append(
-                (row[_TARGET_IDX], row["count"])
-            )
-        return out
 
     # ------------------------------------------------------------- predict
 

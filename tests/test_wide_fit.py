@@ -185,6 +185,26 @@ def _level_passes(
     return len(calls), len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _iris_frame(spark):
+    from tests.iris_fixture import train_test_frames
+
+    train_pd, _ = train_test_frames(string_labels=False)
+    return spark.createDataFrame(train_pd.drop(columns=["categorical_feature"]))
+
+
+def _jobs_in_group(spark, action) -> int:
+    """Spark jobs ``action()`` runs, counted in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted action")
+    try:
+        action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_depth2_binned_fits_run_one_level_job(spark, monkeypatch):
     """A depth-2 binned fit scores both levels from ONE pair-cube job
     (level 1 is carried and scored driver-side), and a 4-tree depth-2
@@ -193,10 +213,8 @@ def test_depth2_binned_fits_run_one_level_job(spark, monkeypatch):
     local input has no exchange, so the level pass's only job is its
     histogram pass.)"""
     from efficient_trees_spark.ensemble import RandomForestClassifier
-    from tests.iris_fixture import train_test_frames
 
-    train_pd, _ = train_test_frames(string_labels=False)
-    data = spark.createDataFrame(train_pd.drop(columns=["categorical_feature"]))
+    data = _iris_frame(spark)
     tree = DecisionTreeClassifier(max_depth=2, criterion=Criterion.GINI, max_bins=8)
     assert _level_passes(spark, monkeypatch, lambda: tree.fit(data, "target")) == (1, 1)
     assert tree.tree["type"] == "node"
@@ -212,10 +230,8 @@ def test_exact_forest_runs_one_melt_per_level(spark, monkeypatch):
     too: a 4-tree depth-3 forest runs one melt per level for all four
     trees, not one per tree and level."""
     from efficient_trees_spark.ensemble import RandomForestClassifier
-    from tests.iris_fixture import train_test_frames
 
-    train_pd, _ = train_test_frames(string_labels=False)
-    data = spark.createDataFrame(train_pd.drop(columns=["categorical_feature"]))
+    data = _iris_frame(spark)
     forest = RandomForestClassifier(
         n_trees=4, max_depth=3, criterion=Criterion.GINI, feature_fraction=0.75, seed=3
     )
@@ -228,14 +244,86 @@ def test_exact_forest_runs_one_melt_per_level(spark, monkeypatch):
     assert all(t["type"] == "node" for t in forest.trees)
 
 
-def test_melt_fit_runs_every_job_in_the_callers_job_group(spark):
-    """The melt's level-0 root-distribution job runs on a pool thread; it
-    must carry the caller's job group like every other job of the fit, so
-    no job of the fit is left without a group."""
-    from tests.iris_fixture import train_test_frames
+def test_depth0_melt_fit_runs_only_the_label_job(spark):
+    """The root's class counts come from the fit's label job: a depth-0
+    exact fit runs exactly the jobs of that one query, no separate
+    root-distribution job."""
+    data = _iris_frame(spark)
+    label_jobs = _jobs_in_group(
+        spark, lambda: data.groupBy("target").count().orderBy("target").collect()
+    )
+    model = DecisionTreeClassifier(max_depth=0, hist_method="expand")
+    assert _jobs_in_group(spark, lambda: model.fit(data, "target")) == label_jobs
+    counts = {r["target"]: r["count"] for r in data.groupBy("target").count().collect()}
+    majority = max(counts, key=lambda c: (counts[c], -c))
+    assert model.tree == {"type": "leaf", "value": majority}
 
-    train_pd, _ = train_test_frames(string_labels=False)
-    data = spark.createDataFrame(train_pd.drop(columns=["categorical_feature"]))
+
+def test_melt_entropy_gains_read_the_checkpointed_counts(spark, monkeypatch):
+    """An exact-melt entropy level reads its counts relation three times
+    in the distributed gains pipeline; the scorer checkpoints it, so the
+    gains plan re-runs no melt (no ``Expand``)."""
+    data = _iris_frame(spark)
+    plans: list = []
+    gains = split_finder.candidate_split_gains
+
+    def spy(*args, **kwargs):
+        df = gains(*args, **kwargs)
+        plans.append(df)
+        return df
+
+    monkeypatch.setattr(split_finder, "candidate_split_gains", spy)
+    model = DecisionTreeClassifier(max_depth=2, criterion=Criterion.ENTROPY)
+    model.fit(data, "target")
+    assert len(plans) == 2
+    for df in plans:
+        assert "Expand" not in df._jdf.queryExecution().executedPlan().toString()
+    assert model.tree["type"] == "node"
+
+
+def test_feature_named_dist_is_a_root_candidate(spark, monkeypatch):
+    """A user feature named ``__dist__`` is scored like any other: on the
+    packed sparse-row collected pass, renaming the root's split feature
+    to it grows the same tree up to the name."""
+    from efficient_trees_spark.operators import histogram as H
+
+    data = _iris_frame(spark)
+    monkeypatch.setattr(split_finder, "_DENSE_CUBE_MAX_BYTES", 2000)
+    calls: list = []
+    record_calls(monkeypatch, H, "packed_histogram_counts", calls, "sparse")
+    record_calls(monkeypatch, H, "packed_histogram_cubes", calls, "dense")
+    record_calls(monkeypatch, H, "packed_histogram_pair_cubes", calls, "pair")
+
+    def fit(df):
+        m = DecisionTreeClassifier(max_depth=3, criterion=Criterion.GINI, max_bins=8)
+        m.fit(df, "target")
+        return m.tree
+
+    base = fit(data)
+    assert base["feature"] == "petal length (cm)"
+    renamed = fit(data.withColumnRenamed("petal length (cm)", "__dist__"))
+    assert "sparse" in calls
+    assert "dense" not in calls and "pair" not in calls
+
+    def named_back(node):
+        if node["type"] != "node":
+            return node
+        feature = node["feature"]
+        return dict(
+            node,
+            feature="petal length (cm)" if feature == "__dist__" else feature,
+            left=named_back(node["left"]),
+            right=named_back(node["right"]),
+        )
+
+    assert named_back(renamed) == base
+
+
+def test_melt_fit_runs_every_job_in_the_callers_job_group(spark):
+    """The melt runs every job of a fit on the caller's thread (no pool
+    thread), so each carries the caller's job group and no job of the fit
+    is left without a group."""
+    data = _iris_frame(spark)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = f"melt-fit-{uuid.uuid4().hex}"
@@ -702,6 +790,7 @@ def test_arrow_cube_rows_zero_copy_merge(spark):
 
     from efficient_trees_spark.operators.histogram import (
         merge_cubes_to_counts_pdf,
+        packed_histogram_cubes,
     )
     from efficient_trees_spark.operators.split_finder import _arrow_cube_rows
 
@@ -718,11 +807,27 @@ def test_arrow_cube_rows_zero_copy_merge(spark):
             "c": pa.array([c[1] for c in cubes], type=pa.binary()),
         }
     )
-    pdf_a, _ = merge_cubes_to_counts_pdf(
-        _arrow_cube_rows(tbl), ["f"], 2, edges, "n"
-    )
-    pdf_r, _ = merge_cubes_to_counts_pdf(cubes, ["f"], 2, edges, "n")
+    pdf_a = merge_cubes_to_counts_pdf(_arrow_cube_rows(tbl), ["f"], 2, edges, "n")
+    pdf_r = merge_cubes_to_counts_pdf(cubes, ["f"], 2, edges, "n")
     assert pdf_a.equals(pdf_r)
+
+    # Wire format: a dense cube row is exactly flat_slots x n_classes x 8
+    # bytes, no tail: one row per (partition, node) of a real pass over
+    # 4 rows with a NULL and a NaN cell.
+    spark_df = spark.createDataFrame(
+        [(0.0, 0), (None, 1), (float("nan"), 1), (2.0, 0)],
+        "f double, __target_idx int",
+    ).repartition(2)
+    codes = pack_encode_features(spark_df, ["f"], edges, dtype="f8")
+    rows = _arrow_cube_rows(
+        packed_histogram_cubes(
+            codes, ["f"], 2, edges, {0: TreeRoute([])}, "n"
+        ).toArrow()
+    )
+    assert rows
+    assert all(len(memoryview(cube)) == flat * 8 for _, cube in rows)
+    pdf = merge_cubes_to_counts_pdf(rows, ["f"], 2, edges, "n")
+    assert pdf["count_examples"].sum() == 3  # the NULL cell is not binned
 
 
 def test_packed_partition_target_sizing():
@@ -1251,19 +1356,16 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
         ).toArrow()
     )
     merged = merge_cube_rows(pair_rows)
-    pdf0_pair, dists = pair_cubes_to_level_counts(
-        merged, names, n_classes, edges, "__node_id", emit_node_totals=True
+    pdf0_pair = pair_cubes_to_level_counts(
+        merged, names, n_classes, edges, "__node_id"
     )
     # level 0 from the one-level cube pass
     rows0 = sf._arrow_cube_rows(
         packed_histogram_cubes(
-            packed, names, n_classes, edges, {0: TreeRoute([])}, "__node_id",
-            emit_node_totals=True,
+            packed, names, n_classes, edges, {0: TreeRoute([])}, "__node_id"
         ).toArrow()
     )
-    pdf0, dists0 = merge_cubes_to_counts_pdf(
-        rows0, names, n_classes, edges, "__node_id", emit_node_totals=True
-    )
+    pdf0 = merge_cubes_to_counts_pdf(rows0, names, n_classes, edges, "__node_id")
     import pandas as pd
 
     key = ["__node_id", sf.FEATURE, sf.FEATURE_VALUE]
@@ -1271,7 +1373,6 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
         pdf0_pair.sort_values(key).reset_index(drop=True),
         pdf0.sort_values(key).reset_index(drop=True),
     )
-    assert dists == dists0
 
     # choose level-0 splits, derive level-1 from the pair cube, and
     # compare against a REAL routed level-1 pass
@@ -1293,9 +1394,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
             packed, names, n_classes, edges, {0: TreeRoute(splits)}, "__node_id"
         ).toArrow()
     )
-    pdf1, _ = merge_cubes_to_counts_pdf(
-        rows1, names, n_classes, edges, "__node_id"
-    )
+    pdf1 = merge_cubes_to_counts_pdf(rows1, names, n_classes, edges, "__node_id")
     pd.testing.assert_frame_equal(
         carry.sort_values(key).reset_index(drop=True),
         pdf1.sort_values(key).reset_index(drop=True),
