@@ -16,6 +16,7 @@ Layout:
     tree.py               DecisionTreeClassifier (fit / predict / persistence)
     ensemble.py           RandomForestClassifier (bagged trees, one-projection vote)
     functions/exprs.py    Column-expression library (criterion, gain, proportions)
+    functions/fdlibm.py   Spark's log2 in numpy, bit for bit (driver-side entropy)
     functions/text.py     Text analytics expressions (lang-id, quality, tokens)
     operators/split_finder.py  Unified one-job best-split search
     operators/histogram.py     Packed-Arrow histograms (AMEX-width fits)

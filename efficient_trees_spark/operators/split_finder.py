@@ -18,12 +18,11 @@ level loop (:func:`find_best_splits_packed`) replaces the first two steps
 with an Arrow histogram pass over the persisted bin-code relation
 (``operators/histogram.py``).  Everything after the counts is written
 once: both paths hand their counts relation to one scorer
-(:func:`_score_counts`), which collects it and scores it driver-side
-(:func:`best_splits_from_counts_pdf`) when it fits the driver-collect
-budget, and runs the windows above plus a ``max_by`` argmax otherwise
-(and for every exact-melt entropy level).
-The packed path's dense and pair cube branches merge their counts on the
-driver and go straight to the driver-side scoring.
+(:func:`_score_counts`), which collects it and scores it driver-side in
+numpy (:func:`best_splits_from_counts_pdf`, both criteria) when it fits
+the driver-collect budget, and runs the windows above plus a ``max_by``
+argmax otherwise.  The packed path's dense and pair cube branches merge
+their counts on the driver and go straight to the driver-side scoring.
 
 Scale properties:
 * The unpivot multiplies rows by n_features but is map-local (no shuffle) and
@@ -44,7 +43,6 @@ stable under any partitioning.
 from __future__ import annotations
 
 from bisect import bisect_right
-from contextlib import contextmanager
 from itertools import accumulate
 from typing import Any, NamedTuple
 
@@ -451,67 +449,25 @@ def find_best_splits_per_node(
 _LOCAL_GAINS_MAX_ROWS = 2_000_000
 
 
-def _local_gains_row_cap(spark, n_classes: int, criterion: Criterion) -> int:
+def _local_gains_row_cap(spark, n_classes: int) -> int:
     """Row cap for collecting a candidate counts relation to the driver:
     ``_LOCAL_GAINS_MAX_ROWS`` additionally bounded in BYTES (ADVICE r11 —
     a 100-class fit at 2M rows would serialize ~1.6 GB where the
-    distributed pipeline succeeds): every collect of the driver-side
-    scoring must fit the same driver budget the packed dense-cube path
-    honors.  Gini collects only the counts, rows x (n_classes + 3
-    key/count cols) x 8 B; entropy also collects its gains relation, whose
-    rows carry both child count arrays, (2 n_classes + 5) x 8 B."""
+    distributed pipeline succeeds): the driver-side scoring's one collect,
+    the counts at rows x (n_classes + 3 key/count cols) x 8 B, must fit
+    the same driver budget the packed dense-cube path honors.  The gains
+    are computed on the driver for both criteria, so nothing else is
+    collected."""
     from efficient_trees_spark.operators.histogram import stats_collect_budget
 
     budget = min(_DENSE_CUBE_MAX_BYTES, stats_collect_budget(spark))
-    width = n_classes + 3 if criterion == Criterion.GINI else 2 * n_classes + 5
-    return min(_LOCAL_GAINS_MAX_ROWS, budget // (width * 8))
+    return min(_LOCAL_GAINS_MAX_ROWS, budget // ((n_classes + 3) * 8))
 
 # Budget for collecting DENSE per-(partition, node) histogram cubes to the
 # driver (the no-shuffle level-job form).  Volume = partitions × pending
 # nodes × features × slots × classes × 8 B; past this the sparse rows +
 # distributed SUM path takes over (thousands-of-partitions clusters).
 _DENSE_CUBE_MAX_BYTES = 256 << 20
-
-_LOCAL_FOLD_RULE = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
-
-
-@contextmanager
-def _no_local_relation_fold(spark):
-    """Run the per-level local-gains query with ``ConvertToLocalRelation``
-    excluded from the optimizer.
-
-    The prefix-sum relation the gains query reads is a driver-local
-    ``LocalRelation``, and that rule eagerly evaluates Project-over-
-    LocalRelation AT PLAN TIME with a single-threaded interpreted
-    projection — the whole staged entropy/gini pipeline was running
-    row-at-a-time inside the optimizer, charged to "planning" (the
-    second ``toPandas()`` of the same DataFrame was 3-4x cheaper than the
-    first; excluded, the first run matches the second).  Excluding the
-    rule only moves WHERE the same Catalyst expressions are evaluated
-    (whole-stage codegen across cores instead of the optimizer's
-    interpreter — both call the same JVM arithmetic), so the gains are
-    bit-identical either way: pinned by
-    ``test_local_gains_fold_free_parity_and_conf_restore``.
-
-    Scoped set/restore of the session conf, preserving any prior
-    exclusion list.
-    """
-    key = "spark.sql.optimizer.excludedRules"
-    prev = spark.conf.get(key, None)
-    if prev and _LOCAL_FOLD_RULE in prev:
-        rules = prev
-    elif prev:
-        rules = f"{prev},{_LOCAL_FOLD_RULE}"
-    else:
-        rules = _LOCAL_FOLD_RULE
-    spark.conf.set(key, rules)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 class TreeLevel(NamedTuple):
@@ -648,7 +604,7 @@ def find_best_splits_packed(
         * sum(len(bin_edges.get(f, ())) + 1 for f in fl)
         for t, fl in zip(order, lists)
     )
-    local_ok = est_rows <= _local_gains_row_cap(spark, n_classes, criterion)
+    local_ok = est_rows <= _local_gains_row_cap(spark, n_classes)
     dense_ok = pair_ok = False
     if local_ok:
         # Dense-cube variant when the partitions × nodes × cube collect is
@@ -751,9 +707,7 @@ def find_best_splits_packed(
         }
         return found, None
     found = {
-        t: best_splits_from_counts_pdf(
-            levels[t], spark, n_classes, fl, node_col, criterion
-        )
+        t: best_splits_from_counts_pdf(levels[t], n_classes, fl, node_col, criterion)
         for t, fl in zip(order, lists)
     }
     carried = None
@@ -789,39 +743,33 @@ def _score_counts(
     tree's and breaks ties by its own ``tree_features[k]``; returned
     splits carry the slot as ``node_id``.
 
-    While the relation may fit ``_local_gains_row_cap`` (rows AND bytes
-    of every collect the criterion's scoring makes, so a high-class-count
-    fit cannot blow ``spark.driver.maxResultSize`` — ADVICE r11), it is
-    collected in ONE ``limit(cap + 1)`` Arrow action and scored
-    driver-side (:func:`best_splits_from_counts_pdf`).  ``cap + 1`` rows
-    back prove it over budget: ``candidate_split_gains`` + ``max_by``
-    then run over the same checkpoint blocks.  Exact-melt (unbounded)
-    entropy counts skip the probe.  The relation is checkpointed lazily
-    whenever it may be read more than once: before the probe, and always
-    for unbounded candidates, whose gains pipeline reads it three times
-    (left lazy, each read re-runs the scan, the melt's Expand and its
-    shuffle).  Only an ``est_rows`` upper bound past the cap on bounded
-    candidates leaves it a lazy, single-consumer plan.  Both forms are
-    pinned bit-identical."""
+    While the relation may fit ``_local_gains_row_cap`` (rows AND bytes,
+    so a high-class-count fit cannot blow ``spark.driver.maxResultSize``
+    — ADVICE r11), it is collected in ONE ``limit(cap + 1)`` Arrow action
+    and scored driver-side (:func:`best_splits_from_counts_pdf`), whatever
+    the criterion.  ``cap + 1`` rows back prove it over budget:
+    ``candidate_split_gains`` + ``max_by`` then run over the same
+    checkpoint blocks.  The relation is checkpointed lazily whenever it
+    may be read more than once: before the probe, and always for
+    unbounded candidates, whose gains pipeline reads it three times (left
+    lazy, each read re-runs the scan, the melt's Expand and its shuffle).
+    Only an ``est_rows`` upper bound past the cap on bounded candidates
+    leaves it a lazy, single-consumer plan.  Both forms are pinned
+    bit-identical."""
     import numpy as np
 
-    spark = counts.sparkSession
-    cap = _local_gains_row_cap(spark, n_classes, criterion)
+    cap = _local_gains_row_cap(counts.sparkSession, n_classes)
     if est_rows <= cap or not bounded_candidates:
         counts = counts.localCheckpoint(eager=False)
-    # Exact-melt entropy scored driver-side measured no faster than the
-    # distributed pipeline (sf0.1 lineitem, 583k distinct prices, 4 cores:
-    # depth-3 fit 11.78 vs 11.92 s median, faster in 5 of 10 pairs).
-    if est_rows <= cap and (bounded_candidates or criterion == Criterion.GINI):
+    if est_rows <= cap:
         pdf = counts.limit(cap + 1).toArrow().to_pandas()
         if len(pdf) <= cap:
             owner = np.searchsorted(slot_ends, pdf[node_col].to_numpy(), "right")
-            parts = [pdf[owner == k] for k in range(len(tree_features))]
             return [
                 best_splits_from_counts_pdf(
-                    part, spark, n_classes, fl, node_col, criterion
+                    pdf[owner == k], n_classes, fl, node_col, criterion
                 )
-                for part, fl in zip(parts, tree_features)
+                for k, fl in enumerate(tree_features)
             ]
         del pdf
     gains = candidate_split_gains(
@@ -849,7 +797,6 @@ def _score_counts(
 
 def best_splits_from_counts_pdf(
     pdf,
-    spark,
     n_classes: int,
     feature_names: list[str],
     node_col: str,
@@ -859,26 +806,12 @@ def best_splits_from_counts_pdf(
     driver-side scoring of both fit paths: the scorer's collected relation
     (:func:`_score_counts`), the merged dense or pair cubes, and a level
     whose counts the tree loop carried over from the previous pass's PAIR
-    cube.
-
-    Gini is pure rational float64 arithmetic, bit-reproducible driver-side
-    (see ``_gini_gains_arrays``) — it skips the per-level Catalyst
-    roundtrip and its ~0.5 s of fixed plan/launch/collect latency.
-    Entropy keeps the Catalyst path: its log2 is transcendental and only
-    the JVM's own evaluation is bit-stable against the distributed
-    form."""
+    cube.  Gains and argmax are numpy for both criteria
+    (:func:`_gains_arrays`), bit-identical to the distributed Catalyst
+    form, so the level runs no Spark job."""
     if pdf is None or pdf.empty:
         return []
-    if criterion == Criterion.GINI:
-        return _best_splits_gini_local(pdf, n_classes, feature_names, node_col)
-    with _no_local_relation_fold(spark):
-        cum = _local_prefix_sums(pdf, spark, n_classes, node_col)
-        gains = _gains_from_prefix_sums(
-            cum, [node_col, FEATURE], n_classes, criterion,
-            include_child_counts=True,
-        )
-        gains_pdf = gains.toPandas()
-    return _best_split_rows_local(gains_pdf, feature_names, node_col)
+    return _best_splits_local(pdf, n_classes, feature_names, node_col, criterion)
 
 
 def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
@@ -897,47 +830,9 @@ def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
     return out
 
 
-def _best_split_rows_local(
-    gains_pdf, feature_names: list[str], node_col: str
-) -> list[dict[str, Any]]:
-    """Driver-side argmax over the COLLECTED gains relation — pure float
-    COMPARISONS on values Spark computed (no arithmetic), so the result is
-    bit-identical to the ``max_by`` form by construction.  Replicates its
-    total order exactly: gain desc, feature position asc, threshold asc
-    with the NaN candidate preferred over any finite threshold at equal
-    (gain, position) — ``max_by`` maximizes ``-value`` and double NaN
-    sorts greatest, so NaN maps to -inf in the ascending sort key."""
-    import numpy as np
-
-    if gains_pdf.empty:
-        return []
-    pos = {name: i for i, name in enumerate(feature_names)}
-    vals = gains_pdf[FEATURE_VALUE].to_numpy(np.float64)
-    g = gains_pdf.assign(
-        __pos=gains_pdf[FEATURE].map(pos).to_numpy(np.int64),
-        __vkey=np.where(np.isnan(vals), -np.inf, vals),
-    ).sort_values(
-        [node_col, "information_gain", "__pos", "__vkey"],
-        ascending=[True, False, True, True],
-    )
-    top = g.groupby(node_col, sort=False).head(1)
-    return [
-        {
-            "node_id": int(r[node_col]),
-            "feature": r[FEATURE],
-            "threshold": float(r[FEATURE_VALUE]),
-            "information_gain": float(r["information_gain"]),
-            "parent_criterion": float(r["parent_criterion"]),
-            "left_counts": [int(x) for x in r["left_counts"]],
-            "right_counts": [int(x) for x in r["right_counts"]],
-        }
-        for _, r in top.iterrows()
-    ]
-
-
 def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
-    """Sorted counts relation + exact int64 prefix/total sums, shared by
-    the Catalyst local-gains relation and the numpy gini twin.  Within
+    """Sorted counts relation + exact int64 prefix/total sums of the
+    driver-side gains (:func:`_gains_arrays`).  Within
     each (node, feature) group the ordering replicates the window spec
     bit-for-bit: ascending feature_value with NaN LAST (Spark sorts
     double NaN greatest; numpy also sorts NaN last); values are unique
@@ -988,49 +883,29 @@ def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
     return pdf, arrays
 
 
-def _local_prefix_sums(pdf, spark, n_classes: int, node_col: str) -> DataFrame:
-    """Per-(node, feature) prefix sums of a non-empty collected histogram
-    relation, driver-side — exact int64 arithmetic, identical to the
-    window-sum form (ordering contract in :func:`_prefix_sum_arrays`).
-    Returns the cum relation as a LOCAL DataFrame (created through pyarrow
-    so the NaN candidate survives as NaN, not null)."""
-    import numpy as np
-    import pyarrow as pa
-
-    pdf, sums = _prefix_sum_arrays(pdf, n_classes, node_col)
-    arrays: dict[str, pa.Array] = {
-        node_col: pa.array(pdf[node_col].to_numpy(np.int32), type=pa.int32()),
-        FEATURE: pa.array(pdf[FEATURE].tolist(), type=pa.string()),
-        FEATURE_VALUE: pa.array(
-            pdf[FEATURE_VALUE].to_numpy(np.float64), type=pa.float64()
-        ),
-    }
-    for name, vals in sums.items():
-        arrays[name] = pa.array(vals, type=pa.int64())
-    return spark.createDataFrame(pa.table(arrays))
-
-
-def _gini_gains_arrays(pdf, n_classes: int, node_col: str):
-    """Shared numpy core of the driver-side GINI gains: prefix sums →
-    max-value filter → gains, all as flat arrays (no per-row Python
-    objects).  Returns ``(nodes, features, values, gain, parent_g,
+def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
+    """Numpy core of the driver-side gains: prefix sums → max-value
+    filter → gains, all as flat arrays (no per-row Python objects).
+    Returns ``(nodes, features, values, gain, parent_criterion,
     left_counts 2d, right_counts 2d)`` over the surviving candidates.
 
-    Bit-parity argument: the gini pipeline is pure RATIONAL float64
-    arithmetic — divide, multiply, add, subtract are IEEE-754
+    Bit-parity argument: divide, multiply, add and subtract are IEEE-754
     correctly-rounded operations, so NumPy and the JVM produce identical
     bits whenever the operation order is identical; this mirrors
     ``exprs.gini_expr`` (left-fold ``1.0 - ((p0*p0 + p1*p1) + …)``),
+    ``exprs.entropy_expr`` (``-1.0 * ((t0 + t1) + …)`` with ``t = p *
+    log2(p)`` where ``p > 0``, else ``0.0``),
     ``exprs.weighted_child_criterion`` (``(cum_n/sum_n)*left +
     ((sum_n-cum_n)/sum_n)*right``, int64 subtractions before the double
     casts, exactly as Catalyst inserts them) and
-    ``exprs.information_gain`` term-for-term.  ENTROPY stays on the
-    Catalyst path: log2 is transcendental (not correctly rounded — JVM
-    ``Math.log`` and NumPy's libm differ in the last ulp), and argmax
-    ties between equal-gain candidates are load-bearing.  Pinned
-    bit-identical to the Catalyst form by
+    ``exprs.information_gain`` term-for-term.  Entropy's ``log2`` is not
+    correctly rounded, so it is Spark's own: ``fdlibm.log2`` ports the
+    ``StrictMath.log`` that Catalyst's ``Log2`` calls, bit for bit.
+    Pinned bit-identical to the Catalyst form, for both criteria, by
     ``test_local_gains_numpy_gini_matches_catalyst``."""
     import numpy as np
+
+    from efficient_trees_spark.functions import fdlibm
 
     pdf, arr = _prefix_sum_arrays(pdf, n_classes, node_col)
     # Drop the maximal value of each feature: a split there leaves the
@@ -1043,11 +918,22 @@ def _gini_gains_arrays(pdf, n_classes: int, node_col: str):
     sum_n = sum_n_i.astype(np.float64)
     right_n = right_n_i.astype(np.float64)
 
-    def gini(p_cols: list) -> "np.ndarray":
-        acc = p_cols[0] * p_cols[0]
+    def entropy_term(p: "np.ndarray") -> "np.ndarray":
+        term = np.zeros_like(p)
+        pos = p > 0
+        term[pos] = p[pos] * fdlibm.log2(p[pos])
+        return term
+
+    if criterion == Criterion.GINI:
+        term, finish = (lambda p: p * p), (lambda acc: 1.0 - acc)
+    else:
+        term, finish = entropy_term, (lambda acc: -1.0 * acc)
+
+    def impurity(p_cols: list) -> "np.ndarray":
+        acc = term(p_cols[0])
         for p in p_cols[1:]:
-            acc = acc + p * p
-        return 1.0 - acc
+            acc = acc + term(p)
+        return finish(acc)
 
     n_rows = int(keep.sum())
     left_counts = np.empty((n_rows, n_classes), dtype=np.int64)
@@ -1061,41 +947,44 @@ def _gini_gains_arrays(pdf, n_classes: int, node_col: str):
         left_p.append(cum_i.astype(np.float64) / cum_n)
         right_p.append((sum_i - cum_i).astype(np.float64) / right_n)
         parent_p.append(sum_i.astype(np.float64) / sum_n)
-    left_g = gini(left_p)
-    right_g = gini(right_p)
-    parent_g = gini(parent_p)
-    child = cum_n / sum_n * left_g + right_n / sum_n * right_g
-    gain = parent_g - child
+    left_c = impurity(left_p)
+    right_c = impurity(right_p)
+    parent_c = impurity(parent_p)
+    child = cum_n / sum_n * left_c + right_n / sum_n * right_c
+    gain = parent_c - child
 
     nodes = pdf[node_col].to_numpy(np.int64)[keep]
     features = pdf[FEATURE].to_numpy()[keep]
     values = pdf[FEATURE_VALUE].to_numpy(np.float64)[keep]
-    return nodes, features, values, gain, parent_g, left_counts, right_counts
+    return nodes, features, values, gain, parent_c, left_counts, right_counts
 
 
-def _best_splits_gini_local(
-    pdf, n_classes: int, feature_names: list[str], node_col: str
+def _best_splits_local(
+    pdf,
+    n_classes: int,
+    feature_names: list[str],
+    node_col: str,
+    criterion: Criterion,
 ) -> list[dict[str, Any]]:
-    """Fused driver-side GINI gains + argmax: the winners-only form of
-    ``_best_split_rows_local`` over the gains frame of
-    :func:`_gini_gains_arrays` — identical
-    total order (gain desc, feature position asc, threshold asc with the
-    NaN candidate mapped to -inf), but one ``np.lexsort`` over flat
-    arrays instead of a pandas multi-key sort plus 2x per-row list
-    columns (measured ~1.5 s -> ~0.3 s per level at the 600k-candidate
-    exact-fit shape).  ``-gain`` as an ascending key is an exact
-    reversal for the non-NaN doubles gains are (0.0 and -0.0 tie either
-    way and fall to the next key, as in the pandas form)."""
+    """Driver-side gains (:func:`_gains_arrays`) + winners-only argmax in
+    the ``max_by`` form's total order (:func:`_best_split_rows`): gain
+    desc, feature position asc, threshold asc with the NaN candidate
+    preferred over any finite threshold at equal (gain, position) —
+    ``max_by`` maximizes ``-value`` and double NaN sorts greatest, so NaN
+    maps to -inf here.  One ``np.lexsort`` over flat arrays (measured
+    ~1.5 s -> ~0.3 s per level against a pandas multi-key sort at the
+    600k-candidate exact-fit shape).  ``-gain`` as an ascending key is an
+    exact reversal for the non-NaN doubles gains are (0.0 and -0.0 tie
+    either way and fall to the next key, as in ``max_by``)."""
     import numpy as np
+    import pandas as pd
 
-    nodes, features, values, gain, parent_g, lc, rc = _gini_gains_arrays(
-        pdf, n_classes, node_col
+    nodes, features, values, gain, parent_c, lc, rc = _gains_arrays(
+        pdf, n_classes, node_col, criterion
     )
     if not len(nodes):
         return []
     pos_of = {name: i for i, name in enumerate(feature_names)}
-    import pandas as pd
-
     codes, uniques = pd.factorize(features, sort=False)
     pos = np.asarray([pos_of[u] for u in uniques], dtype=np.int64)[codes]
     vkey = np.where(np.isnan(values), -np.inf, values)
@@ -1109,7 +998,7 @@ def _best_splits_gini_local(
             "feature": features[i],
             "threshold": float(values[i]),
             "information_gain": float(gain[i]),
-            "parent_criterion": float(parent_g[i]),
+            "parent_criterion": float(parent_c[i]),
             "left_counts": [int(x) for x in lc[i]],
             "right_counts": [int(x) for x in rc[i]],
         }

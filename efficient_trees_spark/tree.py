@@ -158,7 +158,7 @@ def _coalesce_for_pack(
     full extra source pass).  Returns ``(df, n_parts)`` with the output's
     count, threaded on to the per-level histogram budget."""
     if not n_rows:
-        return prepared, None
+        return prepared, n_parts
     sc = prepared.sparkSession.sparkContext
     if n_parts is None:
         n_parts = prepared.rdd.getNumPartitions()
@@ -540,8 +540,16 @@ class DecisionTreeClassifier:
         # Distinct class labels, sorted ascending (NULL first) for
         # deterministic indexing (reference keeps engine order,
         # tree.py:110-113), and each label's count: the root's class
-        # distribution (reference value_counts, tree.py:363-372).
-        rows = data.groupBy(target_name).count().orderBy(target_name).collect()
+        # distribution (reference value_counts, tree.py:363-372).  The
+        # n_classes rows are sorted in one partition: 2 Spark jobs, where
+        # orderBy's range-partitioned sort runs 4.
+        rows = (
+            data.groupBy(target_name)
+            .count()
+            .coalesce(1)
+            .sortWithinPartitions(target_name)
+            .collect()
+        )
         if not rows:
             raise ValueError("cannot fit on training data with no rows")
         unique_targets = [row[0] for row in rows]
@@ -890,7 +898,6 @@ class DecisionTreeClassifier:
                             b["node_id"]: b
                             for b in split_finder.best_splits_from_counts_pdf(
                                 carried[t],
-                                data.sparkSession,
                                 len(unique_targets),
                                 tree_features[t],
                                 node_col,

@@ -191,7 +191,7 @@ def test_forest_level_branches_agree(spark, monkeypatch):
     monkeypatch.setattr(
         split_finder,
         "_local_gains_row_cap",
-        lambda _spark, _n_classes, _criterion: split_finder._LOCAL_GAINS_MAX_ROWS,
+        lambda _spark, _n_classes: split_finder._LOCAL_GAINS_MAX_ROWS,
     )
     sparse = fit()
     monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", 0)

@@ -247,23 +247,32 @@ def test_exact_forest_runs_one_melt_per_level(spark, monkeypatch):
 def test_depth0_melt_fit_runs_only_the_label_job(spark):
     """The root's class counts come from the fit's label job: a depth-0
     exact fit runs exactly the jobs of that one query, no separate
-    root-distribution job."""
+    root-distribution job, and the query sorts its few rows in one
+    partition: 2 jobs (aggregate + result), where ``orderBy``'s range
+    partitioning runs 4."""
     data = _iris_frame(spark)
     label_jobs = _jobs_in_group(
-        spark, lambda: data.groupBy("target").count().orderBy("target").collect()
+        spark,
+        lambda: data.groupBy("target")
+        .count()
+        .coalesce(1)
+        .sortWithinPartitions("target")
+        .collect(),
     )
     model = DecisionTreeClassifier(max_depth=0, hist_method="expand")
-    assert _jobs_in_group(spark, lambda: model.fit(data, "target")) == label_jobs
+    assert _jobs_in_group(spark, lambda: model.fit(data, "target")) == label_jobs == 2
     counts = {r["target"]: r["count"] for r in data.groupBy("target").count().collect()}
     majority = max(counts, key=lambda c: (counts[c], -c))
     assert model.tree == {"type": "leaf", "value": majority}
 
 
 def test_melt_entropy_gains_read_the_checkpointed_counts(spark, monkeypatch):
-    """An exact-melt entropy level reads its counts relation three times
-    in the distributed gains pipeline; the scorer checkpoints it, so the
-    gains plan re-runs no melt (no ``Expand``)."""
+    """An exact-melt entropy level over the driver-collect budget reads
+    its counts relation three times in the distributed gains pipeline;
+    the scorer checkpoints it, so the gains plan re-runs no melt (no
+    ``Expand``)."""
     data = _iris_frame(spark)
+    monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", 0)
     plans: list = []
     gains = split_finder.candidate_split_gains
 
@@ -623,6 +632,92 @@ def test_pair_child_counts_reject_non_edge_threshold():
         pair_cubes_to_child_counts(cubes, chosen, ["a"], 2, edges, "__node_id")
 
 
+@pytest.mark.parametrize("dtype", ["f4", "f8"])
+def test_partition_order_stats_wire_types(spark, dtype):
+    """Wire-type round trip of the order-stats pass: an ``f4`` fit ships
+    its stat values as ``array<float>``, an ``f8`` fit as
+    ``array<double>``, and the values are exactly what the numeric core
+    (``_matrix_order_stats``) computes on the same dtype-converted matrix,
+    NULL and NaN cells dropped."""
+    import pyarrow as pa
+
+    from efficient_trees_spark.operators.histogram import (
+        STATS_FEATURE,
+        _matrix_order_stats,
+        partition_order_stats,
+    )
+
+    rng = np.random.default_rng(5)
+    rows = [tuple(map(float, r)) for r in rng.normal(size=(300, 2))]
+    rows += [(None, NAN), (NAN, None)]
+    df = spark.createDataFrame(rows, "a double, b double").coalesce(1)
+    stats = partition_order_stats(df, ["a", "b"], 16, dtype=dtype)
+    elem = "float" if dtype == "f4" else "double"
+    assert stats.schema["__sv"].dataType.simpleString() == f"array<{elem}>"
+    tbl = stats.toArrow()
+    np_dtype, pa_type = (
+        (np.float32, pa.float32()) if dtype == "f4" else (np.float64, pa.float64())
+    )
+    assert tbl.schema.field("__sv").type == pa.list_(pa_type)
+
+    matrix = np.array(
+        [[NAN if v is None else v for v in r] for r in rows], dtype=np_dtype
+    )
+    feats, vals, vmax, ns = _matrix_order_stats(matrix, ["a", "b"], 16)
+    got = {r[STATS_FEATURE]: r for r in tbl.to_pylist()}
+    assert sorted(got) == feats == ["a", "b"]
+    for name, v, mx, n in zip(feats, vals, vmax, ns):
+        shipped = np.asarray(got[name]["__sv"], dtype=np_dtype)
+        assert shipped.tobytes() == v.astype(np_dtype).tobytes(), name
+        assert got[name]["__svx"] == mx and got[name]["__sn"] == n == 300
+
+
+@pytest.mark.parametrize("code_dtype, n_edges", [("u1", 200), ("u2", 300)])
+def test_pack_encode_wire_types(spark, code_dtype, n_edges):
+    """Wire-type round trip of the fused pack + encode: the class index
+    ships as ``int32``, and each row's blob holds one ``uint8`` (u1) or
+    ``uint16`` (u2) code per feature that decodes to the input value's
+    edge index — NaN and NULL to the width's reserved top codes."""
+    import pyarrow as pa
+
+    from efficient_trees_spark.operators.histogram import (
+        PACKED_COL,
+        _code_info,
+        pack_encode_features,
+    )
+    from efficient_trees_spark.operators.split_finder import TARGET_IDX
+
+    np_code, nan_code, null_code, _ = _code_info(code_dtype)
+    edges = {
+        "a": [0.5, 1.5, 2.5],
+        "b": [float(e) for e in np.arange(n_edges) * 0.25],
+    }
+    rng = np.random.default_rng(9)
+    want = {}
+    rows = []
+    for i in range(400):
+        ia, ib = int(rng.integers(0, 3)), int(rng.integers(0, n_edges))
+        rows.append((edges["a"][ia], edges["b"][ib], i))
+        want[i] = [ia, ib]
+    rows += [(None, NAN, 400), (NAN, None, 401)]
+    want[400], want[401] = [null_code, nan_code], [nan_code, null_code]
+    df = spark.createDataFrame(rows, f"a double, b double, {TARGET_IDX} int")
+    packed = pack_encode_features(
+        df, ["a", "b"], edges, dtype="f8", code_dtype=code_dtype
+    )
+    assert packed.schema[TARGET_IDX].dataType.simpleString() == "int"
+    tbl = packed.toArrow()
+    assert tbl.schema.field(TARGET_IDX).type == pa.int32()
+    assert tbl.schema.field(PACKED_COL).type == pa.binary()
+    got = {
+        t: np.frombuffer(blob, dtype=np_code).tolist()
+        for blob, t in zip(
+            tbl.column(PACKED_COL).to_pylist(), tbl.column(TARGET_IDX).to_pylist()
+        )
+    }
+    assert got == want
+
+
 def test_arrow_stat_rows_matches_collect(spark):
     """The zero-copy Arrow consumption of the order-stats relation must see
     exactly what row collect() sees — same tuples, same merged edges."""
@@ -889,89 +984,14 @@ def test_stats_merges_with_counts(spark):
     assert total_rows == 701
 
 
-def test_local_gains_fold_free_parity_and_conf_restore(spark):
-    """The packed local-gains query runs with ``ConvertToLocalRelation``
-    excluded (split_finder._no_local_relation_fold): the optimizer
-    otherwise evaluates the whole staged entropy/gini pipeline
-    row-at-a-time, single-threaded, at PLAN time.  The exclusion only
-    moves where the same Catalyst expressions are evaluated, so the gains
-    must be BIT-identical folded vs fold-free — pinned here over NaN
-    candidates, per-class zeros, and 3 classes — and the session conf
-    must be restored afterwards."""
+def _gains_frame(pdf, n_classes, criterion):
+    """The driver-side gains of ``pdf`` as the frame the Catalyst form's
+    ``toPandas()`` yields, assembled from the production numpy core
+    ``split_finder._gains_arrays``."""
     import pandas as pd
 
-    rng = np.random.default_rng(11)
-    nodes, feats, bins, ncls = 3, 5, 9, 3
-    n = nodes * feats * bins
-    pdf = pd.DataFrame(
-        {
-            "__node_id": np.repeat(np.arange(nodes, dtype=np.int32), feats * bins),
-            split_finder.FEATURE: np.tile(
-                np.repeat([f"f_{j}" for j in range(feats)], bins), nodes
-            ),
-            split_finder.FEATURE_VALUE: np.tile(
-                np.arange(bins, dtype=np.float64) / bins, nodes * feats
-            ),
-            "count_examples": np.zeros(n, dtype=np.int64),
-        }
-    )
-    for c in range(ncls):
-        col = rng.integers(0, 97, n)
-        col[rng.random(n) < 0.3] = 0  # per-class zeros exercise the p>0 CASE
-        pdf[f"class_{c}_count"] = col
-        pdf["count_examples"] += col
-    # a histogram row exists only because >= 1 example landed in it
-    zero = pdf["count_examples"] == 0
-    pdf.loc[zero, "class_0_count"] += 1
-    pdf.loc[zero, "count_examples"] += 1
-    # the last slot of each feature is the NaN candidate, like the real cube
-    pdf.loc[pdf.index % bins == bins - 1, split_finder.FEATURE_VALUE] = NAN
-
-    key = "spark.sql.optimizer.excludedRules"
-    prev = spark.conf.get(key, None)
-
-    def run(fold_free):
-        cum = split_finder._local_prefix_sums(pdf, spark, ncls, "__node_id")
-        gains = split_finder._gains_from_prefix_sums(
-            cum,
-            ["__node_id", split_finder.FEATURE],
-            ncls,
-            Criterion.ENTROPY,
-            include_child_counts=True,
-        )
-        if fold_free:
-            with split_finder._no_local_relation_fold(spark):
-                out = gains.toPandas()
-                plan = gains._jdf.queryExecution().optimizedPlan().toString()
-            # structural pin: the relation must NOT have been folded away
-            assert "Project" in plan, plan
-        else:
-            out = gains.toPandas()
-        return out.sort_values(
-            ["__node_id", "feature", "feature_value"]
-        ).reset_index(drop=True)
-
-    folded, free = run(False), run(True)
-    assert spark.conf.get(key, None) == prev  # conf restored
-    assert len(folded) == len(free) > 0
-    for col in ("information_gain", "parent_criterion"):
-        a = folded[col].to_numpy(np.float64).view(np.int64)
-        b = free[col].to_numpy(np.float64).view(np.int64)
-        assert (a == b).all(), col
-    for col in ("left_counts", "right_counts"):
-        assert all(
-            list(x) == list(y) for x, y in zip(folded[col], free[col])
-        ), col
-
-
-def _gini_gains_frame(pdf, n_classes):
-    """The driver-side GINI gains of ``pdf`` as the frame the Catalyst
-    form's ``toPandas()`` yields, assembled from the production numpy core
-    ``split_finder._gini_gains_arrays``."""
-    import pandas as pd
-
-    nodes, features, values, gain, parent_g, lc, rc = (
-        split_finder._gini_gains_arrays(pdf, n_classes, "__node_id")
+    nodes, features, values, gain, parent_c, lc, rc = (
+        split_finder._gains_arrays(pdf, n_classes, "__node_id", criterion)
     )
     out = pd.DataFrame(
         {
@@ -979,7 +999,7 @@ def _gini_gains_frame(pdf, n_classes):
             split_finder.FEATURE: features,
             split_finder.FEATURE_VALUE: values,
             "information_gain": gain,
-            "parent_criterion": parent_g,
+            "parent_criterion": parent_c,
         }
     )
     out["left_counts"] = list(lc)
@@ -987,12 +1007,35 @@ def _gini_gains_frame(pdf, n_classes):
     return out
 
 
-def test_local_gains_numpy_gini_matches_catalyst(spark):
-    """The driver-side scoring computes GINI gains in numpy
-    (``split_finder._gini_gains_arrays``) instead of the per-level
-    Catalyst roundtrip — legitimate only because the gini pipeline is pure
-    rational float64 arithmetic (IEEE correctly-rounded ops), mirrored
-    term-for-term.  Pin BIT-identity against the Catalyst form over NaN
+def _spark_counts(spark, pdf):
+    """``pdf`` as a Spark counts relation, built through a pyarrow table
+    of numpy columns so the NaN candidate survives as NaN (pandas
+    conversion would make it NULL, which sorts first)."""
+    import pyarrow as pa
+
+    types = {
+        "__node_id": pa.int32(),
+        split_finder.FEATURE: pa.string(),
+        split_finder.FEATURE_VALUE: pa.float64(),
+    }
+    return spark.createDataFrame(
+        pa.table(
+            {
+                c: pa.array(pdf[c].to_numpy(), type=types.get(c, pa.int64()))
+                for c in pdf.columns
+            }
+        )
+    )
+
+
+@pytest.mark.parametrize("criterion", [Criterion.GINI, Criterion.ENTROPY])
+def test_local_gains_numpy_gini_matches_catalyst(spark, criterion):
+    """The driver-side scoring computes gains in numpy
+    (``split_finder._gains_arrays``) instead of a Catalyst roundtrip —
+    legitimate only because every step is IEEE correctly-rounded float64
+    arithmetic in Catalyst's operation order, and entropy's log2 is a
+    port of the fdlibm log Spark's ``Log2`` calls.  Pin BIT-identity
+    against the distributed Catalyst form over the same counts, with NaN
     candidates, per-class zeros, 3 classes, single-candidate features
     (fully filtered by the max-value rule) and large counts."""
     import pandas as pd
@@ -1054,18 +1097,20 @@ def test_local_gains_numpy_gini_matches_catalyst(spark):
             ["__node_id", "feature", "feature_value"]
         ).reset_index(drop=True)
 
-    with split_finder._no_local_relation_fold(spark):
-        cum = split_finder._local_prefix_sums(pdf, spark, ncls, "__node_id")
-        catalyst = sort(
-            split_finder._gains_from_prefix_sums(
-                cum,
-                ["__node_id", split_finder.FEATURE],
-                ncls,
-                Criterion.GINI,
-                include_child_counts=True,
-            ).toPandas()
-        )
-    local = sort(_gini_gains_frame(pdf, ncls))
+    counts = _spark_counts(spark, pdf)
+    catalyst = sort(
+        split_finder.candidate_split_gains(
+            counts,
+            [],
+            ncls,
+            criterion,
+            node_col="__node_id",
+            include_child_counts=True,
+            bounded_candidates=True,
+            precomputed_counts=counts,
+        ).toPandas()
+    )
+    local = sort(_gains_frame(pdf, ncls, criterion))
 
     assert len(catalyst) == len(local) > 0
     assert not (catalyst["feature"] == "f_single").any()  # max-value filter
@@ -1083,7 +1128,59 @@ def test_local_gains_numpy_gini_matches_catalyst(spark):
         ), col
 
 
-def test_binned_fit_never_probes_rdd_on_parquet_source(spark, monkeypatch):
+def test_fdlibm_log2_matches_spark_log2_bit_for_bit(spark):
+    """``fdlibm.log2`` must return Spark's ``log2`` bits on every
+    proportion ``c/n`` with ``n <= 1000`` (500,500 values).  The platform
+    ``np.log`` must differ on some of them, or the port pins nothing."""
+    from efficient_trees_spark.functions import fdlibm
+
+    tbl = (
+        spark.range(1, 1001)
+        .select(
+            F.col("id").alias("n"),
+            F.explode(F.sequence(F.lit(1).cast("long"), F.col("id"))).alias("c"),
+        )
+        .select((F.col("c") / F.col("n")).alias("p"))
+        .select("p", F.log2("p").alias("log2"))
+        .toArrow()
+    )
+    p = tbl.column("p").to_numpy()
+    spark_bits = tbl.column("log2").to_numpy().view(np.int64)
+    assert len(p) == 500_500
+    assert (fdlibm.log2(p).view(np.int64) == spark_bits).all()
+    assert ((np.log(p) / np.log(2.0)).view(np.int64) != spark_bits).any()
+
+
+def test_entropy_counts_pdf_scores_without_spark_jobs(spark):
+    """An entropy level scored from a driver-local counts relation (the
+    scorer's collect, merged cubes or a carried pair-cube level) runs no
+    Spark job."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "__node_id": np.int32(0),
+            split_finder.FEATURE: ["a", "a", "a", "b", "b"],
+            split_finder.FEATURE_VALUE: [1.0, 2.0, NAN, 0.5, 1.5],
+            "class_0_count": np.array([5, 1, 2, 3, 5], dtype=np.int64),
+            "class_1_count": np.array([0, 4, 3, 4, 1], dtype=np.int64),
+        }
+    )
+    pdf["count_examples"] = pdf["class_0_count"] + pdf["class_1_count"]
+    found: list = []
+    jobs = _jobs_in_group(
+        spark,
+        lambda: found.extend(
+            split_finder.best_splits_from_counts_pdf(
+                pdf, 2, ["a", "b"], "__node_id", Criterion.ENTROPY
+            )
+        ),
+    )
+    assert jobs == 0
+    assert [(b["feature"], b["threshold"]) for b in found] == [("a", 1.0)]
+
+
+def test_binned_fit_never_probes_rdd_on_parquet_source(spark, monkeypatch, tmp_path):
     """The partition-count probes (`tree._fan_out_small_input`,
     `_two_scan_binned_edges`, `_coalesce_for_pack`,
     `split_finder.find_best_splits_packed`) must thread the KNOWN count
@@ -1091,17 +1188,30 @@ def test_binned_fit_never_probes_rdd_on_parquet_source(spark, monkeypatch):
     the fan-out Exchange EXECUTES the shuffle stage — a full extra source
     pass per probe (two per binned fit before r11's threading fix,
     measured ~2.3 s of the 5.2 s sf0.1 binned fit).  Poison the property
-    and require a parquet-backed binned fit to complete without it."""
+    and require parquet-backed binned fits to complete without it: one on
+    lineitem, and one whose features are all NULL (a row estimate of 0,
+    where the count must still be threaded on)."""
     import pyspark.sql.classic.dataframe as _cdf
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_quantity", "l_extendedprice", "l_discount", "l_tax",
         F.col("l_returnflag").alias("target"),
     )
-    expected = DecisionTreeClassifier(
-        max_depth=2, criterion=Criterion.GINI, max_bins=16
-    )
-    expected.fit(li, "target")
+    null_path = str(tmp_path / "all_null.parquet")
+    li.select(
+        *[F.lit(None).cast("double").alias(c) for c in ("a", "b")], "target"
+    ).write.parquet(null_path)
+    all_null = spark.read.parquet(null_path)
+
+    def fit(df):
+        model = DecisionTreeClassifier(
+            max_depth=2, criterion=Criterion.GINI, max_bins=16
+        )
+        model.fit(df, "target")
+        return model.tree
+
+    expected = [fit(li), fit(all_null)]
+    assert expected[1]["type"] == "leaf"
 
     def poisoned_rdd(self):
         raise AssertionError(
@@ -1112,11 +1222,7 @@ def test_binned_fit_never_probes_rdd_on_parquet_source(spark, monkeypatch):
     monkeypatch.setattr(
         _cdf.DataFrame, "rdd", property(poisoned_rdd), raising=True
     )
-    model = DecisionTreeClassifier(
-        max_depth=2, criterion=Criterion.GINI, max_bins=16
-    )
-    model.fit(li, "target")
-    assert model.tree == expected.tree
+    assert [fit(li), fit(all_null)] == expected
 
 
 def _nulls_nans_lineitem(spark):
@@ -1142,8 +1248,8 @@ def test_exact_gini_local_gains_tree_matches_distributed(spark, monkeypatch):
     BIT-identical trees.  Force the distributed form by zeroing the budget
     and compare whole trees on a relation with NULLs, NaNs and a
     high-cardinality continuous feature; a spy on
-    ``candidate_split_gains`` pins the form each fit took.  Exact-melt
-    entropy levels keep the distributed form under the budget too."""
+    ``candidate_split_gains`` pins the form each fit took, for gini and
+    entropy alike."""
     li = _nulls_nans_lineitem(spark)
     calls: list = []
     record_calls(monkeypatch, split_finder, "candidate_split_gains", calls, "distributed")
@@ -1161,28 +1267,25 @@ def test_exact_gini_local_gains_tree_matches_distributed(spark, monkeypatch):
         monkeypatch.setattr(split_finder, "_LOCAL_GAINS_MAX_ROWS", 0)
         distributed_tree, distributed_calls = fit_tree(criterion)
         assert distributed_calls > 0, criterion
-        if criterion == Criterion.GINI:
-            assert local_calls == 0
-        else:
-            assert local_calls == distributed_calls
+        assert local_calls == 0, criterion
         assert local_tree["type"] == "node", criterion
         assert local_tree == distributed_tree, criterion
 
 
 @pytest.mark.parametrize(
     "criterion, row_width, budget",
-    # 1 KiB: a 21-row gini cap, under the root level's ~56 rows.  4 KiB:
-    # an 85-row counts cap but a 46-row gains cap at 3 classes.
-    [(Criterion.GINI, 3 + 3, 1 << 10), (Criterion.ENTROPY, 2 * 3 + 5, 4 << 10)],
+    # 1 KiB: a 21-row counts cap at 3 classes, under the root level's ~56
+    # rows.  Both criteria collect only the counts.
+    [(Criterion.GINI, 3 + 3, 1 << 10), (Criterion.ENTROPY, 3 + 3, 1 << 10)],
 )
 def test_packed_sparse_collect_is_byte_bounded(
     spark, monkeypatch, criterion, row_width, budget
 ):
     """The packed fit scores a level driver-side only while every collect
     of that scoring fits the driver-collect BYTE budget
-    (``_local_gains_row_cap``), not just a row count.  Gini collects the
-    counts; entropy also collects the gains relation, whose rows carry
-    both child count arrays.  With ``spark.driver.maxResultSize``'s budget
+    (``_local_gains_row_cap``), not just a row count: the counts row of
+    ``n_classes + 3`` columns, for either criterion.  With
+    ``spark.driver.maxResultSize``'s budget
     too small for the root level at that width (which also rules the
     dense cubes out), the level must take the distributed gains pipeline,
     no driver-scored level may exceed the budget, and the tree must not
@@ -1216,12 +1319,12 @@ def test_packed_sparse_collect_is_byte_bounded(
 
 
 def test_best_splits_gini_local_matches_two_step_form():
-    """The fused winners-only gini path (`_best_splits_gini_local`) must
-    reproduce `_best_split_rows_local` over the full gains frame of
-    `_gini_gains_arrays` exactly — same total order (gain desc, position asc, threshold asc,
-    NaN threshold -> -inf key), same winner rows — on a multi-node
-    relation engineered with exact gain TIES across features and NaN
-    candidates.  Pure driver code, no Spark session needed."""
+    """The fused winners-only argmax (`_best_splits_local`) must pick, for
+    both criteria, the rows a plain-Python argmax picks over the full gains
+    frame of `_gains_arrays` in the `max_by` form's total order (gain desc,
+    position asc, threshold asc, the NaN threshold first) — on a
+    multi-node relation engineered with exact gain TIES across features
+    and NaN candidates.  Pure driver code, no Spark session needed."""
     import pandas as pd
 
     rng = np.random.default_rng(41)
@@ -1267,13 +1370,41 @@ def test_best_splits_gini_local_matches_two_step_form():
     pdf.loc[nan_rows, split_finder.FEATURE_VALUE] = NAN
 
     names = [f"f_{j}" for j in range(feats)]
-    fused = split_finder._best_splits_gini_local(pdf, ncls, names, "__node_id")
-    two_step = split_finder._best_split_rows_local(
-        _gini_gains_frame(pdf, ncls), names, "__node_id"
-    )
-    key = lambda r: r["node_id"]
-    assert sorted(fused, key=key) == sorted(two_step, key=key)
-    assert len(fused) == nodes
+
+    def total_order(r):
+        v = r[split_finder.FEATURE_VALUE]
+        return (
+            r["information_gain"],
+            -names.index(r[split_finder.FEATURE]),
+            math.inf if math.isnan(v) else -v,
+        )
+
+    for criterion in (Criterion.GINI, Criterion.ENTROPY):
+        fused = split_finder._best_splits_local(
+            pdf, ncls, names, "__node_id", criterion
+        )
+        best: dict = {}
+        for r in _gains_frame(pdf, ncls, criterion).to_dict("records"):
+            node = int(r["__node_id"])
+            if node not in best or total_order(r) > total_order(best[node]):
+                best[node] = r
+        two_step = [
+            {
+                "node_id": node,
+                "feature": r[split_finder.FEATURE],
+                "threshold": float(r[split_finder.FEATURE_VALUE]),
+                "information_gain": float(r["information_gain"]),
+                "parent_criterion": float(r["parent_criterion"]),
+                "left_counts": [int(x) for x in r["left_counts"]],
+                "right_counts": [int(x) for x in r["right_counts"]],
+            }
+            for node, r in best.items()
+        ]
+        key = lambda r: r["node_id"]
+        assert repr(sorted(fused, key=key)) == repr(sorted(two_step, key=key))
+        assert len(fused) == nodes
+        # the engineered node-0 tie goes to the first feature
+        assert next(b for b in fused if b["node_id"] == 0)["feature"] == "f_0"
 
 
 def test_pair_lookahead_fit_matches_single_level_passes(spark, monkeypatch):
@@ -1305,8 +1436,8 @@ def test_pair_lookahead_fit_matches_single_level_passes(spark, monkeypatch):
         return m.tree
 
     for criterion, max_bins, hist in (
-        (Criterion.GINI, 16, "auto"),       # binned gini (numpy local gains)
-        (Criterion.ENTROPY, 16, "auto"),    # binned entropy (Catalyst gains)
+        (Criterion.GINI, 16, "auto"),
+        (Criterion.ENTROPY, 16, "auto"),
     ):
         pair_tree = fit(criterion, max_bins, hist)
         # force the pair budget to always exclude: every level runs its
@@ -1376,7 +1507,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
 
     # choose level-0 splits, derive level-1 from the pair cube, and
     # compare against a REAL routed level-1 pass
-    best = sf._best_splits_gini_local(pdf0, n_classes, names, "__node_id")
+    best = sf._best_splits_local(pdf0, n_classes, names, "__node_id", Criterion.GINI)
     chosen = [b for b in best if b["information_gain"] > 0]
     assert chosen, "fixture must produce a splittable root"
     carry = pair_cubes_to_child_counts(
