@@ -154,7 +154,6 @@ def _merge_feature_edge_stats(
 
 def merge_edge_stats_rows(
     rows, feature_names: list[str], n_bins: int, stats_per_partition: int,
-    with_counts: bool = False,
 ):
     """Driver-local stage-2 merge over COLLECTED stats rows
     ``(feature, vals, vmax, n)`` (:func:`partition_order_stats`), the
@@ -164,8 +163,8 @@ def merge_edge_stats_rows(
     not grow with rows), so collecting it is cluster-safe, and skipping the
     feature-keyed shuffle + applyInPandas of
     :func:`merge_order_stats_distributed` saves a whole Spark job.  Same
-    numeric core — edges are bit-identical.  ``with_counts=True``
-    additionally returns ``{feature: total_n}``, the summed per-partition
+    numeric core — edges are bit-identical.  Returns ``(edges, counts)``:
+    ``counts`` is ``{feature: total_n}``, the summed per-partition
     non-null counts — the caller-side row estimate for sizing the
     persisted code cache's partitions, at no extra pass."""
     g = int(stats_per_partition)
@@ -185,13 +184,11 @@ def merge_edge_stats_rows(
         )
         for name in feature_names
     }
-    if with_counts:
-        counts = {
-            name: int(sum(by_feature[name][3])) if name in by_feature else 0
-            for name in feature_names
-        }
-        return edges_map, counts
-    return edges_map
+    counts = {
+        name: int(sum(by_feature[name][3])) if name in by_feature else 0
+        for name in feature_names
+    }
+    return edges_map, counts
 
 
 def _spark_size_bytes(s: str) -> int:
@@ -231,7 +228,7 @@ def stats_collect_budget(spark) -> int:
 
 def merge_order_stats_distributed(
     stats_df: DataFrame, feature_names: list[str], n_bins: int,
-    stats_per_partition: int, with_counts: bool = False,
+    stats_per_partition: int,
 ):
     """Cluster-scale stage-2 merge over :func:`partition_order_stats`
     output: a feature-keyed shuffle + ``applyInPandas`` merge so the
@@ -242,8 +239,9 @@ def merge_order_stats_distributed(
     volume would approach ``spark.driver.maxResultSize``.  The gaps are
     reconstructed per row from ``n`` and ``stats_per_partition`` (the
     stage-1 ``g``; :func:`_reconstructed_gaps`) — they never cross the
-    shuffle (r12).  ``with_counts`` as in :func:`merge_edge_stats_rows`,
-    riding the same merge job."""
+    shuffle (r12).  Returns ``(edges, counts)`` as
+    :func:`merge_edge_stats_rows` does, the counts riding the same merge
+    job."""
     import pandas as pd
 
     g = int(stats_per_partition)
@@ -279,10 +277,8 @@ def merge_order_stats_distributed(
     )
     found = {row[FEATURE]: list(row["edges"]) for row in rows}
     edges_map = {name: found.get(name, []) for name in feature_names}
-    if with_counts:
-        counts = {row[FEATURE]: int(row["total_n"]) for row in rows}
-        return edges_map, {name: counts.get(name, 0) for name in feature_names}
-    return edges_map
+    counts = {row[FEATURE]: int(row["total_n"]) for row in rows}
+    return edges_map, {name: counts.get(name, 0) for name in feature_names}
 
 
 def arrow_stat_rows(tbl) -> list[tuple]:
@@ -619,7 +615,6 @@ def distinct_edges_packed(
     feature_names: list[str],
     max_distinct: int = _MAX_PACKED_EDGES,
     dtype: str = "f4",
-    with_counts: bool = False,
 ):
     """EXACT-mode candidate edges: every distinct non-NaN/non-NULL value per
     feature, provided every feature fits ``max_distinct`` (the tree passes
@@ -629,22 +624,23 @@ def distinct_edges_packed(
     themselves edges, so the emitted histogram relation is bit-identical to
     the exact melt's grouped relation.
 
-    One ``mapInArrow`` pass emits per-partition distinct values (each
-    partition's contribution capped at ``max_distinct + 1`` — enough to
-    prove overflow); a feature-keyed distinct-merge bounds driver traffic at
-    n_features rows.  Features whose TRUE distinct count exceeds the cap
-    raise ``ValueError`` with guidance (set ``max_bins`` or use the melt
-    path) rather than silently degrading.
+    One ``mapInArrow`` pass emits per-partition distinct values; a
+    partition that alone holds more than ``max_distinct`` of a feature's
+    values ships that feature's overflow flag and no values, since the
+    union overflows too.  A feature-keyed distinct-merge bounds driver
+    traffic at n_features rows.  Features whose TRUE distinct count
+    exceeds the cap raise ``ValueError`` with guidance (set ``max_bins``)
+    rather than silently degrading.
 
     The pass reads the columnar feature relation as one array column
     (Arrow nulls arriving as NaN) — the first pass of exact mode's
     two-scan flow, so no raw float cache exists.  A distinct set is
     partitioning-independent.
 
-    ``with_counts=True`` returns ``(edges, total_rows)``: each partition's
-    stats rows also carry its ROW count (not per-feature non-null), summed
-    in the same merge job — the zero-extra-pass estimate for sizing the
-    code cache's partitions (tree.py ``_coalesce_for_pack``)."""
+    Returns ``(edges, total_rows)``: each partition's stats rows also
+    carry its ROW count (not per-feature non-null), summed in the same
+    merge job — the zero-extra-pass estimate for sizing the code cache's
+    partitions (tree.py ``_coalesce_for_pack``)."""
     import pyarrow as pa
 
     names = list(feature_names)
@@ -680,7 +676,7 @@ def distinct_edges_packed(
             u = np.unique(v).astype(np.float64)
             feats.append(name)
             over_out.append(u.size > cap)
-            vals_out.append(u[: cap + 1])
+            vals_out.append(u if u.size <= cap else u[:0])
         del full
         if not feats:
             _trim_malloc()
@@ -715,9 +711,13 @@ def distinct_edges_packed(
                 F.slice(F.sort_array(F.collect_set("__v")), 1, cap + 1).alias("vals"),
                 # each (feature, partition) stats row explodes into one row per
                 # distinct value, every copy carrying that partition's row count
-                # — counting n only at __pos == 0 sums each partition ONCE.
+                # — counting n only at __pos == 0 sums each partition ONCE (an
+                # overflowing partition's empty list explodes to one NULL
+                # __pos, counted as its first).
                 F.sum(
-                    F.when(F.col("__pos") == 0, F.col("n")).otherwise(F.lit(0))
+                    F.when(
+                        F.coalesce(F.col("__pos"), F.lit(0)) == 0, F.col("n")
+                    ).otherwise(F.lit(0))
                 ).alias("__tn"),
             )
             .collect()
@@ -743,16 +743,13 @@ def distinct_edges_packed(
         raise ValueError(
             f"exact-mode packed fit needs <= {cap} distinct values per feature; "
             f"exceeded by {too_wide[:5]}{'...' if len(too_wide) > 5 else ''} — "
-            "set max_bins for quantile-binned candidates or "
-            "hist_method='expand' for the melt-based exact search"
+            "set max_bins for quantile-binned candidates"
         )
     edges = {name: [] for name in names}  # all-NULL/NaN features: no candidates
     for r in merged:
         edges[r[FEATURE]] = list(r["vals"])
-    if with_counts:
-        total_rows = max((int(r["__tn"]) for r in merged), default=0)
-        return edges, total_rows
-    return edges
+    total_rows = max((int(r["__tn"]) for r in merged), default=0)
+    return edges, total_rows
 
 
 def edge_code(edges: list[float], threshold: float) -> int:
@@ -797,15 +794,15 @@ def route_codes(
 
 
 class TreeRoute(NamedTuple):
-    """One tree's share of a level pass (``{tree_id: TreeRoute}``; one
-    tree is ``{0: TreeRoute(splits)}``): its ``route_codes`` split list,
-    the accumulator slot each of its pending nodes counts under, and the
-    features it histograms as indices into the pass's feature list.
-    ``slots=None`` keys the accumulators by node id; ``features=None``
-    histograms every feature of the pass."""
+    """One tree's share of a level pass (``{tree_id: TreeRoute}``; a root
+    level of one tree is ``{0: TreeRoute([], {0: 0})}``): its
+    ``route_codes`` split list, the accumulator slot each of its pending
+    nodes counts under, and the features it histograms as indices into the
+    pass's feature list.  ``features=None`` histograms every feature of the
+    pass."""
 
     splits: list[tuple]
-    slots: dict[int, int] | None = None
+    slots: dict[int, int]
     features: list[int] | None = None
 
 
@@ -886,9 +883,6 @@ def _routed_rows(batches, tree_col, width, code_dtype, routes, axes):
     np_code, _, null_code, _ = _code_info(code_dtype)
     luts = {}
     for t, route in routes.items():
-        if route.slots is None:
-            luts[t] = None
-            continue
         # index -1 (a row dropped by routing) reads the trailing -1
         lut = np.full(max(route.slots, default=0) + 2, -1, dtype=np.int32)
         for node, slot in route.slots.items():
@@ -912,9 +906,7 @@ def _routed_rows(batches, tree_col, width, code_dtype, routes, axes):
             if route is None:
                 continue
             m, y = (mat, target) if rows is None else (mat[rows], target[rows])
-            slots = route_codes(m, route.splits, null_code=null_code)
-            if luts[t] is not None:
-                slots = luts[t][slots]
+            slots = luts[t][route_codes(m, route.splits, null_code=null_code)]
             keep = slots >= 0
             if not keep.any():
                 continue

@@ -62,7 +62,6 @@ TARGET_IDX = "__target_idx"
 def melt_features(
     df: DataFrame,
     feature_names: list[str],
-    target_idx_col: str = TARGET_IDX,
     extra_id_cols: list[str] | None = None,
 ) -> DataFrame:
     """Long-form (…ids, feature, feature_value, target_idx) relation.
@@ -74,7 +73,7 @@ def melt_features(
     level-wise training.
     """
     unpivoted = df.unpivot(
-        ids=[target_idx_col, *(extra_id_cols or [])],
+        ids=[TARGET_IDX, *(extra_id_cols or [])],
         values=feature_names,
         variableColumnName=FEATURE,
         valueColumnName=FEATURE_VALUE,
@@ -484,11 +483,11 @@ def find_best_splits_packed(
     n_classes: int,
     criterion: Criterion,
     bin_edges: dict[str, list[float]],
+    n_input_parts: int,
     node_col: str = "__node_id",
     all_feature_names: list[str] | None = None,
     tree_col: str | None = None,
     code_dtype: str = "u1",
-    n_input_parts: int | None = None,
     lookahead: bool = False,
 ) -> tuple[dict[int, list[dict[str, Any]]], Any]:
     """:func:`find_best_splits_per_node` over the packed bin-code matrix
@@ -523,7 +522,8 @@ def find_best_splits_packed(
     ``all_feature_names`` is the packed matrix's full column order when a
     tree scores only a subset (forest feature bagging).  The pass
     histograms the union of the trees' features; each row fills only its
-    own tree's.
+    own tree's.  ``n_input_parts`` is ``packed_df``'s partition count,
+    which the fit's fan-out pins; it sizes the dense-cube collect.
 
     Returns ``(found, carried)``: ``found[tree]`` is the tree's split
     list.  Class distributions are not computed here: the caller counts
@@ -618,15 +618,6 @@ def find_best_splits_packed(
         # the cube) by max-edges x width.
         slots = sum(len(bin_edges.get(f, ())) + 1 for f in names)
         cube_bytes = slots * n_classes * 8
-        # Budget decision only (dense vs sparse are bit-identical): prefer
-        # the caller's known count — under AQE, probing .rdd on a plan that
-        # contains the fan-out Exchange EXECUTES the shuffle stage (a full
-        # extra source pass per fit; see tree._fan_out_small_input).
-        n_parts = (
-            n_input_parts
-            if n_input_parts is not None
-            else packed_df.rdd.getNumPartitions()
-        )
         # Also bounded by the configured spark.driver.maxResultSize (dense
         # int64 cubes serialize at most at raw size, so half the cap is
         # clearly safe) — a cluster with a small maxResultSize must fall
@@ -637,7 +628,7 @@ def find_best_splits_packed(
         # purposes (ADVICE r11); both branches are bit-identical, so the
         # pad only moves the (safe) fallback boundary.  A partition emits
         # at most one cube per pending node of every tree in the pass.
-        cubes_per_part = int(n_parts * 1.25) * max(1, len(slot_node))
+        cubes_per_part = int(n_input_parts * 1.25) * max(1, len(slot_node))
         dense_ok = cubes_per_part * cube_bytes <= cube_budget
         pair_ok = (
             lookahead
@@ -795,25 +786,6 @@ def _score_counts(
     return found
 
 
-def best_splits_from_counts_pdf(
-    pdf,
-    n_classes: int,
-    feature_names: list[str],
-    node_col: str,
-    criterion: Criterion,
-) -> list[dict[str, Any]]:
-    """Best split per node from a DRIVER-LOCAL counts relation — the one
-    driver-side scoring of both fit paths: the scorer's collected relation
-    (:func:`_score_counts`), the merged dense or pair cubes, and a level
-    whose counts the tree loop carried over from the previous pass's PAIR
-    cube.  Gains and argmax are numpy for both criteria
-    (:func:`_gains_arrays`), bit-identical to the distributed Catalyst
-    form, so the level runs no Spark job."""
-    if pdf is None or pdf.empty:
-        return []
-    return _best_splits_local(pdf, n_classes, feature_names, node_col, criterion)
-
-
 def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
     """(slot, cube-buffer) pairs from the ``toArrow()`` collect of a dense
     or pair cube pass.  Arrow moves the binary column in columnar IPC
@@ -831,8 +803,10 @@ def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
 
 
 def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
-    """Sorted counts relation + exact int64 prefix/total sums of the
-    driver-side gains (:func:`_gains_arrays`).  Within
+    """Sorted counts relation + exact int64 sums of the driver-side gains
+    (:func:`_gains_arrays`): ``(pdf, arrays, gid)``, where ``arrays``
+    holds each row's prefix sums (``cum_*``) and each (node, feature)
+    group's totals (``sum_*``), and ``gid`` is each row's group.  Within
     each (node, feature) group the ordering replicates the window spec
     bit-for-bit: ascending feature_value with NaN LAST (Spark sorts
     double NaN greatest; numpy also sorts NaN last); values are unique
@@ -873,14 +847,14 @@ def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
         base = np.zeros(len(starts), dtype=np.int64)
         base[1:] = cs[starts[1:] - 1]
         tot = np.add.reduceat(x, starts) if len(starts) else np.zeros(0, np.int64)
-        return cs - base[gid], tot[gid]
+        return cs - base[gid], tot
 
     arrays: dict = {}
     for i in range(n_classes):
         col = class_count_col(i)
         arrays[f"cum_class_{i}"], arrays[f"sum_class_{i}"] = cum_and_sum(col)
     arrays["cum_n"], arrays["sum_n"] = cum_and_sum("count_examples")
-    return pdf, arrays
+    return pdf, arrays, gid
 
 
 def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
@@ -901,18 +875,21 @@ def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
     ``exprs.information_gain`` term-for-term.  Entropy's ``log2`` is not
     correctly rounded, so it is Spark's own: ``fdlibm.log2`` ports the
     ``StrictMath.log`` that Catalyst's ``Log2`` calls, bit for bit.
-    Pinned bit-identical to the Catalyst form, for both criteria, by
-    ``test_local_gains_numpy_gini_matches_catalyst``."""
+    The parent impurity is constant within a (node, feature) group, so it
+    is computed once per group from the same operands and indexed back
+    to the candidates.  Pinned bit-identical to the Catalyst form, for
+    both criteria, by ``test_local_gains_numpy_gini_matches_catalyst``."""
     import numpy as np
 
     from efficient_trees_spark.functions import fdlibm
 
-    pdf, arr = _prefix_sum_arrays(pdf, n_classes, node_col)
+    pdf, arr, gid = _prefix_sum_arrays(pdf, n_classes, node_col)
     # Drop the maximal value of each feature: a split there leaves the
     # right child empty (reference F3, tree.py:274-277).
-    keep = arr["sum_n"] > arr["cum_n"]
+    keep = arr["sum_n"][gid] > arr["cum_n"]
+    grp = gid[keep]
     cum_n_i = arr["cum_n"][keep]
-    sum_n_i = arr["sum_n"][keep]
+    sum_n_i = arr["sum_n"][grp]
     right_n_i = sum_n_i - cum_n_i
     cum_n = cum_n_i.astype(np.float64)
     sum_n = sum_n_i.astype(np.float64)
@@ -939,17 +916,18 @@ def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
     left_counts = np.empty((n_rows, n_classes), dtype=np.int64)
     right_counts = np.empty((n_rows, n_classes), dtype=np.int64)
     left_p, right_p, parent_p = [], [], []
+    group_n = arr["sum_n"].astype(np.float64)
     for i in range(n_classes):
         cum_i = arr[f"cum_class_{i}"][keep]
-        sum_i = arr[f"sum_class_{i}"][keep]
+        sum_i = arr[f"sum_class_{i}"][grp]
         left_counts[:, i] = cum_i
         right_counts[:, i] = sum_i - cum_i
         left_p.append(cum_i.astype(np.float64) / cum_n)
         right_p.append((sum_i - cum_i).astype(np.float64) / right_n)
-        parent_p.append(sum_i.astype(np.float64) / sum_n)
+        parent_p.append(arr[f"sum_class_{i}"].astype(np.float64) / group_n)
     left_c = impurity(left_p)
     right_c = impurity(right_p)
-    parent_c = impurity(parent_p)
+    parent_c = impurity(parent_p)[grp]
     child = cum_n / sum_n * left_c + right_n / sum_n * right_c
     gain = parent_c - child
 
@@ -959,15 +937,21 @@ def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
     return nodes, features, values, gain, parent_c, left_counts, right_counts
 
 
-def _best_splits_local(
+def best_splits_from_counts_pdf(
     pdf,
     n_classes: int,
     feature_names: list[str],
     node_col: str,
     criterion: Criterion,
 ) -> list[dict[str, Any]]:
-    """Driver-side gains (:func:`_gains_arrays`) + winners-only argmax in
-    the ``max_by`` form's total order (:func:`_best_split_rows`): gain
+    """Best split per node from a DRIVER-LOCAL counts relation — the one
+    driver-side scoring of both fit paths: the scorer's collected relation
+    (:func:`_score_counts`), the merged dense or pair cubes, and a level
+    whose counts the tree loop carried over from the previous pass's PAIR
+    cube.  The level runs no Spark job: numpy gains for both criteria
+    (:func:`_gains_arrays`), bit-identical to the distributed Catalyst
+    form, then a winners-only argmax in the ``max_by`` form's total order
+    (:func:`_best_split_rows`): gain
     desc, feature position asc, threshold asc with the NaN candidate
     preferred over any finite threshold at equal (gain, position) —
     ``max_by`` maximizes ``-value`` and double NaN sorts greatest, so NaN
@@ -979,6 +963,8 @@ def _best_splits_local(
     import numpy as np
     import pandas as pd
 
+    if pdf is None or pdf.empty:
+        return []
     nodes, features, values, gain, parent_c, lc, rc = _gains_arrays(
         pdf, n_classes, node_col, criterion
     )

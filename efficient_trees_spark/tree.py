@@ -8,15 +8,19 @@ Same capabilities as the reference classifier
   (``max_bins``).
 * **Level-wise growth, two fit paths.**  Every pending node of a tree level
   (of every tree of a forest) is scored in ONE pass (PLANET-style).  The
-  packed level loop serves every binned fit and every wide exact fit whose
-  distinct values fit uint16 code space: the features are encoded once
-  into a persisted bin-code relation (1 or 2 bytes/cell) and each level is
-  one Arrow histogram pass over it with the tree routing run in numpy
-  (``operators/histogram.py``).  The exact melt serves the other exact
-  fits: each level unpivots the persisted training relation, routed by a
-  compiled slot column, into one declarative gains plan
-  (``operators/split_finder.py``).  Both paths share the gain expressions
-  and tie-breaks, so they grow identical trees.
+  packed level loop: the features are encoded once into a persisted
+  bin-code relation (1 or 2 bytes/cell) and each level is one Arrow
+  histogram pass over it with the tree routing run in numpy
+  (``operators/histogram.py``).  The exact melt: each level unpivots the
+  persisted training relation, routed by a compiled slot column, into one
+  declarative gains plan (``operators/split_finder.py``).  Both paths
+  share the gain expressions and tie-breaks, so they grow identical trees.
+  The fit picks the path from its input, with no option: binned fits
+  (``max_bins``) and exact fits of at least ``_AUTO_PACKED_MIN_FEATURES``
+  (64) features take the packed loop; narrower exact fits take the melt,
+  which was measured faster there (its Expand cost grows with width).  A
+  wide exact fit with a feature past uint16 code space (65 533 distinct
+  values) falls back to the melt with a warning.
 * **Batch prediction compiled to a single CASE projection**
   (``plans/case_compiler.py``) instead of a 2^depth filter-union.
 * **Lineage stays one select deep**: the training relation (or code
@@ -63,8 +67,8 @@ _TARGET_IDX = split_finder.TARGET_IDX
 # mapping table instead of a literal CASE map (SURVEY.md §2.8).
 _LITERAL_MAP_MAX = 256
 
-# Exact fits this wide take the packed path under hist_method="auto": the
-# melt's Expand multiplies rows by width.
+# Exact fits this wide take the packed path: the melt's Expand multiplies
+# rows by width.
 _AUTO_PACKED_MIN_FEATURES = 64
 
 
@@ -130,9 +134,9 @@ def _coalesce_for_pack(
     prepared: DataFrame,
     n_rows: int | None,
     width: int,
+    n_parts: int,
     bytes_per_cell: int = 1,
-    n_parts: int | None = None,
-) -> tuple[DataFrame, int | None]:
+) -> tuple[DataFrame, int]:
     """Right-size the partitioning the pack+encode pass — and therefore the
     PERSISTED code cache every per-level histogram job re-reads — inherits.
 
@@ -147,21 +151,18 @@ def _coalesce_for_pack(
     streams per Arrow batch, so per-task memory does not grow) to ~64 MB of
     codes per partition amortizes the round trips, keeps the dense merge in
     budget at every level, and leaves ≥ 2 waves per core for balance.  Row
-    counts ride the edge-stats / distinct merges (``with_counts``), so
-    sizing costs no extra job; partition-count-only reduction changes no
-    per-row value — trees are bit-identical (histograms are exact integer
-    sums, edges are already placed).
+    counts ride the edge-stats / distinct merges, so sizing costs no extra
+    job; partition-count-only reduction changes no per-row value — trees
+    are bit-identical (histograms are exact integer sums, edges are
+    already placed).
 
-    ``n_parts`` is the caller's known partition count (from the fan-out,
-    which pins it) — passed so the probe never runs ``.rdd`` on an
-    Exchange-bearing plan (under AQE that executes the shuffle stage: a
-    full extra source pass).  Returns ``(df, n_parts)`` with the output's
-    count, threaded on to the per-level histogram budget."""
+    ``n_parts`` is the input's partition count from the fan-out, which
+    pins it (:func:`_fan_out_small_input`).  Returns ``(df, n_parts)``
+    with the output's count, threaded on to the per-level histogram
+    budget."""
     if not n_rows:
         return prepared, n_parts
     sc = prepared.sparkSession.sparkContext
-    if n_parts is None:
-        n_parts = prepared.rdd.getNumPartitions()
     want = _packed_partition_target(
         n_parts, n_rows, width * bytes_per_cell, sc.defaultParallelism
     )
@@ -175,9 +176,9 @@ def _encode_codes(
     feature_names: list[str],
     bin_edges: dict[str, list[float]],
     dtype: str,
+    n_parts: int,
     n_rows_est: int | None = None,
-    n_parts: int | None = None,
-) -> tuple[DataFrame, str, int | None]:
+) -> tuple[DataFrame, str, int]:
     """Pass 2 of the two-scan flow, shared by the single-tree fit and the
     forest: the fused pack + encode of ``prepared`` into the packed
     bin-code relation — uint8 (1 byte/cell) when every feature fits 253
@@ -200,8 +201,8 @@ def _encode_codes(
             prepared,
             n_rows_est,
             len(feature_names),
+            n_parts,
             bytes_per_cell=1 if code_dtype == "u1" else 2,
-            n_parts=n_parts,
         )
     codes = histogram.pack_encode_features(
         prepared, feature_names, bin_edges, dtype=dtype, code_dtype=code_dtype
@@ -215,13 +216,14 @@ def _two_scan_binned_edges(
     n_bins: int,
     stats: int,
     dtype: str,
-    n_parts: int | None = None,
+    n_parts: int,
 ) -> tuple[dict[str, list[float]], int]:
     """Pass 1 of the binned two-scan flow, shared by the single-tree fit
     and the forest: per-partition order statistics over the COLUMNAR
     relation (nothing persisted, rows-independent output) merged into
     quantile edges + the per-feature row counts.  Returns
-    ``(bin_edges, n_rows_est)``.
+    ``(bin_edges, n_rows_est)``.  ``n_parts`` is ``prepared``'s partition
+    count from the fan-out.
 
     The raw stats volume is partitions × features × 2·stats doubles —
     row-count-independent but PARTITION-proportional, and a many-partition
@@ -239,11 +241,8 @@ def _two_scan_binned_edges(
     )
 
     stats_df = partition_order_stats(prepared, feature_names, stats, dtype=dtype)
-    if n_parts is None:
-        # Budget decision only — both branches are bit-identical; but avoid
-        # probing .rdd on an Exchange-bearing plan (AQE executes the stage).
-        n_parts = prepared.rdd.getNumPartitions()
-    # x1.25: when no repartition fired, n_parts is the ~1 ms FilePartition
+    # Budget decision only: both branches are bit-identical.  x1.25: when
+    # no repartition fired, n_parts is the ~1 ms FilePartition
     # ESTIMATE (tree._fan_out_small_input), written for a parallelism
     # heuristic where both miss directions are safe; feeding a driver-
     # collect budget it must be treated as a lower bound (ADVICE r11) —
@@ -258,16 +257,14 @@ def _two_scan_binned_edges(
     )
     if est_stats_bytes > stats_collect_budget(prepared.sparkSession):
         bin_edges, feat_counts = merge_order_stats_distributed(
-            stats_df, feature_names, n_bins, with_counts=True,
-            stats_per_partition=stats,
+            stats_df, feature_names, n_bins, stats_per_partition=stats,
         )
     else:
         # partitions x features rows of double-lists: Arrow IPC transport
         # + zero-copy numpy views instead of py4j row pickling.
         stat_rows = arrow_stat_rows(stats_df.toArrow())
         bin_edges, feat_counts = merge_edge_stats_rows(
-            stat_rows, feature_names, n_bins, with_counts=True,
-            stats_per_partition=stats,
+            stat_rows, feature_names, n_bins, stats_per_partition=stats,
         )
         del stat_rows
     _trim_malloc()
@@ -294,22 +291,11 @@ class DecisionTreeClassifier:
         binning maps every value to the smallest edge ≥ it, which preserves
         the row count of ``value <= edge`` for every edge; only the candidate
         set is thinned.  Thresholds remain real feature-space values, so
-        inference is unchanged.
+        inference is unchanged.  A binned fit always runs on the packed
+        level loop; the module docstring gives the fit-path rule.
     :param bin_rel_error: relative rank error of the per-partition order
         statistics used to place bin edges; only the edge PLACEMENT is
         approximate, never the gains at the chosen edges.
-    :param hist_method: which fit path computes the split statistics.
-        ``"arrow"`` is the packed level loop: Arrow-batched histograms over
-        the persisted bin-code relation, ~10x faster than the melt at the
-        reference's 190-feature width because it skips the rows x
-        n_features Expand.  Binned fits always take it; an exact fit takes
-        it with every distinct value as a candidate edge and raises with
-        guidance when a feature has more than 65 533 distinct values.
-        ``"expand"`` is the exact melt (long-form unpivot + Catalyst hash
-        aggregate); it takes no ``max_bins``.  ``"auto"`` = arrow for binned
-        fits and for WIDE (>= 64 feature) exact fits, falling back to the
-        melt with a warning when a feature overflows code space; expand
-        otherwise.  Both paths grow bit-identical trees.
     """
 
     def __init__(
@@ -320,28 +306,19 @@ class DecisionTreeClassifier:
         streaming: bool = False,
         max_bins: int | None = None,
         bin_rel_error: float = 1e-3,
-        hist_method: str = "auto",
     ):
         from efficient_trees_spark.operators.histogram import _MAX_PACKED16_EDGES
 
-        if hist_method not in ("auto", "expand", "arrow"):
-            raise ValueError(f"unknown hist_method: {hist_method!r}")
         if max_bins is not None and max_bins > _MAX_PACKED16_EDGES:
             raise ValueError(
                 f"max_bins must be <= {_MAX_PACKED16_EDGES} (uint16 code "
                 f"space), got {max_bins}"
-            )
-        if max_bins is not None and hist_method == "expand":
-            raise ValueError(
-                "hist_method='expand' is the exact melt and takes no "
-                "max_bins; binned fits use hist_method='arrow' or 'auto'"
             )
         self.max_depth = max_depth
         self.categorical_columns = categorical_columns
         self.criterion = Criterion(criterion)
         self.max_bins = max_bins
         self.bin_rel_error = bin_rel_error
-        self.hist_method = hist_method
         self.bin_edges_: dict[str, list[float]] | None = None
         # Drop-in compatibility with the reference signature (tree.py:20-26):
         # `streaming` selects Polars' out-of-core engine there.  Spark executes
@@ -516,7 +493,8 @@ class DecisionTreeClassifier:
         ``(relation, feature_names, unique_targets, root_distribution,
         bin_edges, code_dtype, n_parts)``: root_distribution is the input's
         ``[(class_idx, count), ...]``, bin_edges None on the melt, n_parts
-        None when unknown.
+        the fan-out's partition count, None when the melt was chosen up
+        front.
 
         First the prepared relation: categorical encoding, class-label
         discovery with each label's row count (one job, the root's class
@@ -528,9 +506,9 @@ class DecisionTreeClassifier:
         threshold downstream is an f32 value; integer/decimal features go
         straight to double (exact, like polars' lossless int shrink).  An
         input with no rows raises here, before any fit pass runs.  Then the
-        fit path: on the packed path, fan out, place the edges and encode
-        (right-sized for the cache unless ``right_size`` is False: see
-        :func:`_encode_codes`)."""
+        fit path, by the module docstring's rule: on the packed path, fan
+        out, place the edges and encode (right-sized for the cache unless
+        ``right_size`` is False: see :func:`_encode_codes`)."""
         feature_names = [c for c in data.columns if c != target_name]
 
         if self.categorical_columns:
@@ -599,44 +577,22 @@ class DecisionTreeClassifier:
         # finder's own shuffles, which AQE already fans out.  Keep the
         # source partitioning.
 
-        hist_method = self.hist_method
-        exact_auto_fallback = False
-        wide = len(feature_names) >= _AUTO_PACKED_MIN_FEATURES
-        if hist_method == "auto":
-            if self.max_bins is not None:
-                hist_method = "arrow"
-            elif wide:
-                # Wide exact fit: attempt the packed exact path (candidates
-                # = every distinct value); fall back to the melt with a
-                # warning if any feature exceeds code space.
-                hist_method = "arrow"
-                exact_auto_fallback = True
-            else:
-                hist_method = "expand"
-        if hist_method == "expand" and wide:
-            # The melt's Expand multiplies rows by width (75 s at just
-            # 60k x 190 — histogram.py module notes); never let a wide exact
-            # fit take it silently.
-            warnings.warn(
-                f"exact-mode melt split search over {len(feature_names)} "
-                "features Expands every row per feature; prefer "
-                "hist_method='arrow' (packed exact, needs <= 65533 distinct "
-                "values per feature) or max_bins for quantile candidates",
-                stacklevel=3,
-            )
-
         n_parts: int | None = None
         bin_edges: dict[str, list[float]] | None = None
         code_dtype = "u1"
-        if hist_method == "arrow":
+        packed = (
+            self.max_bins is not None
+            or len(feature_names) >= _AUTO_PACKED_MIN_FEATURES
+        )
+        if packed:
             from efficient_trees_spark.operators.histogram import (
                 _MAX_PACKED16_EDGES,
                 distinct_edges_packed,
             )
 
             prepared, n_parts = _fan_out_small_input(prepared)
-            # Kept for the auto-exact fallback: the melt path must see the
-            # double-typed relation, not the f32-narrowed one below.
+            # Kept for the exact overflow fallback: the melt path must see
+            # the double-typed relation, not the f32-narrowed one below.
             prepared_base = prepared
             if shrink_features:
                 # Shrunk features are f32-representable by construction, so
@@ -675,25 +631,18 @@ class DecisionTreeClassifier:
                         feature_names,
                         max_distinct=_MAX_PACKED16_EDGES,
                         dtype=dtype,
-                        with_counts=True,
                     )
-                except ValueError:
-                    if not exact_auto_fallback:
-                        raise
+                except ValueError as exc:
                     warnings.warn(
-                        "auto exact fit: a feature exceeds uint16 code space "
-                        "(> 65533 distinct values) — falling back to the "
-                        "melt split search; consider max_bins for the "
-                        "bounded scale path",
+                        f"{exc}; falling back to the melt split search",
                         stacklevel=3,
                     )
                     prepared = prepared_base
             if bin_edges is not None:
                 self.bin_edges_ = bin_edges
                 prepared, code_dtype, n_parts = _encode_codes(
-                    prepared, feature_names, bin_edges, dtype,
+                    prepared, feature_names, bin_edges, dtype, n_parts,
                     n_rows_est=n_rows_est if right_size else None,
-                    n_parts=n_parts,
                 )
 
         return (
@@ -816,7 +765,8 @@ class DecisionTreeClassifier:
         column compiled from the partial tree.
 
         ``bin_edges`` selects the path: given, ``data`` is the packed
-        bin-code relation and each level is one histogram pass over it
+        bin-code relation of ``packed_n_parts`` partitions and each level
+        is one histogram pass over it
         (``split_finder.find_best_splits_packed``); None, ``data`` is the
         prepared training relation and each level is one exact melt
         (``split_finder.find_best_splits_per_node``).
@@ -931,11 +881,11 @@ class DecisionTreeClassifier:
                         len(unique_targets),
                         self.criterion,
                         bin_edges,
+                        packed_n_parts,
                         node_col=node_col,
                         all_feature_names=all_names,
                         tree_col=tree_col,
                         code_dtype=packed_code_dtype,
-                        n_input_parts=packed_n_parts,
                         lookahead=(
                             self.max_depth is None or depth + 1 < self.max_depth
                         ),

@@ -225,21 +225,20 @@ def tree_fit_binned_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tree_fit_exact_arrow_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-mode PACKED fit (hist_method='arrow', max_bins=None): the
-    candidate set is every distinct feature value — the reference's exact
-    semantics (tree.py:244) — computed on the uint8 packed-histogram path
-    instead of the rows x features Expand melt.  Features are the
-    low-cardinality lineitem numerics (50/11/9 distinct values, within
-    uint8 code space); the fitted tree is bit-identical to the exact melt
-    on the same features (tests/test_wide_fit.py parity gate, re-verified
-    when pinning these VALUES).  Registered via ``model_fit_distributions``
-    (model='tree_exact_arrow')."""
+    """Exact-mode fit (max_bins=None) on the low-cardinality lineitem
+    numerics (50/11/9 distinct values): the candidate set is every
+    distinct feature value — the reference's exact semantics
+    (tree.py:244).  Three features is a narrow fit, so it runs on the
+    exact melt, which was measured faster than the packed path on this
+    shape.  Registered via ``model_fit_distributions``
+    (model='tree_exact_arrow'): the tag dates from when this fit was
+    forced onto the packed path, and stays because its VALUES are pinned;
+    the packed path grows the bit-identical tree (the parity tests in
+    tests/test_wide_fit.py)."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_quantity", "l_discount", "l_tax", F.col("l_returnflag").alias("target")
     )
-    model = DecisionTreeClassifier(
-        max_depth=2, criterion=Criterion.GINI, hist_method="arrow"
-    )
+    model = DecisionTreeClassifier(max_depth=2, criterion=Criterion.GINI)
     model.fit(li, "target")
     return (
         model.transform(li, null_policy="keep")
@@ -310,8 +309,9 @@ _FIT_DISTRIBUTIONS_SF0_01 = """
     "batch-predicts (prediction distribution); 'tree_binned' is the 100 TB "
     "fit path (max_bins=32 quantile-binned candidates — shuffle volume "
     "capped at features x bins); 'tree_exact_arrow' is the exact candidate "
-    "set (every distinct value) computed on the packed uint8 histogram path "
-    "— bit-identical to the exact melt without the rows x features Expand; "
+    "set (every distinct value) over three low-cardinality features, grown "
+    "on the melt (the tag is kept because its values are pinned; the packed "
+    "path grows the bit-identical tree); "
     "'forest' is a 4-tree bagged ensemble with "
     "seeded bootstraps and single-projection majority vote.  The recursive "
     "fits are not SQL-expressible, so the oracle pins the exact seeded "

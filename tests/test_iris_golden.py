@@ -16,6 +16,7 @@ import pytest
 
 from efficient_trees_spark import Criterion, DecisionTreeClassifier
 from tests.iris_fixture import FEATURE_NAMES, IRIS, golden, train_test_frames
+from tests.spies import force_fit_path
 
 
 def test_fixture_checksums():
@@ -64,21 +65,22 @@ def test_iris_golden(spark, string_labels, use_categorical_feature, criterion):
 
 @pytest.mark.parametrize("criterion", [Criterion.ENTROPY, Criterion.GINI])
 @pytest.mark.parametrize("string_labels", [False, True], ids=["int", "str"])
-def test_iris_golden_exact_arrow(spark, string_labels, criterion):
-    """The reference's golden outputs through the PACKED exact path:
-    hist_method='arrow' with max_bins=None (candidates = every distinct
-    value as uint8 codes, f32 shrink semantics included) must reproduce
-    the published predictions byte-for-byte."""
+def test_iris_golden_exact_arrow(spark, monkeypatch, string_labels, criterion):
+    """The reference's golden outputs through the PACKED exact path: an
+    exact fit (max_bins=None) forced onto the packed level loop
+    (candidates = every distinct value as uint8 codes, f32 shrink
+    semantics included) must reproduce the published predictions
+    byte-for-byte."""
     train_pdf, test_pdf = train_test_frames(string_labels)
     train_pdf = train_pdf.drop(columns=["categorical_feature"])
     test_pdf = test_pdf.drop(columns=["categorical_feature"])
     df_train = spark.createDataFrame(train_pdf)
     df_test = spark.createDataFrame(test_pdf)
 
-    model = DecisionTreeClassifier(
-        max_depth=4, criterion=criterion, hist_method="arrow"
-    )
+    force_fit_path(monkeypatch, "packed")
+    model = DecisionTreeClassifier(max_depth=4, criterion=criterion)
     model.fit(df_train, "target")
+    assert model.bin_edges_ is not None
 
     key = "entropy" if criterion == Criterion.ENTROPY else "gini"
     assert model.predict_many(df_train) == golden(f"train_{key}", string_labels)

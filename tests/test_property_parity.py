@@ -17,6 +17,7 @@ from hypothesis import strategies as st
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.tree import DecisionTreeClassifier
 from tests.reference_tree import fit_reference, trees_equal
+from tests.spies import force_fit_path
 
 VALUES = [0.0, 1.0, 1.5, 2.0, 3.0]
 LABELS = [0, 1, 2]
@@ -67,7 +68,7 @@ def test_compiled_case_equals_driver_walk_and_strategies_agree(spark, rows):
     depth=st.integers(min_value=1, max_value=3),
 )
 def test_packed_exact_parity_across_code_width_boundary(
-    spark, n_distinct, seed, depth
+    spark, monkeypatch, n_distinct, seed, depth
 ):
     """The uint8/uint16 switch-over sits at 253 distinct values: draws that
     straddle it must produce packed-exact trees identical to the melt on
@@ -82,13 +83,12 @@ def test_packed_exact_parity_across_code_width_boundary(
         for i in range(n_distinct * 2)
     ]
     df = spark.createDataFrame(rows, ["wide", "narrow", "target"])
-    packed = DecisionTreeClassifier(
-        max_depth=depth, criterion=Criterion.GINI, hist_method="arrow"
-    )
+    force_fit_path(monkeypatch, "packed")
+    packed = DecisionTreeClassifier(max_depth=depth, criterion=Criterion.GINI)
     packed.fit(df, "target")
-    melt = DecisionTreeClassifier(
-        max_depth=depth, criterion=Criterion.GINI, hist_method="expand"
-    )
+    force_fit_path(monkeypatch, "melt")
+    melt = DecisionTreeClassifier(max_depth=depth, criterion=Criterion.GINI)
     melt.fit(df, "target")
+    assert melt.bin_edges_ is None
     assert packed.tree == melt.tree
     assert len(packed.bin_edges_["wide"]) == len(set(vals))

@@ -141,3 +141,20 @@ def test_exact_dedup_shuffles_fingerprints_only(spark, sf_small):
     # fan-out of the raw input here: the one-md5-per-row map side is too
     # cheap to amortize the extra corpus-sized shuffle.)
     assert _audit(spark, sf_small, dedup_exact_bag) < 128 * 1024
+
+
+def test_exact_overflow_probe_ships_flags_not_values(spark):
+    # The exact packed path's distinct-value probe: a partition that alone
+    # overflows a feature's code space ships that feature's flag and no
+    # values (their union overflows too), so an overflowing probe moves a
+    # few rows, not max_distinct + 1 values per partition (measured 534 B
+    # here; shipping the 101 values per partition moved 9021 B).  It must
+    # still fail loudly, with guidance.
+    from efficient_trees_spark.operators.histogram import distinct_edges_packed
+
+    df = spark.range(0, 4000, numPartitions=4).selectExpr("CAST(id AS DOUBLE) AS a")
+    before = _shuffle_write_total(spark)
+    with pytest.raises(ValueError, match="set max_bins"):
+        distinct_edges_packed(df, ["a"], max_distinct=100)
+    moved = _shuffle_write_total(spark) - before
+    assert 0 < moved < 2 * 1024, moved

@@ -12,6 +12,7 @@ import pytest
 
 from efficient_trees_spark import Criterion, DecisionTreeClassifier
 from tests.reference_tree import fit_reference, predict_reference, trees_equal
+from tests.spies import force_fit_path
 
 
 def _synthetic_frame(seed: int, n: int = 200, with_nulls: bool = False) -> pd.DataFrame:
@@ -89,16 +90,18 @@ def test_null_routing_drops_rows_from_both_children(spark):
         model.transform(sdf, null_policy="strict").count()
 
 
-def test_depth4_fit_with_nulls_matches_oracle(spark):
+def test_depth4_fit_with_nulls_matches_oracle(spark, monkeypatch):
     """A depth-4 fit over NULL-bearing data equals the oracle on both fit
     paths: the exact melt and the packed level loop (exact candidates)."""
     pdf = _synthetic_frame(seed=7, with_nulls=True)
     ref_tree, _ = fit_reference(pdf, "target", "entropy", max_depth=4)
     sdf = spark.createDataFrame(pdf)
-    for hist_method in ("expand", "arrow"):
-        model = DecisionTreeClassifier(max_depth=4, hist_method=hist_method)
+    for path in ("melt", "packed"):
+        force_fit_path(monkeypatch, path)
+        model = DecisionTreeClassifier(max_depth=4)
         model.fit(sdf, "target")
-        assert trees_equal(model.tree, ref_tree), hist_method
+        assert (model.bin_edges_ is not None) == (path == "packed")
+        assert trees_equal(model.tree, ref_tree), path
 
 
 def test_binned_matches_exact_when_bins_cover_values(spark):

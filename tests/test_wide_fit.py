@@ -40,7 +40,7 @@ from efficient_trees_spark.tree import (
 )
 from efficient_trees_spark.workloads.wide_fit import build_wide_table
 from tests.snapping import snap_to_edges
-from tests.spies import record_calls
+from tests.spies import force_fit_path, record_calls
 
 SF_DIR = "/root/testdata/sf0.001"
 NAN = float("nan")
@@ -76,7 +76,9 @@ def _packed_counts(df, names, edges):
     the fused encode of ``df`` to bin codes, then one histogram pass."""
     codes = pack_encode_features(df, names, edges, dtype="f8")
     return _collect_counts(
-        packed_histogram_counts(codes, names, 2, edges, {0: TreeRoute([])}, "__node_id")
+        packed_histogram_counts(
+            codes, names, 2, edges, {0: TreeRoute([], {0: 0})}, "__node_id"
+        )
     )
 
 
@@ -85,7 +87,7 @@ def test_arrow_counts_match_melt_counts(spark, messy_df):
     arrow = _packed_counts(messy_df, ["a", "b"], edges)
 
     # Reference relation: snap (values are already edges here), melt, count.
-    long_df = split_finder.melt_features(messy_df, ["a", "b"], "__target_idx")
+    long_df = split_finder.melt_features(messy_df, ["a", "b"])
     melt = _collect_counts(
         long_df.groupBy("feature", "feature_value").agg(
             F.count(F.when(F.col("__target_idx") == 0, 1)).alias("class_0_count"),
@@ -114,7 +116,7 @@ def test_two_scan_edges_exact_when_stats_cover(spark):
     vals = rng.normal(size=400).round(3)
     df = spark.createDataFrame([(float(v),) for v in vals], "x double").repartition(4)
     n_bins = 8
-    edges_map, n_rows = _two_scan_binned_edges(df, ["x"], n_bins, 400, "f8")
+    edges_map, n_rows = _two_scan_binned_edges(df, ["x"], n_bins, 400, "f8", 4)
     edges = edges_map["x"]
     assert n_rows == 400
     s = np.sort(vals)
@@ -130,7 +132,8 @@ def test_two_scan_edges_drops_null_nan(spark):
     df = spark.createDataFrame(
         [(1.0,), (2.0,), (3.0,), (None,), (NAN,)], "x double"
     )
-    edges = _two_scan_binned_edges(df, ["x"], 2, 64, "f8")[0]["x"]
+    n_parts = df.rdd.getNumPartitions()
+    edges = _two_scan_binned_edges(df, ["x"], 2, 64, "f8", n_parts)[0]["x"]
     assert edges[-1] == 3.0
     assert all(not math.isnan(e) for e in edges)
 
@@ -141,8 +144,9 @@ def _assert_binned_equals_exact_on_snapped(data, **kwargs):
     binned = DecisionTreeClassifier(**kwargs)
     binned.fit(data, "target")
     del kwargs["max_bins"]
-    exact = DecisionTreeClassifier(hist_method="expand", **kwargs)
+    exact = DecisionTreeClassifier(**kwargs)
     exact.fit(snap_to_edges(data, binned.bin_edges_), "target")
+    assert exact.bin_edges_ is None  # a narrow exact fit runs on the melt
     assert json.dumps(binned.tree, sort_keys=True) == json.dumps(
         exact.tree, sort_keys=True
     )
@@ -259,7 +263,7 @@ def test_depth0_melt_fit_runs_only_the_label_job(spark):
         .sortWithinPartitions("target")
         .collect(),
     )
-    model = DecisionTreeClassifier(max_depth=0, hist_method="expand")
+    model = DecisionTreeClassifier(max_depth=0)
     assert _jobs_in_group(spark, lambda: model.fit(data, "target")) == label_jobs == 2
     counts = {r["target"]: r["count"] for r in data.groupBy("target").count().collect()}
     majority = max(counts, key=lambda c: (counts[c], -c))
@@ -339,7 +343,7 @@ def test_melt_fit_runs_every_job_in_the_callers_job_group(spark):
     ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, "depth-1 melt fit")
     try:
-        DecisionTreeClassifier(max_depth=1, hist_method="expand").fit(data, "target")
+        DecisionTreeClassifier(max_depth=1).fit(data, "target")
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
@@ -347,25 +351,20 @@ def test_melt_fit_runs_every_job_in_the_callers_job_group(spark):
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
 
 
-def test_hist_method_validation():
-    with pytest.raises(ValueError, match="unknown hist_method"):
-        DecisionTreeClassifier(hist_method="numpy")
+def test_max_bins_must_fit_uint16_codes():
     # binned codes must fit uint16: edges number at most max_bins
     with pytest.raises(ValueError, match="max_bins must be <= 65533"):
         DecisionTreeClassifier(max_bins=65534)
     DecisionTreeClassifier(max_bins=65533)
-    # the melt is exact-only; binned fits run on the packed level loop
-    with pytest.raises(ValueError, match="takes no max_bins"):
-        DecisionTreeClassifier(max_bins=8, hist_method="expand")
 
 
 # ----------------------------------------------------- exact-mode packed path
 
 
-def test_exact_arrow_matches_exact_expand(spark):
-    """max_bins=None + hist_method='arrow': candidates are every distinct
-    value on the packed path — the tree must be bit-identical to the exact
-    melt, including NULL/NaN routing corners."""
+def test_exact_arrow_matches_exact_expand(spark, monkeypatch):
+    """An exact fit (max_bins=None) forced onto the packed path scores
+    every distinct value as a candidate — the tree must be bit-identical
+    to the exact melt, including NULL/NaN routing corners."""
     rows = []
     for i in range(300):
         a = None if i % 13 == 0 else (NAN if i % 17 == 0 else float(i % 23))
@@ -373,27 +372,17 @@ def test_exact_arrow_matches_exact_expand(spark):
         rows.append((a, b, i % 2))
     data = spark.createDataFrame(rows, "a double, b double, target int")
     trees = {}
-    for hm in ("arrow", "expand"):
-        m = DecisionTreeClassifier(max_depth=3, criterion=Criterion.GINI, hist_method=hm)
+    for path in ("packed", "melt"):
+        force_fit_path(monkeypatch, path)
+        m = DecisionTreeClassifier(max_depth=3, criterion=Criterion.GINI)
         m.fit(data, "target")
-        trees[hm] = json.dumps(m.tree, sort_keys=True)
+        assert (m.bin_edges_ is not None) == (path == "packed")
+        trees[path] = json.dumps(m.tree, sort_keys=True)
         assert m.tree["type"] == "node"
-    assert trees["arrow"] == trees["expand"]
+    assert trees["packed"] == trees["melt"]
 
 
-def test_exact_arrow_overflow_raises_with_guidance(spark):
-    """A feature with more distinct values than uint16 code space must fail
-    loudly in exact arrow mode, pointing at max_bins / expand.  (Up to
-    65 533 distinct values the packed path now handles it via uint16 codes
-    — see test_exact_uint16_parity_past_253_distinct.)"""
-    data = spark.range(66_000).selectExpr(
-        "CAST(id AS DOUBLE) AS a", "CAST(id % 2 AS INT) AS target"
-    )
-    with pytest.raises(ValueError, match="distinct values per feature"):
-        DecisionTreeClassifier(max_depth=2, hist_method="arrow").fit(data, "target")
-
-
-def test_exact_uint16_parity_past_253_distinct(spark):
+def test_exact_uint16_parity_past_253_distinct(spark, monkeypatch):
     """EXACT mode with a >253-distinct feature takes the packed uint16 path
     (no melt Expand, no fallback warning) and produces the IDENTICAL tree
     to the melt exact search."""
@@ -406,7 +395,8 @@ def test_exact_uint16_parity_past_253_distinct(spark):
         ],
         "a double, b double, c double, target int",
     )
-    m_packed = DecisionTreeClassifier(max_depth=3, hist_method="arrow")
+    force_fit_path(monkeypatch, "packed")
+    m_packed = DecisionTreeClassifier(max_depth=3)
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any fallback warning fails the test
         # pyspark leaves collect sockets to the garbage collector
@@ -415,22 +405,16 @@ def test_exact_uint16_parity_past_253_distinct(spark):
     # the wide feature really went through packed codes: its full distinct
     # set became the candidate edges (the u2 selection precondition)
     assert len(m_packed.bin_edges_["a"]) == 900  # > 253 -> uint16 codes
-    m_melt = DecisionTreeClassifier(max_depth=3, hist_method="expand")
+    force_fit_path(monkeypatch, "melt")
+    m_melt = DecisionTreeClassifier(max_depth=3)
     m_melt.fit(data, "target")
+    assert m_melt.bin_edges_ is None
     assert m_packed.tree == m_melt.tree
 
 
-def test_wide_exact_melt_warns(spark):
-    """An EXPLICIT exact-mode melt over >= 64 features must not run silently."""
-    data = build_wide_table(spark, SF_DIR, n_features=64)
-    m = DecisionTreeClassifier(max_depth=1, hist_method="expand")
-    with pytest.warns(UserWarning, match="Expands every row per feature"):
-        m.fit(data, "target")
-
-
 def test_auto_wide_exact_uses_packed_when_cardinality_fits(spark):
-    """hist_method='auto' + exact mode + >= 64 features + low per-feature
-    cardinality: the packed exact path engages (bin_edges_ = the distinct
+    """Exact mode + >= 64 features + low per-feature cardinality: the
+    packed exact path engages (bin_edges_ = the distinct
     values); no fallback warning."""
     cols = [
         ((F.col("id") * (j + 3)) % (7 + j % 5)).cast("double").alias(f"f{j}")
@@ -487,9 +471,9 @@ def test_wide_exact_forest_takes_the_packed_path(spark, monkeypatch):
 
 
 def test_auto_wide_exact_falls_back_to_melt_on_overflow(spark):
-    """auto + exact + wide, but one feature has > 65 533 distinct values
-    (uint16 code space): the packed probe falls back to the melt with a
-    warning and the fit still completes."""
+    """Exact + wide, but one feature has > 65 533 distinct values (uint16
+    code space): the packed probe falls back to the melt with a warning
+    that carries the probe's own message, and the fit still completes."""
     cols = [
         ((F.col("id") * (j + 3)) % 11).cast("double").alias(f"f{j}")
         for j in range(63)
@@ -498,14 +482,15 @@ def test_auto_wide_exact_falls_back_to_melt_on_overflow(spark):
         *cols, (F.col("id") % 2).cast("int").alias("target")
     )
     m = DecisionTreeClassifier(max_depth=1)
-    with pytest.warns(UserWarning, match="falling back to the melt"):
+    with pytest.warns(UserWarning, match="falling back to the melt") as caught:
         m.fit(data, "target")
+    assert any("exceeded by ['f_hi']" in str(w.message) for w in caught)
     assert m.bin_edges_ is None
     assert m.tree is not None
 
 
 def test_auto_wide_exact_uses_uint16_between_253_and_65533(spark):
-    """auto + exact + wide with one mid-cardinality feature (254..65533
+    """Exact + wide with one mid-cardinality feature (254..65533
     distinct): NO fallback — the uint16 packed path engages silently."""
     import warnings
 
@@ -554,13 +539,14 @@ def test_packed_relation_caches_at_one_byte_per_cell(spark):
         *[F.col(f).cast("double").alias(f) for f in feats],
         F.col("target").cast("int").alias("__target_idx"),
     )
-    edges, _ = _two_scan_binned_edges(prepared, feats, 16, 64, "f4")
+    n_parts = prepared.rdd.getNumPartitions()
+    edges, _ = _two_scan_binned_edges(prepared, feats, 16, 64, "f4", n_parts)
     # Other operators legitimately leave lazy localCheckpoint blocks in the
     # shared session's RDD cache until GC (split-gains counts, BM25 postings
     # — r11), so attribute ONLY the relation this test persists instead of
     # taking max over the whole cache.
     before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    codes, code_dtype, _ = _encode_codes(prepared, feats, edges, "f4")
+    codes, code_dtype, _ = _encode_codes(prepared, feats, edges, "f4", n_parts)
     assert code_dtype == "u1"
     codes = codes.persist()
     try:
@@ -868,7 +854,7 @@ def test_binned_fit_identical_under_distributed_stats_merge(spark, monkeypatch):
         [(float(i % 11), float((i * 7) % 23) / 2.0, i % 3) for i in range(400)],
         "x0 double, x1 double, label int",
     ).repartition(5)
-    kw = dict(max_depth=3, max_bins=8, hist_method="arrow")
+    kw = dict(max_depth=3, max_bins=8)
     base = DecisionTreeClassifier(**kw)
     base.fit(df, "label")
     monkeypatch.setattr(H, "stats_collect_budget", lambda _s: 0)
@@ -916,7 +902,7 @@ def test_arrow_cube_rows_zero_copy_merge(spark):
     codes = pack_encode_features(spark_df, ["f"], edges, dtype="f8")
     rows = _arrow_cube_rows(
         packed_histogram_cubes(
-            codes, ["f"], 2, edges, {0: TreeRoute([])}, "n"
+            codes, ["f"], 2, edges, {0: TreeRoute([], {0: 0})}, "n"
         ).toArrow()
     )
     assert rows
@@ -944,8 +930,8 @@ def test_packed_partition_target_sizing():
 
 
 def test_stats_merges_with_counts(spark):
-    """with_counts rides every edge-merge path and reports the same total
-    row count the relation actually has; edges are unchanged."""
+    """Row counts ride every edge-merge path and report the same total
+    row count the relation actually has."""
     from efficient_trees_spark.operators.histogram import (
         arrow_stat_rows,
         distinct_edges_packed,
@@ -960,26 +946,19 @@ def test_stats_merges_with_counts(spark):
     ).repartition(6)
     stats_df = partition_order_stats(df, ["a", "b"], 16, dtype="f4")
     stat_rows = arrow_stat_rows(stats_df.toArrow())
-    plain = merge_edge_stats_rows(
+    edges_d, counts_d = merge_edge_stats_rows(
         stat_rows, ["a", "b"], 6, stats_per_partition=16
     )
-    edges_d, counts_d = merge_edge_stats_rows(
-        stat_rows, ["a", "b"], 6, with_counts=True, stats_per_partition=16
-    )
-    assert edges_d == plain
     # per-feature non-null totals: 'a' misses the NULL row, 'b' the NaN row
     assert counts_d == {"a": 700, "b": 700}
     edges_x, counts_x = merge_order_stats_distributed(
-        stats_df, ["a", "b"], 6, with_counts=True, stats_per_partition=16
+        stats_df, ["a", "b"], 6, stats_per_partition=16
     )
-    assert edges_x == plain
+    assert edges_x == edges_d
     assert counts_x == counts_d
 
-    exact_plain = distinct_edges_packed(df, ["a", "b"], dtype="f4")
-    exact_edges, total_rows = distinct_edges_packed(
-        df, ["a", "b"], dtype="f4", with_counts=True
-    )
-    assert exact_edges == exact_plain
+    exact_edges, total_rows = distinct_edges_packed(df, ["a", "b"], dtype="f4")
+    assert exact_edges["b"] == [0.0, 1.0, 2.0, 3.0, 4.0]
     # per-partition ROW counts (not non-null) summed once per partition
     assert total_rows == 701
 
@@ -1319,7 +1298,7 @@ def test_packed_sparse_collect_is_byte_bounded(
 
 
 def test_best_splits_gini_local_matches_two_step_form():
-    """The fused winners-only argmax (`_best_splits_local`) must pick, for
+    """The fused winners-only argmax (`best_splits_from_counts_pdf`) must pick, for
     both criteria, the rows a plain-Python argmax picks over the full gains
     frame of `_gains_arrays` in the `max_by` form's total order (gain desc,
     position asc, threshold asc, the NaN threshold first) — on a
@@ -1380,7 +1359,7 @@ def test_best_splits_gini_local_matches_two_step_form():
         )
 
     for criterion in (Criterion.GINI, Criterion.ENTROPY):
-        fused = split_finder._best_splits_local(
+        fused = split_finder.best_splits_from_counts_pdf(
             pdf, ncls, names, "__node_id", criterion
         )
         best: dict = {}
@@ -1407,6 +1386,50 @@ def test_best_splits_gini_local_matches_two_step_form():
         assert next(b for b in fused if b["node_id"] == 0)["feature"] == "f_0"
 
 
+def test_entropy_scores_parent_impurity_once_per_group(monkeypatch):
+    """The parent impurity is constant within a (node, feature) group, so
+    an entropy level takes one ``log2`` per group and class for it, not
+    one per candidate: at most 2 x candidates x classes values (the two
+    children) plus groups x classes reach ``fdlibm.log2``."""
+    import pandas as pd
+
+    from efficient_trees_spark.functions import fdlibm
+
+    rng = np.random.default_rng(5)
+    nodes, feats, values, ncls = 2, 3, 20, 3
+    n = nodes * feats * values
+    pdf = pd.DataFrame(
+        {
+            "__node_id": np.repeat(np.arange(nodes, dtype=np.int32), feats * values),
+            split_finder.FEATURE: np.tile(
+                np.repeat([f"f_{j}" for j in range(feats)], values), nodes
+            ),
+            split_finder.FEATURE_VALUE: np.tile(
+                np.arange(values, dtype=np.float64), nodes * feats
+            ),
+        }
+    )
+    for c in range(ncls):  # every class on every row: every p is > 0
+        pdf[f"class_{c}_count"] = rng.integers(1, 9, n)
+    pdf["count_examples"] = sum(pdf[f"class_{c}_count"] for c in range(ncls))
+    seen: list = []
+    log2 = fdlibm.log2
+
+    def spy(x):
+        seen.append(np.size(x))
+        return log2(x)
+
+    monkeypatch.setattr(fdlibm, "log2", spy)
+    best = split_finder.best_splits_from_counts_pdf(
+        pdf, ncls, [f"f_{j}" for j in range(feats)], "__node_id",
+        Criterion.ENTROPY,
+    )
+    assert len(best) == nodes
+    groups = nodes * feats
+    candidates = groups * (values - 1)  # each group's maximum is no candidate
+    assert sum(seen) <= 2 * candidates * ncls + groups * ncls, sum(seen)
+
+
 def test_pair_lookahead_fit_matches_single_level_passes(spark, monkeypatch):
     """r12 pair-cube lookahead: a binned fit that scores two levels from
     ONE joint-histogram pass must produce the BIT-identical tree to the
@@ -1427,25 +1450,21 @@ def test_pair_lookahead_fit_matches_single_level_passes(spark, monkeypatch):
         F.col("l_returnflag").alias("target"),
     )
 
-    def fit(criterion, max_bins, hist_method="auto", max_depth=4):
+    def fit(criterion, max_bins, max_depth=4):
         m = DecisionTreeClassifier(
             max_depth=max_depth, criterion=criterion, max_bins=max_bins,
-            hist_method=hist_method,
         )
         m.fit(li, "target")
         return m.tree
 
-    for criterion, max_bins, hist in (
-        (Criterion.GINI, 16, "auto"),
-        (Criterion.ENTROPY, 16, "auto"),
-    ):
-        pair_tree = fit(criterion, max_bins, hist)
+    for criterion, max_bins in ((Criterion.GINI, 16), (Criterion.ENTROPY, 16)):
+        pair_tree = fit(criterion, max_bins)
         # force the pair budget to always exclude: every level runs its
         # own single-level pass (the r11 shape)
         monkeypatch.setattr(
             histogram, "pair_cube_bytes", lambda *a, **k: 1 << 62
         )
-        single_tree = fit(criterion, max_bins, hist)
+        single_tree = fit(criterion, max_bins)
         monkeypatch.undo()
         assert pair_tree == single_tree, (criterion, max_bins)
 
@@ -1475,7 +1494,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
         .otherwise(2).alias(TARGET_IDX),
     )
     names = ["q", "d_nullable", "t_nanable"]
-    edges, _ = distinct_edges_packed(li, names, dtype="f8", with_counts=True)
+    edges, _ = distinct_edges_packed(li, names, dtype="f8")
     packed = pack_encode_features(li, names, edges, dtype="f8")
     packed = packed.persist()
     n_classes = 3
@@ -1483,7 +1502,8 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     # level 0 from the pair cube
     pair_rows = sf._arrow_cube_rows(
         packed_histogram_pair_cubes(
-            packed, names, n_classes, edges, {0: TreeRoute([])}, "__node_id"
+            packed, names, n_classes, edges, {0: TreeRoute([], {0: 0})},
+            "__node_id",
         ).toArrow()
     )
     merged = merge_cube_rows(pair_rows)
@@ -1493,7 +1513,8 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     # level 0 from the one-level cube pass
     rows0 = sf._arrow_cube_rows(
         packed_histogram_cubes(
-            packed, names, n_classes, edges, {0: TreeRoute([])}, "__node_id"
+            packed, names, n_classes, edges, {0: TreeRoute([], {0: 0})},
+            "__node_id",
         ).toArrow()
     )
     pdf0 = merge_cubes_to_counts_pdf(rows0, names, n_classes, edges, "__node_id")
@@ -1507,7 +1528,9 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
 
     # choose level-0 splits, derive level-1 from the pair cube, and
     # compare against a REAL routed level-1 pass
-    best = sf._best_splits_local(pdf0, n_classes, names, "__node_id", Criterion.GINI)
+    best = sf.best_splits_from_counts_pdf(
+        pdf0, n_classes, names, "__node_id", Criterion.GINI
+    )
     chosen = [b for b in best if b["information_gain"] > 0]
     assert chosen, "fixture must produce a splittable root"
     carry = pair_cubes_to_child_counts(
@@ -1522,7 +1545,8 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     ]
     rows1 = sf._arrow_cube_rows(
         packed_histogram_cubes(
-            packed, names, n_classes, edges, {0: TreeRoute(splits)}, "__node_id"
+            packed, names, n_classes, edges,
+            {0: TreeRoute(splits, {1: 1, 2: 2})}, "__node_id",
         ).toArrow()
     )
     pdf1 = merge_cubes_to_counts_pdf(rows1, names, n_classes, edges, "__node_id")
