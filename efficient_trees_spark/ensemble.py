@@ -93,7 +93,7 @@ class RandomForestClassifier:
 
     # ------------------------------------------------------------------ fit
 
-    def fit(self, data: DataFrame, target_name: str, shrink_features: bool = True) -> None:
+    def fit(self, data: DataFrame, target_name: str) -> None:
         proto = DecisionTreeClassifier(
             max_depth=self.max_depth,
             categorical_columns=self.categorical_columns,
@@ -101,7 +101,7 @@ class RandomForestClassifier:
             max_bins=self.max_bins,
         )
         relation, feature_names, unique_targets, _, bin_edges, code_dtype, n_parts = (
-            proto._training_relation(data, target_name, shrink_features, right_size=False)
+            proto._training_relation(data, target_name)
         )
         self.bin_edges_ = bin_edges
         self.categorical_mappings = proto.categorical_mappings

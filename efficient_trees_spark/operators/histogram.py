@@ -49,7 +49,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from efficient_trees_spark.functions.exprs import class_count_col
-from efficient_trees_spark.operators.split_finder import FEATURE, FEATURE_VALUE, TARGET_IDX
+from efficient_trees_spark.operators.split_finder import (
+    FEATURE,
+    FEATURE_VALUE,
+    NODE_COL,
+    TARGET_IDX,
+)
 
 
 def array_cast_expr(names: list[str], elem_type: str):
@@ -778,7 +783,8 @@ def route_codes(
     ``(node_id, feature_pos, code_threshold, left_id, right_id)`` with -1
     for finalized (leaf) children.  Returns each row's pending-node id, or
     -1 for rows under finished leaves / NULL in a split feature — the exact
-    semantics of ``DecisionTreeClassifier._routing_expr``."""
+    semantics of the melt's routing column
+    (``split_finder.find_best_splits_per_node``)."""
     node = np.zeros(mat.shape[0], dtype=np.int32)
     for nid, fpos, code_t, left_id, right_id in splits:
         idx = np.flatnonzero(node == nid)
@@ -793,13 +799,51 @@ def route_codes(
     return node
 
 
+def compile_routing_splits(
+    node: dict,
+    feature_names: list[str],
+    bin_edges: dict[str, list[float]],
+    node_id: int = 0,
+    out: list | None = None,
+) -> list[tuple]:
+    """Flatten a partial tree into the parent-before-child split list
+    :func:`route_codes` consumes: ``(node_id, feature_pos,
+    code_threshold, left_id, right_id)`` per internal node, -1 for
+    finalized (leaf) children.  Thresholds (always bin edges) translate
+    to their edge index (:func:`edge_code`, which raises on a threshold
+    that is not an edge); code comparisons are bit-equivalent to value
+    comparisons by the encode's order isomorphism
+    (:func:`pack_encode_features`)."""
+    if out is None:
+        out = []
+    if node["type"] != "node":
+        return out
+    feature = node["feature"]
+    code = edge_code(bin_edges[feature], node["threshold"])
+    left, right = node["left"], node["right"]
+    lid, rid = 2 * node_id + 1, 2 * node_id + 2
+    out.append(
+        (
+            node_id,
+            feature_names.index(feature),
+            code,
+            lid if left["type"] != "leaf" else -1,
+            rid if right["type"] != "leaf" else -1,
+        )
+    )
+    compile_routing_splits(left, feature_names, bin_edges, lid, out)
+    compile_routing_splits(right, feature_names, bin_edges, rid, out)
+    return out
+
+
 class TreeRoute(NamedTuple):
     """One tree's share of a level pass (``{tree_id: TreeRoute}``; a root
     level of one tree is ``{0: TreeRoute([], {0: 0})}``): its
-    ``route_codes`` split list, the accumulator slot each of its pending
-    nodes counts under, and the features it histograms as indices into the
-    pass's feature list.  ``features=None`` histograms every feature of the
-    pass."""
+    ``route_codes`` split list (:func:`compile_routing_splits`), the
+    accumulator slot each of its pending nodes counts under (the level's
+    ``split_finder._slot_layout``), and the features it histograms as
+    indices into the pass's feature list.  ``features=None`` histograms
+    every feature of the pass."""
 
     splits: list[tuple]
     slots: dict[int, int]
@@ -934,7 +978,6 @@ def packed_histogram_counts(
     n_classes: int,
     bin_edges: dict[str, list[float]],
     routes: dict[int, TreeRoute],
-    node_col: str,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
     code_dtype: str = "u1",
@@ -966,13 +1009,13 @@ def packed_histogram_counts(
     )
     count_cols = [class_count_col(i) for i in range(n_classes)]
     out_schema = pa.schema(
-        [pa.field(node_col, pa.int32()), pa.field(FEATURE, pa.string()),
+        [pa.field(NODE_COL, pa.int32()), pa.field(FEATURE, pa.string()),
          pa.field(FEATURE_VALUE, pa.float64())]
         + [pa.field(c, pa.int64()) for c in count_cols]
         + [pa.field("count_examples", pa.int64())]
     )
     spark_schema = (
-        f"{node_col} int, {FEATURE} string, {FEATURE_VALUE} double, "
+        f"{NODE_COL} int, {FEATURE} string, {FEATURE_VALUE} double, "
         + ", ".join(f"{c} long" for c in count_cols)
         + ", count_examples long"
     )
@@ -995,7 +1038,7 @@ def packed_histogram_counts(
         packed_df, lens, slot_off, routes, histogram, spark_schema,
         feature_positions, matrix_width, code_dtype, tree_col,
     )
-    return partials.groupBy(node_col, FEATURE, FEATURE_VALUE).agg(
+    return partials.groupBy(NODE_COL, FEATURE, FEATURE_VALUE).agg(
         *[F.sum(c).alias(c) for c in count_cols],
         F.sum("count_examples").alias("count_examples"),
     )
@@ -1120,9 +1163,9 @@ def _cube_geometry(feature_names, bin_edges):
     return names, lens, slot_off, flat_slots, edges_flat, edge_off
 
 
-def _cube_batch(node_col: str, cubes: dict[int, bytes]) -> "pa.RecordBatch":
+def _cube_batch(cubes: dict[int, bytes]) -> "pa.RecordBatch":
     """One (node, cube bytes) row per accumulator slot: the output batch of
-    the dense and pair cube passes (Spark schema ``{node_col} int, __cube
+    the dense and pair cube passes (Spark schema ``NODE_COL int, __cube
     binary``)."""
     import pyarrow as pa
 
@@ -1131,7 +1174,7 @@ def _cube_batch(node_col: str, cubes: dict[int, bytes]) -> "pa.RecordBatch":
             pa.array(np.fromiter(cubes, dtype=np.int32, count=len(cubes))),
             pa.array(list(cubes.values()), type=pa.binary()),
         ],
-        names=[node_col, "__cube"],
+        names=[NODE_COL, "__cube"],
     )
 
 
@@ -1141,7 +1184,6 @@ def packed_histogram_cubes(
     n_classes: int,
     bin_edges: dict[str, list[float]],
     routes: dict[int, TreeRoute],
-    node_col: str,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
     code_dtype: str = "u1",
@@ -1164,10 +1206,10 @@ def packed_histogram_cubes(
     def cubes(rows, axes) -> Iterator["pa.RecordBatch"]:
         acc = _accumulate_cubes(rows, axes, flat_slots, n_classes, code_dtype)
         if acc:
-            yield _cube_batch(node_col, {nv: a.tobytes() for nv, a in acc.items()})
+            yield _cube_batch({nv: a.tobytes() for nv, a in acc.items()})
 
     return _level_pass(
-        packed_df, lens, slot_off, routes, cubes, f"{node_col} int, __cube binary",
+        packed_df, lens, slot_off, routes, cubes, f"{NODE_COL} int, __cube binary",
         feature_positions, matrix_width, code_dtype, tree_col,
     )
 
@@ -1184,7 +1226,7 @@ def merge_cube_rows(rows) -> dict[int, "np.ndarray"]:
     return merged
 
 
-def _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col):
+def _cube_counts_pdf(acc, feature_names, bin_edges, n_classes):
     """Per-node flat (edges + NaN) cubes -> the counts pdf, exactly the
     rows :func:`packed_histogram_counts` + the distributed SUM would
     produce for them, or None when every cube is empty: the driver-side
@@ -1200,7 +1242,7 @@ def _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col):
     if sparse is None:
         return None
     node_out, feat_out, value_out, class_out, total_out = sparse
-    data = {node_col: node_out, FEATURE: feat_out, FEATURE_VALUE: value_out}
+    data = {NODE_COL: node_out, FEATURE: feat_out, FEATURE_VALUE: value_out}
     for i in range(n_classes):
         data[class_count_col(i)] = class_out[i]
     data["count_examples"] = total_out
@@ -1212,7 +1254,6 @@ def merge_cubes_to_counts_pdf(
     feature_names: list[str],
     n_classes: int,
     bin_edges: dict[str, list[float]],
-    node_col: str,
 ):
     """Driver-side merge of collected dense cubes -> the counts pdf (None
     when every cube is empty).  Integer addition only, then the SAME
@@ -1220,7 +1261,7 @@ def merge_cubes_to_counts_pdf(
     exactly what :func:`packed_histogram_counts` + the distributed SUM
     would produce."""
     return _cube_counts_pdf(
-        merge_cube_rows(rows), feature_names, bin_edges, n_classes, node_col
+        merge_cube_rows(rows), feature_names, bin_edges, n_classes
     )
 
 
@@ -1272,7 +1313,6 @@ def packed_histogram_pair_cubes(
     n_classes: int,
     bin_edges: dict[str, list[float]],
     routes: dict[int, TreeRoute],
-    node_col: str,
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
     code_dtype: str = "u1",
@@ -1311,10 +1351,10 @@ def packed_histogram_pair_cubes(
             for k in range(uniq.size):
                 _add_into(acc, uniq[k], counts[k])
         if acc:
-            yield _cube_batch(node_col, {nv: a.tobytes() for nv, a in acc.items()})
+            yield _cube_batch({nv: a.tobytes() for nv, a in acc.items()})
 
     return _level_pass(
-        packed_df, lens, slot2_off, routes, cubes, f"{node_col} int, __cube binary",
+        packed_df, lens, slot2_off, routes, cubes, f"{NODE_COL} int, __cube binary",
         feature_positions, matrix_width, code_dtype, tree_col,
     )
 
@@ -1335,7 +1375,6 @@ def pair_cubes_to_level_counts(
     feature_names: list[str],
     n_classes: int,
     bin_edges: dict[str, list[float]],
-    node_col: str,
 ):
     """Level-d counts pdf from merged pair cubes: the SAME pdf
     :func:`merge_cubes_to_counts_pdf` yields — the per-feature histogram
@@ -1350,7 +1389,7 @@ def pair_cubes_to_level_counts(
         cube = flat.reshape(s2, s2, n_classes)
         marg = np.einsum("iic->ic", cube)  # (s2, classes) diagonal view
         acc[nv] = np.ascontiguousarray(marg[keep]).reshape(-1)
-    return _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col)
+    return _cube_counts_pdf(acc, feature_names, bin_edges, n_classes)
 
 
 def pair_cubes_to_child_counts(
@@ -1359,7 +1398,6 @@ def pair_cubes_to_child_counts(
     feature_names: list[str],
     n_classes: int,
     bin_edges: dict[str, list[float]],
-    node_col: str,
 ):
     """Level-(d+1) counts pdf from the pair cubes and level d's CHOSEN
     splits: for node n split on feature a* at threshold t (always a
@@ -1389,4 +1427,4 @@ def pair_cubes_to_child_counts(
         right = cube[a0 + t + 1 : a0 + int(lens[j]) + 1].sum(axis=0)
         acc[2 * nv + 1] = np.ascontiguousarray(left[keep]).reshape(-1)
         acc[2 * nv + 2] = np.ascontiguousarray(right[keep]).reshape(-1)
-    return _cube_counts_pdf(acc, feature_names, bin_edges, n_classes, node_col)
+    return _cube_counts_pdf(acc, feature_names, bin_edges, n_classes)

@@ -24,6 +24,16 @@ the driver-collect budget, and runs the windows above plus a ``max_by``
 argmax otherwise.  The packed path's dense and pair cube branches merge
 their counts on the driver and go straight to the driver-side scoring.
 
+The level contract: both finders take ``{tree_id: TreeLevel}`` — each
+tree's features, its partial node dict and its pending node ids — and
+return ``{tree_id: [split dicts keyed by node id]}``.  How a level's rows
+are keyed and routed stays in this module: :func:`_slot_layout` gives
+every pending (tree, node) pair a dense slot, tree by tree, and maps the
+slots back; the melt routes rows to their slot with a column compiled by
+``plans.case_compiler.compile_tree``, the packed pass with
+``histogram.route_codes`` over ``histogram.compile_routing_splits``.
+Every relation keyed by slot names its key column ``NODE_COL``.
+
 Scale properties:
 * The unpivot multiplies rows by n_features but is map-local (no shuffle) and
   feeds straight into a partial (map-side) aggregation, so the shuffled volume
@@ -42,8 +52,6 @@ stable under any partitioning.
 
 from __future__ import annotations
 
-from bisect import bisect_right
-from itertools import accumulate
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Window
@@ -51,12 +59,15 @@ from pyspark.sql import functions as F
 
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.functions import exprs
+from efficient_trees_spark.plans.case_compiler import compile_tree
 
 # Internal column names (never collide with user feature names because the
 # unpivoted relation only carries these fixed columns).
 FEATURE = "feature"
 FEATURE_VALUE = "feature_value"
 TARGET_IDX = "__target_idx"
+# The slot column of every level relation (routed rows, counts, cubes).
+NODE_COL = "__node_id"
 
 
 def melt_features(
@@ -419,25 +430,94 @@ def _gains_from_prefix_sums(
     return crits.select(*final_select)
 
 
+class TreeLevel(NamedTuple):
+    """One tree's share of a level pass (``{tree_id: TreeLevel}``)."""
+
+    feature_names: list[str]  # the features it scores, in tie-break order
+    root: dict[str, Any]  # its partial node dict, pending nodes included
+    pending: list[int]  # its pending node ids
+
+
+class _Slots(NamedTuple):
+    """A level's dense slot layout (:func:`_slot_layout`): ``of[t]`` maps
+    tree t's pending node ids to their slots; ``tree`` and ``node`` map
+    each slot back."""
+
+    of: dict[int, dict[int, int]]
+    tree: list[int]
+    node: list[int]
+
+    def unslot(self, pairs) -> dict[int, list[tuple[int, Any]]]:
+        """``(slot, value)`` pairs -> ``{tree: [(node id, value), ...]}``."""
+        out: dict[int, list] = {t: [] for t in self.of}
+        for slot, value in pairs:
+            out[self.tree[slot]].append((self.node[slot], value))
+        return out
+
+    def unslot_splits(self, splits) -> dict[int, list[dict[str, Any]]]:
+        """Slot-keyed split dicts -> each tree's node-keyed split dicts."""
+        return {
+            t: [dict(b, node_id=node) for node, b in pairs]
+            for t, pairs in self.unslot((b["node_id"], b) for b in splits).items()
+        }
+
+
+def _slot_layout(trees: dict[int, TreeLevel]) -> _Slots:
+    """Dense slot ids over a level's pending (tree, node) pairs, tree by
+    tree in tree-id order, so each tree owns a contiguous slot range.
+    Every level relation is keyed by slot (``NODE_COL``): the kernels
+    size their accumulators by it, and one pass covers any number of
+    trees."""
+    of: dict[int, dict[int, int]] = {}
+    tree: list[int] = []
+    node: list[int] = []
+    for t in sorted(trees):
+        pending = list(trees[t].pending)
+        of[t] = {n: len(node) + i for i, n in enumerate(pending)}
+        tree += [t] * len(pending)
+        node += pending
+    return _Slots(of, tree, node)
+
+
 def find_best_splits_per_node(
     df: DataFrame,
-    tree_features: list[list[str]],
+    trees: dict[int, TreeLevel],
     n_classes: int,
     criterion: Criterion,
-    node_col: str,
-    slot_ends: list[int],
-) -> list[list[dict[str, Any]]]:
+    tree_col: str | None = None,
+) -> dict[int, list[dict[str, Any]]]:
     """Best split of EVERY pending node of every tree of a level in one
     pass (PLANET-style), on the exact melt: ``df`` is the prepared
-    training relation with a routing slot column, each row NULL in the
-    features outside its own tree's.  Tree k owns the slots below
-    ``slot_ends[k]``; the counts go to the shared scorer
-    (:func:`_score_counts`)."""
-    names = list(dict.fromkeys(f for fl in tree_features for f in fl))
-    counts = _melt_counts(df, names, n_classes, node_col)
-    return _score_counts(
-        counts, tree_features, n_classes, criterion, node_col, slot_ends
+    training relation, each row NULL in the features outside its own
+    tree's.  Rows are routed to their slot by each tree's compiled
+    partial tree (with ``tree_col``, a row takes its own tree's route;
+    without it every row is tree 0's), melted, counted, and the counts go
+    to the shared scorer (:func:`_score_counts`)."""
+    layout = _slot_layout(trees)
+    routes = []
+    for t, slots in layout.of.items():
+        # A pending node's rows take its slot; rows under a finished leaf
+        # are NULL, like rows NULL in a split feature (the reference's
+        # drop-from-both-children semantics).
+        route = compile_tree(
+            trees[t].root,
+            leaf=lambda n, slots=slots: (
+                F.lit(slots[n["node_id"]])
+                if n["type"] == "pending"
+                else F.lit(None).cast("int")
+            ),
+        )
+        routes.append(
+            route if tree_col is None else F.when(F.col(tree_col) == t, route)
+        )
+    routed = df.withColumn(NODE_COL, F.coalesce(*routes)).filter(
+        F.col(NODE_COL).isNotNull()
     )
+    names = list(
+        dict.fromkeys(f for t in layout.of for f in trees[t].feature_names)
+    )
+    counts = _melt_counts(routed, names, n_classes, NODE_COL)
+    return _score_counts(counts, trees, n_classes, criterion)
 
 
 # A level's aggregated counts relation above this many rows keeps the
@@ -469,14 +549,6 @@ def _local_gains_row_cap(spark, n_classes: int) -> int:
 _DENSE_CUBE_MAX_BYTES = 256 << 20
 
 
-class TreeLevel(NamedTuple):
-    """One tree's share of a packed level pass (:func:`find_best_splits_packed`)."""
-
-    feature_names: list[str]  # the features it scores, in tie-break order
-    routing_splits: list[tuple]  # ``histogram.route_codes`` splits
-    pending: list[int]  # its pending node ids
-
-
 def find_best_splits_packed(
     packed_df: DataFrame,
     trees: dict[int, TreeLevel],
@@ -484,7 +556,6 @@ def find_best_splits_packed(
     criterion: Criterion,
     bin_edges: dict[str, list[float]],
     n_input_parts: int,
-    node_col: str = "__node_id",
     all_feature_names: list[str] | None = None,
     tree_col: str | None = None,
     code_dtype: str = "u1",
@@ -497,16 +568,15 @@ def find_best_splits_packed(
     inside the histogram pass instead of as a JVM routing column, so each
     level costs one 2-column Arrow transfer of the cached code relation.
 
-    ONE pass scores the pending nodes of every tree in ``trees``
-    (``{tree_id: TreeLevel}``) — the PLANET / MLlib ``RandomForest``
-    shape: a forest's level is one Spark stage, not one per tree.  With
-    ``tree_col`` each row carries its tree id and is routed by that tree's
-    splits; without it every row is tree 0's (a single tree's fit).  The
-    kernels key their accumulators by a dense SLOT id per pending (tree,
-    node) pair, tree by tree, so each tree owns a contiguous slot range
-    and the dense, pair and sparse branches below run unchanged over any
-    number of trees; each tree is scored with its own feature list (its
-    tie-break order).  Budgets sum over the trees in the pass.
+    ONE pass scores the pending nodes of every tree in ``trees`` — the
+    PLANET / MLlib ``RandomForest`` shape: a forest's level is one Spark
+    stage, not one per tree.  With ``tree_col`` each row carries its tree
+    id and is routed by that tree's splits; without it every row is tree
+    0's (a single tree's fit).  The kernels count under the level's slot
+    layout (:func:`_slot_layout`), so the dense, pair and sparse branches
+    below run unchanged over any number of trees; each tree is scored
+    with its own feature list (its tie-break order).  Budgets sum over
+    the trees in the pass.
 
     The aggregated histogram relation is bounded by nodes × features ×
     (bins+1) rows — independent of corpus size — so while that bound fits
@@ -546,6 +616,7 @@ def find_best_splits_packed(
     from efficient_trees_spark.operators.histogram import (
         TreeRoute,
         _trim_malloc,
+        compile_routing_splits,
         merge_cube_rows,
         merge_cubes_to_counts_pdf,
         packed_histogram_counts,
@@ -557,30 +628,25 @@ def find_best_splits_packed(
         stats_collect_budget,
     )
 
-    order = sorted(trees)
-    lists = [list(trees[t].feature_names) for t in order]
-    shared = all(fl == lists[0] for fl in lists)
-    matrix = list(all_feature_names) if all_feature_names is not None else lists[0]
+    layout = _slot_layout(trees)
+    lists = {t: list(trees[t].feature_names) for t in layout.of}
+    first = next(iter(lists.values()))
+    shared = all(fl == first for fl in lists.values())
+    matrix = list(all_feature_names) if all_feature_names is not None else first
     if shared:
-        names = lists[0]
+        names = first
     else:
-        used = set().union(*lists)
+        used = set().union(*lists.values())
         names = [f for f in matrix if f in used]
     col_of = {f: j for j, f in enumerate(names)}
-    # Dense slot ids over the pass's (tree, node) pairs, tree by tree, so
-    # each tree owns a contiguous slot range.
-    routes: dict[int, TreeRoute] = {}
-    slot_tree: list[int] = []
-    slot_node: list[int] = []
-    for t, fl in zip(order, lists):
-        level = trees[t]
-        routes[t] = TreeRoute(
-            level.routing_splits,
-            slots={node: len(slot_node) + i for i, node in enumerate(level.pending)},
-            features=None if shared else [col_of[f] for f in fl],
+    routes = {
+        t: TreeRoute(
+            compile_routing_splits(trees[t].root, matrix, bin_edges),
+            slots=slots,
+            features=None if shared else [col_of[f] for f in lists[t]],
         )
-        slot_tree += [t] * len(level.pending)
-        slot_node += list(level.pending)
+        for t, slots in layout.of.items()
+    }
     if matrix != names:
         positions, width = [matrix.index(f) for f in names], len(matrix)
     else:
@@ -593,16 +659,10 @@ def find_best_splits_packed(
     )
     spark = packed_df.sparkSession
 
-    def node_keyed(slot_keyed: dict) -> dict[int, dict]:
-        out: dict[int, dict] = {t: {} for t in order}
-        for slot, value in slot_keyed.items():
-            out[slot_tree[slot]][slot_node[slot]] = value
-        return out
-
     est_rows = sum(
         max(1, len(trees[t].pending))
         * sum(len(bin_edges.get(f, ())) + 1 for f in fl)
-        for t, fl in zip(order, lists)
+        for t, fl in lists.items()
     )
     local_ok = est_rows <= _local_gains_row_cap(spark, n_classes)
     dense_ok = pair_ok = False
@@ -628,7 +688,7 @@ def find_best_splits_packed(
         # purposes (ADVICE r11); both branches are bit-identical, so the
         # pad only moves the (safe) fallback boundary.  A partition emits
         # at most one cube per pending node of every tree in the pass.
-        cubes_per_part = int(n_input_parts * 1.25) * max(1, len(slot_node))
+        cubes_per_part = int(n_input_parts * 1.25) * max(1, len(layout.node))
         dense_ok = cubes_per_part * cube_bytes <= cube_budget
         pair_ok = (
             lookahead
@@ -637,40 +697,34 @@ def find_best_splits_packed(
             <= cube_budget
         )
     if pair_ok:
-        pair_cubes = node_keyed(
-            merge_cube_rows(
-                _arrow_cube_rows(
-                    packed_histogram_pair_cubes(
-                        packed_df, names, n_classes, bin_edges, routes,
-                        node_col, **kernel_args,
-                    ).toArrow()
-                )
+        merged = merge_cube_rows(
+            _arrow_cube_rows(
+                packed_histogram_pair_cubes(
+                    packed_df, names, n_classes, bin_edges, routes, **kernel_args,
+                ).toArrow()
             )
         )
+        pair_cubes = {t: dict(p) for t, p in layout.unslot(merged.items()).items()}
+        del merged
         _trim_malloc()
         levels = {
-            t: pair_cubes_to_level_counts(
-                pair_cubes[t], names, n_classes, bin_edges, node_col
-            )
-            for t in order
+            t: pair_cubes_to_level_counts(pair_cubes[t], names, n_classes, bin_edges)
+            for t in lists
         }
     elif dense_ok:
         # Arrow transport for the cube partials: a depth-d level collects
         # partitions x nodes ~100 KB binary cubes (hundreds of MB at depth
         # 3+ on many-partition inputs).
-        cube_rows: dict[int, list] = {t: [] for t in order}
-        for slot, cube in _arrow_cube_rows(
-            packed_histogram_cubes(
-                packed_df, names, n_classes, bin_edges, routes, node_col,
-                **kernel_args,
-            ).toArrow()
-        ):
-            cube_rows[slot_tree[slot]].append((slot_node[slot], cube))
-        levels = {
-            t: merge_cubes_to_counts_pdf(
-                cube_rows[t], names, n_classes, bin_edges, node_col
+        cube_rows = layout.unslot(
+            _arrow_cube_rows(
+                packed_histogram_cubes(
+                    packed_df, names, n_classes, bin_edges, routes, **kernel_args,
+                ).toArrow()
             )
-            for t in order
+        )
+        levels = {
+            t: merge_cubes_to_counts_pdf(cube_rows[t], names, n_classes, bin_edges)
+            for t in lists
         }
         # The per-level IPC table is hundreds of MB on many-partition
         # inputs; return it to the OS before the next level piles on
@@ -679,27 +733,20 @@ def find_best_splits_packed(
         del cube_rows
         _trim_malloc()
     else:
-        per_tree = _score_counts(
+        found = _score_counts(
             packed_histogram_counts(
-                packed_df, names, n_classes, bin_edges, routes, node_col,
-                **kernel_args,
+                packed_df, names, n_classes, bin_edges, routes, **kernel_args,
             ),
-            lists,
+            trees,
             n_classes,
             criterion,
-            node_col,
-            list(accumulate(len(trees[t].pending) for t in order)),
             est_rows=est_rows,
             bounded_candidates=True,
         )
-        found = {
-            t: [dict(b, node_id=slot_node[b["node_id"]]) for b in best]
-            for t, best in zip(order, per_tree)
-        }
         return found, None
     found = {
-        t: best_splits_from_counts_pdf(levels[t], n_classes, fl, node_col, criterion)
-        for t, fl in zip(order, lists)
+        t: best_splits_from_counts_pdf(levels[t], n_classes, fl, criterion)
+        for t, fl in lists.items()
     }
     carried = None
     if pair_ok:
@@ -710,29 +757,26 @@ def find_best_splits_packed(
             t: pair_cubes_to_child_counts(
                 pair_cubes[t],
                 [b for b in found[t] if b["information_gain"] > 0],
-                names, n_classes, bin_edges, node_col,
+                names, n_classes, bin_edges,
             )
-            for t in order
+            for t in lists
         }
     return found, carried
 
 
 def _score_counts(
     counts: DataFrame,
-    tree_features: list[list[str]],
+    trees: dict[int, TreeLevel],
     n_classes: int,
     criterion: Criterion,
-    node_col: str,
-    slot_ends: list[int],
     est_rows: int = 0,
     bounded_candidates: bool = False,
-) -> list[list[dict[str, Any]]]:
+) -> dict[int, list[dict[str, Any]]]:
     """The counts-to-splits step of both fit paths: a level's counts
-    relation ``(node_col, feature, feature_value, class_*_count,
-    count_examples)`` → each tree's best split per slot.  Tree k owns the
-    ``node_col`` slots below ``slot_ends[k]`` and above the previous
-    tree's and breaks ties by its own ``tree_features[k]``; returned
-    splits carry the slot as ``node_id``.
+    relation ``(NODE_COL, feature, feature_value, class_*_count,
+    count_examples)``, keyed by the level's slots (:func:`_slot_layout`
+    of ``trees``) → each tree's best split per pending node, node-keyed.
+    Each tree breaks ties by its own feature list.
 
     While the relation may fit ``_local_gains_row_cap`` (rows AND bytes,
     so a high-class-count fit cannot blow ``spark.driver.maxResultSize``
@@ -749,41 +793,49 @@ def _score_counts(
     bit-identical."""
     import numpy as np
 
+    layout = _slot_layout(trees)
     cap = _local_gains_row_cap(counts.sparkSession, n_classes)
     if est_rows <= cap or not bounded_candidates:
         counts = counts.localCheckpoint(eager=False)
     if est_rows <= cap:
         pdf = counts.limit(cap + 1).toArrow().to_pandas()
         if len(pdf) <= cap:
-            owner = np.searchsorted(slot_ends, pdf[node_col].to_numpy(), "right")
-            return [
-                best_splits_from_counts_pdf(
-                    pdf[owner == k], n_classes, fl, node_col, criterion
-                )
-                for k, fl in enumerate(tree_features)
+            owner = np.asarray(layout.tree, dtype=np.int64)[
+                pdf[NODE_COL].to_numpy(np.int64)
             ]
+            return layout.unslot_splits(
+                b
+                for t in layout.of
+                for b in best_splits_from_counts_pdf(
+                    pdf[owner == t], n_classes, trees[t].feature_names, criterion
+                )
+            )
         del pdf
     gains = candidate_split_gains(
         counts,
         [],
         n_classes,
         criterion,
-        node_col=node_col,
+        node_col=NODE_COL,
         include_child_counts=True,
         bounded_candidates=bounded_candidates,
         precomputed_counts=counts,
     )
     # Each tree's tie-break position comes from its own feature list,
     # looked up by the tree's contiguous slot range.
-    position = _feature_position(tree_features[0])
-    if any(fl != tree_features[0] for fl in tree_features):
-        position = F.when(F.col(node_col) < int(slot_ends[0]), position)
-        for end, fl in zip(slot_ends[1:], tree_features[1:]):
-            position = position.when(F.col(node_col) < int(end), _feature_position(fl))
-    found: list[list[dict[str, Any]]] = [[] for _ in tree_features]
-    for b in _best_split_rows(gains, position, node_col):
-        found[bisect_right(slot_ends, b["node_id"])].append(b)
-    return found
+    lists = [trees[t].feature_names for t in layout.of]
+    position = _feature_position(lists[0])
+    if any(fl != lists[0] for fl in lists):
+        position = None
+        end = 0
+        for t, slots in layout.of.items():
+            end += len(slots)
+            pos_t = _feature_position(trees[t].feature_names)
+            cond = F.col(NODE_COL) < end
+            position = (
+                F.when(cond, pos_t) if position is None else position.when(cond, pos_t)
+            )
+    return layout.unslot_splits(_best_split_rows(gains, position))
 
 
 def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
@@ -802,7 +854,7 @@ def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
     return out
 
 
-def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
+def _prefix_sum_arrays(pdf, n_classes: int):
     """Sorted counts relation + exact int64 sums of the driver-side gains
     (:func:`_gains_arrays`): ``(pdf, arrays, gid)``, where ``arrays``
     holds each row's prefix sums (``cum_*``) and each (node, feature)
@@ -826,7 +878,7 @@ def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
 
     from efficient_trees_spark.functions.exprs import class_count_col
 
-    nodes = pdf[node_col].to_numpy(np.int64)
+    nodes = pdf[NODE_COL].to_numpy(np.int64)
     feat_codes, _ = pd.factorize(pdf[FEATURE], sort=False)
     values = pdf[FEATURE_VALUE].to_numpy(np.float64)
     order = np.lexsort((values, feat_codes, nodes))
@@ -857,7 +909,7 @@ def _prefix_sum_arrays(pdf, n_classes: int, node_col: str):
     return pdf, arrays, gid
 
 
-def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
+def _gains_arrays(pdf, n_classes: int, criterion: Criterion):
     """Numpy core of the driver-side gains: prefix sums → max-value
     filter → gains, all as flat arrays (no per-row Python objects).
     Returns ``(nodes, features, values, gain, parent_criterion,
@@ -883,7 +935,7 @@ def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
 
     from efficient_trees_spark.functions import fdlibm
 
-    pdf, arr, gid = _prefix_sum_arrays(pdf, n_classes, node_col)
+    pdf, arr, gid = _prefix_sum_arrays(pdf, n_classes)
     # Drop the maximal value of each feature: a split there leaves the
     # right child empty (reference F3, tree.py:274-277).
     keep = arr["sum_n"][gid] > arr["cum_n"]
@@ -931,7 +983,7 @@ def _gains_arrays(pdf, n_classes: int, node_col: str, criterion: Criterion):
     child = cum_n / sum_n * left_c + right_n / sum_n * right_c
     gain = parent_c - child
 
-    nodes = pdf[node_col].to_numpy(np.int64)[keep]
+    nodes = pdf[NODE_COL].to_numpy(np.int64)[keep]
     features = pdf[FEATURE].to_numpy()[keep]
     values = pdf[FEATURE_VALUE].to_numpy(np.float64)[keep]
     return nodes, features, values, gain, parent_c, left_counts, right_counts
@@ -941,7 +993,6 @@ def best_splits_from_counts_pdf(
     pdf,
     n_classes: int,
     feature_names: list[str],
-    node_col: str,
     criterion: Criterion,
 ) -> list[dict[str, Any]]:
     """Best split per node from a DRIVER-LOCAL counts relation — the one
@@ -966,7 +1017,7 @@ def best_splits_from_counts_pdf(
     if pdf is None or pdf.empty:
         return []
     nodes, features, values, gain, parent_c, lc, rc = _gains_arrays(
-        pdf, n_classes, node_col, criterion
+        pdf, n_classes, criterion
     )
     if not len(nodes):
         return []
@@ -1000,7 +1051,7 @@ def _feature_position(feature_names: list[str]):
     )[F.col(FEATURE)]
 
 
-def _best_split_rows(gains: DataFrame, position, node_col: str) -> list[dict[str, Any]]:
+def _best_split_rows(gains: DataFrame, position) -> list[dict[str, Any]]:
     """Distributed argmax + collect of a gains relation: the scorer's
     over-budget form (``position`` is the feature-position column,
     :func:`_feature_position`).
@@ -1030,10 +1081,10 @@ def _best_split_rows(gains: DataFrame, position, node_col: str) -> list[dict[str
         F.col("left_counts").alias("left_counts"),
         F.col("right_counts").alias("right_counts"),
     )
-    rows = gains.groupBy(node_col).agg(F.max_by(payload, order).alias("best")).collect()
+    rows = gains.groupBy(NODE_COL).agg(F.max_by(payload, order).alias("best")).collect()
     return [
         {
-            "node_id": row[node_col],
+            "node_id": row[NODE_COL],
             "feature": row["best"]["feature"],
             "threshold": row["best"]["threshold"],
             "information_gain": row["best"]["information_gain"],

@@ -26,23 +26,28 @@ cross-check oracle for tests.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def compile_tree(node: dict[str, Any]) -> Column:
+def compile_tree(
+    node: dict[str, Any], leaf: Callable[[dict[str, Any]], Column] | None = None
+) -> Column:
     """Recursively compile a node dict (see ``tree.py`` for the schema) to a
     Column whose value is the predicted class, or NULL when the row's path
-    hits a NULL split feature."""
-    if node["type"] == "leaf":
-        return F.lit(node["value"])
+    hits a NULL split feature.  ``leaf`` compiles every node that is not
+    an internal split (default: the leaf's class literal); the tree fit's
+    melt passes one that maps a partial tree's pending nodes to their
+    level slots, so its routing column is this same CASE."""
+    if node["type"] != "node":
+        return F.lit(node["value"]) if leaf is None else leaf(node)
     feature = F.col(node["feature"])
     threshold = F.lit(node["threshold"])
     return (
-        F.when(feature <= threshold, compile_tree(node["left"]))
-        .when(feature > threshold, compile_tree(node["right"]))
+        F.when(feature <= threshold, compile_tree(node["left"], leaf))
+        .when(feature > threshold, compile_tree(node["right"], leaf))
         .otherwise(F.lit(None))
     )
 

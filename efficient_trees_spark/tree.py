@@ -13,14 +13,24 @@ Same capabilities as the reference classifier
   histogram pass over it with the tree routing run in numpy
   (``operators/histogram.py``).  The exact melt: each level unpivots the
   persisted training relation, routed by a compiled slot column, into one
-  declarative gains plan (``operators/split_finder.py``).  Both paths
-  share the gain expressions and tie-breaks, so they grow identical trees.
-  The fit picks the path from its input, with no option: binned fits
-  (``max_bins``) and exact fits of at least ``_AUTO_PACKED_MIN_FEATURES``
-  (64) features take the packed loop; narrower exact fits take the melt,
-  which was measured faster there (its Expand cost grows with width).  A
-  wide exact fit with a feature past uint16 code space (65 533 distinct
-  values) falls back to the melt with a warning.
+  declarative gains plan.  Both paths take the same level contract —
+  trees, partial trees and pending node ids in, node-keyed splits out —
+  and ``operators/split_finder.py`` owns their slot layout and routing;
+  they share the gain expressions and tie-breaks, so they grow identical
+  trees.  The fit picks the path from its input, with no option: binned
+  fits (``max_bins``) and exact fits of at least
+  ``_AUTO_PACKED_MIN_FEATURES`` (64) features take the packed loop;
+  narrower exact fits take the melt, which was measured faster there (its
+  Expand cost grows with width).  A wide exact fit with a feature past
+  uint16 code space (65 533 distinct values) falls back to the melt with
+  a warning, and runs the very melt a narrow exact fit runs on the same
+  input (same relation, same jobs) after its probe's jobs.
+* **Float width.**  Float features are rounded to float32 (the
+  reference's ``shrink_dtype``); integer and decimal features train as
+  exact doubles.  The packed path's edge and encode passes read the
+  features as float32 only when every one is float32-exact by its type
+  (float, double, byte, short, or categorical codes below 2^24), and as
+  double otherwise, so both paths see the same values.
 * **Batch prediction compiled to a single CASE projection**
   (``plans/case_compiler.py``) instead of a 2^depth filter-union.
 * **Lineage stays one select deep**: the training relation (or code
@@ -177,7 +187,7 @@ def _encode_codes(
     bin_edges: dict[str, list[float]],
     dtype: str,
     n_parts: int,
-    n_rows_est: int | None = None,
+    n_rows_est: int,
 ) -> tuple[DataFrame, str, int]:
     """Pass 2 of the two-scan flow, shared by the single-tree fit and the
     forest: the fused pack + encode of ``prepared`` into the packed
@@ -187,23 +197,19 @@ def _encode_codes(
     are bit-identical.  Returns ``(codes, code_dtype, n_parts)``.  Edges
     always fit uint16: binned edges number at most ``max_bins`` (capped at
     65 533 by the constructor) and the exact distinct pass raises past it.
-
-    With ``n_rows_est`` the input is first right-sized for the cache
-    (:func:`_coalesce_for_pack`); the forest passes none, since its bags
-    sample the code relation and a different partitioning would draw
-    different rows."""
+    The input is first right-sized for the cache from the edge pass's row
+    count ``n_rows_est`` (:func:`_coalesce_for_pack`)."""
     from efficient_trees_spark.operators import histogram
 
     max_card = max((len(e) for e in bin_edges.values()), default=0)
     code_dtype = "u1" if max_card <= histogram._MAX_PACKED_EDGES else "u2"
-    if n_rows_est is not None:
-        prepared, n_parts = _coalesce_for_pack(
-            prepared,
-            n_rows_est,
-            len(feature_names),
-            n_parts,
-            bytes_per_cell=1 if code_dtype == "u1" else 2,
-        )
+    prepared, n_parts = _coalesce_for_pack(
+        prepared,
+        n_rows_est,
+        len(feature_names),
+        n_parts,
+        bytes_per_cell=1 if code_dtype == "u1" else 2,
+    )
     codes = histogram.pack_encode_features(
         prepared, feature_names, bin_edges, dtype=dtype, code_dtype=code_dtype
     )
@@ -296,6 +302,17 @@ class DecisionTreeClassifier:
     :param bin_rel_error: relative rank error of the per-partition order
         statistics used to place bin edges; only the edge PLACEMENT is
         approximate, never the gains at the chosen edges.
+
+    Float features are rounded to float32 before split search, replicating
+    the reference's ``shrink_dtype`` pass (tree.py:90), so thresholds are
+    f32 values.  This is NOT semantics-neutral: inference compares the
+    user's unrounded float64 data against the f32 threshold, so a row
+    sitting exactly on a split value can route differently than under f64
+    training (e.g. ``1.9 <= float32(1.9)=1.8999999762`` is false).  The
+    reference's golden iris outputs depend on this behavior.  Polars
+    shrinks Float64→Float32 only when the column's min/max fit in f32 range
+    (±3.4e38); this engine shrinks unconditionally to avoid an extra
+    min/max scan.  Integer and decimal features are exact.
     """
 
     def __init__(
@@ -433,35 +450,12 @@ class DecisionTreeClassifier:
 
     # ------------------------------------------------------------------ fit
 
-    def fit(
-        self,
-        data: DataFrame,
-        target_name: str,
-        shrink_features: bool = True,
-    ) -> None:
+    def fit(self, data: DataFrame, target_name: str) -> None:
         """Train the tree level-wise (PLANET-style): one split pass per tree
         LEVEL scores every pending node of the level.  Reference lifecycle:
-        tree.py:79-115.
-
-        :param shrink_features:
-            ``True`` (default) replicates the reference's ``shrink_dtype``
-            pass (tree.py:90): float features are rounded to float32 before
-            split search, so thresholds are f32 values.  This is NOT
-            semantics-neutral — inference compares the user's unrounded
-            float64 data against the f32 threshold, so a row sitting exactly
-            on a split value can route differently than under f64 training
-            (e.g. ``1.9 <= float32(1.9)=1.8999999762`` is false).  The
-            reference's golden iris outputs depend on this behavior; bit
-            parity requires it.  ``False`` trains in full float64.
-            Divergence note: polars shrinks Float64→Float32 only when the
-            column's min/max fit in f32 range (±3.4e38); this engine shrinks
-            unconditionally to avoid an extra min/max scan.  Integer features
-            are exact either way.
-        """
+        tree.py:79-115."""
         (relation, feature_names, unique_targets, root_distribution, bin_edges,
-         code_dtype, n_parts) = self._training_relation(
-            data, target_name, shrink_features
-        )
+         code_dtype, n_parts) = self._training_relation(data, target_name)
         # The only relation a single-tree fit persists: the code relation
         # (packed loop) or the prepared training relation (melt), read once
         # per level.
@@ -480,11 +474,7 @@ class DecisionTreeClassifier:
             relation.unpersist()
 
     def _training_relation(
-        self,
-        data: DataFrame,
-        target_name: str,
-        shrink_features: bool,
-        right_size: bool = True,
+        self, data: DataFrame, target_name: str
     ) -> tuple[
         DataFrame, list[str], list[Any], list[tuple[int, int]], dict | None,
         str, int | None,
@@ -493,22 +483,22 @@ class DecisionTreeClassifier:
         ``(relation, feature_names, unique_targets, root_distribution,
         bin_edges, code_dtype, n_parts)``: root_distribution is the input's
         ``[(class_idx, count), ...]``, bin_edges None on the melt, n_parts
-        the fan-out's partition count, None when the melt was chosen up
-        front.
+        the code relation's partition count, None on the melt.
 
         First the prepared relation: categorical encoding, class-label
         discovery with each label's row count (one job, the root's class
         distribution), and the normalized training relation — features cast to
         double (a common unpivot value type), target encoded to its class
-        index (cheap int comparisons in the conditional counts).  With
-        shrink_features, fractional features round-trip through float32
-        first (reference shrink_dtype, tree.py:90) so every candidate
-        threshold downstream is an f32 value; integer/decimal features go
-        straight to double (exact, like polars' lossless int shrink).  An
-        input with no rows raises here, before any fit pass runs.  Then the
-        fit path, by the module docstring's rule: on the packed path, fan
-        out, place the edges and encode (right-sized for the cache unless
-        ``right_size`` is False: see :func:`_encode_codes`)."""
+        index (cheap int comparisons in the conditional counts).
+        Fractional features round-trip through float32 first (reference
+        shrink_dtype, tree.py:90) so every candidate threshold downstream
+        is an f32 value; integer/decimal features go straight to double
+        (exact, like polars' lossless int shrink).  An input with no rows
+        raises here, before any fit pass runs.  Then the fit path, by the
+        module docstring's rule: on the packed path, fan out, place the
+        edges and encode (:func:`_encode_codes`).  A wide exact fit whose
+        distinct-value probe overflows keeps the prepared relation, so it
+        runs the melt a narrow fit would."""
         feature_names = [c for c in data.columns if c != target_name]
 
         if self.categorical_columns:
@@ -546,7 +536,7 @@ class DecisionTreeClassifier:
         # round-trips per plan.  CAST == Column.cast — identical plans.
         def feature_sql(name: str) -> str:
             q = f"`{name.replace('`', '``')}`"
-            inner = f"CAST({q} AS FLOAT)" if shrink_features and name in fractional else q
+            inner = f"CAST({q} AS FLOAT)" if name in fractional else q
             return f"CAST({inner} AS DOUBLE) AS {q}"
 
         # A NULL label is a class of its own (groupBy surfaces it; the
@@ -590,25 +580,24 @@ class DecisionTreeClassifier:
                 distinct_edges_packed,
             )
 
-            prepared, n_parts = _fan_out_small_input(prepared)
-            # Kept for the exact overflow fallback: the melt path must see
-            # the double-typed relation, not the f32-narrowed one below.
-            prepared_base = prepared
-            if shrink_features:
-                # Shrunk features are f32-representable by construction, so
-                # the edge and encode passes can read float32: halves the
-                # Arrow batch volume each transfers.  Lossless —
-                # searchsorted compares f32 upcast to the float64 edges,
-                # and the emitted candidate values are the edges themselves.
-                prepared = prepared.selectExpr(
-                    *[
-                        f"CAST(`{f.replace('`', '``')}` AS FLOAT) AS "
-                        f"`{f.replace('`', '``')}`"
-                        for f in feature_names
-                    ],
-                    _TARGET_IDX,
-                )
-            dtype = "f4" if shrink_features else "f8"
+            # The edge and encode passes read the features as float32 when
+            # every one is float32-exact by its type — halving the Arrow
+            # batch volume each transfers, losslessly (searchsorted
+            # compares the f32 upcast to the float64 edges, and the
+            # emitted candidates are the edges themselves) — and as
+            # double otherwise: an int or decimal feature narrowed to f32
+            # would split where the melt does not.
+            mappings = self.categorical_mappings or {}
+
+            def f32_exact(field) -> bool:
+                if field.name in mappings:  # ordinal codes 0..len-1
+                    return len(mappings[field.name]) < 1 << 24
+                return field.dataType.typeName() in ("float", "double", "byte", "short")
+
+            dtype = "f4" if all(
+                f32_exact(f) for f in data.schema.fields if f.name != target_name
+            ) else "f8"
+            fanned, fanned_parts = _fan_out_small_input(prepared)
             # Two streaming scans of the source and no raw cache at all —
             # the XGBoost approx-tree architecture.  Pass 1 collects
             # per-partition order statistics (binned) or distinct values
@@ -621,13 +610,13 @@ class DecisionTreeClassifier:
             if self.max_bins is not None:
                 n_bins, stats = self._binned_edge_params()
                 bin_edges, n_rows_est = _two_scan_binned_edges(
-                    prepared, feature_names, n_bins, stats, dtype,
-                    n_parts=n_parts,
+                    fanned, feature_names, n_bins, stats, dtype,
+                    n_parts=fanned_parts,
                 )
             else:
                 try:
                     bin_edges, n_rows_est = distinct_edges_packed(
-                        prepared,
+                        fanned,
                         feature_names,
                         max_distinct=_MAX_PACKED16_EDGES,
                         dtype=dtype,
@@ -637,12 +626,11 @@ class DecisionTreeClassifier:
                         f"{exc}; falling back to the melt split search",
                         stacklevel=3,
                     )
-                    prepared = prepared_base
             if bin_edges is not None:
                 self.bin_edges_ = bin_edges
                 prepared, code_dtype, n_parts = _encode_codes(
-                    prepared, feature_names, bin_edges, dtype, n_parts,
-                    n_rows_est=n_rows_est if right_size else None,
+                    fanned, feature_names, bin_edges, dtype, fanned_parts,
+                    n_rows_est,
                 )
 
         return (
@@ -682,71 +670,6 @@ class DecisionTreeClassifier:
 
     # ------------------------------------------------ level-wise training
 
-    @staticmethod
-    def _routing_expr(node: dict[str, Any], slot: dict[int, int]):
-        """Compile the partial tree into a routing Column: rows land on their
-        pending node's ``slot``, NULL under finished leaves or NULL split
-        features (the reference's drop-from-both-children semantics)."""
-        if node["type"] == "pending":
-            return F.lit(slot[node["node_id"]])
-        if node["type"] == "leaf":
-            return F.lit(None).cast("int")
-        feature, threshold = node["feature"], node["threshold"]
-        return (
-            F.when(
-                F.col(feature) <= threshold,
-                DecisionTreeClassifier._routing_expr(node["left"], slot),
-            )
-            .when(
-                F.col(feature) > threshold,
-                DecisionTreeClassifier._routing_expr(node["right"], slot),
-            )
-            .otherwise(F.lit(None).cast("int"))
-        )
-
-    @staticmethod
-    def _compile_routing_splits(
-        node: dict[str, Any],
-        feature_names: list[str],
-        bin_edges: dict[str, list[float]],
-        node_id: int = 0,
-        out: list | None = None,
-    ) -> list[tuple]:
-        """Flatten the partial tree into the parent-before-child split list
-        ``histogram.route_codes`` consumes: ``(node_id, feature_pos,
-        code_threshold, left_id, right_id)`` per internal node, -1 for
-        finalized (leaf) children.  Thresholds (always bin edges) translate
-        to their edge index (``histogram.edge_code``, which raises on a
-        threshold that is not an edge); code comparisons are bit-equivalent
-        to the raw routing expression by the encode's order isomorphism
-        (``histogram.pack_encode_features``)."""
-        from efficient_trees_spark.operators.histogram import edge_code
-
-        if out is None:
-            out = []
-        if node["type"] != "node":
-            return out
-        feature = node["feature"]
-        code = edge_code(bin_edges[feature], node["threshold"])
-        left, right = node["left"], node["right"]
-        lid, rid = 2 * node_id + 1, 2 * node_id + 2
-        out.append(
-            (
-                node_id,
-                feature_names.index(feature),
-                code,
-                lid if left["type"] != "leaf" else -1,
-                rid if right["type"] != "leaf" else -1,
-            )
-        )
-        DecisionTreeClassifier._compile_routing_splits(
-            left, feature_names, bin_edges, lid, out
-        )
-        DecisionTreeClassifier._compile_routing_splits(
-            right, feature_names, bin_edges, rid, out
-        )
-        return out
-
     def _build_tree_levelwise(
         self,
         data: DataFrame,
@@ -761,8 +684,10 @@ class DecisionTreeClassifier:
     ) -> list[dict[str, Any]]:
         """PLANET-style breadth-first growth (the published strategy behind
         MLlib's trees, here with exact distinct-value splits): each level runs
-        ONE split-search job covering every pending node, keyed by a routing
-        column compiled from the partial tree.
+        ONE split search covering every pending node.  The loop hands the
+        finder each active tree's features, partial tree and pending node
+        ids (``split_finder.TreeLevel``) and gets back splits keyed by node
+        id; how rows are keyed and routed is the finder's business.
 
         ``bin_edges`` selects the path: given, ``data`` is the packed
         bin-code relation of ``packed_n_parts`` partitions and each level
@@ -801,7 +726,6 @@ class DecisionTreeClassifier:
                     f"tree {t}'s bootstrap sample drew no rows; raise "
                     "sample_fraction"
                 )
-        node_col = "__node_id"
         n_trees = len(tree_features)
         packed = bin_edges is not None
         all_names = all_features or tree_features[0]
@@ -835,32 +759,35 @@ class DecisionTreeClassifier:
         # level's splits are scored with NO Spark job at all.
         carried: dict[int, Any] | None = None
         depth = 0
+        n_classes = len(unique_targets)
         while any(frontiers):
             active = [t for t in range(n_trees) if frontiers[t]]
             at_max_depth = self.max_depth is not None and depth >= self.max_depth
-            best_by_node: list[dict[int, dict[str, Any]]] = [
-                {} for _ in range(n_trees)
-            ]
-            if packed and not at_max_depth:
-                if carried is not None:
-                    for t in active:
-                        best_by_node[t] = {
-                            b["node_id"]: b
-                            for b in split_finder.best_splits_from_counts_pdf(
-                                carried[t],
-                                len(unique_targets),
-                                tree_features[t],
-                                node_col,
-                                self.criterion,
-                            )
-                        }
-                    carried = None
-                else:
-                    # Routing runs vectorized inside the histogram pass
-                    # (histogram.route_codes).  Look one level ahead
-                    # (pair-cube pass) only when the NEXT level will need
-                    # splits too; the budget gate inside
-                    # find_best_splits_packed decides whether it fires.
+            found: dict[int, list[dict[str, Any]]] = {}
+            if carried is not None:
+                # The previous pair-cube pass carried this level's counts
+                # (it looks ahead only when this level is under max_depth):
+                # scored driver-side, no Spark job.
+                found = {
+                    t: split_finder.best_splits_from_counts_pdf(
+                        carried[t], n_classes, tree_features[t], self.criterion
+                    )
+                    for t in active
+                }
+                carried = None
+            elif not at_max_depth:
+                levels = {
+                    t: split_finder.TreeLevel(
+                        tree_features[t], roots[t], list(frontiers[t])
+                    )
+                    for t in active
+                }
+                if packed:
+                    # Routing runs vectorized inside the histogram pass.
+                    # Look one level ahead (pair-cube pass) only when the
+                    # NEXT level will need splits too; the budget gate
+                    # inside find_best_splits_packed decides whether it
+                    # fires.
                     level_data = (
                         data
                         if len(active) == n_trees
@@ -868,21 +795,11 @@ class DecisionTreeClassifier:
                     )
                     found, carried = split_finder.find_best_splits_packed(
                         level_data,
-                        {
-                            t: split_finder.TreeLevel(
-                                tree_features[t],
-                                self._compile_routing_splits(
-                                    roots[t], all_names, bin_edges
-                                ),
-                                list(frontiers[t]),
-                            )
-                            for t in active
-                        },
-                        len(unique_targets),
+                        levels,
+                        n_classes,
                         self.criterion,
                         bin_edges,
                         packed_n_parts,
-                        node_col=node_col,
                         all_feature_names=all_names,
                         tree_col=tree_col,
                         code_dtype=packed_code_dtype,
@@ -890,44 +807,16 @@ class DecisionTreeClassifier:
                             self.max_depth is None or depth + 1 < self.max_depth
                         ),
                     )
-                    for t, best in found.items():
-                        best_by_node[t] = {b["node_id"]: b for b in best}
-            elif not at_max_depth:
-                # Dense slots over the level's (tree, node) pairs, tree by
-                # tree, as the packed pass assigns them; each row takes its
-                # own tree's route.
-                slot_node: list[int] = []
-                slot_ends: list[int] = []
-                routes = []
-                for t in active:
-                    slots = {
-                        n: len(slot_node) + i for i, n in enumerate(frontiers[t])
-                    }
-                    slot_node += frontiers[t]
-                    slot_ends.append(len(slot_node))
-                    route = self._routing_expr(roots[t], slots)
-                    routes.append(
-                        route if tree_col is None
-                        else F.when(F.col(tree_col) == t, route)
+                else:
+                    found = split_finder.find_best_splits_per_node(
+                        data, levels, n_classes, self.criterion, tree_col
                     )
-                found = split_finder.find_best_splits_per_node(
-                    data.withColumn(node_col, F.coalesce(*routes)).filter(
-                        F.col(node_col).isNotNull()
-                    ),
-                    [tree_features[t] for t in active],
-                    len(unique_targets),
-                    self.criterion,
-                    node_col,
-                    slot_ends,
-                )
-                for t, best in zip(active, found):
-                    best_by_node[t] = {slot_node[b["node_id"]]: b for b in best}
 
             for t in active:
                 frontiers[t] = self._grow_frontier(
                     frontiers[t],
                     distributions[t],
-                    best_by_node[t],
+                    {b["node_id"]: b for b in found.get(t, [])},
                     unique_targets,
                     at_max_depth,
                 )

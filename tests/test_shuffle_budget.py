@@ -18,16 +18,18 @@ shuffles the ~200 KB sf0.001 relation), so host noise can't flake them:
 byte counts are deterministic for a fixed plan, which is the point of
 auditing bytes instead of walls on a noisy host.
 
-Metrics come from the session's REST store (UI enabled in conftest).
-The store is fed by an async listener queue, so totals are read only
-after listenerBus().waitUntilEmpty() — without the drain, a pass's bytes
-smear into the next delta (the round-11 audit's first pitfall).
+Metrics come from the session's REST store (UI enabled in conftest),
+summed over the stages of the measured action's own job group.  The
+store is fed by an async listener queue, so they are read only after
+listenerBus().waitUntilEmpty() — without the drain, a pass's stages may
+be missing from the store (the round-11 audit's first pitfall).
 """
 
 from __future__ import annotations
 
 import json
 import urllib.request
+import uuid
 
 import pytest
 
@@ -41,25 +43,45 @@ from efficient_trees_spark.workloads.similarity_queries import (
 )
 
 
-def _shuffle_write_total(spark) -> int:
-    base = spark.sparkContext.uiWebUrl
+def _shuffle_write_bytes(spark, action) -> int:
+    """Shuffle bytes written by the stages of the jobs ``action()`` runs,
+    counted in a job group of its own.  Only that group's stages are
+    summed: a session-wide total over the REST store's retained stages
+    (``spark.ui.retainedStages``) drops the oldest ones once a session
+    has run more, so a before/after delta of it can go negative."""
+    sc = spark.sparkContext
+    base = sc.uiWebUrl
     if base is None:  # pragma: no cover - UI disabled in this session
         pytest.skip("spark.ui.enabled is false: no stage metrics endpoint")
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=COMPLETE"
+    group = f"shuffle-audit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "shuffle audit")
+    try:
+        action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids = {
+        s for job in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(job).stageIds
+    }
+    url = f"{base}/api/v1/applications/{sc.applicationId}/stages?status=COMPLETE"
     with urllib.request.urlopen(url) as resp:
         stages = json.load(resp)
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+    return sum(
+        s.get("shuffleWriteBytes", 0) for s in stages if s["stageId"] in stage_ids
+    )
 
 
 def _audit(spark, sf_small: str, fn) -> int:
     """Bytes shuffled by one steady-state pass of fn (one warmup first:
     AQE settles, codegen caches build)."""
     fn(spark, sf_small).write.mode("overwrite").format("noop").save()
-    before = _shuffle_write_total(spark)
-    fn(spark, sf_small).write.mode("overwrite").format("noop").save()
-    return _shuffle_write_total(spark) - before
+    return _shuffle_write_bytes(
+        spark,
+        lambda: fn(spark, sf_small).write.mode("overwrite").format("noop").save(),
+    )
 
 
 def test_q1_partial_agg_shuffles_fanout_plus_kilobytes(spark, sf_small):
@@ -153,8 +175,10 @@ def test_exact_overflow_probe_ships_flags_not_values(spark):
     from efficient_trees_spark.operators.histogram import distinct_edges_packed
 
     df = spark.range(0, 4000, numPartitions=4).selectExpr("CAST(id AS DOUBLE) AS a")
-    before = _shuffle_write_total(spark)
-    with pytest.raises(ValueError, match="set max_bins"):
-        distinct_edges_packed(df, ["a"], max_distinct=100)
-    moved = _shuffle_write_total(spark) - before
+
+    def probe():
+        with pytest.raises(ValueError, match="set max_bins"):
+            distinct_edges_packed(df, ["a"], max_distinct=100)
+
+    moved = _shuffle_write_bytes(spark, probe)
     assert 0 < moved < 2 * 1024, moved

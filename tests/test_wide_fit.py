@@ -30,6 +30,7 @@ from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.operators import split_finder
 from efficient_trees_spark.operators.histogram import (
     TreeRoute,
+    compile_routing_splits,
     pack_encode_features,
     packed_histogram_counts,
 )
@@ -77,7 +78,7 @@ def _packed_counts(df, names, edges):
     codes = pack_encode_features(df, names, edges, dtype="f8")
     return _collect_counts(
         packed_histogram_counts(
-            codes, names, 2, edges, {0: TreeRoute([], {0: 0})}, "__node_id"
+            codes, names, 2, edges, {0: TreeRoute([], {0: 0})}
         )
     )
 
@@ -206,6 +207,7 @@ def _jobs_in_group(spark, action) -> int:
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -489,6 +491,93 @@ def test_auto_wide_exact_falls_back_to_melt_on_overflow(spark):
     assert m.tree is not None
 
 
+def test_auto_exact_fallback_costs_the_probe_plus_a_melt_fit(spark, monkeypatch):
+    """What the auto-exact fallback costs: a wide exact fit whose
+    distinct-value probe overflows warns, keeps no edges, and runs
+    exactly the probe's jobs plus the jobs of a forced-melt fit on the
+    same input — the melt after the probe is the narrow fit's melt, on
+    the un-fanned-out relation.  The code-space cap is patched down
+    rather than building 65k distinct values; the one-partition input
+    makes the packed path's fan-out fire."""
+    from efficient_trees_spark.operators import histogram
+
+    cols = [
+        ((F.col("id") * (j + 3)) % 11).cast("double").alias(f"f{j}")
+        for j in range(64)
+    ]
+    data = spark.range(300, numPartitions=1).select(
+        *cols, (F.col("id") % 2).cast("int").alias("target")
+    )
+    monkeypatch.setattr(histogram, "_MAX_PACKED16_EDGES", 8)  # 11 values overflow
+    sc = spark.sparkContext
+    probe_group = f"probe-{uuid.uuid4().hex}"
+    probe = histogram.distinct_edges_packed
+
+    def tagged(*args, **kwargs):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(probe_group, "distinct-value probe")
+        try:
+            return probe(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(histogram, "distinct_edges_packed", tagged)
+    fallback = DecisionTreeClassifier(max_depth=2)
+    with pytest.warns(UserWarning, match="falling back to the melt"):
+        fit_jobs = _jobs_in_group(spark, lambda: fallback.fit(data, "target"))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    probe_jobs = len(sc.statusTracker().getJobIdsForGroup(probe_group))
+    assert fallback.bin_edges_ is None
+    force_fit_path(monkeypatch, "melt")
+    melt = DecisionTreeClassifier(max_depth=2)
+    melt_jobs = _jobs_in_group(spark, lambda: melt.fit(data, "target"))
+    # the fit's own group holds every job but the probe's
+    assert probe_jobs > 0
+    assert fit_jobs == melt_jobs
+    assert fallback.tree == melt.tree
+
+
+@pytest.mark.parametrize(
+    "schema, low, high, threshold",
+    [
+        # 2^24 + 1 is the first integer float32 cannot hold
+        ("x long", 16_777_216, 16_777_217, 16_777_216.0),
+        ("x decimal(10,7)", "1.1", "1.1000001", 1.1),
+    ],
+)
+def test_integer_and_decimal_features_train_exact_on_every_path(
+    spark, monkeypatch, schema, low, high, threshold
+):
+    """Integer and decimal features train as exact doubles on both fit
+    paths: the packed edge and encode passes read them as float64, not
+    float32, so a forced packed-exact fit and a binned fit split two
+    values float32 merges where the melt does, and the tree routes every
+    training row to its own class."""
+    from decimal import Decimal
+
+    cast = Decimal if "decimal" in schema else int
+    data = spark.createDataFrame(
+        [(cast(high if i % 2 else low), i % 2) for i in range(40)],
+        f"{schema}, target int",
+    )
+    trees = {}
+    for name, path, kw in (
+        ("melt", "melt", {}),
+        ("packed", "packed", {}),
+        ("binned", "melt", {"max_bins": 8}),
+    ):
+        force_fit_path(monkeypatch, path)
+        m = DecisionTreeClassifier(max_depth=2, criterion=Criterion.GINI, **kw)
+        m.fit(data, "target")
+        assert (m.bin_edges_ is None) == (name == "melt"), name
+        trees[name] = m.tree
+        predicted = m.transform(data).select("prediction", "target").collect()
+        assert all(r["prediction"] == r["target"] for r in predicted), name
+    assert trees["melt"]["threshold"] == threshold
+    assert trees["packed"] == trees["melt"]
+    assert trees["binned"] == trees["melt"]
+
+
 def test_auto_wide_exact_uses_uint16_between_253_and_65533(spark):
     """Exact + wide with one mid-cardinality feature (254..65533
     distinct): NO fallback — the uint16 packed path engages silently."""
@@ -540,13 +629,15 @@ def test_packed_relation_caches_at_one_byte_per_cell(spark):
         F.col("target").cast("int").alias("__target_idx"),
     )
     n_parts = prepared.rdd.getNumPartitions()
-    edges, _ = _two_scan_binned_edges(prepared, feats, 16, 64, "f4", n_parts)
+    edges, n_rows = _two_scan_binned_edges(prepared, feats, 16, 64, "f4", n_parts)
     # Other operators legitimately leave lazy localCheckpoint blocks in the
     # shared session's RDD cache until GC (split-gains counts, BM25 postings
     # — r11), so attribute ONLY the relation this test persists instead of
     # taking max over the whole cache.
     before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    codes, code_dtype, _ = _encode_codes(prepared, feats, edges, "f4", n_parts)
+    codes, code_dtype, _ = _encode_codes(
+        prepared, feats, edges, "f4", n_parts, n_rows
+    )
     assert code_dtype == "u1"
     codes = codes.persist()
     try:
@@ -594,13 +685,13 @@ def test_routing_splits_reject_non_edge_threshold():
     leaf = {"type": "leaf", "value": 0}
     edges = {"a": [1.0, 2.0]}
     node = {"type": "node", "feature": "a", "threshold": 2.0, "left": leaf, "right": leaf}
-    assert DecisionTreeClassifier._compile_routing_splits(node, ["a"], edges) == [
+    assert compile_routing_splits(node, ["a"], edges) == [
         (0, 0, 1, -1, -1)
     ]
     for threshold in (1.5, 3.0):
         bad = dict(node, threshold=threshold)
         with pytest.raises(ValueError, match="not a bin edge"):
-            DecisionTreeClassifier._compile_routing_splits(bad, ["a"], edges)
+            compile_routing_splits(bad, ["a"], edges)
 
 
 def test_pair_child_counts_reject_non_edge_threshold():
@@ -615,7 +706,7 @@ def test_pair_child_counts_reject_non_edge_threshold():
     cubes = {0: np.zeros(pair_cube_bytes(["a"], edges, 2) // 8, dtype=np.int64)}
     chosen = [{"node_id": 0, "feature": "a", "threshold": 1.5}]
     with pytest.raises(ValueError, match="not a bin edge"):
-        pair_cubes_to_child_counts(cubes, chosen, ["a"], 2, edges, "__node_id")
+        pair_cubes_to_child_counts(cubes, chosen, ["a"], 2, edges)
 
 
 @pytest.mark.parametrize("dtype", ["f4", "f8"])
@@ -888,8 +979,8 @@ def test_arrow_cube_rows_zero_copy_merge(spark):
             "c": pa.array([c[1] for c in cubes], type=pa.binary()),
         }
     )
-    pdf_a = merge_cubes_to_counts_pdf(_arrow_cube_rows(tbl), ["f"], 2, edges, "n")
-    pdf_r = merge_cubes_to_counts_pdf(cubes, ["f"], 2, edges, "n")
+    pdf_a = merge_cubes_to_counts_pdf(_arrow_cube_rows(tbl), ["f"], 2, edges)
+    pdf_r = merge_cubes_to_counts_pdf(cubes, ["f"], 2, edges)
     assert pdf_a.equals(pdf_r)
 
     # Wire format: a dense cube row is exactly flat_slots x n_classes x 8
@@ -902,12 +993,12 @@ def test_arrow_cube_rows_zero_copy_merge(spark):
     codes = pack_encode_features(spark_df, ["f"], edges, dtype="f8")
     rows = _arrow_cube_rows(
         packed_histogram_cubes(
-            codes, ["f"], 2, edges, {0: TreeRoute([], {0: 0})}, "n"
+            codes, ["f"], 2, edges, {0: TreeRoute([], {0: 0})}
         ).toArrow()
     )
     assert rows
     assert all(len(memoryview(cube)) == flat * 8 for _, cube in rows)
-    pdf = merge_cubes_to_counts_pdf(rows, ["f"], 2, edges, "n")
+    pdf = merge_cubes_to_counts_pdf(rows, ["f"], 2, edges)
     assert pdf["count_examples"].sum() == 3  # the NULL cell is not binned
 
 
@@ -970,7 +1061,7 @@ def _gains_frame(pdf, n_classes, criterion):
     import pandas as pd
 
     nodes, features, values, gain, parent_c, lc, rc = (
-        split_finder._gains_arrays(pdf, n_classes, "__node_id", criterion)
+        split_finder._gains_arrays(pdf, n_classes, criterion)
     )
     out = pd.DataFrame(
         {
@@ -1151,7 +1242,7 @@ def test_entropy_counts_pdf_scores_without_spark_jobs(spark):
         spark,
         lambda: found.extend(
             split_finder.best_splits_from_counts_pdf(
-                pdf, 2, ["a", "b"], "__node_id", Criterion.ENTROPY
+                pdf, 2, ["a", "b"], Criterion.ENTROPY
             )
         ),
     )
@@ -1360,7 +1451,7 @@ def test_best_splits_gini_local_matches_two_step_form():
 
     for criterion in (Criterion.GINI, Criterion.ENTROPY):
         fused = split_finder.best_splits_from_counts_pdf(
-            pdf, ncls, names, "__node_id", criterion
+            pdf, ncls, names, criterion
         )
         best: dict = {}
         for r in _gains_frame(pdf, ncls, criterion).to_dict("records"):
@@ -1421,8 +1512,7 @@ def test_entropy_scores_parent_impurity_once_per_group(monkeypatch):
 
     monkeypatch.setattr(fdlibm, "log2", spy)
     best = split_finder.best_splits_from_counts_pdf(
-        pdf, ncls, [f"f_{j}" for j in range(feats)], "__node_id",
-        Criterion.ENTROPY,
+        pdf, ncls, [f"f_{j}" for j in range(feats)], Criterion.ENTROPY,
     )
     assert len(best) == nodes
     groups = nodes * feats
@@ -1503,21 +1593,19 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     pair_rows = sf._arrow_cube_rows(
         packed_histogram_pair_cubes(
             packed, names, n_classes, edges, {0: TreeRoute([], {0: 0})},
-            "__node_id",
         ).toArrow()
     )
     merged = merge_cube_rows(pair_rows)
     pdf0_pair = pair_cubes_to_level_counts(
-        merged, names, n_classes, edges, "__node_id"
+        merged, names, n_classes, edges
     )
     # level 0 from the one-level cube pass
     rows0 = sf._arrow_cube_rows(
         packed_histogram_cubes(
             packed, names, n_classes, edges, {0: TreeRoute([], {0: 0})},
-            "__node_id",
         ).toArrow()
     )
-    pdf0 = merge_cubes_to_counts_pdf(rows0, names, n_classes, edges, "__node_id")
+    pdf0 = merge_cubes_to_counts_pdf(rows0, names, n_classes, edges)
     import pandas as pd
 
     key = ["__node_id", sf.FEATURE, sf.FEATURE_VALUE]
@@ -1529,12 +1617,12 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     # choose level-0 splits, derive level-1 from the pair cube, and
     # compare against a REAL routed level-1 pass
     best = sf.best_splits_from_counts_pdf(
-        pdf0, n_classes, names, "__node_id", Criterion.GINI
+        pdf0, n_classes, names, Criterion.GINI
     )
     chosen = [b for b in best if b["information_gain"] > 0]
     assert chosen, "fixture must produce a splittable root"
     carry = pair_cubes_to_child_counts(
-        merged, chosen, names, n_classes, edges, "__node_id"
+        merged, chosen, names, n_classes, edges
     )
     from bisect import bisect_left
 
@@ -1546,10 +1634,10 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     rows1 = sf._arrow_cube_rows(
         packed_histogram_cubes(
             packed, names, n_classes, edges,
-            {0: TreeRoute(splits, {1: 1, 2: 2})}, "__node_id",
+            {0: TreeRoute(splits, {1: 1, 2: 2})},
         ).toArrow()
     )
-    pdf1 = merge_cubes_to_counts_pdf(rows1, names, n_classes, edges, "__node_id")
+    pdf1 = merge_cubes_to_counts_pdf(rows1, names, n_classes, edges)
     pd.testing.assert_frame_equal(
         carry.sort_values(key).reset_index(drop=True),
         pdf1.sort_values(key).reset_index(drop=True),
