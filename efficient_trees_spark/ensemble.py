@@ -10,7 +10,9 @@ engine's existing dataflow pieces:
   a forest scans the source as often as one tree does, whatever n_trees.
 * **Bootstrap via ``sample(withReplacement=True)``** per tree (seeded, so the
   forest is deterministic given ``seed``), plus per-tree feature subsampling
-  (driver-side RNG over column names — zero data movement).
+  (driver-side RNG over column names — zero data movement).  A subset keeps
+  the input's column order, so every tree breaks gain ties by the one
+  feature order a single tree uses.
 * **Level-synchronous growth**, the PLANET / MLlib ``RandomForest`` shape:
   the bags are tagged with their tree id and unioned, and every tree level
   is ONE pass over that union on either fit path
@@ -40,7 +42,7 @@ from pyspark.sql import functions as F
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.operators.split_finder import TARGET_IDX
 from efficient_trees_spark.plans.case_compiler import compile_tree
-from efficient_trees_spark.tree import DecisionTreeClassifier
+from efficient_trees_spark.tree import DecisionTreeClassifier, _check_binning
 
 # Each bootstrap row's tree id in the forest's level passes.
 TREE_COL = "__tree_id"
@@ -77,6 +79,7 @@ class RandomForestClassifier:
             raise ValueError(f"feature_fraction must be in (0, 1], got {feature_fraction}")
         if not sample_fraction > 0.0:
             raise ValueError(f"sample_fraction must be > 0, got {sample_fraction}")
+        _check_binning(max_bins)
         self.n_trees = n_trees
         self.max_depth = max_depth
         self.criterion = Criterion(criterion)
@@ -109,12 +112,12 @@ class RandomForestClassifier:
 
         rng = random.Random(self.seed)
         n_sub = max(1, round(self.feature_fraction * len(feature_names)))
-        subsets = [
-            sorted(rng.sample(feature_names, n_sub))
-            if n_sub < len(feature_names)
-            else feature_names
-            for _ in range(self.n_trees)
-        ]
+        subsets = [feature_names] * self.n_trees
+        if n_sub < len(feature_names):
+            # Each subset keeps the input's column order: the one order
+            # every tree breaks gain ties by.
+            draws = [set(rng.sample(feature_names, n_sub)) for _ in subsets]
+            subsets = [[f for f in feature_names if f in d] for d in draws]
 
         relation = relation.persist()
         try:

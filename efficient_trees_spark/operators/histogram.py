@@ -1,7 +1,7 @@
 """Arrow-batched histograms for the packed level loop, the tree's fast fit
 path.
 
-The exact melt (`split_finder.candidate_split_gains`) unpivots features to
+The exact melt (`split_finder.find_best_splits_per_node`) unpivots features to
 long form and hash-aggregates — pure Catalyst, ideal at modest width.  At the
 reference's real benchmark width (~190 float features,
 ``/root/reference/examples/memory_profiling.py:78-79``) the unpivot's Expand
@@ -1178,6 +1178,23 @@ def _cube_batch(cubes: dict[int, bytes]) -> "pa.RecordBatch":
     )
 
 
+def arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
+    """(slot, cube-buffer) pairs from the ``toArrow()`` collect of a dense
+    or pair cube pass: :func:`_cube_batch` read back.  Arrow moves the
+    binary column in columnar IPC batches instead of py4j row pickling,
+    and each cube is a zero-copy slice of the column's data buffer
+    (``np.frombuffer``-ready): the driver never holds more than the IPC
+    table plus one int64 accumulator per node.  Transport/accounting
+    only, same numbers."""
+    out: list[tuple[int, object]] = []
+    for batch in tbl.to_batches():
+        nodes = batch.column(0).to_pylist()
+        bin_arr = batch.column(1)
+        for i, nv in enumerate(nodes):
+            out.append((nv, bin_arr[i].as_buffer()))
+    return out
+
+
 def packed_histogram_cubes(
     packed_df: DataFrame,
     feature_names: list[str],
@@ -1218,7 +1235,7 @@ def merge_cube_rows(rows) -> dict[int, "np.ndarray"]:
     """Driver merge of collected (node, cube bytes) rows of a dense or
     pair cube pass -> ``{node: flat int64}``, exact int64 addition.  A
     row's bytes may be a Row bytearray or a zero-copy Arrow buffer slice
-    (``split_finder._arrow_cube_rows``) — frombuffer reads either without
+    (:func:`arrow_cube_rows`) — frombuffer reads either without
     copying."""
     merged: dict[int, np.ndarray] = {}
     for r in rows:

@@ -20,9 +20,12 @@ with an Arrow histogram pass over the persisted bin-code relation
 once: both paths hand their counts relation to one scorer
 (:func:`_score_counts`), which collects it and scores it driver-side in
 numpy (:func:`best_splits_from_counts_pdf`, both criteria) when it fits
-the driver-collect budget, and runs the windows above plus a ``max_by``
-argmax otherwise.  The packed path's dense and pair cube branches merge
-their counts on the driver and go straight to the driver-side scoring.
+the driver-collect budget, and otherwise runs the one Catalyst gains
+form (:func:`candidate_split_gains`, the windows above as a two-phase
+bucketed prefix scan) plus a ``max_by`` argmax.  The packed path's
+dense and pair cube branches merge their counts on the driver and go
+straight to the driver-side scoring.  Either way a level is scored by
+ONE call over its slot-keyed counts, whatever the number of trees.
 
 The level contract: both finders take ``{tree_id: TreeLevel}`` — each
 tree's features, its partial node dict and its pending node ids — and
@@ -46,8 +49,11 @@ Scale properties:
 
 Determinism: the reference breaks gain ties by engine internals
 (SURVEY.md §2.11.4).  Here ties break by (gain desc, feature position in the
-caller's feature list asc, threshold asc) — a total order, so results are
-stable under any partitioning.
+relation's feature order asc, threshold asc) — a total order, so results are
+stable under any partitioning.  There is one feature order per fit: a
+forest tree's feature subset keeps the relation's order, so each level is
+scored under the relation's order filtered to its trees' features, and
+every tree breaks ties as it would alone.
 """
 
 from __future__ import annotations
@@ -92,7 +98,7 @@ def melt_features(
     return unpivoted.filter(F.col(FEATURE_VALUE).isNotNull())
 
 
-def _melt_counts(
+def melt_counts(
     df: DataFrame,
     feature_names: list[str],
     n_classes: int,
@@ -101,7 +107,7 @@ def _melt_counts(
     """The exact melt's counts relation: one (node, feature,
     feature_value) row per distinct value with its per-class and total
     row counts (reference tree.py:243-254, all features in one
-    aggregate)."""
+    aggregate) — the input of :func:`candidate_split_gains`."""
     keys = ([node_col] if node_col else []) + [FEATURE]
     long_df = melt_features(
         df, feature_names, extra_id_cols=[node_col] if node_col else None
@@ -113,29 +119,30 @@ def _melt_counts(
 
 
 def candidate_split_gains(
-    df: DataFrame,
-    feature_names: list[str],
+    counts: DataFrame,
     n_classes: int,
     criterion: Criterion,
     node_col: str | None = None,
-    include_child_counts: bool = False,
-    bounded_candidates: bool = False,
-    precomputed_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Information gain of EVERY candidate split of every feature.
 
-    Input: ``df`` with double-typed feature columns and the integer
-    class-index column ``TARGET_IDX``.  Output columns: ``feature``, ``feature_value`` (candidate
-    threshold), ``information_gain``, ``parent_criterion`` (plus ``node_col``
-    when given — level-wise training scores every tree node of a level in
-    this ONE plan, grouping and windowing by (node, feature)).
+    Input: a counts relation ``(node_col, feature, feature_value,
+    class_*_count, count_examples)`` — the melt's (:func:`melt_counts`)
+    or a packed histogram pass's — keyed by (node, feature) when
+    ``node_col`` is given (level-wise training scores every tree node of
+    a level in this ONE plan), else by feature.  Output columns:
+    ``feature``, ``feature_value`` (candidate threshold),
+    ``information_gain``, ``parent_criterion`` and ``left_counts`` /
+    ``right_counts``, the per-class row counts of the would-be children
+    (the prefix sums at the threshold and their complements; a caller
+    that does not select them prunes them from the plan), plus
+    ``node_col``.
 
-    With ``include_child_counts``, each candidate row also carries
-    ``left_counts`` / ``right_counts`` — per-class row counts of the would-be
-    children (the prefix sums at the threshold and their complements).  These
-    are free by-products of the scan; level-wise training uses them to derive
-    every child node's class distribution from its parent's chosen split,
-    eliminating the per-level distribution job entirely.
+    ``counts`` is read three times (the totals, the phase-1 window and
+    the bucket totals); pass it checkpointed (``localCheckpoint``), or
+    each read re-runs its plan — for the melt, the scan, the Expand and
+    the counts shuffle, since column pruning specializes the branches so
+    exchange reuse never fires (r11).
 
     Mirrors the reference's per-feature pipeline (tree.py:243-330) with the
     scalar-broadcast totals (tree.py:261-268) expressed as grouped aggregates
@@ -156,66 +163,7 @@ def candidate_split_gains(
     to the serial scan.
     """
     keys = ([node_col] if node_col else []) + [FEATURE]
-    num_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    if precomputed_counts is not None:
-        # Counts relation supplied by the caller (the scorer: the packed
-        # level loop's histogram pass or the melt's counts, checkpointed);
-        # the gains pipeline below is shared unchanged.
-        counts = precomputed_counts
-    else:
-        counts = _melt_counts(df, feature_names, n_classes, node_col)
-
-    if bounded_candidates:
-        # Binned mode: ≤ max_bins+1 candidate rows per (node, feature) BY
-        # CONSTRUCTION, so the two-phase bucketed scan below is pure fixed
-        # overhead (measured ~4 s/level of extra stages at 190 features).
-        # One window pass computes running and total sums together; buffering
-        # a ≤33-row partition is trivial, and parallelism is nodes x features.
-        w_cum = (
-            Window.partitionBy(*keys)
-            .orderBy(FEATURE_VALUE)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        w_all = (
-            Window.partitionBy(*keys)
-            .orderBy(FEATURE_VALUE)
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-        cum = counts.select(
-            *keys,
-            FEATURE_VALUE,
-            *[
-                F.sum(exprs.class_count_col(i)).over(w_cum).alias(f"cum_class_{i}")
-                for i in range(n_classes)
-            ],
-            F.sum("count_examples").over(w_cum).alias("cum_n"),
-            *[
-                F.sum(exprs.class_count_col(i)).over(w_all).alias(f"sum_class_{i}")
-                for i in range(n_classes)
-            ],
-            F.sum("count_examples").over(w_all).alias("sum_n"),
-        )
-        return _gains_from_prefix_sums(
-            cum, keys, n_classes, criterion, include_child_counts
-        )
-
-    # Unbounded-candidates path: the counts relation below is consumed by
-    # THREE branches (totals, the bucketed phase-1 window, and the
-    # bucket-totals offsets), and left lazy each branch re-runs the corpus
-    # scan + the melt Expand + the counts shuffle — column pruning
-    # specializes the branches so exchange reuse never fires (r11; the
-    # bench plan carried four scan+Expand+Exchange pipelines).  A lazy
-    # local checkpoint materializes the aggregated (keys, value, counts)
-    # relation once per call — it is candidate-sized (distinct values),
-    # far smaller than the melt it replaces, and recomputed from the
-    # source on every invocation.  The bounded branch above has a
-    # single consumer and stays fully lazy.  A caller-supplied counts
-    # relation is already checkpointed (the scorer checkpoints every
-    # counts relation this branch reads) — re-checkpointing it would copy
-    # the blocks for nothing.
-    if precomputed_counts is None:
-        counts = counts.localCheckpoint(eager=False)
+    num_buckets = int(counts.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # Per-(node,feature) totals as a grouped aggregate + broadcast join — NOT
     # an unbounded-frame window: WindowExec buffers the whole partition for
@@ -298,13 +246,13 @@ def candidate_split_gains(
         .join(F.broadcast(offsets), [*keys, "__bucket"])
         .select(*keys, FEATURE_VALUE, *cum_cols, *sum_cols)
     )
-    return _gains_from_prefix_sums(cum, keys, n_classes, criterion, include_child_counts)
+    return _gains_from_prefix_sums(cum, keys, n_classes, criterion)
 
 
 # Built Column lists for `_gains_from_prefix_sums`, keyed by the call shape.
 # Constructing the staged projections costs ~0.2 s of py4j round trips PER
 # CALL (measured: ~60 Column ops, each a gateway call) and the expressions
-# are pure functions of (keys, n_classes, criterion, include_child_counts)
+# are pure functions of (keys, n_classes, criterion)
 # — unresolved trees, reusable across any DataFrame with the schema.  Each
 # cached value carries the py4j gateway OBJECT it was built against and a
 # hit is honored only when that object IS the live gateway (identity, not
@@ -317,13 +265,12 @@ def _gains_select_lists(
     keys: tuple[str, ...],
     n_classes: int,
     criterion: Criterion,
-    include_child_counts: bool,
 ) -> tuple[list, list, list]:
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     gateway = sc._gateway if sc is not None else None
-    cache_key = (keys, n_classes, criterion, include_child_counts)
+    cache_key = (keys, n_classes, criterion)
     hit = _GAINS_EXPR_CACHE.get(cache_key)
     if hit is not None and hit[0] is gateway:
         return hit[1]
@@ -334,23 +281,28 @@ def _gains_select_lists(
     # that exceeds the JIT method limits and drops the whole stage out of
     # codegen (measured 5-8x slower); named columns let Catalyst's collapse
     # guard keep the stages separate and fully code-generated.
-    first_carry: list = [*keys, FEATURE_VALUE, F.col("cum_n"), F.col("sum_n")]
-    carry: list = [*keys, FEATURE_VALUE, F.col("cum_n"), F.col("sum_n")]
-    if include_child_counts:
-        first_carry += [
-            F.array(
-                *[F.col(f"cum_class_{i}") for i in range(n_classes)]
-            ).alias("left_counts"),
-            F.array(
-                *[
-                    (F.col(f"sum_class_{i}") - F.col(f"cum_class_{i}"))
-                    for i in range(n_classes)
-                ]
-            ).alias("right_counts"),
-        ]
-        carry += [F.col("left_counts"), F.col("right_counts")]
+    carry: list = [
+        *keys,
+        FEATURE_VALUE,
+        F.col("cum_n"),
+        F.col("sum_n"),
+        F.col("left_counts"),
+        F.col("right_counts"),
+    ]
     props_select = [
-        *first_carry,
+        *keys,
+        FEATURE_VALUE,
+        F.col("cum_n"),
+        F.col("sum_n"),
+        F.array(
+            *[F.col(f"cum_class_{i}") for i in range(n_classes)]
+        ).alias("left_counts"),
+        F.array(
+            *[
+                (F.col(f"sum_class_{i}") - F.col(f"cum_class_{i}"))
+                for i in range(n_classes)
+            ]
+        ).alias("right_counts"),
         *[
             (F.col(f"cum_class_{i}") / F.col("cum_n")).alias(f"left_p_{i}")
             for i in range(n_classes)
@@ -392,7 +344,8 @@ def _gains_select_lists(
             "information_gain"
         ),
         "parent_criterion",
-        *(["left_counts", "right_counts"] if include_child_counts else []),
+        "left_counts",
+        "right_counts",
     ]
     out = (props_select, crits_select, final_select)
     _GAINS_EXPR_CACHE[cache_key] = (gateway, out)
@@ -404,18 +357,16 @@ def _gains_from_prefix_sums(
     keys: list[str],
     n_classes: int,
     criterion: Criterion,
-    include_child_counts: bool,
 ) -> DataFrame:
     """Prefix-sum relation (keys, feature_value, cum_class_*, cum_n,
-    sum_class_*, sum_n) → per-candidate information gains.  Shared by the
-    two-phase bucketed scan (exact mode) and the single-window bounded path
-    (binned mode)."""
+    sum_class_*, sum_n) → per-candidate information gains and child
+    counts: the tail of :func:`candidate_split_gains`."""
     # Drop the maximal value of each feature: a split there leaves the right
     # child empty (reference F3, tree.py:274-277).
     cum = cum.filter(F.col("sum_n") > F.col("cum_n"))
 
     props_select, crits_select, final_select = _gains_select_lists(
-        tuple(keys), n_classes, criterion, include_child_counts
+        tuple(keys), n_classes, criterion
     )
     props = cum.select(*props_select)
     crits = props.select(*crits_select)
@@ -433,7 +384,7 @@ def _gains_from_prefix_sums(
 class TreeLevel(NamedTuple):
     """One tree's share of a level pass (``{tree_id: TreeLevel}``)."""
 
-    feature_names: list[str]  # the features it scores, in tie-break order
+    feature_names: list[str]  # the features it scores, in the relation's order
     root: dict[str, Any]  # its partial node dict, pending nodes included
     pending: list[int]  # its pending node ids
 
@@ -492,7 +443,8 @@ def find_best_splits_per_node(
     tree's.  Rows are routed to their slot by each tree's compiled
     partial tree (with ``tree_col``, a row takes its own tree's route;
     without it every row is tree 0's), melted, counted, and the counts go
-    to the shared scorer (:func:`_score_counts`)."""
+    to the shared scorer (:func:`_score_counts`) under ``df``'s column
+    order."""
     layout = _slot_layout(trees)
     routes = []
     for t, slots in layout.of.items():
@@ -513,11 +465,10 @@ def find_best_splits_per_node(
     routed = df.withColumn(NODE_COL, F.coalesce(*routes)).filter(
         F.col(NODE_COL).isNotNull()
     )
-    names = list(
-        dict.fromkeys(f for t in layout.of for f in trees[t].feature_names)
-    )
-    counts = _melt_counts(routed, names, n_classes, NODE_COL)
-    return _score_counts(counts, trees, n_classes, criterion)
+    used = {f for level in trees.values() for f in level.feature_names}
+    names = [c for c in df.columns if c in used]
+    counts = melt_counts(routed, names, n_classes, NODE_COL)
+    return _score_counts(counts, layout, names, n_classes, criterion)
 
 
 # A level's aggregated counts relation above this many rows keeps the
@@ -574,9 +525,10 @@ def find_best_splits_packed(
     id and is routed by that tree's splits; without it every row is tree
     0's (a single tree's fit).  The kernels count under the level's slot
     layout (:func:`_slot_layout`), so the dense, pair and sparse branches
-    below run unchanged over any number of trees; each tree is scored
-    with its own feature list (its tie-break order).  Budgets sum over
-    the trees in the pass.
+    below run unchanged over any number of trees, and the level is scored
+    once under the matrix order filtered to the trees' features (each
+    tree's list follows that order).  Budgets sum over the trees in the
+    pass.
 
     The aggregated histogram relation is bounded by nodes × features ×
     (bins+1) rows — independent of corpus size — so while that bound fits
@@ -616,6 +568,7 @@ def find_best_splits_packed(
     from efficient_trees_spark.operators.histogram import (
         TreeRoute,
         _trim_malloc,
+        arrow_cube_rows,
         compile_routing_splits,
         merge_cube_rows,
         merge_cubes_to_counts_pdf,
@@ -630,20 +583,15 @@ def find_best_splits_packed(
 
     layout = _slot_layout(trees)
     lists = {t: list(trees[t].feature_names) for t in layout.of}
-    first = next(iter(lists.values()))
-    shared = all(fl == first for fl in lists.values())
-    matrix = list(all_feature_names) if all_feature_names is not None else first
-    if shared:
-        names = first
-    else:
-        used = set().union(*lists.values())
-        names = [f for f in matrix if f in used]
+    matrix = list(all_feature_names or next(iter(lists.values())))
+    used = set().union(*lists.values())
+    names = [f for f in matrix if f in used]
     col_of = {f: j for j, f in enumerate(names)}
     routes = {
         t: TreeRoute(
             compile_routing_splits(trees[t].root, matrix, bin_edges),
             slots=slots,
-            features=None if shared else [col_of[f] for f in lists[t]],
+            features=None if lists[t] == names else [col_of[f] for f in lists[t]],
         )
         for t, slots in layout.of.items()
     }
@@ -698,34 +646,24 @@ def find_best_splits_packed(
         )
     if pair_ok:
         merged = merge_cube_rows(
-            _arrow_cube_rows(
+            arrow_cube_rows(
                 packed_histogram_pair_cubes(
                     packed_df, names, n_classes, bin_edges, routes, **kernel_args,
                 ).toArrow()
             )
         )
-        pair_cubes = {t: dict(p) for t, p in layout.unslot(merged.items()).items()}
-        del merged
         _trim_malloc()
-        levels = {
-            t: pair_cubes_to_level_counts(pair_cubes[t], names, n_classes, bin_edges)
-            for t in lists
-        }
+        counts = pair_cubes_to_level_counts(merged, names, n_classes, bin_edges)
     elif dense_ok:
         # Arrow transport for the cube partials: a depth-d level collects
         # partitions x nodes ~100 KB binary cubes (hundreds of MB at depth
         # 3+ on many-partition inputs).
-        cube_rows = layout.unslot(
-            _arrow_cube_rows(
-                packed_histogram_cubes(
-                    packed_df, names, n_classes, bin_edges, routes, **kernel_args,
-                ).toArrow()
-            )
+        cube_rows = arrow_cube_rows(
+            packed_histogram_cubes(
+                packed_df, names, n_classes, bin_edges, routes, **kernel_args,
+            ).toArrow()
         )
-        levels = {
-            t: merge_cubes_to_counts_pdf(cube_rows[t], names, n_classes, bin_edges)
-            for t in lists
-        }
+        counts = merge_cubes_to_counts_pdf(cube_rows, names, n_classes, bin_edges)
         # The per-level IPC table is hundreds of MB on many-partition
         # inputs; return it to the OS before the next level piles on
         # (the DRIVER ratchets across levels otherwise, same allocator
@@ -737,25 +675,26 @@ def find_best_splits_packed(
             packed_histogram_counts(
                 packed_df, names, n_classes, bin_edges, routes, **kernel_args,
             ),
-            trees,
+            layout,
+            names,
             n_classes,
             criterion,
             est_rows=est_rows,
-            bounded_candidates=True,
         )
         return found, None
-    found = {
-        t: best_splits_from_counts_pdf(levels[t], n_classes, fl, criterion)
-        for t, fl in lists.items()
-    }
+    found = layout.unslot_splits(
+        best_splits_from_counts_pdf(counts, n_classes, names, criterion)
+    )
     carried = None
     if pair_ok:
-        # Next level's counts from the same cubes: only nodes the caller
-        # will actually split produce children (gain > 0 — mirrors the
-        # tree loop's leaf rule).
+        # Next level's counts from the same cubes, tree by tree (a
+        # child's node id derives from its parent's): only nodes the
+        # caller will actually split produce children (gain > 0 —
+        # mirrors the tree loop's leaf rule).
+        pair_cubes = layout.unslot(merged.items())
         carried = {
             t: pair_cubes_to_child_counts(
-                pair_cubes[t],
+                dict(pair_cubes[t]),
                 [b for b in found[t] if b["information_gain"] > 0],
                 names, n_classes, bin_edges,
             )
@@ -766,92 +705,39 @@ def find_best_splits_packed(
 
 def _score_counts(
     counts: DataFrame,
-    trees: dict[int, TreeLevel],
+    layout: _Slots,
+    feature_names: list[str],
     n_classes: int,
     criterion: Criterion,
     est_rows: int = 0,
-    bounded_candidates: bool = False,
 ) -> dict[int, list[dict[str, Any]]]:
     """The counts-to-splits step of both fit paths: a level's counts
     relation ``(NODE_COL, feature, feature_value, class_*_count,
-    count_examples)``, keyed by the level's slots (:func:`_slot_layout`
-    of ``trees``) → each tree's best split per pending node, node-keyed.
-    Each tree breaks ties by its own feature list.
+    count_examples)``, keyed by the level's slots (``layout``) → each
+    tree's best split per pending node, node-keyed.  Ties break by
+    position in ``feature_names``, the relation's feature order, which
+    every tree's own list follows.
 
-    While the relation may fit ``_local_gains_row_cap`` (rows AND bytes,
-    so a high-class-count fit cannot blow ``spark.driver.maxResultSize``
-    — ADVICE r11), it is collected in ONE ``limit(cap + 1)`` Arrow action
+    The relation is checkpointed lazily, since it may be read more than
+    once.  While it may fit ``_local_gains_row_cap`` (rows AND bytes, so
+    a high-class-count fit cannot blow ``spark.driver.maxResultSize`` —
+    ADVICE r11), it is collected in ONE ``limit(cap + 1)`` Arrow action
     and scored driver-side (:func:`best_splits_from_counts_pdf`), whatever
     the criterion.  ``cap + 1`` rows back prove it over budget:
     ``candidate_split_gains`` + ``max_by`` then run over the same
-    checkpoint blocks.  The relation is checkpointed lazily whenever it
-    may be read more than once: before the probe, and always for
-    unbounded candidates, whose gains pipeline reads it three times (left
-    lazy, each read re-runs the scan, the melt's Expand and its shuffle).
-    Only an ``est_rows`` upper bound past the cap on bounded candidates
-    leaves it a lazy, single-consumer plan.  Both forms are pinned
-    bit-identical."""
-    import numpy as np
-
-    layout = _slot_layout(trees)
+    checkpoint blocks.  An ``est_rows`` upper bound past the cap skips
+    the collect.  Both forms are pinned bit-identical."""
     cap = _local_gains_row_cap(counts.sparkSession, n_classes)
-    if est_rows <= cap or not bounded_candidates:
-        counts = counts.localCheckpoint(eager=False)
+    counts = counts.localCheckpoint(eager=False)
     if est_rows <= cap:
         pdf = counts.limit(cap + 1).toArrow().to_pandas()
         if len(pdf) <= cap:
-            owner = np.asarray(layout.tree, dtype=np.int64)[
-                pdf[NODE_COL].to_numpy(np.int64)
-            ]
             return layout.unslot_splits(
-                b
-                for t in layout.of
-                for b in best_splits_from_counts_pdf(
-                    pdf[owner == t], n_classes, trees[t].feature_names, criterion
-                )
+                best_splits_from_counts_pdf(pdf, n_classes, feature_names, criterion)
             )
         del pdf
-    gains = candidate_split_gains(
-        counts,
-        [],
-        n_classes,
-        criterion,
-        node_col=NODE_COL,
-        include_child_counts=True,
-        bounded_candidates=bounded_candidates,
-        precomputed_counts=counts,
-    )
-    # Each tree's tie-break position comes from its own feature list,
-    # looked up by the tree's contiguous slot range.
-    lists = [trees[t].feature_names for t in layout.of]
-    position = _feature_position(lists[0])
-    if any(fl != lists[0] for fl in lists):
-        position = None
-        end = 0
-        for t, slots in layout.of.items():
-            end += len(slots)
-            pos_t = _feature_position(trees[t].feature_names)
-            cond = F.col(NODE_COL) < end
-            position = (
-                F.when(cond, pos_t) if position is None else position.when(cond, pos_t)
-            )
-    return layout.unslot_splits(_best_split_rows(gains, position))
-
-
-def _arrow_cube_rows(tbl) -> list[tuple[int, "object"]]:
-    """(slot, cube-buffer) pairs from the ``toArrow()`` collect of a dense
-    or pair cube pass.  Arrow moves the binary column in columnar IPC
-    batches instead of py4j row pickling, and each cube is a zero-copy
-    slice of the column's data buffer (``np.frombuffer``-ready): the
-    driver never holds more than the IPC table plus one int64 accumulator
-    per node.  Transport/accounting only, same numbers."""
-    out: list[tuple[int, object]] = []
-    for batch in tbl.to_batches():
-        nodes = batch.column(0).to_pylist()
-        bin_arr = batch.column(1)
-        for i, nv in enumerate(nodes):
-            out.append((nv, bin_arr[i].as_buffer()))
-    return out
+    gains = candidate_split_gains(counts, n_classes, criterion, node_col=NODE_COL)
+    return layout.unslot_splits(_best_split_rows(gains, feature_names))
 
 
 def _prefix_sum_arrays(pdf, n_classes: int):
@@ -1043,18 +929,12 @@ def best_splits_from_counts_pdf(
     ]
 
 
-def _feature_position(feature_names: list[str]):
-    """Each candidate's feature position in ``feature_names`` (the
-    tie-break key), as a tiny literal map lookup."""
-    return F.create_map(
-        *[x for i, name in enumerate(feature_names) for x in (F.lit(name), F.lit(i))]
-    )[F.col(FEATURE)]
-
-
-def _best_split_rows(gains: DataFrame, position) -> list[dict[str, Any]]:
+def _best_split_rows(
+    gains: DataFrame, feature_names: list[str]
+) -> list[dict[str, Any]]:
     """Distributed argmax + collect of a gains relation: the scorer's
-    over-budget form (``position`` is the feature-position column,
-    :func:`_feature_position`).
+    over-budget form.  A candidate's feature position in
+    ``feature_names`` is a tiny literal map lookup.
 
     Total-order tie-break — (gain desc, feature position asc, threshold
     asc; the reference's stable concat-then-sort in feature-list order,
@@ -1068,6 +948,9 @@ def _best_split_rows(gains: DataFrame, position) -> list[dict[str, Any]]:
     comparison is lexicographic; position and threshold are negated so
     the whole order is a single max, and (gain, position, threshold) is
     unique per candidate so no arbitrary tie remains."""
+    position = F.create_map(
+        *[x for i, name in enumerate(feature_names) for x in (F.lit(name), F.lit(i))]
+    )[F.col(FEATURE)]
     order = F.struct(
         F.col("information_gain"),
         (-position).alias("neg_position"),

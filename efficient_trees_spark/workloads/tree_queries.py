@@ -95,8 +95,11 @@ def _gains_oracle(criterion: str) -> str:
 
 
 def _rounded_gains(spark: SparkSession, sf_dir: str, criterion: Criterion) -> DataFrame:
+    counts = split_finder.melt_counts(
+        _prepared_lineitem(spark, sf_dir), FEATURES, len(CLASSES), None
+    )
     gains = split_finder.candidate_split_gains(
-        _prepared_lineitem(spark, sf_dir), FEATURES, len(CLASSES), criterion
+        counts.localCheckpoint(eager=False), len(CLASSES), criterion
     )
     return gains.select(
         "feature",

@@ -8,7 +8,7 @@ import pytest
 from efficient_trees_spark import DecisionTreeClassifier, RandomForestClassifier
 from tests.iris_fixture import train_test_frames
 from tests.snapping import snap_to_edges
-from tests.spies import record_calls
+from tests.spies import force_fit_path, record_calls
 
 
 def _iris(spark):
@@ -158,11 +158,48 @@ def test_forest_tree_equals_single_tree_forest_at_its_seed(spark, max_bins):
         assert single.trees == [tree], t
 
 
+@pytest.mark.parametrize("path", ["packed", "melt"])
+def test_forest_subset_trees_break_ties_in_input_order(spark, monkeypatch, path):
+    """Two identical columns, ``z`` before ``a`` in the input, tie
+    exactly on gain.  A single tree splits on ``z``, the first in the
+    input's order, and so must every forest tree whose feature subset
+    holds both: a subset keeps the input's column order, whichever fit
+    path scores the level."""
+    force_fit_path(monkeypatch, path)
+    rows = [
+        (float(i % 12), float(i % 12), float(7 * i % 5), float(11 * i % 3), int(i % 12 >= 6))
+        for i in range(120)
+    ]
+    data = spark.createDataFrame(rows, "z double, a double, b double, c double, target int")
+    tree = DecisionTreeClassifier(max_depth=1, criterion="gini")
+    tree.fit(data, "target")
+    assert tree.tree["feature"] == "z"
+
+    subsets: list = []
+    build = DecisionTreeClassifier._build_tree_levelwise
+
+    def spy(self, data, tree_features, *args, **kwargs):
+        subsets.extend(tree_features)
+        return build(self, data, tree_features, *args, **kwargs)
+
+    monkeypatch.setattr(DecisionTreeClassifier, "_build_tree_levelwise", spy)
+    rf = RandomForestClassifier(
+        n_trees=4, max_depth=1, criterion="gini", feature_fraction=0.75, seed=1
+    )
+    rf.fit(data, "target")
+    both = [t for t, s in enumerate(subsets) if {"z", "a"} <= set(s)]
+    assert both, subsets
+    for t in both:
+        assert rf.trees[t]["feature"] == "z", (t, subsets[t])
+    assert all(s == [f for f in data.columns if f in s] for s in subsets), subsets
+
+
 def test_forest_level_branches_agree(spark, monkeypatch):
     """A feature-bagged forest's level passes give the same trees on the
     dense (and pair) cube branches, the sparse-rows branch scored
-    driver-side and the distributed-gains branch — each tree scored with
-    its own feature list, whichever branch merged the histograms.  Spies
+    driver-side and the distributed-gains branch — each level scored once
+    under the input's feature order, which every tree's subset keeps,
+    whichever branch merged the histograms.  Spies
     on the pass emitters and the distributed gains record the branches
     each fit reached."""
     from efficient_trees_spark.operators import histogram, split_finder

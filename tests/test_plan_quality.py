@@ -7,6 +7,7 @@ un-broadcasts a dim, adds a shuffle to inference) fails CI — not just the
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
@@ -149,6 +150,104 @@ def test_curation_pipeline_two_shuffles_no_python(spark):
     assert plan.count("Exchange") == 3
     assert plan.count("Exchange hashpartitioning") == 2  # the two aggs
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _final_plan_nodes(df) -> list[tuple[int, str]]:
+    """``(depth, operator)`` per line of ``df``'s executed AQE final plan
+    (the action runs first), codegen stage prefixes stripped."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = []
+    for line in plan.split("== Initial Plan ==")[0].splitlines():
+        op = line.lstrip(" :+-")
+        nodes.append((len(line) - len(op), re.sub(r"^\*\(\d+\) ", "", op)))
+    return nodes
+
+
+def _subtree(nodes, i: int) -> list[str]:
+    """The operators below node ``i``."""
+    below = []
+    for depth, op in nodes[i + 1:]:
+        if depth <= nodes[i][0]:
+            break
+        below.append(op)
+    return below
+
+
+def _explode_barrier_violations(df) -> list[str]:
+    """What breaks docs_curation's explode barrier in ``df``'s plan: the
+    quality/length filter must sit above the ``Generate``, and the
+    tokenizer (``regexp_replace``) must run only above the fan-out
+    round-robin ``Exchange``, never below it."""
+    nodes = _final_plan_nodes(df)
+    found = []
+    filters = [
+        i for i, (_, op) in enumerate(nodes) if op.startswith("Filter") and ">= 0.5" in op
+    ]
+    if not filters:
+        found.append("no quality filter")
+    if not all(
+        any(op.startswith("Generate") for op in _subtree(nodes, i)) for i in filters
+    ):
+        found.append("quality filter not above the Generate")
+    fan_outs = [
+        i
+        for i, (_, op) in enumerate(nodes)
+        if op.startswith("Exchange RoundRobinPartitioning")
+    ]
+    scoring = [
+        i
+        for i, (_, op) in enumerate(nodes)
+        if op.startswith("Project") and "regexp_replace" in op
+    ]
+    if len(fan_outs) != 1 or not scoring:
+        found.append("no fan-out exchange or no scoring projection")
+    elif not all(nodes[fan_outs[0]][1] in _subtree(nodes, i) for i in scoring):
+        found.append("scoring projection not above the fan-out")
+    if any("regexp_replace" in op for i in fan_outs for op in _subtree(nodes, i)):
+        found.append("tokenizer below the fan-out")
+    return found
+
+
+def test_curation_pipeline_explode_barrier_holds(spark, sf_small):
+    """docs_curation's single-element explode is a pushdown barrier: the
+    quality/length filter stays above the ``Generate`` and the tokenize /
+    score projection runs once per row above the fan-out round-robin
+    ``Exchange``.  The same pipeline without the explode lets
+    PushDownPredicates inline the tokenizer into the filter and push it
+    below the fan-out, and the pin rejects that plan."""
+    from efficient_trees_spark.functions import text
+    from efficient_trees_spark.sources.io import fan_out_small_input
+    from efficient_trees_spark.workloads.base import load
+
+    df = REGISTRY["docs_curation_pipeline"].fn(spark, sf_small)
+    assert _explode_barrier_violations(df) == []
+
+    docs = fan_out_small_input(load(spark, sf_small, "documents"))
+    bound = docs.select(
+        "doc_id",
+        "text",
+        text.tokens("text").alias("__toks"),
+        text.normalized("text").alias("__norm"),
+    )
+    toks = F.col("__toks")
+    scored = bound.select(
+        "doc_id",
+        F.round(text.quality_score("text", toks=toks), 9).alias("quality"),
+        text.token_count("text", toks=toks).alias("n_tokens"),
+        text.content_fingerprint("text", norm=F.col("__norm")).alias("fp"),
+        text.lang_id("text", toks=toks).alias("lang"),
+    )
+    kept = scored.filter((F.col("quality") >= 0.5) & (F.col("n_tokens") >= 5))
+    unbarred = (
+        kept.groupBy("fp")
+        .agg(F.min_by(F.struct("lang", "n_tokens", "quality"), "doc_id").alias("p"))
+        .groupBy(F.col("p.lang").alias("lang"))
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+    )
+    violations = _explode_barrier_violations(unbarred)
+    assert "quality filter not above the Generate" in violations
+    assert "tokenizer below the fan-out" in violations
 
 
 def test_text_doc_profile_single_scan_no_shuffle(spark):

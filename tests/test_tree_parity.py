@@ -144,7 +144,7 @@ def test_binned_thresholds_are_edges_with_exact_gains(spark):
         F.col("target").cast("int").alias(split_finder.TARGET_IDX),
     )
     raw_gains = split_finder.candidate_split_gains(
-        prepared, features, 3, Criterion.ENTROPY
+        split_finder.melt_counts(prepared, features, 3, None), 3, Criterion.ENTROPY
     )
     root = model.tree
     row = raw_gains.filter(

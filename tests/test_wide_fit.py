@@ -26,6 +26,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from efficient_trees_spark.ensemble import RandomForestClassifier
 from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.operators import split_finder
 from efficient_trees_spark.operators.histogram import (
@@ -218,8 +219,6 @@ def test_depth2_binned_fits_run_one_level_job(spark, monkeypatch):
     all four trees, not four.  (Gini gains are driver-side numpy and the
     local input has no exchange, so the level pass's only job is its
     histogram pass.)"""
-    from efficient_trees_spark.ensemble import RandomForestClassifier
-
     data = _iris_frame(spark)
     tree = DecisionTreeClassifier(max_depth=2, criterion=Criterion.GINI, max_bins=8)
     assert _level_passes(spark, monkeypatch, lambda: tree.fit(data, "target")) == (1, 1)
@@ -235,8 +234,6 @@ def test_exact_forest_runs_one_melt_per_level(spark, monkeypatch):
     """An exact forest grows its trees level-synchronously on the melt
     too: a 4-tree depth-3 forest runs one melt per level for all four
     trees, not one per tree and level."""
-    from efficient_trees_spark.ensemble import RandomForestClassifier
-
     data = _iris_frame(spark)
     forest = RandomForestClassifier(
         n_trees=4, max_depth=3, criterion=Criterion.GINI, feature_fraction=0.75, seed=3
@@ -353,11 +350,50 @@ def test_melt_fit_runs_every_job_in_the_callers_job_group(spark):
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
 
 
-def test_max_bins_must_fit_uint16_codes():
-    # binned codes must fit uint16: edges number at most max_bins
-    with pytest.raises(ValueError, match="max_bins must be <= 65533"):
-        DecisionTreeClassifier(max_bins=65534)
+@pytest.mark.parametrize(
+    "make, match",
+    [
+        # binned codes must fit uint16: edges number at most max_bins
+        pytest.param(
+            lambda: DecisionTreeClassifier(max_bins=65534),
+            "max_bins must be <= 65533",
+            id="tree-max_bins-65534",
+        ),
+        pytest.param(
+            lambda: RandomForestClassifier(max_bins=70000),
+            "max_bins must be <= 65533",
+            id="forest-max_bins-70000",
+        ),
+        pytest.param(
+            lambda: DecisionTreeClassifier(max_bins=1),
+            "max_bins must be >= 2",
+            id="tree-max_bins-1",
+        ),
+        pytest.param(
+            lambda: RandomForestClassifier(max_bins=1),
+            "max_bins must be >= 2",
+            id="forest-max_bins-1",
+        ),
+        pytest.param(
+            lambda: DecisionTreeClassifier(bin_rel_error=0),
+            "bin_rel_error must be > 0",
+            id="tree-bin_rel_error-0",
+        ),
+        pytest.param(
+            lambda: DecisionTreeClassifier(bin_rel_error=-1e-3),
+            "bin_rel_error must be > 0",
+            id="tree-bin_rel_error-negative",
+        ),
+    ],
+)
+def test_max_bins_must_fit_uint16_codes(make, match):
+    """Binning parameters no fit can honor fail at construction, before
+    any Spark job (no session is used here)."""
+    with pytest.raises(ValueError, match=match):
+        make()
     DecisionTreeClassifier(max_bins=65533)
+    DecisionTreeClassifier(max_bins=2, bin_rel_error=1.0)
+    RandomForestClassifier(max_bins=65533)
 
 
 # ----------------------------------------------------- exact-mode packed path
@@ -440,7 +476,6 @@ def test_wide_exact_forest_takes_the_packed_path(spark, monkeypatch):
     the packed path's fan-out is a no-op and both fits draw the same
     bags."""
     from efficient_trees_spark import tree as tree_module
-    from efficient_trees_spark.ensemble import RandomForestClassifier
     from efficient_trees_spark.operators import histogram
 
     cols = [
@@ -921,6 +956,82 @@ def test_distributed_stats_merge_matches_driver_merge(spark):
     assert dist == driver
 
 
+def _sketch_relation(spark, sizes: list[int]):
+    """One partition per entry of ``sizes``, of that many rows: an
+    all-duplicate, an all-NULL, a sorted (each partition a contiguous
+    value range), a hashed and a 70%-one-value feature with NULLs and NaNs."""
+    starts = [0, *np.cumsum(sizes).tolist()]
+    ids = (
+        spark.sparkContext.parallelize(range(len(sizes)), len(sizes))
+        .flatMap(lambda k: ((i,) for i in range(starts[k], starts[k + 1])))
+        .toDF("id long")
+    )
+    hashed = (F.abs(F.xxhash64("id")) % 1000003).cast("double")
+    return ids.select(
+        F.lit(3.0).alias("dup"),
+        F.lit(None).cast("double").alias("null"),
+        F.col("id").cast("double").alias("sorted"),
+        hashed.alias("hashed"),
+        F.when(F.col("id") % 13 == 0, F.lit(None))
+        .when(F.col("id") % 17 == 0, F.lit(float("nan")))
+        .when(F.col("id") % 10 < 7, F.lit(0.0))
+        .otherwise(hashed)
+        .alias("heavy"),
+    )
+
+
+@pytest.mark.parametrize(
+    "sizes",
+    [
+        pytest.param([1] * 48, id="one-row-partitions"),
+        pytest.param([1, 10, 100, 1_000, 10_000, 100_000], id="size-skewed"),
+    ],
+)
+@pytest.mark.parametrize("stats", [64, 2048])
+def test_edge_sketch_rank_error_is_within_one_over_stats(spark, sizes, stats):
+    """The binned edges are mergeable order-statistics summaries (cf.
+    "Approximation Algorithms for Large Scale Data Analysis", PODS 2021):
+    over any partitioning, every target rank k * N / max_bins has an edge
+    whose rank interval ``[#values < e, #values <= e]`` lies within
+    ``N / stats_per_partition`` of it, N counting the non-NULL, non-NaN
+    values.  Both merges of ``partition_order_stats`` give the same
+    edges, and an all-NULL feature gets none."""
+    from efficient_trees_spark.operators.histogram import (
+        arrow_stat_rows,
+        merge_edge_stats_rows,
+        merge_order_stats_distributed,
+        partition_order_stats,
+    )
+
+    n_bins = 32
+    df = _sketch_relation(spark, sizes)
+    names = df.columns
+    assert df.rdd.getNumPartitions() == len(sizes)
+    stats_df = partition_order_stats(df, names, stats, dtype="f8")
+    driver, _ = merge_edge_stats_rows(
+        arrow_stat_rows(stats_df.toArrow()), names, n_bins, stats_per_partition=stats
+    )
+    dist, _ = merge_order_stats_distributed(
+        stats_df, names, n_bins, stats_per_partition=stats
+    )
+    assert driver == dist
+    assert driver["null"] == []
+    pdf = df.toPandas()
+    for name in names:
+        values = pdf[name].to_numpy(np.float64)
+        values = np.sort(values[~np.isnan(values)])
+        if not values.size:
+            continue
+        n = values.size
+        edges = np.asarray(driver[name])
+        below = np.searchsorted(values, edges, side="left")
+        upto = np.searchsorted(values, edges, side="right")
+        for k in range(1, n_bins):
+            target = k * n / n_bins
+            miss = np.maximum(np.maximum(below - target, target - upto), 0.0)
+            assert miss.min() <= n / stats, (name, k, miss.min(), n / stats)
+
+
 def test_stats_collect_budget_parses_sizes(spark):
     from efficient_trees_spark.operators.histogram import (
         _spark_size_bytes,
@@ -956,15 +1067,15 @@ def test_binned_fit_identical_under_distributed_stats_merge(spark, monkeypatch):
 
 
 def test_arrow_cube_rows_zero_copy_merge(spark):
-    """_arrow_cube_rows buffers feed merge_cubes_to_counts_pdf identically
+    """arrow_cube_rows buffers feed merge_cubes_to_counts_pdf identically
     to collect() rows."""
     import pyarrow as pa
 
     from efficient_trees_spark.operators.histogram import (
+        arrow_cube_rows,
         merge_cubes_to_counts_pdf,
         packed_histogram_cubes,
     )
-    from efficient_trees_spark.operators.split_finder import _arrow_cube_rows
 
     edges = {"f": [0.0, 1.0, 2.0]}
     flat = 1 * 4 * 2  # 1 feature x (3 edges + nan slot) x 2 classes
@@ -979,7 +1090,7 @@ def test_arrow_cube_rows_zero_copy_merge(spark):
             "c": pa.array([c[1] for c in cubes], type=pa.binary()),
         }
     )
-    pdf_a = merge_cubes_to_counts_pdf(_arrow_cube_rows(tbl), ["f"], 2, edges)
+    pdf_a = merge_cubes_to_counts_pdf(arrow_cube_rows(tbl), ["f"], 2, edges)
     pdf_r = merge_cubes_to_counts_pdf(cubes, ["f"], 2, edges)
     assert pdf_a.equals(pdf_r)
 
@@ -991,7 +1102,7 @@ def test_arrow_cube_rows_zero_copy_merge(spark):
         "f double, __target_idx int",
     ).repartition(2)
     codes = pack_encode_features(spark_df, ["f"], edges, dtype="f8")
-    rows = _arrow_cube_rows(
+    rows = arrow_cube_rows(
         packed_histogram_cubes(
             codes, ["f"], 2, edges, {0: TreeRoute([], {0: 0})}
         ).toArrow()
@@ -1170,14 +1281,7 @@ def test_local_gains_numpy_gini_matches_catalyst(spark, criterion):
     counts = _spark_counts(spark, pdf)
     catalyst = sort(
         split_finder.candidate_split_gains(
-            counts,
-            [],
-            ncls,
-            criterion,
-            node_col="__node_id",
-            include_child_counts=True,
-            bounded_candidates=True,
-            precomputed_counts=counts,
+            counts, ncls, criterion, node_col="__node_id"
         ).toPandas()
     )
     local = sort(_gains_frame(pdf, ncls, criterion))
@@ -1590,7 +1694,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     n_classes = 3
 
     # level 0 from the pair cube
-    pair_rows = sf._arrow_cube_rows(
+    pair_rows = histogram.arrow_cube_rows(
         packed_histogram_pair_cubes(
             packed, names, n_classes, edges, {0: TreeRoute([], {0: 0})},
         ).toArrow()
@@ -1600,7 +1704,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
         merged, names, n_classes, edges
     )
     # level 0 from the one-level cube pass
-    rows0 = sf._arrow_cube_rows(
+    rows0 = histogram.arrow_cube_rows(
         packed_histogram_cubes(
             packed, names, n_classes, edges, {0: TreeRoute([], {0: 0})},
         ).toArrow()
@@ -1631,7 +1735,7 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
         (0, names.index(b["feature"]),
          bisect_left(edges[b["feature"]], b["threshold"]), 1, 2)
     ]
-    rows1 = sf._arrow_cube_rows(
+    rows1 = histogram.arrow_cube_rows(
         packed_histogram_cubes(
             packed, names, n_classes, edges,
             {0: TreeRoute(splits, {1: 1, 2: 2})},
