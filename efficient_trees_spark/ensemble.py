@@ -103,7 +103,7 @@ class RandomForestClassifier:
             criterion=self.criterion,
             max_bins=self.max_bins,
         )
-        relation, feature_names, unique_targets, _, bin_edges, code_dtype, n_parts = (
+        relation, feature_names, unique_targets, _, bin_edges, n_parts = (
             proto._training_relation(data, target_name)
         )
         self.bin_edges_ = bin_edges
@@ -157,8 +157,7 @@ class RandomForestClassifier:
                 root_distributions,
                 bin_edges=bin_edges,
                 all_features=feature_names,
-                packed_code_dtype=code_dtype,
-                packed_n_parts=n_parts,
+                n_parts=n_parts,
                 tree_col=TREE_COL,
             )
         finally:

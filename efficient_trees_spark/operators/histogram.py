@@ -328,12 +328,12 @@ def arrow_stat_rows(tbl) -> list[tuple]:
 # NaN codes both fail), right = code > t excluding NULL (NaN routes right,
 # matching Spark's NaN-sorts-greatest).
 #
-# Code width is a per-fit choice (tree.py): uint8 (1 byte/cell, <= 253
-# edges) whenever every feature fits, else uint16 (2 bytes/cell, <= 65 533
-# edges — virtually every real exact fit).  Same sentinels-at-the-top
-# scheme, same order isomorphism; histograms address RAGGED per-feature
-# slot ranges (``_cube_geometry``), so one wide feature costs only its own
-# edges, never max-edges x width.
+# Code width is a function of the edges (:func:`_code_info`): uint8 (1
+# byte/cell, <= 253 edges) whenever every feature fits, else uint16 (2
+# bytes/cell, <= 65 533 edges — virtually every real exact fit).  Same
+# sentinels-at-the-top scheme, same order isomorphism; histograms address
+# RAGGED per-feature slot ranges (``_cube_geometry``), so one wide feature
+# costs only its own edges, never max-edges x width.
 
 PACKED_COL = "__packed"
 PACKED_NAN_CODE = 254
@@ -344,19 +344,27 @@ PACKED16_NULL_CODE = 65535
 _MAX_PACKED16_EDGES = 65533
 
 
-def _code_info(code_dtype: str):
-    """(numpy code dtype, NaN code, NULL code, max edges) for a packed
-    bin-code width."""
-    if code_dtype == "u1":
-        return np.uint8, PACKED_NAN_CODE, PACKED_NULL_CODE, _MAX_PACKED_EDGES
-    if code_dtype == "u2":
-        return (
-            np.uint16,
-            PACKED16_NAN_CODE,
-            PACKED16_NULL_CODE,
-            _MAX_PACKED16_EDGES,
-        )
-    raise ValueError(f"unknown packed code dtype: {code_dtype!r}")
+class _Codes(NamedTuple):
+    """The bin-code width of a fit: numpy dtype and reserved codes."""
+
+    dtype: np.dtype
+    nan: int
+    null: int
+
+
+def _code_info(bin_edges: dict[str, list[float]]) -> _Codes:
+    """The bin codes of ``bin_edges``: uint8 while every feature fits
+    253 edges, else uint16.  The encode and every level pass read it
+    from the same (whole) edges dict, so they agree by construction."""
+    max_edges = max((len(e) for e in bin_edges.values()), default=0)
+    if max_edges <= _MAX_PACKED_EDGES:
+        return _Codes(np.dtype(np.uint8), PACKED_NAN_CODE, PACKED_NULL_CODE)
+    if max_edges <= _MAX_PACKED16_EDGES:
+        return _Codes(np.dtype(np.uint16), PACKED16_NAN_CODE, PACKED16_NULL_CODE)
+    raise ValueError(
+        f"bin codes support at most {_MAX_PACKED16_EDGES} edges per "
+        f"feature, got {max_edges}"
+    )
 
 # Reserved quiet-NaN payloads marking NULL cells in the packed float matrix.
 _F32_CANON_NAN_BITS = np.uint32(0x7FC00000)
@@ -544,12 +552,12 @@ def pack_encode_features(
     feature_names: list[str],
     bin_edges: dict[str, list[float]],
     dtype: str = "f4",
-    code_dtype: str = "u1",
 ) -> DataFrame:
-    """Source batches → packed bin-code blobs (1 byte/cell at u1, 2 at u2),
-    never materializing a raw float blob.  Pass 2 of the two-scan flow
-    (see :func:`partition_order_stats`); the fit persists this relation as
-    its code cache, so a depth-d fit touches the source exactly twice.
+    """Source batches → packed bin-code blobs (1 or 2 bytes/cell, by the
+    edges: :func:`_code_info`), never materializing a raw float blob.
+    Pass 2 of the two-scan flow (see :func:`partition_order_stats`); the
+    fit persists this relation as its code cache, so a depth-d fit
+    touches the source exactly twice.
 
     Each value maps to the index of the smallest edge >= it (values are
     converted to ``dtype`` first; ``searchsorted`` upcasts them against the
@@ -560,12 +568,7 @@ def pack_encode_features(
     rides along in ``TARGET_IDX``, the column every level pass reads."""
     import pyarrow as pa
 
-    np_code, nan_code, null_code, max_edges_cap = _code_info(code_dtype)
-    if any(len(e) > max_edges_cap for e in bin_edges.values()):
-        raise ValueError(
-            f"pack_encode_features supports at most {max_edges_cap} "
-            f"edges per feature with code_dtype={code_dtype!r}"
-        )
+    np_code, nan_code, null_code = _code_info(bin_edges)
     names = list(feature_names)
     np_dtype, _, _, _ = _dtype_info(dtype)
     n_feat = len(names)
@@ -862,6 +865,7 @@ class _TreeAxes(NamedTuple):
 
 def _level_pass(
     packed_df: DataFrame,
+    bin_edges: dict[str, list[float]],
     lens: "np.ndarray",
     offsets: "np.ndarray",
     routes: dict[int, TreeRoute],
@@ -869,16 +873,18 @@ def _level_pass(
     schema: str,
     feature_positions: list[int] | None,
     matrix_width: int | None,
-    code_dtype: str,
     tree_col: str | None,
 ) -> DataFrame:
     """The ``mapInArrow`` pass over the code relation shared by the three
-    level emitters.  Feature j has ``lens[j]`` edges and its slots start
-    at ``offsets[j]``; ``feature_positions`` places the features in a
-    matrix ``matrix_width`` wide (forest feature bagging; None: they are
-    the matrix).  ``kernel(rows, axes)`` turns one partition's routed
-    ``(tree_id, codes, target, slots)`` rows, codes narrowed to the tree's
-    own columns, into record batches of Spark ``schema``."""
+    level emitters, in the code width of ``bin_edges`` (the dict the
+    encode was given).  Feature j has ``lens[j]`` edges and its slots
+    start at ``offsets[j]``; ``feature_positions`` places the features in
+    a matrix ``matrix_width`` wide (forest feature bagging; None: they are
+    the matrix).  ``kernel(rows, axes, codes)`` turns one partition's
+    routed ``(tree_id, mat, target, slots)`` rows, the code matrix
+    narrowed to the tree's own columns, into record batches of Spark
+    ``schema``; ``codes`` is the width (:func:`_code_info`)."""
+    codes = _code_info(bin_edges)
     n_feat = len(lens)
     width = matrix_width if matrix_width is not None else n_feat
     pos = (
@@ -886,7 +892,6 @@ def _level_pass(
         if feature_positions is not None
         else np.arange(n_feat, dtype=np.int64)
     )
-    np_code = _code_info(code_dtype)[0]
     axes: dict[int, _TreeAxes] = {}
     for t, route in routes.items():
         feat = (
@@ -901,14 +906,14 @@ def _level_pass(
         axes[t] = _TreeAxes(
             cols,
             offsets[feat].astype(np.int32)[None, :],
-            np.maximum(tl - 1, 0).astype(np_code)[None, :],
-            tl.astype(np_code)[None, :],  # lens <= max edges < code max
+            np.maximum(tl - 1, 0).astype(codes.dtype)[None, :],
+            tl.astype(codes.dtype)[None, :],  # lens <= max edges < code max
             np.flatnonzero(tl == 0),
         )
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         yield from kernel(
-            _routed_rows(batches, tree_col, width, code_dtype, routes, axes), axes
+            _routed_rows(batches, tree_col, width, codes, routes, axes), axes, codes
         )
         _trim_malloc()
 
@@ -917,14 +922,13 @@ def _level_pass(
     ).mapInArrow(run, schema)
 
 
-def _routed_rows(batches, tree_col, width, code_dtype, routes, axes):
+def _routed_rows(batches, tree_col, width, codes, routes, axes):
     """Unpack each Arrow batch's code matrix and route every row with its
     own tree's splits.  Yields ``(tree_id, mat, target, slots)`` per tree
     present in the batch, keeping only the rows that land on a pending
     node and only the columns the tree histograms (``axes``); ``slots`` is
     each kept row's accumulator slot.  ``tree_col`` None means every row
     belongs to tree 0; rows of trees absent from ``routes`` are skipped."""
-    np_code, _, null_code, _ = _code_info(code_dtype)
     luts = {}
     for t, route in routes.items():
         # index -1 (a row dropped by routing) reads the trailing -1
@@ -935,7 +939,7 @@ def _routed_rows(batches, tree_col, width, code_dtype, routes, axes):
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        mat = _unpack_binary(batch.column(PACKED_COL), width, np_code)
+        mat = _unpack_binary(batch.column(PACKED_COL), width, codes.dtype)
         target = batch.column(TARGET_IDX).to_numpy(zero_copy_only=False)
         groups = [(0, None)]
         if tree_col is not None:
@@ -950,7 +954,7 @@ def _routed_rows(batches, tree_col, width, code_dtype, routes, axes):
             if route is None:
                 continue
             m, y = (mat, target) if rows is None else (mat[rows], target[rows])
-            slots = luts[t][route_codes(m, route.splits, null_code=null_code)]
+            slots = luts[t][route_codes(m, route.splits, null_code=codes.null)]
             keep = slots >= 0
             if not keep.any():
                 continue
@@ -980,13 +984,12 @@ def packed_histogram_counts(
     routes: dict[int, TreeRoute],
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
-    code_dtype: str = "u1",
     tree_col: str | None = None,
 ) -> DataFrame:
     """(node, feature, feature_value, class_*_count, count_examples) — the
     counts relation the exact melt builds with unpivot + groupBy — as
     merged partial histograms over the packed bin-code matrix (uint8 or
-    uint16 per ``code_dtype``, matching the encode), with tree routing
+    uint16, by the edges), with tree routing
     fused into the same numpy pass (``route_codes``): the per-level cost is
     one 2-column transfer of the cached code relation plus bincounts.
 
@@ -1020,8 +1023,8 @@ def packed_histogram_counts(
         + ", count_examples long"
     )
 
-    def histogram(rows, axes) -> Iterator["pa.RecordBatch"]:
-        acc = _accumulate_cubes(rows, axes, flat_slots, n_classes, code_dtype)
+    def histogram(rows, axes, codes) -> Iterator["pa.RecordBatch"]:
+        acc = _accumulate_cubes(rows, axes, flat_slots, n_classes, codes)
         sparse = _sparsify_cubes(
             acc, names, lens, slot_off, edges_flat, edge_off, n_classes
         )
@@ -1035,8 +1038,8 @@ def packed_histogram_counts(
         )
 
     partials = _level_pass(
-        packed_df, lens, slot_off, routes, histogram, spark_schema,
-        feature_positions, matrix_width, code_dtype, tree_col,
+        packed_df, bin_edges, lens, slot_off, routes, histogram, spark_schema,
+        feature_positions, matrix_width, tree_col,
     )
     return partials.groupBy(NODE_COL, FEATURE, FEATURE_VALUE).agg(
         *[F.sum(c).alias(c) for c in count_cols],
@@ -1045,7 +1048,7 @@ def packed_histogram_counts(
 
 
 def _accumulate_cubes(
-    rows, axes, flat_slots, n_classes, code_dtype
+    rows, axes, flat_slots, n_classes, codes
 ) -> dict[int, "np.ndarray"]:
     """Bincount one partition's routed rows (:func:`_level_pass`) into
     per-slot flat count cubes — the numeric core shared by the sparse-row
@@ -1065,15 +1068,14 @@ def _accumulate_cubes(
     ``bincount`` over a (node, slot) combined index — no per-node passes.
     Counts are exact integers either way; parity is pinned by the
     histogram relation tests and the golden fits."""
-    _, nan_code, null_code, _ = _code_info(code_dtype)
     acc: dict[int, np.ndarray] = {}
     flat_size = flat_slots * n_classes
     stride = flat_size + 1  # + the invalid-cell sentinel slot
     for t, mat, target, nodes in rows:
         ax = axes[t]
         target32 = target.astype(np.int32)
-        is_nan = mat == nan_code
-        invalid = mat == null_code
+        is_nan = mat == codes.nan
+        invalid = mat == codes.null
         if ax.no_edges.size:
             invalid[:, ax.no_edges] = True
         idx = np.minimum(mat, ax.cap)  # code dtype; nan/null fixed below
@@ -1203,7 +1205,6 @@ def packed_histogram_cubes(
     routes: dict[int, TreeRoute],
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
-    code_dtype: str = "u1",
     tree_col: str | None = None,
 ) -> DataFrame:
     """:func:`packed_histogram_counts` with DENSE per-node output: one row
@@ -1220,14 +1221,14 @@ def packed_histogram_cubes(
     Routing and feature subsets are as in :func:`packed_histogram_counts`."""
     _, lens, slot_off, flat_slots, _, _ = _cube_geometry(feature_names, bin_edges)
 
-    def cubes(rows, axes) -> Iterator["pa.RecordBatch"]:
-        acc = _accumulate_cubes(rows, axes, flat_slots, n_classes, code_dtype)
+    def cubes(rows, axes, codes) -> Iterator["pa.RecordBatch"]:
+        acc = _accumulate_cubes(rows, axes, flat_slots, n_classes, codes)
         if acc:
             yield _cube_batch({nv: a.tobytes() for nv, a in acc.items()})
 
     return _level_pass(
-        packed_df, lens, slot_off, routes, cubes, f"{NODE_COL} int, __cube binary",
-        feature_positions, matrix_width, code_dtype, tree_col,
+        packed_df, bin_edges, lens, slot_off, routes, cubes,
+        f"{NODE_COL} int, __cube binary", feature_positions, matrix_width, tree_col,
     )
 
 
@@ -1332,7 +1333,6 @@ def packed_histogram_pair_cubes(
     routes: dict[int, TreeRoute],
     feature_positions: list[int] | None = None,
     matrix_width: int | None = None,
-    code_dtype: str = "u1",
     tree_col: str | None = None,
 ) -> DataFrame:
     """Dense per-(partition, node) PAIR cubes: one row per node carrying
@@ -1340,18 +1340,17 @@ def packed_histogram_pair_cubes(
     Same routing (``route_codes``, one tree or a forest's trees) and row
     set as :func:`packed_histogram_cubes`; only the accumulation is joint,
     over the pairs of each row's own tree's features."""
-    _, nan_code, null_code, _ = _code_info(code_dtype)
     _, lens, slot2_off, s2 = _pair_geometry(feature_names, bin_edges)
     stride = s2 * s2 * n_classes
 
-    def cubes(rows, axes) -> Iterator["pa.RecordBatch"]:
+    def cubes(rows, axes, codes) -> Iterator["pa.RecordBatch"]:
         null_slot = {t: ax.nan_slot.astype(np.int64) + 1 for t, ax in axes.items()}
         acc: dict[int, np.ndarray] = {}
         for t, mat, target, nodes in rows:
             ax = axes[t]
             target = target.astype(np.int64)
-            is_nan = mat == nan_code
-            is_null = mat == null_code
+            is_nan = mat == codes.nan
+            is_null = mat == codes.null
             idx = np.minimum(mat, ax.cap).astype(np.int64)
             np.copyto(idx, np.broadcast_to(ax.nan_slot, idx.shape), where=is_nan)
             np.copyto(idx, np.broadcast_to(null_slot[t], idx.shape), where=is_null)
@@ -1371,8 +1370,8 @@ def packed_histogram_pair_cubes(
             yield _cube_batch({nv: a.tobytes() for nv, a in acc.items()})
 
     return _level_pass(
-        packed_df, lens, slot2_off, routes, cubes, f"{NODE_COL} int, __cube binary",
-        feature_positions, matrix_width, code_dtype, tree_col,
+        packed_df, bin_edges, lens, slot2_off, routes, cubes,
+        f"{NODE_COL} int, __cube binary", feature_positions, matrix_width, tree_col,
     )
 
 
@@ -1411,14 +1410,17 @@ def pair_cubes_to_level_counts(
 
 def pair_cubes_to_child_counts(
     cubes: dict[int, "np.ndarray"],
-    chosen: list[dict],
+    children: dict[int, tuple[dict, bool]],
     feature_names: list[str],
     n_classes: int,
     bin_edges: dict[str, list[float]],
 ):
     """Level-(d+1) counts pdf from the pair cubes and level d's CHOSEN
-    splits: for node n split on feature a* at threshold t (always a
-    finite, non-maximal edge — the last-candidate filter drops the NaN
+    splits.  ``children`` maps each child to count (its key in the
+    output) to ``(split, is_left)``: its parent's split dict, whose
+    ``node_id`` keys the parent's cube.  For a parent split on feature a*
+    at threshold t (always
+    a finite, non-maximal edge — the last-candidate filter drops the NaN
     and max candidates), the left child's per-feature histograms are the
     cube rows for a*'s edge slots <= code(t) summed, the right child's
     the edge slots > code(t) plus a*'s NaN slot (NaN routes right); a*'s
@@ -1430,18 +1432,17 @@ def pair_cubes_to_child_counts(
     keep = _pair_keep_index(lens, slot2_off)
     pos_of = {name: j for j, name in enumerate(names)}
     acc: dict[int, np.ndarray] = {}
-    for best in chosen:
-        nv = best["node_id"]
-        flat = cubes.get(nv)
+    for key, (best, is_left) in children.items():
+        flat = cubes.get(best["node_id"])
         if flat is None:
             continue
-        cube = flat.reshape(s2, s2, n_classes)
         j = pos_of[best["feature"]]
         t = edge_code(bin_edges[best["feature"]], best["threshold"])
         a0 = int(slot2_off[j])
-        left = cube[a0 : a0 + t + 1].sum(axis=0)  # edge slots 0..t
-        # edge slots t+1..l-1 plus the NaN slot at l; NULL (l+1) excluded
-        right = cube[a0 + t + 1 : a0 + int(lens[j]) + 1].sum(axis=0)
-        acc[2 * nv + 1] = np.ascontiguousarray(left[keep]).reshape(-1)
-        acc[2 * nv + 2] = np.ascontiguousarray(right[keep]).reshape(-1)
+        if is_left:  # edge slots 0..t
+            side = slice(a0, a0 + t + 1)
+        else:  # edge slots t+1..l-1 plus the NaN slot at l; NULL (l+1) excluded
+            side = slice(a0 + t + 1, a0 + int(lens[j]) + 1)
+        cube = flat.reshape(s2, s2, n_classes)
+        acc[key] = np.ascontiguousarray(cube[side].sum(axis=0)[keep]).reshape(-1)
     return _cube_counts_pdf(acc, feature_names, bin_edges, n_classes)

@@ -24,13 +24,17 @@ the driver-collect budget, and otherwise runs the one Catalyst gains
 form (:func:`candidate_split_gains`, the windows above as a two-phase
 bucketed prefix scan) plus a ``max_by`` argmax.  The packed path's
 dense and pair cube branches merge their counts on the driver and go
-straight to the driver-side scoring.  Either way a level is scored by
-ONE call over its slot-keyed counts, whatever the number of trees.
+straight to the driver-side scoring, and so does a level the previous
+pair pass carried.  Either way a level is scored by ONE call over its
+slot-keyed counts, whatever the number of trees.
 
 The level contract: both finders take ``{tree_id: TreeLevel}`` — each
 tree's features, its partial node dict and its pending node ids — and
-return ``{tree_id: [split dicts keyed by node id]}``.  How a level's rows
-are keyed and routed stays in this module: :func:`_slot_layout` gives
+return ``{tree_id: [split dicts keyed by node id]}``.  A fit builds one
+level finder (:func:`level_finder`) and calls it once per level; the
+finder picks the path and holds what one packed pass carries to the
+next level.  How a level's rows are keyed and routed stays in this
+module: :func:`_slot_layout` gives
 every pending (tree, node) pair a dense slot, tree by tree, and maps the
 slots back; the melt routes rows to their slot with a column compiled by
 ``plans.case_compiler.compile_tree``, the packed pass with
@@ -398,19 +402,13 @@ class _Slots(NamedTuple):
     tree: list[int]
     node: list[int]
 
-    def unslot(self, pairs) -> dict[int, list[tuple[int, Any]]]:
-        """``(slot, value)`` pairs -> ``{tree: [(node id, value), ...]}``."""
-        out: dict[int, list] = {t: [] for t in self.of}
-        for slot, value in pairs:
-            out[self.tree[slot]].append((self.node[slot], value))
-        return out
-
     def unslot_splits(self, splits) -> dict[int, list[dict[str, Any]]]:
         """Slot-keyed split dicts -> each tree's node-keyed split dicts."""
-        return {
-            t: [dict(b, node_id=node) for node, b in pairs]
-            for t, pairs in self.unslot((b["node_id"], b) for b in splits).items()
-        }
+        out: dict[int, list] = {t: [] for t in self.of}
+        for b in splits:
+            slot = b["node_id"]
+            out[self.tree[slot]].append(dict(b, node_id=self.node[slot]))
+        return out
 
 
 def _slot_layout(trees: dict[int, TreeLevel]) -> _Slots:
@@ -439,12 +437,13 @@ def find_best_splits_per_node(
 ) -> dict[int, list[dict[str, Any]]]:
     """Best split of EVERY pending node of every tree of a level in one
     pass (PLANET-style), on the exact melt: ``df`` is the prepared
-    training relation, each row NULL in the features outside its own
-    tree's.  Rows are routed to their slot by each tree's compiled
-    partial tree (with ``tree_col``, a row takes its own tree's route;
-    without it every row is tree 0's), melted, counted, and the counts go
-    to the shared scorer (:func:`_score_counts`) under ``df``'s column
-    order."""
+    training relation.  Rows are routed to their slot by each tree's
+    compiled partial tree (with ``tree_col``, a row takes its own tree's
+    route; without it every row is tree 0's), melted, counted, and the
+    counts go to the shared scorer (:func:`_score_counts`) under ``df``'s
+    column order.  When the trees score different feature subsets, each
+    routed row is NULL in the features outside its own tree's, which the
+    melt drops."""
     layout = _slot_layout(trees)
     routes = []
     for t, slots in layout.of.items():
@@ -467,6 +466,11 @@ def find_best_splits_per_node(
     )
     used = {f for level in trees.values() for f in level.feature_names}
     names = [c for c in df.columns if c in used]
+    if any(level.feature_names != names for level in trees.values()):
+        owners = {f: [t for t in trees if f in trees[t].feature_names] for f in names}
+        routed = routed.withColumns(
+            {f: F.when(F.col(tree_col).isin(ts), F.col(f)) for f, ts in owners.items()}
+        )
     counts = melt_counts(routed, names, n_classes, NODE_COL)
     return _score_counts(counts, layout, names, n_classes, criterion)
 
@@ -509,12 +513,10 @@ def find_best_splits_packed(
     n_input_parts: int,
     all_feature_names: list[str] | None = None,
     tree_col: str | None = None,
-    code_dtype: str = "u1",
     lookahead: bool = False,
-) -> tuple[dict[int, list[dict[str, Any]]], Any]:
+) -> tuple[dict[int, list[dict[str, Any]]], tuple | None]:
     """:func:`find_best_splits_per_node` over the packed bin-code matrix
-    (uint8, or uint16 when a feature needs more than 253 edges —
-    ``code_dtype`` must match the encode;
+    (uint8, or uint16 when a feature needs more than 253 edges;
     ``operators/histogram.py`` packed path): tree routing runs vectorized
     inside the histogram pass instead of as a JVM routing column, so each
     level costs one 2-column Arrow transfer of the cached code relation.
@@ -547,23 +549,23 @@ def find_best_splits_packed(
     own tree's.  ``n_input_parts`` is ``packed_df``'s partition count,
     which the fit's fan-out pins; it sizes the dense-cube collect.
 
-    Returns ``(found, carried)``: ``found[tree]`` is the tree's split
+    Returns ``(found, carry)``: ``found[tree]`` is the tree's split
     list.  Class distributions are not computed here: the caller counts
     the roots, and each child's falls out of its parent's split.
 
     ``lookahead=True`` (r12), when the PAIR cube fits the same byte
     budget, computes this level from one joint (feature, feature)
     histogram pass whose conditional slices are the NEXT level's counts:
-    ``carried[tree]`` is then that tree's level-(d+1) counts pdf (None
-    when no child has a histogram row) and the caller scores level d+1
-    driver-side, with no Spark job (``best_splits_from_counts_pdf``).
+    ``carry`` is then ``(cubes, splits, layout, names)``, the merged pair
+    cubes and the splits with gain > 0 keyed by this level's slots, from
+    which :func:`level_finder` scores level d+1 with no Spark job.
     Two tree levels per pass over the code cache: at 100 TB that halves
     the cache scans of a depth-2 binned fit; locally it removes one
     level job at the ~0.22 s empty-mapInArrow job floor (4 vCPUs,
     ``treebench --trace 1``).  Both levels' decisions are bit-identical
     to the one-level-per-pass form (exact int64 marginals/conditionals of
     the same routed rows — ``histogram.packed_histogram_pair_cubes``;
-    test-pinned).  ``carried`` is None whenever the pair budget excludes
+    test-pinned).  ``carry`` is None whenever the pair budget excludes
     the pass (wide fits) or the level went sparse or distributed."""
     from efficient_trees_spark.operators.histogram import (
         TreeRoute,
@@ -576,7 +578,6 @@ def find_best_splits_packed(
         packed_histogram_cubes,
         packed_histogram_pair_cubes,
         pair_cube_bytes,
-        pair_cubes_to_child_counts,
         pair_cubes_to_level_counts,
         stats_collect_budget,
     )
@@ -602,7 +603,6 @@ def find_best_splits_packed(
     kernel_args = dict(
         feature_positions=positions,
         matrix_width=width,
-        code_dtype=code_dtype,
         tree_col=tree_col,
     )
     spark = packed_df.sparkSession
@@ -682,25 +682,83 @@ def find_best_splits_packed(
             est_rows=est_rows,
         )
         return found, None
-    found = layout.unslot_splits(
-        best_splits_from_counts_pdf(counts, n_classes, names, criterion)
-    )
-    carried = None
+    found = best_splits_from_counts_pdf(counts, n_classes, names, criterion)
+    carry = None
     if pair_ok:
-        # Next level's counts from the same cubes, tree by tree (a
-        # child's node id derives from its parent's): only nodes the
-        # caller will actually split produce children (gain > 0 —
-        # mirrors the tree loop's leaf rule).
-        pair_cubes = layout.unslot(merged.items())
-        carried = {
-            t: pair_cubes_to_child_counts(
-                dict(pair_cubes[t]),
-                [b for b in found[t] if b["information_gain"] > 0],
-                names, n_classes, bin_edges,
+        # Only nodes the tree loop will split have children (gain > 0,
+        # its leaf rule).
+        splits = [b for b in found if b["information_gain"] > 0]
+        carry = (merged, splits, layout, names)
+    return layout.unslot_splits(found), carry
+
+
+def level_finder(
+    data: DataFrame,
+    n_classes: int,
+    criterion: Criterion,
+    bin_edges: dict[str, list[float]] | None = None,
+    n_parts: int | None = None,
+    max_depth: int | None = None,
+    all_feature_names: list[str] | None = None,
+    tree_col: str | None = None,
+):
+    """One fit's level search: ``finder(levels)`` maps a level's
+    ``{tree_id: TreeLevel}`` to each tree's node-keyed splits, called once
+    per level from the root down to the last level under ``max_depth``.
+
+    ``bin_edges`` None means the melt: each level is one
+    :func:`find_best_splits_per_node` over the training relation
+    ``data``.  Otherwise ``data`` is the code relation of ``n_parts``
+    partitions and each level one :func:`find_best_splits_packed` pass
+    over the growing trees' rows, looking ahead while the next level is
+    under ``max_depth``.  A level such a pass carried runs no job: the
+    pending children's counts are sliced from their parents' pair cubes
+    under the level's slot layout and scored in ONE
+    :func:`best_splits_from_counts_pdf` call."""
+    if bin_edges is None:
+        return lambda levels: find_best_splits_per_node(
+            data, levels, n_classes, criterion, tree_col
+        )
+    from efficient_trees_spark.operators import histogram
+
+    depth, trees, carry = 0, set(), None
+
+    def packed(levels: dict[int, TreeLevel]) -> dict[int, list[dict[str, Any]]]:
+        nonlocal depth, carry
+        depth += 1  # levels searched, this one included
+        trees.update(levels)  # every tree is pending at the root
+        if carry is not None:
+            (cubes, splits, prev, names), carry = carry, None
+            layout = _slot_layout(levels)
+            children = {}
+            for b in splits:
+                t, n = prev.tree[b["node_id"]], prev.node[b["node_id"]]
+                slots = layout.of.get(t, {})
+                for child, is_left in ((2 * n + 1, True), (2 * n + 2, False)):
+                    if child in slots:
+                        children[slots[child]] = (b, is_left)
+            counts = histogram.pair_cubes_to_child_counts(
+                cubes, children, names, n_classes, bin_edges
             )
-            for t in lists
-        }
-    return found, carried
+            return layout.unslot_splits(
+                best_splits_from_counts_pdf(counts, n_classes, names, criterion)
+            )
+        found, carry = find_best_splits_packed(
+            data
+            if set(levels) == trees
+            else data.filter(F.col(tree_col).isin(sorted(levels))),
+            levels,
+            n_classes,
+            criterion,
+            bin_edges,
+            n_parts,
+            all_feature_names=all_feature_names,
+            tree_col=tree_col,
+            lookahead=max_depth is None or depth < max_depth,
+        )
+        return found
+
+    return packed
 
 
 def _score_counts(

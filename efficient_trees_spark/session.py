@@ -35,7 +35,9 @@ def get_spark(
         (falling back to ``local[*]``) when not already inside a session.
     :param shuffle_partitions: number of shuffle partitions; defaults to the
         local parallelism so tiny local runs don't fan out into 200 empty tasks.
-    :param extra_conf: additional ``spark.*`` settings applied last.
+    :param extra_conf: additional ``spark.*`` settings applied last, so
+        they override any default here (e.g.
+        ``spark.driver.extraJavaOptions`` for driver-JVM flags).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -62,21 +64,16 @@ def get_spark(
         # batches of this size through the JVM ArrowWriter plus the Python
         # worker, so aggregate transient memory scales as cores x batch
         # rows x row width.  The default is right for the local bench;
-        # lower it (e.g. 2048) to cap per-task memory when many concurrent
-        # wide scans OOM a small executor heap — see SCALE.md memory table.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH_ROWS", "10000"),
-        )
+        # lower it (e.g. 2048, via extra_conf) to cap per-task memory when
+        # many concurrent wide scans OOM a small executor heap — see
+        # SCALE.md memory table.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Split files at 16 MB (default 128 MB): a single-host bench reads
         # few, modest files — at 128 MB a 400 MB table scans with 4 of 32
         # cores.  On a real cluster the input has orders of magnitude more
         # splits than cores, so there this should be raised back toward
-        # 128 MB (per-task overhead) via the env override.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        # 128 MB (per-task overhead) via extra_conf.
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Cap glibc malloc arenas in the long-lived Python workers: the
         # default (8 x cores) lets each daemon hold freed numpy pages in
@@ -85,10 +82,7 @@ def get_spark(
         # wide-fit benchmark shape; the operators also malloc_trim at task
         # end — histogram._trim_malloc).  Standard practice for Python-on-
         # JVM executors; applies to real clusters via executorEnv too.
-        .config(
-            "spark.executorEnv.MALLOC_ARENA_MAX",
-            os.environ.get("SPARK_GRAFT_MALLOC_ARENA_MAX", "2"),
-        )
+        .config("spark.executorEnv.MALLOC_ARENA_MAX", "2")
         # Pin the malloc->mmap threshold (glibc default DYNAMICALLY ratchets
         # it up to 32 MB the first time a large mmap'd block is freed, after
         # which the per-partition numpy matrices are carved from the arena
@@ -97,10 +91,7 @@ def get_spark(
         # fixed 128 KB threshold every matrix-sized buffer is mmap-backed
         # and freed straight back to the OS at task end; the page-fault cost
         # is noise next to the Arrow transfer itself.
-        .config(
-            "spark.executorEnv.MALLOC_MMAP_THRESHOLD_",
-            os.environ.get("SPARK_GRAFT_MALLOC_MMAP_THRESHOLD", "131072"),
-        )
+        .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "131072")
         # Python workers fork from worker_daemon, which stops every task
         # re-reading the pyspark.zip / py4j / spark-core archive directories
         # on CPython < 3.12 (measured: an empty mapInArrow job 0.525 ->
@@ -113,13 +104,10 @@ def get_spark(
         .config("spark.python.daemon.module", "efficient_trees_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Extra driver-JVM flags (local mode: driver == executors), e.g.
-        # -XX:G1PeriodicGCInterval for the measured high-heap GC-laziness
-        # transient — SCALE.md memory notes.  Empty default = Spark's own.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),
-        )
+        # Driver-JVM flags (local mode: driver == executors) come through
+        # extra_conf, e.g. -XX:G1PeriodicGCInterval for the measured
+        # high-heap GC-laziness transient — SCALE.md memory notes.
+        .config("spark.driver.extraJavaOptions", "")
         .config("spark.ui.enabled", "false")
         # Generated-class cache (STATIC conf; Spark default 100 entries).
         # A long-lived session running many distinct plans — exactly what a
@@ -130,10 +118,7 @@ def get_spark(
         # (vs 10 s standalone) and the depth-2 exact fit 8.1 s (vs 4.6)
         # purely from this churn.  5000 entries ≈ a few hundred MB of
         # metaspace upper bound, trivial against any real driver.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

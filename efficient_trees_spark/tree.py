@@ -13,12 +13,14 @@ Same capabilities as the reference classifier
   histogram pass over it with the tree routing run in numpy
   (``operators/histogram.py``).  The exact melt: each level unpivots the
   persisted training relation, routed by a compiled slot column, into one
-  declarative gains plan.  Both paths take the same level contract —
-  trees, partial trees and pending node ids in, node-keyed splits out —
-  and ``operators/split_finder.py`` owns their slot layout and routing;
-  they share the gain expressions and tie-breaks, so they grow identical
-  trees.  The fit picks the path from its input, with no option: binned
-  fits (``max_bins``) and exact fits of at least
+  declarative gains plan.  The fit loop makes one call per level to a
+  level finder (``split_finder.level_finder``) — trees, partial trees and
+  pending node ids in, node-keyed splits out — and never sees the path:
+  ``operators/split_finder.py`` owns its slot layout, routing and the
+  packed path's two-level pair-cube passes.  The paths share the gain
+  expressions and tie-breaks, so they grow identical trees.  The fit
+  picks the path from its input, with no option: binned fits
+  (``max_bins``) and exact fits of at least
   ``_AUTO_PACKED_MIN_FEATURES`` (64) features take the packed loop;
   narrower exact fits take the melt, which was measured faster there (its
   Expand cost grows with width).  A wide exact fit with a feature past
@@ -127,7 +129,9 @@ def _fan_out_small_input(prepared: DataFrame) -> tuple[DataFrame, int]:
     sc = prepared.sparkSession.sparkContext
     n = estimate_scan_partitions(prepared)
     if n is None:
-        # pre-fan-out lineage: no Exchange below, so .rdd is planning only
+        # Not a plain scan pipeline.  Without an Exchange below, .rdd only
+        # plans; with one (an input derived by a groupBy, say), AQE runs
+        # the shuffle's map stage as a Spark job to resolve the plan.
         n = prepared.rdd.getNumPartitions()
     if n < sc.defaultParallelism:
         return prepared.repartition(sc.defaultParallelism), sc.defaultParallelism
@@ -204,32 +208,31 @@ def _encode_codes(
     dtype: str,
     n_parts: int,
     n_rows_est: int,
-) -> tuple[DataFrame, str, int]:
+) -> tuple[DataFrame, int]:
     """Pass 2 of the two-scan flow, shared by the single-tree fit and the
     forest: the fused pack + encode of ``prepared`` into the packed
     bin-code relation — uint8 (1 byte/cell) when every feature fits 253
-    edges, uint16 (2 bytes/cell, <= 65 533 edges) past that.  Routing and
-    histograms then run on codes, order-isomorphic to raw values, so trees
-    are bit-identical.  Returns ``(codes, code_dtype, n_parts)``.  Edges
-    always fit uint16: binned edges number at most ``max_bins`` (capped at
-    65 533 by the constructor) and the exact distinct pass raises past it.
-    The input is first right-sized for the cache from the edge pass's row
+    edges, uint16 (2 bytes/cell, <= 65 533 edges) past that, a width
+    every level pass reads from the same edges.  Routing and histograms
+    then run on codes, order-isomorphic to raw values, so trees are
+    bit-identical.  Returns ``(codes, n_parts)``.  Edges always fit
+    uint16: binned edges number at most ``max_bins`` (capped at 65 533 by
+    the constructor) and the exact distinct pass raises past it.  The
+    input is first right-sized for the cache from the edge pass's row
     count ``n_rows_est`` (:func:`_coalesce_for_pack`)."""
     from efficient_trees_spark.operators import histogram
 
-    max_card = max((len(e) for e in bin_edges.values()), default=0)
-    code_dtype = "u1" if max_card <= histogram._MAX_PACKED_EDGES else "u2"
     prepared, n_parts = _coalesce_for_pack(
         prepared,
         n_rows_est,
         len(feature_names),
         n_parts,
-        bytes_per_cell=1 if code_dtype == "u1" else 2,
+        bytes_per_cell=histogram._code_info(bin_edges).dtype.itemsize,
     )
     codes = histogram.pack_encode_features(
-        prepared, feature_names, bin_edges, dtype=dtype, code_dtype=code_dtype
+        prepared, feature_names, bin_edges, dtype=dtype
     )
-    return codes, code_dtype, n_parts
+    return codes, n_parts
 
 
 def _two_scan_binned_edges(
@@ -470,7 +473,7 @@ class DecisionTreeClassifier:
         LEVEL scores every pending node of the level.  Reference lifecycle:
         tree.py:79-115."""
         (relation, feature_names, unique_targets, root_distribution, bin_edges,
-         code_dtype, n_parts) = self._training_relation(data, target_name)
+         n_parts) = self._training_relation(data, target_name)
         # The only relation a single-tree fit persists: the code relation
         # (packed loop) or the prepared training relation (melt), read once
         # per level.
@@ -482,8 +485,7 @@ class DecisionTreeClassifier:
                 unique_targets,
                 [root_distribution],
                 bin_edges=bin_edges,
-                packed_code_dtype=code_dtype,
-                packed_n_parts=n_parts,
+                n_parts=n_parts,
             )
         finally:
             relation.unpersist()
@@ -492,11 +494,11 @@ class DecisionTreeClassifier:
         self, data: DataFrame, target_name: str
     ) -> tuple[
         DataFrame, list[str], list[Any], list[tuple[int, int]], dict | None,
-        str, int | None,
+        int | None,
     ]:
         """The fit preamble of the tree and the forest.  Returns
         ``(relation, feature_names, unique_targets, root_distribution,
-        bin_edges, code_dtype, n_parts)``: root_distribution is the input's
+        bin_edges, n_parts)``: root_distribution is the input's
         ``[(class_idx, count), ...]``, bin_edges None on the melt, n_parts
         the code relation's partition count, None on the melt.
 
@@ -584,7 +586,6 @@ class DecisionTreeClassifier:
 
         n_parts: int | None = None
         bin_edges: dict[str, list[float]] | None = None
-        code_dtype = "u1"
         packed = (
             self.max_bins is not None
             or len(feature_names) >= _AUTO_PACKED_MIN_FEATURES
@@ -643,14 +644,14 @@ class DecisionTreeClassifier:
                     )
             if bin_edges is not None:
                 self.bin_edges_ = bin_edges
-                prepared, code_dtype, n_parts = _encode_codes(
+                prepared, n_parts = _encode_codes(
                     fanned, feature_names, bin_edges, dtype, fanned_parts,
                     n_rows_est,
                 )
 
         return (
             prepared, feature_names, unique_targets, root_distribution,
-            bin_edges, code_dtype, n_parts,
+            bin_edges, n_parts,
         )
 
     # -------------------------------------------------- quantile binning
@@ -694,23 +695,21 @@ class DecisionTreeClassifier:
         root_distributions: list[list[tuple[int, int]]],
         bin_edges: dict[str, list[float]] | None = None,
         all_features: list[str] | None = None,
-        packed_code_dtype: str = "u1",
-        packed_n_parts: int | None = None,
+        n_parts: int | None = None,
         tree_col: str | None = None,
     ) -> list[dict[str, Any]]:
         """PLANET-style breadth-first growth (the published strategy behind
         MLlib's trees, here with exact distinct-value splits): each level runs
         ONE split search covering every pending node.  The loop hands the
-        finder each active tree's features, partial tree and pending node
-        ids (``split_finder.TreeLevel``) and gets back splits keyed by node
-        id; how rows are keyed and routed is the finder's business.
-
-        ``bin_edges`` selects the path: given, ``data`` is the packed
-        bin-code relation of ``packed_n_parts`` partitions and each level
-        is one histogram pass over it
-        (``split_finder.find_best_splits_packed``); None, ``data`` is the
-        prepared training relation and each level is one exact melt
-        (``split_finder.find_best_splits_per_node``).
+        fit's level finder (``split_finder.level_finder``) each active
+        tree's features, partial tree and pending node ids
+        (``split_finder.TreeLevel``) and gets back splits keyed by node id,
+        one call per level below ``max_depth``.  How a level is searched —
+        the fit path, which rows it reads, how they are keyed and routed,
+        and what one pass carries to the next — is the finder's business.
+        ``bin_edges`` None means ``data`` is the prepared training relation
+        (the melt); given, ``data`` is the packed bin-code relation of
+        ``n_parts`` partitions.
 
         Grows ``len(tree_features)`` trees level-synchronously, tree t
         scoring ``tree_features[t]`` (``all_features`` is the relation's
@@ -731,10 +730,11 @@ class DecisionTreeClassifier:
         left child's per-class counts; total − prefix the right's — the
         same identity the gain math itself uses), so each child's
         distribution is recorded when its parent splits.  A depth-d fit is
-        therefore d split jobs.  The reference recomputes value_counts per
-        node (tree.py:363-372); the results are identical because split
-        routing (`f <= thr` / `f > thr`, NULLs to neither side) partitions
-        rows the same way the not-null prefix sums count them.
+        therefore at most d split jobs.  The reference recomputes
+        value_counts per node (tree.py:363-372); the results are identical
+        because split routing (`f <= thr` / `f > thr`, NULLs to neither
+        side) partitions rows the same way the not-null prefix sums count
+        them.
         """
         for t, dist in enumerate(root_distributions):
             if not dist:
@@ -743,23 +743,16 @@ class DecisionTreeClassifier:
                     "sample_fraction"
                 )
         n_trees = len(tree_features)
-        packed = bin_edges is not None
-        all_names = all_features or tree_features[0]
-        if not packed and any(fl != all_names for fl in tree_features):
-            # A melt row scores only its own tree's features: the others
-            # are NULL on it, and the melt drops NULL cells.
-            owners = {
-                f: [t for t, fl in enumerate(tree_features) if f in fl]
-                for f in all_names
-            }
-            data = data.select(
-                tree_col,
-                _TARGET_IDX,
-                *[
-                    F.when(F.col(tree_col).isin(owners[f]), F.col(f)).alias(f)
-                    for f in all_names
-                ],
-            )
+        finder = split_finder.level_finder(
+            data,
+            len(unique_targets),
+            self.criterion,
+            bin_edges=bin_edges,
+            n_parts=n_parts,
+            max_depth=self.max_depth,
+            all_feature_names=all_features,
+            tree_col=tree_col,
+        )
         roots: list[dict[str, Any]] = [
             {"type": "pending", "node_id": 0} for _ in range(n_trees)
         ]
@@ -770,64 +763,18 @@ class DecisionTreeClassifier:
         distributions: list[dict[int, list[tuple[int, int]]]] = [
             {0: dist} for dist in root_distributions
         ]
-        # Per-tree counts relations for the NEXT level, derived driver-side
-        # from the previous level's PAIR-cube pass (r12): when set, this
-        # level's splits are scored with NO Spark job at all.
-        carried: dict[int, Any] | None = None
         depth = 0
-        n_classes = len(unique_targets)
         while any(frontiers):
             active = [t for t in range(n_trees) if frontiers[t]]
             at_max_depth = self.max_depth is not None and depth >= self.max_depth
-            found: dict[int, list[dict[str, Any]]] = {}
-            if carried is not None:
-                # The previous pair-cube pass carried this level's counts
-                # (it looks ahead only when this level is under max_depth):
-                # scored driver-side, no Spark job.
-                found = {
-                    t: split_finder.best_splits_from_counts_pdf(
-                        carried[t], n_classes, tree_features[t], self.criterion
-                    )
-                    for t in active
-                }
-                carried = None
-            elif not at_max_depth:
-                levels = {
+            found = {} if at_max_depth else finder(
+                {
                     t: split_finder.TreeLevel(
                         tree_features[t], roots[t], list(frontiers[t])
                     )
                     for t in active
                 }
-                if packed:
-                    # Routing runs vectorized inside the histogram pass.
-                    # Look one level ahead (pair-cube pass) only when the
-                    # NEXT level will need splits too; the budget gate
-                    # inside find_best_splits_packed decides whether it
-                    # fires.
-                    level_data = (
-                        data
-                        if len(active) == n_trees
-                        else data.filter(F.col(tree_col).isin(active))
-                    )
-                    found, carried = split_finder.find_best_splits_packed(
-                        level_data,
-                        levels,
-                        n_classes,
-                        self.criterion,
-                        bin_edges,
-                        packed_n_parts,
-                        all_feature_names=all_names,
-                        tree_col=tree_col,
-                        code_dtype=packed_code_dtype,
-                        lookahead=(
-                            self.max_depth is None or depth + 1 < self.max_depth
-                        ),
-                    )
-                else:
-                    found = split_finder.find_best_splits_per_node(
-                        data, levels, n_classes, self.criterion, tree_col
-                    )
-
+            )
             for t in active:
                 frontiers[t] = self._grow_frontier(
                     frontiers[t],

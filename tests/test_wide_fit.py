@@ -31,6 +31,7 @@ from efficient_trees_spark.enums import Criterion
 from efficient_trees_spark.operators import split_finder
 from efficient_trees_spark.operators.histogram import (
     TreeRoute,
+    _code_info,
     compile_routing_splits,
     pack_encode_features,
     packed_histogram_counts,
@@ -670,10 +671,8 @@ def test_packed_relation_caches_at_one_byte_per_cell(spark):
     # — r11), so attribute ONLY the relation this test persists instead of
     # taking max over the whole cache.
     before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    codes, code_dtype, _ = _encode_codes(
-        prepared, feats, edges, "f4", n_parts, n_rows
-    )
-    assert code_dtype == "u1"
+    codes, _ = _encode_codes(prepared, feats, edges, "f4", n_parts, n_rows)
+    assert _code_info(edges).dtype == np.uint8
     codes = codes.persist()
     try:
         rows = codes.count()
@@ -739,9 +738,9 @@ def test_pair_child_counts_reject_non_edge_threshold():
 
     edges = {"a": [1.0, 2.0]}
     cubes = {0: np.zeros(pair_cube_bytes(["a"], edges, 2) // 8, dtype=np.int64)}
-    chosen = [{"node_id": 0, "feature": "a", "threshold": 1.5}]
+    children = {1: ({"node_id": 0, "feature": "a", "threshold": 1.5}, True)}
     with pytest.raises(ValueError, match="not a bin edge"):
-        pair_cubes_to_child_counts(cubes, chosen, ["a"], 2, edges)
+        pair_cubes_to_child_counts(cubes, children, ["a"], 2, edges)
 
 
 @pytest.mark.parametrize("dtype", ["f4", "f8"])
@@ -784,26 +783,32 @@ def test_partition_order_stats_wire_types(spark, dtype):
         assert got[name]["__svx"] == mx and got[name]["__sn"] == n == 300
 
 
-@pytest.mark.parametrize("code_dtype, n_edges", [("u1", 200), ("u2", 300)])
-def test_pack_encode_wire_types(spark, code_dtype, n_edges):
+@pytest.mark.parametrize("width, n_edges", [("u1", 200), ("u2", 300)])
+def test_pack_encode_wire_types(spark, width, n_edges):
     """Wire-type round trip of the fused pack + encode: the class index
-    ships as ``int32``, and each row's blob holds one ``uint8`` (u1) or
-    ``uint16`` (u2) code per feature that decodes to the input value's
-    edge index — NaN and NULL to the width's reserved top codes."""
+    ships as ``int32``, and each row's blob holds one code per feature —
+    ``uint8`` while every feature fits 253 edges, ``uint16`` past that,
+    read from the edges alone — that decodes to the input value's edge
+    index, NaN and NULL to the width's reserved top codes.  A dense cube
+    pass given the same edges and no width reads the codes back: its
+    merged counts are the bincount of the input's edge indices."""
     import pyarrow as pa
 
     from efficient_trees_spark.operators.histogram import (
         PACKED_COL,
-        _code_info,
-        pack_encode_features,
+        arrow_cube_rows,
+        merge_cube_rows,
+        packed_histogram_cubes,
     )
     from efficient_trees_spark.operators.split_finder import TARGET_IDX
 
-    np_code, nan_code, null_code, _ = _code_info(code_dtype)
     edges = {
         "a": [0.5, 1.5, 2.5],
         "b": [float(e) for e in np.arange(n_edges) * 0.25],
     }
+    np_code = {"u1": np.uint8, "u2": np.uint16}[width]
+    codes = _code_info(edges)
+    assert codes.dtype == np_code
     rng = np.random.default_rng(9)
     want = {}
     rows = []
@@ -812,11 +817,9 @@ def test_pack_encode_wire_types(spark, code_dtype, n_edges):
         rows.append((edges["a"][ia], edges["b"][ib], i))
         want[i] = [ia, ib]
     rows += [(None, NAN, 400), (NAN, None, 401)]
-    want[400], want[401] = [null_code, nan_code], [nan_code, null_code]
+    want[400], want[401] = [codes.null, codes.nan], [codes.nan, codes.null]
     df = spark.createDataFrame(rows, f"a double, b double, {TARGET_IDX} int")
-    packed = pack_encode_features(
-        df, ["a", "b"], edges, dtype="f8", code_dtype=code_dtype
-    )
+    packed = pack_encode_features(df, ["a", "b"], edges, dtype="f8")
     assert packed.schema[TARGET_IDX].dataType.simpleString() == "int"
     tbl = packed.toArrow()
     assert tbl.schema.field(TARGET_IDX).type == pa.int32()
@@ -828,6 +831,24 @@ def test_pack_encode_wire_types(spark, code_dtype, n_edges):
         )
     }
     assert got == want
+
+    n_classes = len(rows)  # each row is a class of its own
+    merged = merge_cube_rows(
+        arrow_cube_rows(
+            packed_histogram_cubes(
+                packed, ["a", "b"], n_classes, edges, {0: TreeRoute([], {0: 0})}
+            ).toArrow()
+        )
+    )
+    # Ragged slots: a's 3 edges and NaN, then b's n_edges edges and NaN;
+    # the NULL cells count nowhere.
+    a_idx = [want[i][0] for i in range(400)] + [3]
+    b_idx = [want[i][1] for i in range(400)] + [n_edges]
+    expected = np.concatenate(
+        [np.bincount(a_idx, minlength=4), np.bincount(b_idx, minlength=n_edges + 1)]
+    )
+    cube = merged[0].reshape(-1, n_classes)
+    assert cube.sum(axis=1).tolist() == expected.tolist()
 
 
 def test_arrow_stat_rows_matches_collect(spark):
@@ -1630,37 +1651,44 @@ def test_pair_lookahead_fit_matches_single_level_passes(spark, monkeypatch):
     one-level-per-pass form (exact int64 marginals/conditionals of the
     same routed rows).  Exercised with NULLs (drop-from-both-children)
     and NaNs (route right, own candidate bucket) in the mix, at a depth
-    where a carried level is followed by another pair pass."""
+    where a carried level is followed by another pair pass, for a single
+    tree and for a feature-bagged forest, whose carried levels span its
+    trees."""
     from efficient_trees_spark.operators import histogram
 
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        F.when(F.col("l_quantity") > 45, F.lit(None)).otherwise(
-            F.col("l_quantity")
-        ).alias("q_nullable"),
-        F.when(F.col("l_discount") > 0.09, F.lit(float("nan"))).otherwise(
-            F.col("l_extendedprice")
-        ).alias("price_nanable"),
-        "l_discount", "l_tax",
-        F.col("l_returnflag").alias("target"),
-    )
+    li = _nulls_nans_lineitem(spark)
 
-    def fit(criterion, max_bins, max_depth=4):
-        m = DecisionTreeClassifier(
-            max_depth=max_depth, criterion=criterion, max_bins=max_bins,
-        )
+    def fit_tree(criterion):
+        m = DecisionTreeClassifier(max_depth=4, criterion=criterion, max_bins=16)
         m.fit(li, "target")
         return m.tree
 
-    for criterion, max_bins in ((Criterion.GINI, 16), (Criterion.ENTROPY, 16)):
-        pair_tree = fit(criterion, max_bins)
-        # force the pair budget to always exclude: every level runs its
-        # own single-level pass (the r11 shape)
-        monkeypatch.setattr(
-            histogram, "pair_cube_bytes", lambda *a, **k: 1 << 62
+    def fit_forest(criterion):
+        rf = RandomForestClassifier(
+            n_trees=3, max_depth=4, criterion=criterion, feature_fraction=0.5,
+            max_bins=16, seed=5,
         )
-        single_tree = fit(criterion, max_bins)
-        monkeypatch.undo()
-        assert pair_tree == single_tree, (criterion, max_bins)
+        rf.fit(li, "target")
+        return rf.trees
+
+    for fit in (fit_tree, fit_forest):
+        for criterion in (Criterion.GINI, Criterion.ENTROPY):
+            carried: list = []
+            record_calls(
+                monkeypatch, histogram, "pair_cubes_to_child_counts", carried, "carried"
+            )
+            pair_tree = fit(criterion)
+            assert carried, (fit.__name__, criterion)
+            # force the pair budget to always exclude: every level runs
+            # its own single-level pass (the r11 shape)
+            monkeypatch.setattr(
+                histogram, "pair_cube_bytes", lambda *a, **k: 1 << 62
+            )
+            carried.clear()
+            single_tree = fit(criterion)
+            monkeypatch.undo()
+            assert not carried, (fit.__name__, criterion)
+            assert pair_tree == single_tree, (fit.__name__, criterion)
 
 
 def test_pair_cube_child_counts_match_real_second_level(spark):
@@ -1725,12 +1753,14 @@ def test_pair_cube_child_counts_match_real_second_level(spark):
     )
     chosen = [b for b in best if b["information_gain"] > 0]
     assert chosen, "fixture must produce a splittable root"
+    b = chosen[0]
     carry = pair_cubes_to_child_counts(
-        merged, chosen, names, n_classes, edges
+        merged,
+        {1: (b, True), 2: (b, False)},
+        names, n_classes, edges,
     )
     from bisect import bisect_left
 
-    b = chosen[0]
     splits = [
         (0, names.index(b["feature"]),
          bisect_left(edges[b["feature"]], b["threshold"]), 1, 2)
